@@ -360,7 +360,7 @@ class BucketedParquetTable:
         a 100 TB table reads and rewrites one bucket, not the table.
         """
         m = self.manifest()
-        held: list[DataFrame] = []  # r13: stage persists, drained post-write
+        held: list[DataFrame] = []  # r13: stage persists, drained in finally
         if m is None:
             # Auto-create (reference D2): empty target with the stage schema.
             target_sub = stage.limit(0)
@@ -377,19 +377,21 @@ class BucketedParquetTable:
                 r[_BUCKET] for r in stage_b.select(_BUCKET).distinct().collect()
             )
             target_sub = self.read(buckets=affected)
-        merged = upsert_mod.merge(
-            target_sub,
-            stage,
-            self.keys,
-            preserve_columns=preserve_columns,
-            job_ts=job_ts,
-            insert_start=int(m["max_id"]) + 1,
-            persists=held,
-        )
         v = m["version"] + 1
-        data_dir = self._write_buckets(self._with_bucket(merged), v)
-        for f in held:
-            f.unpersist(blocking=False)
+        try:
+            merged = upsert_mod.merge(
+                target_sub,
+                stage,
+                self.keys,
+                preserve_columns=preserve_columns,
+                job_ts=job_ts,
+                insert_start=int(m["max_id"]) + 1,
+                persists=held,
+            )
+            data_dir = self._write_buckets(self._with_bucket(merged), v)
+        finally:  # a failed merge or write must not leak the stage pin
+            for f in held:
+                f.unpersist(blocking=False)
         buckets = dict(m["buckets"])
         for b in self._present_buckets(data_dir):
             buckets[str(b)] = [f"{data_dir}/{_BUCKET}={b}"]

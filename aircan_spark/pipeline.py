@@ -44,7 +44,7 @@ from aircan_spark.schema import (
     struct_to_descriptor,
     unique_keys as descriptor_keys,
 )
-from aircan_spark.sources import read_resource
+from aircan_spark.sources import infer_format, read_resource
 from aircan_spark.table import ParquetTable, ensure_warehouse
 from aircan_spark.validate import validate as validate_frame
 
@@ -145,8 +145,14 @@ def run(spark: SparkSession, config: dict[str, Any]) -> dict[str, Any]:
     if method in ("append", "upsert") and table.exists():
         start = table.max_id(rn_col) + 1
 
+    # A columnar scan re-reads its files deterministically and its count
+    # pass reads only footers, so persisting it buys nothing; text/gzip
+    # re-parses are costly and keep the persist (rownum.py cache rule).
+    columnar = infer_format(path, config.get("resource_format")) in ("parquet", "orc")
     try:
-        numbered = with_row_number(typed, column=rn_col, start=start)
+        numbered = with_row_number(
+            typed, column=rn_col, start=start, cache=not columnar
+        )
 
         # --- write branch (reference 3/4a/4b, :360-460) ---------------------
         if method == "upsert":
@@ -166,10 +172,6 @@ def run(spark: SparkSession, config: dict[str, Any]) -> dict[str, Any]:
         # every with_row_number cache (including those upsert created for
         # insert numbering) is materialized by the write above — release.
         release_caches()
-
-    # _updated_at backfill for any legacy NULLs (reference F1, :337-357).
-    if method in ("append", "overwrite"):
-        pass  # stamped inline above — no second rewrite needed
 
     # --- export (reference 5, :483-569) --------------------------------------
     export_path = None

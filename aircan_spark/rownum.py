@@ -7,32 +7,43 @@ numbered 1..N in source order for overwrite, continuing at MAX(_id)+1 for
 append, preserved on upsert matches.
 
 The reference streams single-threaded so a counter suffices. On Spark a
-naive ``row_number().over(Window.orderBy(...))`` with no partitioning
-collapses the whole table into ONE task — unusable at scale. Instead we use
-the partition-offset scheme (zipWithIndex's algorithm, expressed on the
-DataFrame API):
+``row_number()`` window with no partitioning collapses the whole table
+into ONE task. Instead numbering is zipWithIndex's algorithm, expressed as
+a narrow projection on the DataFrame API:
 
-1. fix a deterministic partition-local order (explicit sort columns, or
-   ``monotonically_increasing_id`` which is monotone within a partition and
-   encodes the partition index in its high 33 bits — so ordering (pid,
-   local) reproduces source/file order for ordered-split sources);
-2. count rows per partition (cheap map-side agg, one number per partition);
-3. cumulative-sum the counts on the driver (#partitions values, not data);
-4. ``row_number()`` within each partition + that partition's offset.
+1. tag every row with ``monotonically_increasing_id()`` (after
+   ``repartitionByRange(...).sortWithinPartitions(...)`` when ``order_by``
+   is given). Its layout is ``(partition index << 33) + position``: the
+   high 31 bits name the partition, the low 33 bits count rows within it
+   from 0, in partition order (file/split order for source scans), so a
+   partition may hold at most 2^33 (8.6 billion) rows;
+2. count rows per partition, keyed on ``id >> 33`` — one small
+   aggregate, one number per non-empty partition comes back to the driver;
+3. ``_id = id + delta[id >> 33]`` with ``delta[p] = start + rows_before(p)
+   - (p << 33)``, where ``delta`` is a literal map in the plan.
 
-Total cost: one extra pass for the counts (avoidable only by caching), zero
-shuffles of the data itself. Scales to any number of partitions.
+The numbering itself adds no Exchange, no sort and no Window; the only
+shuffle is ``order_by``'s range partitioning (plus the tiny count
+aggregate). The frame is read twice (counts, then numbering), and both
+reads must see the same rows in the same partitions and order.
+
+Cache rule: persist (``cache=True``) only where re-running the input is
+expensive (text/gzip parsing, joins) or could reorder rows (a shuffle
+read: the range partitioning, whose fetch order breaks ties
+arbitrarily). A columnar file scan without ``order_by`` is re-read
+deterministically, and its count pass reads only footers — pass
+``cache=False`` there (pipeline.run does so for parquet/orc resources).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from aircan_spark import ROW_NUMBER_COLUMN
 
-_PID = "__aircan_pid"
-_LOCAL = "__aircan_local_order"
+_ROW = "__aircan_row"
+_PART_BITS = 33  # MonotonicallyIncreasingID: partition index << 33
 
 # Frames persisted by with_row_number(cache=True) that have not been
 # released yet. The numbered result is lazy, so the cache must outlive this
@@ -72,49 +83,29 @@ def with_row_number(
     matches the reference's ingest numbering.
 
     ``cache``: the algorithm reads the frame twice (counts, then numbering);
-    caching guarantees the two passes see identical partitioning. Disable
-    only for deterministic one-pass-cheap sources.
+    caching guarantees the two passes see identical rows and order. Disable
+    only for deterministic, cheap-to-rescan sources (see the module's cache
+    rule).
     """
+    prepared = df
     if order_by:
         cols = [F.col(c) if isinstance(c, str) else c for c in order_by]
         prepared = df.repartitionByRange(*cols).sortWithinPartitions(*cols)
-        prepared = prepared.withColumn(_PID, F.spark_partition_id())
-        local_order = cols
-    else:
-        prepared = df.withColumn(_LOCAL, F.monotonically_increasing_id())
-        prepared = prepared.withColumn(_PID, F.spark_partition_id())
-        local_order = [F.col(_LOCAL)]
+    prepared = prepared.withColumn(_ROW, F.monotonically_increasing_id())
 
     if cache:
         prepared = prepared.persist()
         _ACTIVE_CACHES.append(prepared)
 
-    counts = {
-        row[_PID]: row["cnt"]
-        for row in prepared.groupBy(_PID).agg(F.count(F.lit(1)).alias("cnt")).collect()
-    }
-    offsets: dict[int, int] = {}
-    acc = start - 1
-    for pid in sorted(counts):
-        offsets[pid] = acc
-        acc += counts[pid]
-
-    # Offsets enter the plan as a literal map — one entry per partition,
-    # broadcast implicitly with the task closure. No join, no shuffle.
-    if offsets:
-        map_entries: list[Column] = []
-        for pid, off in offsets.items():
-            map_entries.extend([F.lit(pid), F.lit(off)])
-        offset_expr = F.create_map(*map_entries)[F.col(_PID)]
-    else:
-        offset_expr = F.lit(start - 1)
-
-    w = Window.partitionBy(_PID).orderBy(*local_order)
-    numbered = prepared.withColumn(
-        column, (F.row_number().over(w).cast("long") + offset_expr).cast("long")
-    )
+    part = F.shiftright(F.col(_ROW), _PART_BITS)
+    counts = prepared.groupBy(part.alias("p")).count().collect()
+    entries: list[Column] = []
+    acc = start
+    for p, n in sorted(counts):
+        entries += [F.lit(p).cast("long"), F.lit(acc - (p << _PART_BITS)).cast("long")]
+        acc += n
+    # Offsets enter the plan as a literal map, one entry per non-empty
+    # partition, shipped with the task closure. No join, no shuffle.
+    delta = F.create_map(*entries)[part] if entries else F.lit(0)
     data_cols = [c for c in df.columns if c != column]
-    # The persisted intermediate stays cached so the numbering pass reuses
-    # the exact partitioning the counts were taken from. Callers release it
-    # via release_caches() once the numbered frame materializes.
-    return numbered.select(column, *data_cols)
+    return prepared.select((F.col(_ROW) + delta).alias(column), *data_cols)

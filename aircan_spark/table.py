@@ -75,8 +75,10 @@ class ParquetTable:
         # plan, so caching it caches table METADATA only (the catalog
         # analog, same argument as data.load_table's session cache);
         # every execution still reads the parquet bytes. Keyed on
-        # (version, snapshot-dir mtime_ns): a version flip OR an append
-        # into the current snapshot (new file -> dir mtime bump) misses.
+        # (version, snapshot-dir mtime_ns): a version flip misses, and
+        # append() clears the memo itself, so read-after-append on the
+        # same object never depends on the dir mtime ticking. The mtime
+        # still catches appends made through another table object.
         self._read_cache: dict[tuple, DataFrame] = {}
 
     # ---- snapshot plumbing -------------------------------------------------
@@ -230,6 +232,9 @@ class ParquetTable:
             self.overwrite(df)
             return
         self._align_types(df).write.mode("append").parquet(self.snapshot_dir())
+        # the version did not move: drop the memo rather than trust the
+        # snapshot dir's mtime to tick for the files just added
+        self._read_cache.clear()
 
     def create_empty_like(self, df: DataFrame) -> None:
         """Schema-only clone: CREATE TABLE .. AS SELECT .. WHERE 1=0
@@ -256,18 +261,20 @@ class ParquetTable:
         # snapshot, so the commit check detects any version moved since
         base = self.current_version()
         held: list[DataFrame] = []  # merge's deduped-stage persist (r13)
-        merged = upsert_mod.merge(
-            self.read(),
-            stage,
-            keys,
-            preserve_columns=preserve_columns,
-            job_ts=job_ts,
-            persists=held,
-        )
         v = base + 1
-        merged.write.mode("overwrite").parquet(self.snapshot_dir(v))
-        for f in held:
-            f.unpersist(blocking=False)
+        try:
+            merged = upsert_mod.merge(
+                self.read(),
+                stage,
+                keys,
+                preserve_columns=preserve_columns,
+                job_ts=job_ts,
+                persists=held,
+            )
+            merged.write.mode("overwrite").parquet(self.snapshot_dir(v))
+        finally:  # a failed merge or write must not leak the stage pin
+            for f in held:
+                f.unpersist(blocking=False)
         self._commit(v, expected_base=base)
 
     def backfill_updated_at(

@@ -112,10 +112,11 @@ def merge(
     persisted (DISK_ONLY — stage size is data-proportional) and appended
     to the list for the caller to unpersist once the merged frame has
     been materialized. The deduped stage feeds the update join, the
-    insert anti-join, AND the insert numbering's two passes (range
-    sampling + persist fill), so un-persisted it re-runs the stage scan
-    + dedup window up to four times per merge — at 100 TB that is four
-    full passes over the incoming batch. ``None`` keeps the pre-r13
+    insert anti-join, AND the insert numbering's range-partition
+    sampling and count pass (the count pass fills the numbering's own
+    persist, which the write then reads), so un-persisted it re-runs the
+    stage scan + dedup window up to four times per merge — at 100 TB
+    that is four full passes over the incoming batch. ``None`` keeps the pre-r13
     plan byte-identical.
 
     Column policy (mirrors warehouse.py:222-245):

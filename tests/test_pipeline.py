@@ -210,3 +210,71 @@ def test_dag_task_body_runs_pipeline(spark, tmp_path):
         "method": "overwrite",
     })
     assert res["rows"] == 2
+
+
+def _load_jobs(spark, group, config):
+    """Run one pipeline load under its own job group; return its job count."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        run(spark, config)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_pipeline_load_job_counts(spark, tmp_path):
+    """Pin the exact Spark job count of each load shape, so a numbering or
+    persist regression shows up as a counter diff. Parquet loads number
+    without a persist (count pass reads footers, the write re-scans); the
+    gzip-CSV load keeps its persist."""
+    import gzip
+
+    def parquet(name, rows):
+        path = str(tmp_path / f"{name}.parquet")
+        spark.createDataFrame(rows, "sku int, name string, price double").coalesce(
+            1
+        ).write.parquet(path)
+        return path
+
+    snapshot = [(i, f"n{i}", float(i)) for i in range(1, 201)]
+    resources = {
+        "overwrite": parquet("snap", snapshot),
+        "append": parquet("app", [(i, f"n{i}", float(i)) for i in range(201, 221)]),
+        "upsert": parquet(
+            "ups",
+            [(i, f"m{i}", float(i)) for i in range(1, 11)]
+            + [(i, f"n{i}", float(i)) for i in range(221, 241)],
+        ),
+    }
+    wh = str(tmp_path / "wh")
+    got = {}
+    for method, src in resources.items():
+        got[f"parquet_{method}"] = _load_jobs(spark, f"pin_parquet_{method}", {
+            "resource_path": src,
+            "table_name": "pinned",
+            "warehouse": wh,
+            "schema_descriptor": DESCRIPTOR,
+            "method": method,
+            "job_ts": TS1,
+        })
+    gz = str(tmp_path / "snap.csv.gz")
+    with gzip.open(gz, "wt") as fh:
+        fh.write("sku,name,price\n")
+        fh.writelines(f"{s},{n},{p}\n" for s, n, p in snapshot)
+    got["gzip_csv_validated_overwrite"] = _load_jobs(spark, "pin_gzip_csv", {
+        "resource_path": gz,
+        "table_name": "pinned_csv",
+        "warehouse": wh,
+        "schema_descriptor": DESCRIPTOR,
+        "method": "overwrite",
+        "validate": True,
+        "job_ts": TS1,
+    })
+    # 9/12/24/19 with the Window numbering and the parquet persist
+    assert got == {
+        "parquet_overwrite": 7,
+        "parquet_append": 10,
+        "parquet_upsert": 21,
+        "gzip_csv_validated_overwrite": 17,
+    }

@@ -64,3 +64,102 @@ def test_no_global_single_partition_window(spark):
     out = with_row_number(df, order_by=["x"])
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" not in plan
+
+
+# --- zipWithIndex numbering: plan shape, equivalence, edge cases -------------
+
+
+def _plan(df):
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
+def test_plan_has_no_window_and_no_exchange_without_order(spark):
+    df = spark.range(0, 2000, numPartitions=8).withColumnRenamed("id", "x")
+    for cache in (True, False):
+        plan = _plan(with_row_number(df, cache=cache))
+        assert "Window" not in plan
+        assert "Exchange" not in plan
+
+
+def test_plan_has_one_range_exchange_with_order(spark):
+    df = spark.range(0, 2000, numPartitions=8).withColumnRenamed("id", "x")
+    # uncached: the plan is not yet executed, so AQE prints only the
+    # initial plan and every Exchange in it is this numbering's
+    plan = _plan(with_row_number(df, order_by=["x"], cache=False))
+    exchanges = [ln for ln in plan.splitlines() if "Exchange" in ln]
+    assert len(exchanges) == 1 and "rangepartitioning" in exchanges[0], plan
+    assert "Window" not in plan
+    # cached: the persisted frame's executed plan holds no other exchange
+    plan = _plan(with_row_number(df, order_by=["x"]))
+    assert "Window" not in plan
+    assert all(
+        "rangepartitioning" in ln for ln in plan.splitlines() if "Exchange " in ln
+    ), plan
+
+
+def _window_numbering(df, start=1, order_by=None):
+    """The previous algorithm (partition id + per-partition row_number
+    window + literal offset map), kept here as the equivalence oracle."""
+    from pyspark.sql import Window
+
+    if order_by:
+        cols = [F.col(c) if isinstance(c, str) else c for c in order_by]
+        prepared = df.repartitionByRange(*cols).sortWithinPartitions(*cols)
+        local = cols
+    else:
+        prepared = df.withColumn("__local", F.monotonically_increasing_id())
+        local = [F.col("__local")]
+    prepared = prepared.withColumn("__pid", F.spark_partition_id()).persist()
+    counts = dict(prepared.groupBy("__pid").count().collect())
+    entries, acc = [], start - 1
+    for pid in sorted(counts):
+        entries += [F.lit(pid), F.lit(acc)]
+        acc += counts[pid]
+    offset = F.create_map(*entries)[F.col("__pid")] if entries else F.lit(start - 1)
+    w = Window.partitionBy("__pid").orderBy(*local)
+    out = prepared.withColumn("_id", F.row_number().over(w).cast("long") + offset)
+    got = {tuple(r) for r in out.select("_id", *df.columns).collect()}
+    prepared.unpersist()
+    return got
+
+
+def _skewed_16(spark):
+    # 16 range splits of 312-313 rows; the filter empties 11 of them and
+    # leaves one partial (rows 0..99) beside four full ones
+    return (
+        spark.range(0, 5000, numPartitions=16)
+        .filter((F.col("id") < 100) | (F.col("id") >= 3750))
+        .select(F.col("id").alias("x"), (F.col("id") % 7).alias("g"))
+    )
+
+
+def test_matches_window_numbering_on_skewed_partitions(spark):
+    from aircan_spark.rownum import release_caches
+
+    df = _skewed_16(spark)
+    assert df.rdd.getNumPartitions() == 16
+    for kwargs in ({}, {"start": 42}, {"order_by": ["x"]}, {"order_by": ["g", "x"], "start": 7}):
+        got = {tuple(r) for r in with_row_number(df, **kwargs).collect()}
+        assert got == _window_numbering(df, **kwargs), kwargs
+    release_caches()
+
+
+def test_empty_frame_keeps_id_first(spark):
+    empty = spark.createDataFrame([], "a int, b string")
+    for kwargs in ({}, {"order_by": ["a"]}, {"cache": False, "start": 9}):
+        out = with_row_number(empty, **kwargs)
+        assert out.columns == ["_id", "a", "b"]
+        assert out.schema["_id"].dataType.typeName() == "long"
+        assert out.count() == 0
+
+
+def test_desc_order_keys(spark):
+    # the shape ext_segment_rank uses: (segment, value desc, tiebreak)
+    data = [(i % 3, (i * 37) % 11, i) for i in range(200)]
+    df = spark.createDataFrame(data, "seg int, v int, k int").repartition(5)
+    out = with_row_number(
+        df, column="_gi", order_by=[F.col("seg"), F.col("v").desc(), F.col("k")]
+    )
+    got = [(r["seg"], r["v"], r["k"]) for r in out.orderBy("_gi").collect()]
+    assert got == sorted(data, key=lambda t: (t[0], -t[1], t[2]))
+    assert sorted(r["_gi"] for r in out.collect()) == list(range(1, 201))

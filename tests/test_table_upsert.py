@@ -258,3 +258,86 @@ def test_parquet_table_delete_keys(spark, tmp_path):
     # survivors keep their original _id values
     ids = {r["k"]: r["_id"] for r in got.collect()}
     assert ids[4] == 4 and ids[20] == 20
+
+
+def _persisted_rdds(spark):
+    return int(spark.sparkContext._jsc.getPersistentRDDs().size())
+
+
+def _fail_table_writes(monkeypatch, table_path):
+    """Make every parquet write under ``table_path`` raise after the merge
+    plan is built (and its stage persist filled) — a failed write job."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    real = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        if str(path).startswith(str(table_path)):
+            raise RuntimeError("boom: write failed")
+        return real(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+
+
+def test_failed_upsert_releases_stage_persist(spark, tmp_path, monkeypatch):
+    from aircan_spark.rownum import release_caches
+
+    t = make_table(spark, tmp_path)
+    t.overwrite(base_df(spark))
+    release_caches()
+    before, version = _persisted_rdds(spark), t.current_version()
+    stage = spark.createDataFrame(
+        [(20, "beta2", 2.0), (40, "delta", 4.0)], ["sku", "name", "price"]
+    )
+    with monkeypatch.context() as m:
+        _fail_table_writes(m, t.path)
+        with pytest.raises(RuntimeError, match="boom"):
+            t.upsert(stage, ["sku"], job_ts=TS2)
+    release_caches()  # the insert numbering's persist (pipeline.run does this)
+    assert _persisted_rdds(spark) == before
+    assert t.current_version() == version
+    assert t.read().count() == 3
+    t.upsert(stage, ["sku"], job_ts=TS2)
+    release_caches()
+    assert t.current_version() == version + 1
+    assert sorted(r["_id"] for r in t.read().collect()) == [1, 2, 3, 4]
+    assert _persisted_rdds(spark) == before
+
+
+def test_failed_merge_releases_stage_persist(spark, tmp_path):
+    # the stage itself raises: the failure surfaces inside merge()
+    from aircan_spark.rownum import release_caches
+
+    t = make_table(spark, tmp_path)
+    t.overwrite(base_df(spark))
+    release_caches()
+    before, version = _persisted_rdds(spark), t.current_version()
+    stage = spark.createDataFrame(
+        [(20, "beta2", 2.0), (40, "delta", 4.0)], ["sku", "name", "price"]
+    ).withColumn(
+        "name",
+        F.when(F.col("sku") == 20, F.raise_error(F.lit("boom"))).otherwise(
+            F.col("name")
+        ),
+    )
+    with pytest.raises(Exception, match="boom"):
+        t.upsert(stage, ["sku"], job_ts=TS2)
+    release_caches()
+    assert _persisted_rdds(spark) == before
+    assert t.current_version() == version
+
+
+def test_read_after_append_ignores_dir_mtime(spark, tmp_path):
+    import os
+
+    t = make_table(spark, tmp_path)
+    t.overwrite(base_df(spark))
+    snap = t.snapshot_dir()
+    stamp = os.stat(snap)
+    assert t.read().count() == 3  # memoized under (version, dir mtime)
+    extra = spark.createDataFrame([(40, "delta", 4.0)], ["sku", "name", "price"])
+    extra = with_row_number(extra, start=4).withColumn("_updated_at", F.lit(TS2))
+    t.append(extra)
+    # a coarse clock or a stale attribute cache leaves the mtime unmoved
+    os.utime(snap, ns=(stamp.st_atime_ns, stamp.st_mtime_ns))
+    assert t.read().count() == 4
