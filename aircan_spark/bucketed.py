@@ -19,8 +19,10 @@ upsert cost O(affected data):
   zero data movement for untouched buckets, exactly the Iceberg/Delta
   partial-rewrite shape;
 - the merge join shuffles the affected subset + stage, never the table;
-- table-wide MAX(_id) is manifest metadata (updated transactionally with
-  each commit), so insert numbering never scans the table.
+- table-wide MAX(_id), the row count (``rows``) and the schema are manifest
+  metadata, counted by each write job itself (``table.write_observed``) and
+  committed with it, so insert numbering, ``row_count()`` and ``read()``
+  never scan or infer.
 
 Reference parity: same MERGE semantics as upsert.py (J1/A2/F2 at
 /root/reference/aircan/dependencies/cloud/warehouse.py:200-297); the
@@ -37,9 +39,11 @@ import shutil
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from aircan_spark import ROW_NUMBER_COLUMN
 from aircan_spark import upsert as upsert_mod
+from aircan_spark.table import ConcurrentWriteError, widen, write_observed
 
 _MANIFEST = "_MANIFEST.json"
 _BUCKET = "__bucket"
@@ -65,11 +69,6 @@ class BucketedParquetTable:
         self.name = name
         self.keys = list(keys)
         self.num_buckets = num_buckets
-        # r13 (guide §1.2): (version, paths)-keyed read-plan memo — same
-        # catalog argument as ParquetTable._read_cache; every commit bumps
-        # the manifest version, so staleness is impossible for one-writer
-        # tables. Metadata only: every execution still scans the parquet.
-        self._read_cache: dict[tuple, DataFrame] = {}
 
     # ---- manifest plumbing ---------------------------------------------------
     def _manifest_path(self) -> str:
@@ -94,8 +93,6 @@ class BucketedParquetTable:
         # means another writer committed in between
         now_v = prev["version"] if prev else 0
         if manifest["version"] != now_v + 1:
-            from aircan_spark.table import ConcurrentWriteError
-
             raise ConcurrentWriteError(
                 f"bucketed table {self.name}: manifest moved to v{now_v} "
                 f"during this operation (attempted commit "
@@ -164,23 +161,10 @@ class BucketedParquetTable:
             for b in wanted
             for d in m["buckets"].get(b, [])
         ]
-        if not paths:
-            # empty table / no affected buckets: schema comes from the
-            # manifest, no files to scan
-            from pyspark.sql import types as T
-
-            schema = T.StructType.fromJson(json.loads(m["schema"]))
-            return self.spark.createDataFrame([], schema)
-        key = (int(m["version"]), tuple(paths))
-        if key in self._read_cache:
-            return self._read_cache[key]
-        # basePath keeps partition discovery from inferring __bucket; each
-        # leaf dir is read directly and the column is not resurrected.
-        df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
-        if len(self._read_cache) > 8:  # bounded: distinct bucket subsets
-            self._read_cache.clear()
-        self._read_cache[key] = df
-        return df
+        # the manifest schema spares footer inference and also serves an
+        # empty path list; each leaf dir is read directly, so partition
+        # discovery never resurrects __bucket
+        return self.spark.read.schema(StructType.fromJson(m["schema"])).parquet(*paths)
 
     def read_version(self, version: int) -> DataFrame:
         """Time travel: read the table as of an earlier committed
@@ -258,93 +242,87 @@ class BucketedParquetTable:
         if column != ROW_NUMBER_COLUMN:
             # only the engine `_id` max is manifest metadata; other columns
             # need a (column-pruned) scan
-            return self._df_max_id_col(self.read(), column)
+            row = self.read().agg(F.coalesce(F.max(column), F.lit(0)).alias("m"))
+            return int(row.collect()[0]["m"])
         return int(m["max_id"])
+
+    def row_count(self) -> int:
+        m = self.manifest()
+        return int(m["rows"]) if m else 0
 
     def current_version(self) -> int:
         m = self.manifest()
         return int(m["version"]) if m else 0
 
-    def _df_max_id_col(self, df: DataFrame, column: str) -> int:
-        row = df.agg(F.coalesce(F.max(column), F.lit(0)).alias("m")).collect()[0]
-        return int(row["m"])
-
     # ---- writes ----------------------------------------------------------------
-    def _write_buckets(self, df: DataFrame, version: int) -> str:
-        """Write df (bucket column attached) partitioned by bucket id."""
+    def _write_buckets(
+        self, df: DataFrame, version: int, **extra: Column
+    ) -> tuple[dict[str, str], dict]:
+        """Write ``df`` partitioned by bucket id as data dir ``version``;
+        return {bucket: dir} for the buckets that got files, and the
+        write's observed stats (``table.write_observed``)."""
         data_dir = f"data_v{version}"
-        (
-            df.repartition(F.col(_BUCKET))
-            .write.mode("overwrite")
-            .partitionBy(_BUCKET)
-            .parquet(os.path.join(self.path, data_dir))
-        )
-        return data_dir
-
-    def _with_bucket(self, df: DataFrame) -> DataFrame:
-        return df.withColumn(_BUCKET, bucket_expr(self.keys, self.num_buckets))
-
-    def _present_buckets(self, data_dir: str) -> list[int]:
         root = os.path.join(self.path, data_dir)
-        return sorted(
+        stats = write_observed(
+            self._with_bucket(df).repartition(F.col(_BUCKET)),
+            lambda d: d.write.mode("overwrite").partitionBy(_BUCKET).parquet(root),
+            **extra,
+        )
+        present = sorted(
             int(e.split("=", 1)[1])
             for e in os.listdir(root)
             if e.startswith(f"{_BUCKET}=")
         )
+        return {str(b): f"{data_dir}/{_BUCKET}={b}" for b in present}, stats
 
-    def _df_max_id(self, df: DataFrame) -> int:
-        if ROW_NUMBER_COLUMN not in df.columns:
-            return 0
-        row = df.agg(
-            F.coalesce(F.max(ROW_NUMBER_COLUMN), F.lit(0)).alias("m")
-        ).collect()[0]
-        return int(row["m"])
+    def _with_bucket(self, df: DataFrame) -> DataFrame:
+        return df.withColumn(_BUCKET, bucket_expr(self.keys, self.num_buckets))
+
+    def _commit_snapshot(
+        self, version: int, buckets: dict, rows: int, max_id: int, schema: dict
+    ) -> None:
+        self._commit(
+            {
+                "version": version,
+                "num_buckets": self.num_buckets,
+                "keys": self.keys,
+                "rows": rows,
+                "max_id": max_id,
+                "buckets": buckets,
+                "schema": schema,
+            }
+        )
 
     def overwrite(self, df: DataFrame) -> None:
         m = self.manifest()
         v = (m["version"] + 1) if m else 1
-        data_dir = self._write_buckets(self._with_bucket(df), v)
-        present = self._present_buckets(data_dir)
-        buckets = {str(b): [f"{data_dir}/{_BUCKET}={b}"] for b in present}
-        # max from the files just written (one column-pruned scan), not a
-        # second evaluation of the caller's plan
-        written = (
-            self.spark.read.parquet(os.path.join(self.path, data_dir))
-            if present
-            else None
-        )
-        self._commit(
-            {
-                "version": v,
-                "num_buckets": self.num_buckets,
-                "keys": self.keys,
-                "max_id": self._df_max_id(written) if written is not None else 0,
-                "buckets": buckets,
-                "schema": df.schema.json(),
-            }
+        written, stats = self._write_buckets(df, v)
+        buckets = {b: [d] for b, d in written.items()}
+        self._commit_snapshot(
+            v, buckets, stats["rows"], stats["max_id"], df.schema.jsonValue()
         )
 
     def append(self, df: DataFrame) -> None:
         """Additive: new data dirs appended to each landed bucket's dir
-        list — existing files untouched (K3 semantics)."""
+        list — existing files untouched (K3 semantics). The manifest
+        schema becomes the union of the table's and the batch's columns,
+        so a narrower batch never drops a column."""
         m = self.manifest()
         if m is None:
             self.overwrite(df)
             return
         v = m["version"] + 1
-        data_dir = self._write_buckets(self._with_bucket(df), v)
+        schema, df = widen(StructType.fromJson(m["schema"]), df)
+        written, stats = self._write_buckets(df, v)
         buckets = dict(m["buckets"])
-        for b in self._present_buckets(data_dir):
-            buckets[str(b)] = buckets.get(str(b), []) + [f"{data_dir}/{_BUCKET}={b}"]
-        self._commit(
-            {
-                "version": v,
-                "num_buckets": self.num_buckets,
-                "keys": self.keys,
-                "max_id": max(int(m["max_id"]), self._df_max_id(df)),
-                "buckets": buckets,
-                "schema": df.schema.json(),
-            }
+        for b, d in written.items():
+            buckets[b] = buckets.get(b, []) + [d]
+        self._commit_snapshot(
+            v,
+            buckets,
+            int(m["rows"]) + stats["rows"],
+            max(int(m["max_id"]), stats["max_id"]),
+            schema.jsonValue(),
         )
 
     def upsert(
@@ -364,7 +342,8 @@ class BucketedParquetTable:
         if m is None:
             # Auto-create (reference D2): empty target with the stage schema.
             target_sub = stage.limit(0)
-            m = {"version": 0, "max_id": 0, "buckets": {}}
+            m = {"version": 0, "rows": 0, "max_id": 0, "buckets": {},
+                 "schema": StructType().jsonValue()}
         else:
             # The bucket-set probe stays on the RAW stage: select(_BUCKET)
             # prunes the scan to the key columns, so this pass is cheap at
@@ -378,6 +357,13 @@ class BucketedParquetTable:
             )
             target_sub = self.read(buckets=affected)
         v = m["version"] + 1
+        insert_start = int(m["max_id"]) + 1
+        # merge numbers inserts from insert_start and keeps matched ids —
+        # unless the table has no _id, when it renumbers the affected
+        # buckets' old rows as well, so those must be taken off again
+        renumbered = 0
+        if m["rows"] and ROW_NUMBER_COLUMN not in target_sub.columns:
+            renumbered = target_sub.count()
         try:
             merged = upsert_mod.merge(
                 target_sub,
@@ -385,30 +371,25 @@ class BucketedParquetTable:
                 self.keys,
                 preserve_columns=preserve_columns,
                 job_ts=job_ts,
-                insert_start=int(m["max_id"]) + 1,
+                insert_start=insert_start,
                 persists=held,
             )
-            data_dir = self._write_buckets(self._with_bucket(merged), v)
+            schema, merged = widen(StructType.fromJson(m["schema"]), merged)
+            written, stats = self._write_buckets(
+                merged, v, inserted=F.count_if(F.col(ROW_NUMBER_COLUMN) >= insert_start)
+            )
         finally:  # a failed merge or write must not leak the stage pin
             for f in held:
                 f.unpersist(blocking=False)
         buckets = dict(m["buckets"])
-        for b in self._present_buckets(data_dir):
-            buckets[str(b)] = [f"{data_dir}/{_BUCKET}={b}"]
-        # read-back max over the rewritten buckets only; untouched buckets
-        # cannot raise the max because inserts always number above it
-        new_max = max(int(m["max_id"]), self._df_max_id(self.spark.read.parquet(
-            os.path.join(self.path, data_dir)
-        )))
-        self._commit(
-            {
-                "version": v,
-                "num_buckets": self.num_buckets,
-                "keys": self.keys,
-                "max_id": new_max,
-                "buckets": buckets,
-                "schema": merged.schema.json(),
-            }
+        buckets.update({b: [d] for b, d in written.items()})
+        # untouched buckets cannot raise the max: inserts number above it
+        self._commit_snapshot(
+            v,
+            buckets,
+            int(m["rows"]) + stats["inserted"] - renumbered,
+            max(int(m["max_id"]), stats["max_id"]),
+            schema.jsonValue(),
         )
 
     def delete(self, keys_df: DataFrame) -> int:
@@ -440,31 +421,22 @@ class BucketedParquetTable:
         n_before = target_sub.count()
         remaining = target_sub.join(keys_proj, on=self.keys, how="left_anti")
         v = m["version"] + 1
-        data_dir = self._write_buckets(self._with_bucket(remaining), v)
+        written, stats = self._write_buckets(remaining, v)
         buckets = dict(m["buckets"])
         # affected buckets are wholly replaced by the rewrite — possibly
         # by nothing, when every row of a bucket matched the delete set
         for b in affected:
             buckets[str(b)] = []
-        for b in self._present_buckets(data_dir):
-            buckets[str(b)] = [f"{data_dir}/{_BUCKET}={b}"]
-        present = self._present_buckets(data_dir)
-        n_after = (
-            self.spark.read.parquet(os.path.join(self.path, data_dir)).count()
-            if present
-            else 0
+        buckets.update({b: [d] for b, d in written.items()})
+        n_deleted = n_before - stats["rows"]
+        self._commit_snapshot(
+            v,
+            buckets,
+            int(m["rows"]) - n_deleted,
+            int(m["max_id"]),
+            m["schema"],
         )
-        self._commit(
-            {
-                "version": v,
-                "num_buckets": self.num_buckets,
-                "keys": self.keys,
-                "max_id": int(m["max_id"]),
-                "buckets": buckets,
-                "schema": m["schema"],
-            }
-        )
-        return n_before - n_after
+        return n_deleted
 
     def compact(self, min_dirs: int = 2) -> list[int]:
         """Rewrite buckets fragmented across >= ``min_dirs`` data dirs into
@@ -479,21 +451,10 @@ class BucketedParquetTable:
         if not todo:
             return []
         v = m["version"] + 1
-        sub = self.read(buckets=[int(b) for b in todo])
-        data_dir = self._write_buckets(self._with_bucket(sub), v)
+        written, _ = self._write_buckets(self.read(buckets=[int(b) for b in todo]), v)
         buckets = dict(m["buckets"])
-        for b in self._present_buckets(data_dir):
-            buckets[str(b)] = [f"{data_dir}/{_BUCKET}={b}"]
-        self._commit(
-            {
-                "version": v,
-                "num_buckets": self.num_buckets,
-                "keys": self.keys,
-                "max_id": int(m["max_id"]),
-                "buckets": buckets,
-                "schema": m["schema"],
-            }
-        )
+        buckets.update({b: [d] for b, d in written.items()})
+        self._commit_snapshot(v, buckets, int(m["rows"]), int(m["max_id"]), m["schema"])
         return [int(b) for b in todo]
 
     def drop(self) -> None:

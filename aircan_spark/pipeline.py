@@ -188,7 +188,7 @@ def run(spark: SparkSession, config: dict[str, Any]) -> dict[str, Any]:
     return {
         "table": table.path,
         "version": table.current_version(),
-        "rows": table.read().count(),
+        "rows": table.row_count(),
         "method": method,
         "validation": report,
         "export": export_path,

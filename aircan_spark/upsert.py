@@ -103,9 +103,10 @@ def merge(
 ) -> DataFrame:
     """Compute the merged table as a DataFrame (caller writes it).
 
-    ``insert_start``: explicit first `_id` for inserted rows. Callers that
-    merge a SUBSET of the table (bucketed partial rewrite) must pass the
-    table-wide MAX(_id)+1 — the default derives it from ``target``, which
+    ``insert_start``: explicit first `_id` for inserted rows. Both table
+    kinds pass their recorded MAX(_id)+1 (commit metadata, no scan); a
+    caller merging a SUBSET of the table must pass the table-wide value.
+    The default derives it from ``target`` with one aggregate job, which
     is only correct when ``target`` is the whole table.
 
     ``persists`` (r13, guide §5): when given, the DEDUPED stage is

@@ -353,3 +353,85 @@ def test_failed_upsert_releases_stage_persist(spark, tmp_path, monkeypatch):
     assert t.manifest()["version"] == version + 1
     assert t.read().count() == 22
     assert _persisted_rdds(spark) == before
+
+
+def test_commit_record_invariant(spark, tmp_path):
+    from test_table_upsert import assert_record_invariant
+
+    from aircan_spark.bucketed import bucket_expr
+
+    t = BucketedParquetTable(spark, str(tmp_path), "t", keys=["k"], num_buckets=4)
+    t.overwrite(base_df(spark, n=20))
+    assert_record_invariant(spark, t)
+    assert (t.row_count(), t.max_id()) == (20, 20)
+
+    extra = with_row_number(
+        spark.createDataFrame(
+            [(500, 1, "x", 7), (501, 2, "y", 8)], "k long, val long, name string, grp int"
+        ),
+        start=21,
+        order_by=["k"],
+    ).withColumn(UPDATED_AT_COLUMN, F.lit(TS2))
+    t.append(extra)  # adds a column, fragments buckets
+    assert_record_invariant(spark, t)
+
+    t.upsert(stage_df(spark), job_ts=TS2)
+    assert_record_invariant(spark, t)
+    assert (t.row_count(), t.max_id()) == (24, 24)
+
+    assert t.compact(min_dirs=2)
+    assert_record_invariant(spark, t)
+
+    assert t.delete(spark.createDataFrame([(5,), (1002,)], "k long")) == 2
+    assert_record_invariant(spark, t, max_id=24)  # ids are never reused
+    assert t.row_count() == 22
+
+    # empty one bucket entirely
+    rows = t.read().select("k", bucket_expr(["k"], 4).alias("b"))
+    target_b = rows.first()["b"]
+    doomed = rows.filter(F.col("b") == target_b).select("k")
+    n = doomed.count()
+    assert t.delete(doomed) == n
+    assert t.manifest()["buckets"][str(target_b)] == []
+    assert_record_invariant(spark, t, max_id=24)
+    assert t.row_count() == 22 - n
+
+
+def test_aggtable_refresh_keeps_record_exact(spark, tmp_path):
+    """AggTable rows carry no _id, so each refresh's merge renumbers the
+    touched buckets' rows; the recorded row count must stay exact."""
+    from test_table_upsert import assert_record_invariant
+
+    from aircan_spark.aggtable import AggTable
+
+    at = AggTable(spark, str(tmp_path), "agg", keys=["k"], sum_cols=["v"], num_buckets=4)
+    for lo, hi in [(0, 7), (3, 11), (5, 9)]:
+        delta = spark.range(lo, hi).select(
+            F.col("id").alias("k"), (F.col("id") * 1.5).alias("v")
+        )
+        at.refresh(delta, job_ts=TS2)
+        assert_record_invariant(spark, at.table)
+    assert at.table.row_count() == 11
+
+
+def test_narrower_append_keeps_table_columns(spark, tmp_path):
+    """An append without one of the table's columns (allowed by additive
+    evolution) must not drop it from the table schema — not even for a
+    read of a bucket that holds no files."""
+    t = BucketedParquetTable(spark, str(tmp_path), "t", keys=["k"], num_buckets=8)
+    t.overwrite(
+        with_row_number(
+            spark.createDataFrame(
+                [(1, "a", 1.0), (2, "b", 2.0)], "k long, name string, price double"
+            )
+        )
+    )
+    t.append(
+        with_row_number(
+            spark.createDataFrame([(3, "c")], "k long, name string"), start=3
+        )
+    )
+    empty = next(b for b in range(8) if not t.manifest()["buckets"].get(str(b)))
+    assert t.read(buckets=[empty]).columns == ["_id", "k", "name", "price"]
+    assert t.read().columns == ["_id", "k", "name", "price"]
+    assert t.read().filter("k = 3").first()["price"] is None

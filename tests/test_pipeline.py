@@ -224,10 +224,12 @@ def _load_jobs(spark, group, config):
 
 
 def test_pipeline_load_job_counts(spark, tmp_path):
-    """Pin the exact Spark job count of each load shape, so a numbering or
-    persist regression shows up as a counter diff. Parquet loads number
-    without a persist (count pass reads footers, the write re-scans); the
-    gzip-CSV load keeps its persist."""
+    """Pin the exact Spark job count of each load shape, so a numbering,
+    persist or table-metadata regression shows up as a counter diff.
+    Parquet loads number without a persist (count pass reads footers, the
+    write re-scans); the gzip-CSV load keeps its persist. Table reads,
+    max_id and the report's row count come from the commit record and run
+    no job."""
     import gzip
 
     def parquet(name, rows):
@@ -258,6 +260,16 @@ def test_pipeline_load_job_counts(spark, tmp_path):
             "method": method,
             "job_ts": TS1,
         })
+    bucketed = {"table_name": "pinned_b", "warehouse": wh, "num_buckets": 4,
+                "schema_descriptor": DESCRIPTOR}
+    got["bucketed_parquet_overwrite"] = _load_jobs(spark, "pin_bucketed_overwrite", {
+        **bucketed, "resource_path": resources["overwrite"], "method": "overwrite",
+        "job_ts": TS1,
+    })
+    correction = parquet("fix", [(i, f"c{i}", float(i)) for i in (3, 77, 150)])
+    got["bucketed_correction_upsert"] = _load_jobs(spark, "pin_bucketed_upsert", {
+        **bucketed, "resource_path": correction, "method": "upsert", "job_ts": TS2,
+    })
     gz = str(tmp_path / "snap.csv.gz")
     with gzip.open(gz, "wt") as fh:
         fh.write("sku,name,price\n")
@@ -271,10 +283,11 @@ def test_pipeline_load_job_counts(spark, tmp_path):
         "validate": True,
         "job_ts": TS1,
     })
-    # 9/12/24/19 with the Window numbering and the parquet persist
     assert got == {
-        "parquet_overwrite": 7,
-        "parquet_append": 10,
-        "parquet_upsert": 21,
-        "gzip_csv_validated_overwrite": 17,
+        "parquet_overwrite": 4,
+        "parquet_append": 4,
+        "parquet_upsert": 13,
+        "bucketed_parquet_overwrite": 5,
+        "bucketed_correction_upsert": 14,
+        "gzip_csv_validated_overwrite": 14,
     }

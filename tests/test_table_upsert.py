@@ -341,3 +341,101 @@ def test_read_after_append_ignores_dir_mtime(spark, tmp_path):
     # a coarse clock or a stale attribute cache leaves the mtime unmoved
     os.utime(snap, ns=(stamp.st_atime_ns, stamp.st_mtime_ns))
     assert t.read().count() == 4
+
+
+def count_jobs(spark, fn):
+    """Run ``fn`` under its own job group; return (result, Spark jobs run)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def live_paths(table):
+    """The parquet dirs the table's current commit points at."""
+    import os
+
+    if isinstance(table, ParquetTable):
+        return [table.snapshot_dir()]
+    return [
+        os.path.join(table.path, d)
+        for dirs in table.manifest()["buckets"].values()
+        for d in dirs
+    ]
+
+
+def assert_record_invariant(spark, table, max_id=None):
+    """The commit record answers rows, MAX(_id) and schema with no Spark
+    job, and each answer equals what a scan of the live files gives.
+    ``max_id``: the value the record must keep instead of the scanned one
+    (a bucketed delete keeps the pre-delete max so ids are never reused)."""
+    (rows, got_max, schema), jobs = count_jobs(
+        spark, lambda: (table.row_count(), table.max_id(), table.read().schema)
+    )
+    assert jobs == 0
+    assert rows == table.read().count()
+    paths = live_paths(table)
+    scanned = spark.read.option("mergeSchema", "true").parquet(*paths)
+    assert schema == scanned.schema
+    if max_id is None:
+        max_id = 0
+        if "_id" in scanned.columns:
+            max_id = scanned.agg(F.coalesce(F.max("_id"), F.lit(0))).first()[0]
+    assert got_max == max_id
+
+
+def test_commit_record_invariant(spark, tmp_path):
+    t = make_table(spark, tmp_path)
+    t.overwrite(base_df(spark))
+    assert_record_invariant(spark, t)
+    assert t.row_count() == 3 and t.max_id() == 3
+
+    extra = spark.createDataFrame(
+        [(50, "eps", 5.0, 99)], ["sku", "name", "price", "supplier_id"]
+    )
+    extra = with_row_number(extra, start=4).withColumn("_updated_at", F.lit(TS2))
+    t.append(extra)  # adds a column
+    assert_record_invariant(spark, t)
+    assert t.read().columns[-1] == "supplier_id"
+
+    stage = spark.createDataFrame(
+        [(20, "beta2", 2.0), (60, "zeta", 6.0)], ["sku", "name", "price"]
+    )
+    t.upsert(with_row_number(stage), ["sku"], job_ts=TS2)
+    assert_record_invariant(spark, t)
+    assert (t.row_count(), t.max_id()) == (5, 5)
+
+    assert t.delete(spark.createDataFrame([(60,), (99,)], "sku int"), ["sku"]) == 1
+    assert_record_invariant(spark, t)
+    assert (t.row_count(), t.max_id()) == (4, 4)
+
+    t.backfill_updated_at(TS2)
+    assert_record_invariant(spark, t)
+
+    empty = make_table(spark, tmp_path, "empty")
+    empty.create_empty_like(base_df(spark))
+    assert_record_invariant(spark, empty)
+    assert (empty.row_count(), empty.max_id()) == (0, 0)
+
+
+def test_read_sees_append_from_another_object(spark, tmp_path):
+    import os
+
+    a = make_table(spark, tmp_path)
+    a.overwrite(base_df(spark))
+    snap = a.snapshot_dir()
+    stamp = os.stat(snap)
+    assert a.read().count() == 3
+    b = make_table(spark, tmp_path)
+    extra = spark.createDataFrame([(40, "delta", 4.0)], ["sku", "name", "price"])
+    b.append(with_row_number(extra, start=4).withColumn("_updated_at", F.lit(TS2)))
+    # a coarse clock or a stale attribute cache leaves the mtime unmoved
+    os.utime(snap, ns=(stamp.st_atime_ns, stamp.st_mtime_ns))
+    assert a.read().count() == 4
+    assert a.row_count() == 4
