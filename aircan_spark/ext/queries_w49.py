@@ -15,6 +15,8 @@ updates the shared EXT_QUERIES/EXT_ORACLES registries at import time.
 
 from __future__ import annotations
 
+from functools import partial
+
 from aircan_spark.ext._qcommon import *  # noqa: F401,F403
 from aircan_spark.ext._qcommon import EXT_ORACLES, EXT_QUERIES, _load, _t  # noqa: F401
 from aircan_spark.ext.queries_w48 import *  # noqa: F401,F403
@@ -58,23 +60,20 @@ def _delete_parity(spark: SparkSession, sf_dir: str, bucketed: bool) -> DataFram
         table = BucketedParquetTable(
             spark, wh, "t", keys=["o_orderkey"], num_buckets=16
         )
-        table.overwrite(numbered)
-        doomed = orders.filter(F.expr("o_orderkey % 7 = 3")).select("o_orderkey")
-        n_del = table.delete(doomed)
-        table.vacuum(keep_versions=1)
+        delete = table.delete
     else:
         from aircan_spark.table import ParquetTable
 
         table = ParquetTable(spark, wh, "t")
-        table.overwrite(numbered)
-        doomed = orders.filter(F.expr("o_orderkey % 7 = 3")).select("o_orderkey")
-        n_del = table.delete(doomed, ["o_orderkey"])
-        table.vacuum(keep_snapshots=1)
-    # vacuum retires the pre-delete snapshot immediately (read() below is
+        delete = partial(table.delete, keys=["o_orderkey"])
+    table.overwrite(numbered)
+    n_del = delete(orders.filter(F.expr("o_orderkey % 7 = 3")).select("o_orderkey"))
+    table.vacuum(keep_versions=1)
+    # vacuum retires the pre-delete version immediately (read() below is
     # lazy but only ever reads the CURRENT version's files) — repeated
     # sweep/bench invocations previously accumulated two full orders
-    # snapshots per run (the temp-dir class commit 09159e6 fixed for the
-    # streaming harnesses), and at production scale the doomed snapshot
+    # copies per run (the temp-dir class commit 09159e6 fixed for the
+    # streaming harnesses), and at production scale the doomed version
     # lingering is exactly what a GDPR delete must not do.
     surv = table.read()
     return (

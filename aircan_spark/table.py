@@ -1,50 +1,53 @@
-"""Parquet-backed managed tables with versioned snapshots.
+"""Parquet-backed managed tables: a versioned manifest over immutable data dirs.
 
 The reference's "warehouse" is BigQuery/Postgres; here it is a directory of
-Parquet per table, with lightweight snapshot versioning so overwrite/upsert
-never read-and-clobber the files they are scanning:
+Parquet per table. Every write lands in a NEW data dir and is then
+committed by publishing a new version of the table's manifest, so no write
+ever reads-and-clobbers the files it is scanning and a reader never sees a
+half-written load (the versioned file-list log of Delta Lake, Armbrust et
+al., VLDB 2020):
 
     warehouse/<name>/
-        _VERSION        # JSON commit record: {version, rows, max_id, schema}
-        v1/  part-*.parquet
-        v2/  ...
+        _MANIFEST.json   # {version, rows, max_id, schema, buckets, history}
+        data_v1/  part-*.parquet
+        data_v2/  ...
 
-``_VERSION`` is the commit record: snapshot number, row count, MAX(_id)
-(0 without an ``_id`` column) and schema. Writes count rows and MAX(_id)
-in the write job itself (``write_observed``), so ``read()`` (recorded
-schema, no footer inference), ``max_id()`` and ``row_count()`` run no
-Spark job (reference A1, warehouse.py:13-31). Rewrites (overwrite, upsert,
-delete) write snapshot N+1 and publish its record with tmp write +
-``os.replace`` — an atomic commit that also works on object stores.
-Appends write files INTO the current snapshot (no rewrite, no shuffle) and
-republish its record: rows added, max raised, schema widened to the union
-(old fields, then new — mergeSchema's order) in place of read-time
-``mergeSchema`` (reference ALLOW_FIELD_ADDITION, warehouse.py:106-172).
+``buckets`` maps a bucket id to the data dirs that hold its rows. The flat
+``ParquetTable`` is the one-bucket case, ``{"0": ["data_v1", "data_v2"]}``;
+``BucketedParquetTable`` (bucketed.py) hash-buckets rows by key so upsert
+and delete rewrite only the buckets they touch. ``rows``, ``max_id``
+(MAX(_id), 0 without an ``_id`` column) and ``schema`` are counted by each
+write job itself (``write_observed``), so ``read()`` (recorded schema, no
+footer inference), ``max_id()`` and ``row_count()`` run no Spark job
+(reference A1, warehouse.py:13-31). ``history`` keeps the previous
+version's ``{version, buckets, schema}``, which ``read_version`` scans the
+same way; the commit deletes data dirs no retained version lists.
 
-At 100 TB scale the upsert rewrite should touch only affected partitions;
-``BucketedParquetTable`` (bucketed.py) hash-partitions the table by key so
-an upsert rewrites only the buckets it touches. (Production deployments
-would use Delta/Iceberg for this; the mechanism here keeps the engine
+Each load is one atomic commit, as each is one warehouse job in the
+reference (warehouse.py:300-359,430-491): overwrite (K2) writes the table
+as a new dir; append (K3/D3) writes the batch as a new dir and adds it to
+the dir lists, with the schema widened to the union (old fields, then new
+— reference ALLOW_FIELD_ADDITION, warehouse.py:106-172); upsert (J1) and
+delete rewrite. A write that fails before its commit leaves an unlisted dir
+that readers never see and the next commit removes. (Production
+deployments would use Delta/Iceberg; the mechanism here keeps the engine
 dependency-free while preserving the semantics.)
 
 Reference analogs: table lifecycle D1/D2/D7 (warehouse.py:61-69,138-151,
 445-456), loads K2/K3 (warehouse.py:73-135,300-359), upsert J1
 (warehouse.py:430-491).
 
-Concurrency contract (the reference gets this from BigQuery job atomicity,
-warehouse.py:430-491; this engine states it explicitly): ONE writer per
-table at a time is the supported mode. Rewriting operations practice
-optimistic concurrency — each records the snapshot version it started
-from and re-checks it at the pointer flip; a concurrent commit in between
-raises ``ConcurrentWriteError`` instead of silently clobbering the other
-writer's snapshot (first committer wins). The check-then-flip window is
-microseconds but not zero. Appends add files into the CURRENT snapshot
-and re-check its version when they republish the record; an append
-concurrent with a rewrite raises there, but its files have already landed
-in the superseded snapshot, and two concurrent appends can lose one's row
-count — serializing concurrent writers for real requires a transactional
-catalog (Delta/Iceberg), which is exactly what a production deployment
-would swap in here.
+Concurrency contract (the reference gets this from BigQuery job atomicity;
+this engine states it explicitly): ONE writer per table at a time is the
+supported mode. Every write practices optimistic concurrency — it bases
+its commit on the manifest version it read and commits version + 1; a
+concurrent commit in between raises ``ConcurrentWriteError`` at the
+publish (first committer wins) and nothing is published. The
+check-then-publish window is microseconds but not zero, and two writers
+based on the same version write the same data dir name; serializing
+concurrent writers for real requires a transactional catalog
+(Delta/Iceberg), which is exactly what a production deployment would swap
+in here.
 """
 
 from __future__ import annotations
@@ -62,12 +65,12 @@ from pyspark.sql.types import StructType
 from aircan_spark import ROW_NUMBER_COLUMN, UPDATED_AT_COLUMN
 from aircan_spark import upsert as upsert_mod
 
-_VERSION_FILE = "_VERSION"
+_MANIFEST = "_MANIFEST.json"
 
 
 class ConcurrentWriteError(RuntimeError):
-    """Another writer committed a snapshot between this operation's read
-    and its commit — the rewrite is based on stale data (see the module
+    """Another writer committed a version between this operation's read
+    and its commit — the write is based on stale data (see the module
     concurrency contract)."""
 
 
@@ -104,155 +107,160 @@ class ParquetTable:
         self.name = name
         self.path = os.path.join(warehouse, name)
 
-    # ---- snapshot plumbing -------------------------------------------------
-    def _version_path(self) -> str:
-        return os.path.join(self.path, _VERSION_FILE)
+    # ---- the commit protocol (shared with BucketedParquetTable) ----------
+    def _manifest_path(self) -> str:
+        return os.path.join(self.path, _MANIFEST)
 
-    def record(self) -> dict | None:
-        """The commit record ``{version, rows, max_id, schema}``, or None
-        when the table does not exist."""
+    def manifest(self) -> dict | None:
+        """The committed manifest, or None when the table does not exist."""
         try:
-            with open(self._version_path()) as fh:
+            with open(self._manifest_path()) as fh:
                 return json.load(fh)
         except (FileNotFoundError, ValueError):
             return None
 
+    def _require(self) -> dict:
+        m = self.manifest()
+        if m is None:
+            raise FileNotFoundError(f"table {self.name} does not exist at {self.path}")
+        return m
+
     def current_version(self) -> int:
-        rec = self.record()
-        return int(rec["version"]) if rec else 0
+        m = self.manifest()
+        return int(m["version"]) if m else 0
 
     def exists(self) -> bool:
-        return self.current_version() > 0
-
-    def snapshot_dir(self, version: int | None = None) -> str:
-        v = version if version is not None else self.current_version()
-        return os.path.join(self.path, f"v{v}")
-
-    def _commit(
-        self,
-        version: int,
-        keep_snapshots: int = 2,
-        expected_base: int | None = None,
-        **stats,
-    ) -> None:
-        """Publish the record ``{version, **stats}`` (the snapshot's rows,
-        max_id and schema) unless the version moved off ``expected_base``."""
-        os.makedirs(self.path, exist_ok=True)
-        if expected_base is not None:
-            now = self.current_version()
-            if now != expected_base:
-                raise ConcurrentWriteError(
-                    f"table {self.name}: version moved {expected_base} -> "
-                    f"{now} during this rewrite; refusing to clobber the "
-                    f"concurrent commit (retry on the new snapshot)"
-                )
-        tmp = self._version_path() + ".tmp"
-        with open(tmp, "w") as fh:
-            json.dump({"version": version, **stats}, fh)
-        os.replace(tmp, self._version_path())
-        # GC old snapshots beyond the retention window (shared with
-        # vacuum so the retention predicate can never drift between the
-        # commit path and explicit maintenance).
-        self._gc_snapshots(version, keep_snapshots)
-
-    def _write(self, df: DataFrame, version: int) -> dict:
-        """Write ``df`` as snapshot ``version``; return its record stats."""
-        stats = write_observed(
-            df, lambda d: d.write.mode("overwrite").parquet(self.snapshot_dir(version))
-        )
-        return {**stats, "schema": df.schema.jsonValue()}
-
-    def _gc_snapshots(self, newest: int, keep_snapshots: int) -> int:
-        """Remove snapshot dirs with version <= newest - keep_snapshots.
-        Returns the count of dirs that actually DISAPPEARED (not
-        attempts): callers auditing retirement (GDPR delete flows) must
-        not be told a snapshot is gone while an EACCES/busy file keeps
-        its data readable on disk."""
-        removed = 0
-        for entry in os.listdir(self.path) if os.path.isdir(self.path) else []:
-            if entry.startswith("v") and entry[1:].isdigit():
-                if int(entry[1:]) <= newest - keep_snapshots:
-                    target = os.path.join(self.path, entry)
-                    shutil.rmtree(target, ignore_errors=True)
-                    if not os.path.isdir(target):
-                        removed += 1
-        return removed
-
-    def vacuum(self, keep_snapshots: int = 1) -> int:
-        """Retire snapshot versions older than the newest
-        ``keep_snapshots`` (default: current only). The normal retention
-        window (``_commit`` keep_snapshots=2) holds the previous version
-        for time-travel/diff; call this when the history is known dead —
-        e.g. a rewrite-style delete whose pre-delete snapshot must not
-        linger (GDPR), or a scratch warehouse a harness will re-read
-        lazily (only the CURRENT version's files back ``read()``).
-        Returns the number of snapshot dirs actually removed."""
-        return self._gc_snapshots(self.current_version(), max(keep_snapshots, 1))
-
-    # ---- reads ---------------------------------------------------------------
-    def read(self) -> DataFrame:
-        rec = self.record()
-        if rec is None:
-            raise FileNotFoundError(f"table {self.name} does not exist at {self.path}")
-        # the recorded schema spares the footer-inference job, and it
-        # carries the columns appends added (file sources read every
-        # field nullable, exactly as inference would)
-        return self.spark.read.schema(StructType.fromJson(rec["schema"])).parquet(
-            self.snapshot_dir(rec["version"])
-        )
-
-    @property
-    def columns(self) -> list[str]:
-        return self.read().columns
+        return self.manifest() is not None
 
     def row_count(self) -> int:
-        """Rows in the current snapshot, from the commit record."""
-        rec = self.record()
-        return int(rec["rows"]) if rec else 0
+        """Rows in the current version, from the manifest."""
+        m = self.manifest()
+        return int(m["rows"]) if m else 0
 
     def max_id(self, column: str = ROW_NUMBER_COLUMN) -> int:
         """COALESCE(MAX(_id), 0) — next-row-number start (reference A1,
-        warehouse.py:13-31). ``_id`` is read from the commit record; other
+        warehouse.py:13-31). ``_id`` is read from the manifest; other
         columns take a column-pruned scan."""
-        rec = self.record()
-        if rec is None:
+        m = self.manifest()
+        if m is None:
             return 0
         if column == ROW_NUMBER_COLUMN:
-            return int(rec["max_id"])
+            return int(m["max_id"])
         row = self.read().agg(F.coalesce(F.max(column), F.lit(0)).alias("m")).collect()[0]
         return int(row["m"])
 
-    # ---- writes ----------------------------------------------------------------
-    def overwrite(self, df: DataFrame) -> None:
-        """WRITE_TRUNCATE analog (reference K2): new snapshot, flip pointer."""
-        base = self.current_version()
-        v = base + 1
-        self._commit(v, expected_base=base, **self._write(df, v))
+    def _commit(
+        self, version: int, buckets: dict, rows: int, max_id: int, schema: dict
+    ) -> None:
+        """Publish ``version`` of the manifest unless another writer
+        committed since this operation read version - 1; the previous
+        version moves into the history."""
+        os.makedirs(self.path, exist_ok=True)
+        prev = self.manifest()
+        now = int(prev["version"]) if prev else 0
+        if version != now + 1:
+            raise ConcurrentWriteError(
+                f"table {self.name}: version moved to {now} during this "
+                f"operation (attempted commit {version}); refusing to "
+                f"clobber the concurrent commit (retry on the new version)"
+            )
+        history = []
+        if prev is not None:
+            history = prev["history"] + [{k: prev[k] for k in ("version", "buckets", "schema")}]
+        m = {"version": version, "rows": rows, "max_id": max_id, "schema": schema,
+             "buckets": buckets, "history": history}
+        self._publish(m, keep_versions=2)
 
-    def delete(self, keys_df: DataFrame, keys: list[str]) -> int:
-        """Targeted key delete (GDPR): rewrite the snapshot without rows
-        whose key tuple appears in ``keys_df`` (LEFT ANTI), committed as
-        a new version — the previous snapshot stays readable until the
-        retention window retires it, and ``_id`` numbering is unaffected
-        (MAX over survivors can only shrink; inserts still number above
-        any historical max via the snapshot's own MAX+1). This is the
-        full-rewrite form; ``BucketedParquetTable.delete`` is the
-        bucket-pruned 100 TB path. Returns rows deleted (both counts come
-        from the commit records)."""
-        current = self.read()
-        n_before = self.row_count()
-        remaining = current.join(
-            keys_df.select(*keys).distinct(), on=keys, how="left_anti"
+    def _publish(self, m: dict, keep_versions: int) -> int:
+        """Trim ``m``'s history to the newest ``keep_versions`` versions,
+        publish it atomically (tmp write + ``os.replace``, which also works
+        on object stores) and delete the data dirs no retained version
+        lists. Returns the dirs that actually DISAPPEARED (not attempts):
+        callers auditing retirement (GDPR delete flows) must not be told a
+        version is gone while an EACCES/busy file keeps its data readable."""
+        keep = max(keep_versions, 1) - 1
+        m["history"] = m["history"][-keep:] if keep else []
+        tmp = self._manifest_path() + ".tmp"
+        with open(tmp, "w") as fh:
+            json.dump(m, fh)
+        os.replace(tmp, self._manifest_path())
+        live = {
+            d.split("/")[0]
+            for snap in [m, *m["history"]]
+            for dirs in snap["buckets"].values()
+            for d in dirs
+        }
+        removed = 0
+        for entry in os.listdir(self.path):
+            target = os.path.join(self.path, entry)
+            if entry.startswith("data_v") and entry not in live:
+                shutil.rmtree(target, ignore_errors=True)
+                removed += not os.path.isdir(target)
+        return removed
+
+    def vacuum(self, keep_versions: int = 1) -> int:
+        """Retire versions older than the newest ``keep_versions``
+        (default: current only) and delete the data dirs only they listed.
+        The commit's window keeps the previous version for
+        ``read_version``; call this when the history is known dead — e.g.
+        a delete whose pre-delete data must not linger (GDPR), or a scratch
+        warehouse. Returns the number of data dirs removed."""
+        m = self.manifest()
+        return self._publish(m, keep_versions) if m else 0
+
+    # ---- reads ---------------------------------------------------------------
+    def _scan(self, snap: dict, buckets: list[int] | None = None) -> DataFrame:
+        """Read the data dirs version ``snap`` lists (of ``buckets`` only,
+        if given) with its recorded schema: no footer-inference job, the
+        columns appends added are there (file sources read every field
+        nullable, exactly as inference would), and an empty dir list reads
+        as an empty frame. Each dir is read as its own root, so partition
+        discovery never resurrects a bucket column."""
+        wanted = snap["buckets"] if buckets is None else [str(b) for b in buckets]
+        paths = [
+            os.path.join(self.path, d) for b in wanted for d in snap["buckets"].get(b, [])
+        ]
+        return self.spark.read.schema(StructType.fromJson(snap["schema"])).parquet(*paths)
+
+    def read(self) -> DataFrame:
+        return self._scan(self._require())
+
+    def read_version(self, version: int) -> DataFrame:
+        """Time travel: the table as of an earlier committed ``version``.
+        Only versions the history retains are readable — the commit deletes
+        data dirs no retained version lists, like VACUUM horizon semantics
+        on a lakehouse table."""
+        m = self._require()
+        snaps = [m, *m["history"]]
+        for snap in snaps:
+            if int(snap["version"]) == version:
+                return self._scan(snap)
+        raise ValueError(
+            f"version {version} not retained "
+            f"(readable: {sorted(int(s['version']) for s in snaps)})"
         )
-        self.overwrite(remaining)
-        return n_before - self.row_count()
 
-    def _align_types(self, df: DataFrame) -> DataFrame:
-        """Cast columns shared with the table to the table's types — the
-        coercion a warehouse load job performs implicitly (reference:
-        schema applied at load, warehouse.py:99-110). New columns pass
-        through untouched (additive evolution)."""
-        existing = {f.name: f.dataType for f in self.read().schema.fields}
+    # ---- writes ----------------------------------------------------------------
+    def _write(
+        self, df: DataFrame, version: int, **extra: Column
+    ) -> tuple[dict[str, str], dict]:
+        """Write ``df`` as data dir ``version``; return {bucket: dir} for
+        what it wrote and the write's observed stats (``write_observed``)."""
+        data_dir = f"data_v{version}"
+        stats = write_observed(
+            df,
+            lambda d: d.write.mode("overwrite").parquet(os.path.join(self.path, data_dir)),
+            **extra,
+        )
+        return {"0": data_dir}, stats
+
+    def _align_types(self, df: DataFrame, m: dict) -> DataFrame:
+        """Cast columns shared with version ``m`` of the table to the
+        types it reads as — the coercion a warehouse load job performs
+        implicitly (reference: schema applied at load,
+        warehouse.py:99-110). New columns pass through untouched (additive
+        evolution)."""
+        existing = {f.name: f.dataType for f in self._scan(m).schema.fields}
         cols = []
         changed = False
         for f in df.schema.fields:
@@ -264,29 +272,58 @@ class ParquetTable:
                 cols.append(df[f.name])
         return df.select(*cols) if changed else df
 
-    def append(self, df: DataFrame) -> None:
-        """WRITE_APPEND with additive schema evolution (reference K3/D3).
+    def overwrite(self, df: DataFrame) -> None:
+        """WRITE_TRUNCATE analog (reference K2): the table as a new data
+        dir, committed as the next version."""
+        self._rewrite(df, self.current_version() + 1)
 
-        Physical file append into the current snapshot — zero rewrite of
-        existing data, scales regardless of table size. The record keeps
-        its version and gains the batch's rows, max and new columns.
-        """
-        rec = self.record()
-        if rec is None:
+    def _rewrite(self, df: DataFrame, version: int) -> None:
+        """Write ``df`` as the whole table and commit it as ``version``."""
+        written, stats = self._write(df, version)
+        buckets = {b: [d] for b, d in written.items()}
+        self._commit(version, buckets, stats["rows"], stats["max_id"], df.schema.jsonValue())
+
+    def append(self, df: DataFrame) -> None:
+        """WRITE_APPEND with additive schema evolution (reference K3/D3):
+        the batch, cast to the table's types, is written as a new data dir
+        added to the dir lists it lands in — zero rewrite of existing data
+        — and committed as the next version with the rows added, the max
+        raised and the schema widened."""
+        m = self.manifest()
+        if m is None:
             self.overwrite(df)
             return
-        schema, df = widen(StructType.fromJson(rec["schema"]), self._align_types(df))
-        v = int(rec["version"])
-        stats = write_observed(
-            df, lambda d: d.write.mode("append").parquet(self.snapshot_dir(v))
-        )
+        schema, df = widen(StructType.fromJson(m["schema"]), self._align_types(df, m))
+        v = int(m["version"]) + 1
+        written, stats = self._write(df, v)
+        buckets = dict(m["buckets"])
+        for b, d in written.items():
+            buckets[b] = buckets.get(b, []) + [d]
         self._commit(
             v,
-            expected_base=v,
-            rows=int(rec["rows"]) + stats["rows"],
-            max_id=max(int(rec["max_id"]), stats["max_id"]),
-            schema=schema.jsonValue(),
+            buckets,
+            int(m["rows"]) + stats["rows"],
+            max(int(m["max_id"]), stats["max_id"]),
+            schema.jsonValue(),
         )
+
+    def delete(self, keys_df: DataFrame, keys: list[str]) -> int:
+        """Targeted key delete (GDPR): rewrite the table without rows
+        whose key tuple appears in ``keys_df`` (LEFT ANTI), committed as
+        a new version — the previous version stays readable until the
+        history retires it, and ``_id`` numbering is unaffected (MAX over
+        survivors can only shrink; inserts still number above any
+        historical max via the table's own MAX+1). This is the
+        full-rewrite form; ``BucketedParquetTable.delete`` is the
+        bucket-pruned 100 TB path. Returns rows deleted (both counts come
+        from the manifest)."""
+        current = self.read()
+        n_before = self.row_count()
+        remaining = current.join(
+            keys_df.select(*keys).distinct(), on=keys, how="left_anti"
+        )
+        self.overwrite(remaining)
+        return n_before - self.row_count()
 
     def create_empty_like(self, df: DataFrame) -> None:
         """Schema-only clone: CREATE TABLE .. AS SELECT .. WHERE 1=0
@@ -304,16 +341,15 @@ class ParquetTable:
     ) -> None:
         """MERGE the stage into this table (reference J1 flow,
         warehouse.py:430-491): auto-create from stage schema when absent,
-        dedup + join-merge, rewrite as a new snapshot."""
+        dedup + join-merge, rewrite as a new version."""
         if not self.exists():
             self.create_empty_like(stage)
-        else:
-            stage = self._align_types(stage)
-        # base captured BEFORE the read: the merge plan scans this exact
-        # snapshot, so the commit check detects any version moved since
-        base = self.current_version()
+        # the version is read BEFORE the table: the merge plan scans this
+        # exact version, so the commit check detects any commit since
+        m = self._require()
+        stage = self._align_types(stage, m)
         held: list[DataFrame] = []  # merge's deduped-stage persist (r13)
-        v = base + 1
+        v = int(m["version"]) + 1
         try:
             merged = upsert_mod.merge(
                 self.read(),
@@ -324,25 +360,23 @@ class ParquetTable:
                 insert_start=self.max_id() + 1,
                 persists=held,
             )
-            stats = self._write(merged, v)
+            self._rewrite(merged, v)
         finally:  # a failed merge or write must not leak the stage pin
             for f in held:
                 f.unpersist(blocking=False)
-        self._commit(v, expected_base=base, **stats)
 
     def backfill_updated_at(
         self, job_ts: dt.datetime, column: str = UPDATED_AT_COLUMN
     ) -> None:
         """UPDATE t SET _updated_at=@ts WHERE _updated_at IS NULL
         (reference F1, warehouse.py:337-357) as a coalesce projection."""
-        base = self.current_version()
+        v = self.current_version() + 1
         df = self.read()
         if column not in df.columns:
             df = df.withColumn(column, F.lit(job_ts))
         else:
             df = df.withColumn(column, F.coalesce(F.col(column), F.lit(job_ts)))
-        v = base + 1
-        self._commit(v, expected_base=base, **self._write(df, v))
+        self._rewrite(df, v)
 
     def drop(self) -> None:
         shutil.rmtree(self.path, ignore_errors=True)

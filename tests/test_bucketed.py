@@ -435,3 +435,24 @@ def test_narrower_append_keeps_table_columns(spark, tmp_path):
     assert t.read(buckets=[empty]).columns == ["_id", "k", "name", "price"]
     assert t.read().columns == ["_id", "k", "name", "price"]
     assert t.read().filter("k = 3").first()["price"] is None
+
+
+def test_append_and_upsert_cast_to_table_types(spark, tmp_path):
+    """A batch whose shared column has another type is cast to the
+    table's type, as on the flat table — files of two types in one column
+    would make every read fail."""
+    t = BucketedParquetTable(spark, str(tmp_path), "t", keys=["k"], num_buckets=4)
+    t.overwrite(
+        with_row_number(spark.createDataFrame([(1, 10), (2, 20)], "k long, price long"))
+    )
+    t.append(
+        with_row_number(
+            spark.createDataFrame([(3, "30")], "k long, price string"), start=3
+        )
+    )
+    t.upsert(spark.createDataFrame([("2", "21"), ("4", "40")], "k string, price string"))
+    got = t.read()
+    assert dict(got.dtypes)["price"] == "bigint"
+    assert sorted((r["k"], r["price"]) for r in got.collect()) == [
+        (1, 10), (2, 21), (3, 30), (4, 40)
+    ]

@@ -49,6 +49,15 @@ def test_hll_build_drops_null_items(spark):
 # --- table vacuum retires dead snapshots (r6 ADVICE #3) ----------------------
 
 
+def data_dirs(table):
+    """(data dirs on disk, data dirs the current manifest lists)."""
+    on_disk = {e for e in os.listdir(table.path) if e.startswith("data_v")}
+    listed = {
+        d.split("/")[0] for dirs in table.manifest()["buckets"].values() for d in dirs
+    }
+    return on_disk, listed
+
+
 def test_parquet_table_vacuum_retires_pre_delete_snapshot(spark):
     from aircan_spark.table import ParquetTable
 
@@ -58,13 +67,14 @@ def test_parquet_table_vacuum_retires_pre_delete_snapshot(spark):
     t.overwrite(df)
     n = t.delete(spark.range(10).select(F.col("id").alias("k")), ["k"])
     assert n == 10
-    snaps = [e for e in os.listdir(t.path) if e.startswith("v") and e[1:].isdigit()]
-    assert len(snaps) == 2  # retention window holds pre-delete snapshot
-    removed = t.vacuum(keep_snapshots=1)
+    on_disk, listed = data_dirs(t)
+    assert len(on_disk) == 2 and len(listed) == 1  # history holds pre-delete data
+    removed = t.vacuum(keep_versions=1)
     assert removed == 1
-    snaps = [e for e in os.listdir(t.path) if e.startswith("v") and e[1:].isdigit()]
-    assert len(snaps) == 1
-    assert t.read().count() == 90  # current snapshot unharmed
+    on_disk, listed = data_dirs(t)
+    assert on_disk == listed and len(on_disk) == 1
+    assert t.manifest()["history"] == []
+    assert t.read().count() == 90  # current version unharmed
 
 
 def test_bucketed_table_vacuum_gcs_dead_data_dirs(spark):
@@ -76,30 +86,31 @@ def test_bucketed_table_vacuum_gcs_dead_data_dirs(spark):
     t.overwrite(df)
     n = t.delete(spark.range(10).select(F.col("id").alias("k")))
     assert n == 10
-    dirs = [e for e in os.listdir(t.path) if e.startswith("data_v")]
-    assert len(dirs) >= 2  # history holds pre-delete data
+    on_disk, listed = data_dirs(t)
+    assert len(on_disk) >= 2 and on_disk > listed  # history holds pre-delete data
     removed = t.vacuum(keep_versions=1)
     assert removed >= 1
+    on_disk, listed = data_dirs(t)
+    assert on_disk == listed
     assert t.manifest().get("history") == []
     assert t.read().count() == 90
 
 
 def test_delete_parity_harness_leaves_single_snapshot(spark, sf_dir):
-    # the w49 harness must not accumulate pre-delete snapshots per run
+    # the w49 harness must not accumulate pre-delete data dirs per run
     import glob
 
     from aircan_spark.ext.queries_w49 import ext_table_delete_parity
+    from aircan_spark.table import ParquetTable
 
     before = set(glob.glob(tempfile.gettempdir() + "/aircan_r6_delete_wh_*"))
     ext_table_delete_parity(spark, sf_dir).collect()
     new = set(glob.glob(tempfile.gettempdir() + "/aircan_r6_delete_wh_*")) - before
     for wh in new:
-        snaps = [
-            e
-            for e in os.listdir(os.path.join(wh, "t"))
-            if e.startswith("v") and e[1:].isdigit()
-        ]
-        assert len(snaps) == 1, f"{wh}: pre-delete snapshot not vacuumed"
+        on_disk, listed = data_dirs(ParquetTable(spark, wh, "t"))
+        assert on_disk == listed and len(on_disk) == 1, (
+            f"{wh}: pre-delete version not vacuumed"
+        )
 
 
 # --- DLQ-gate harness refuses an empty ingest (r6 ADVICE #2) -----------------

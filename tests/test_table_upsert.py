@@ -195,43 +195,49 @@ def test_merge_preserve_columns_insert_takes_stage_value(spark):
     assert out2[10]["note"] == "keep-me"
 
 
-def test_concurrent_commit_detected(spark, tmp_path):
-    """Optimistic-concurrency contract (module docstring): a rewrite based
-    on a snapshot that another writer superseded must raise
-    ConcurrentWriteError at the pointer flip, not clobber the other commit.
-    Simulated by a second table handle committing between the first
-    handle's read and its commit."""
-    from aircan_spark.table import ConcurrentWriteError
-
-    df = with_row_number(spark.createDataFrame([(1, "a")], "sku int, name string"))
-    t = ParquetTable(spark, str(tmp_path), "race")
-    t.overwrite(df)
-    assert t.current_version() == 1
-
-    # another writer moves the version while our rewrite is in flight
-    other = ParquetTable(spark, str(tmp_path), "race")
-    other.overwrite(df)  # v2
-    with pytest.raises(ConcurrentWriteError):
-        t._commit(2, expected_base=1)  # our rewrite thought base was v1
-    assert t.current_version() == 2  # the concurrent commit survives
+KINDS = ["flat", "bucketed"]
 
 
-def test_bucketed_concurrent_commit_detected(spark, tmp_path):
+def make_kind(spark, tmp_path, kind, name="t"):
+    """A flat or a bucketed table on the ``sku`` key."""
     from aircan_spark.bucketed import BucketedParquetTable
+
+    if kind == "flat":
+        return make_table(spark, tmp_path, name)
+    return BucketedParquetTable(spark, str(tmp_path), name, keys=["sku"], num_buckets=4)
+
+
+def key_args(table):
+    """The per-call key list the flat upsert/delete take (the bucketed
+    table holds its keys)."""
+    return () if hasattr(table, "keys") else (["sku"],)
+
+
+@pytest.mark.parametrize("kind", KINDS)
+def test_concurrent_commit_detected(spark, tmp_path, kind):
+    """Optimistic-concurrency contract (table.py docstring): a commit
+    based on a version that another writer superseded must raise
+    ConcurrentWriteError at the publish and publish nothing, not clobber
+    the other commit. Simulated by a second table handle committing
+    between the first handle's read and its commit."""
     from aircan_spark.table import ConcurrentWriteError
 
-    df = with_row_number(
-        spark.createDataFrame([(1, "a"), (2, "b")], "sku int, name string")
-    )
-    b = BucketedParquetTable(spark, str(tmp_path), "brace", keys=["sku"], num_buckets=4)
-    b.overwrite(df)
-    m = b.manifest()
-    assert m["version"] == 1
-    # a commit NOT based on the current manifest (version skip) is stale
-    stale = dict(m, version=3)
-    with pytest.raises(ConcurrentWriteError):
-        b._commit(stale)
-    assert b.manifest()["version"] == 1
+    df = with_row_number(spark.createDataFrame([(1, "a"), (2, "b")], "sku int, name string"))
+    t = make_kind(spark, tmp_path, kind, "race")
+    t.overwrite(df)
+    stale = t.manifest()
+    assert stale["version"] == 1
+
+    # another writer moves the version while our write is in flight
+    make_kind(spark, tmp_path, kind, "race").overwrite(df.limit(1))  # v2
+    published = t.manifest()
+    # our write thought the base was v1; a commit that skips a version is
+    # not based on the current manifest either
+    for version in (2, 4):
+        with pytest.raises(ConcurrentWriteError):
+            t._commit(version, stale["buckets"], 2, 2, stale["schema"])
+    assert t.manifest() == published  # the concurrent commit survives
+    assert t.read().count() == 1
 
 
 def test_parquet_table_delete_keys(spark, tmp_path):
@@ -327,19 +333,120 @@ def test_failed_merge_releases_stage_persist(spark, tmp_path):
     assert t.current_version() == version
 
 
+def _persisted_rdd_ids(spark):
+    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
+
+
+def _fail_on(column, value):
+    """``column`` through a Python UDF that raises on the row holding
+    ``value`` — a task failure in the middle of the write job."""
+
+    @F.udf("string")
+    def check(v):
+        if v == str(value):
+            raise RuntimeError(f"boom: row {v}")
+        return v
+
+    return check(F.col(column).cast("string")).cast("long").alias(column)
+
+
+def _op_batch(spark, op, start):
+    """The input of ``op``: 2 numbered rows (overwrite/append), a stage
+    with one update and one insert (upsert), or 2 keys (delete)."""
+    if op == "delete":
+        return spark.createDataFrame([(20,), (30,)], "sku long")
+    rows = spark.createDataFrame(
+        [(20, "beta2", 2.0), (40, "delta", 4.0)], "sku long, name string, price double"
+    )
+    if op == "upsert":
+        return rows
+    return with_row_number(rows, start=start, order_by=["sku"]).withColumn(
+        "_updated_at", F.lit(TS2)
+    )
+
+
+def _run_op(table, op, df):
+    if op in ("overwrite", "append"):
+        getattr(table, op)(df)
+    elif op == "upsert":
+        table.upsert(df, *key_args(table), job_ts=TS2)
+    else:
+        table.delete(df, *key_args(table))
+
+
+@pytest.mark.parametrize("fault", ["commit", "udf"])
+@pytest.mark.parametrize("op", ["overwrite", "append", "upsert", "delete"])
+@pytest.mark.parametrize("kind", KINDS)
+def test_failed_write_leaves_previous_version(spark, tmp_path, monkeypatch, kind, op, fault):
+    """A write that fails after its data write (the commit raises) or in
+    the middle of its job (a UDF throws on one row) leaves readers on
+    exactly the previous version, with its stats and no leaked persist,
+    and the next append numbers above every visible row."""
+    from aircan_spark.rownum import release_caches
+
+    t = make_kind(spark, tmp_path, kind)
+    t.overwrite(base_df(spark))
+    release_caches()
+    def state():
+        return t.read().count(), t.row_count(), t.max_id(), t.current_version()
+
+    before, pinned = state(), _persisted_rdd_ids(spark)
+    df = _op_batch(spark, op, start=t.max_id() + 1)
+    with monkeypatch.context() as m:
+        if fault == "commit":
+            def commit(*args, **kwargs):
+                raise RuntimeError("boom: crashed before the commit")
+
+            m.setattr(ParquetTable, "_commit", commit)
+        else:
+            df = df.select(*[_fail_on(c, 20) if c == "sku" else c for c in df.columns])
+        with pytest.raises(Exception, match="boom"):
+            _run_op(t, op, df)
+    release_caches()  # the insert numbering's persist (pipeline.run does this)
+    assert state() == before
+    assert _persisted_rdd_ids(spark) == pinned
+
+    extra = spark.createDataFrame([(50, "eps", 5.0)], "sku long, name string, price double")
+    t.append(
+        with_row_number(extra, start=t.max_id() + 1).withColumn("_updated_at", F.lit(TS2))
+    )
+    ids = [r["_id"] for r in t.read().collect()]
+    assert len(ids) == len(set(ids)) == before[0] + 1
+    assert t.current_version() == before[3] + 1
+    assert_record_invariant(spark, t)
+
+
+@pytest.mark.parametrize("kind", KINDS)
+def test_read_version_uses_recorded_schema(spark, tmp_path, kind):
+    """An earlier version is read by the same scan as ``read()``: its
+    recorded schema, no footer-inference job, and the rows it held."""
+    t = make_kind(spark, tmp_path, kind)
+    t.overwrite(base_df(spark))
+    prev = t.current_version()
+    want = sorted(map(tuple, t.read().collect()))
+    extra = spark.createDataFrame(
+        [(50, "eps", 5.0, 99)], "sku long, name string, price double, supplier_id long"
+    )
+    t.append(with_row_number(extra, start=4).withColumn("_updated_at", F.lit(TS2)))
+    old, jobs = count_jobs(spark, lambda: t.read_version(prev))
+    assert jobs == 0
+    assert "supplier_id" not in old.columns
+    assert sorted(map(tuple, old.collect())) == want
+
+
 def test_read_after_append_ignores_dir_mtime(spark, tmp_path):
     import os
 
     t = make_table(spark, tmp_path)
     t.overwrite(base_df(spark))
-    snap = t.snapshot_dir()
-    stamp = os.stat(snap)
-    assert t.read().count() == 3  # memoized under (version, dir mtime)
+    stamps = {p: os.stat(p) for p in [t.path, *live_paths(t)]}
+    assert t.read().count() == 3
     extra = spark.createDataFrame([(40, "delta", 4.0)], ["sku", "name", "price"])
     extra = with_row_number(extra, start=4).withColumn("_updated_at", F.lit(TS2))
     t.append(extra)
-    # a coarse clock or a stale attribute cache leaves the mtime unmoved
-    os.utime(snap, ns=(stamp.st_atime_ns, stamp.st_mtime_ns))
+    # a coarse clock or a stale attribute cache leaves the mtimes unmoved
+    for p, st in stamps.items():
+        os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns))
     assert t.read().count() == 4
 
 
@@ -358,11 +465,9 @@ def count_jobs(spark, fn):
 
 
 def live_paths(table):
-    """The parquet dirs the table's current commit points at."""
+    """The parquet dirs the table's current manifest lists."""
     import os
 
-    if isinstance(table, ParquetTable):
-        return [table.snapshot_dir()]
     return [
         os.path.join(table.path, d)
         for dirs in table.manifest()["buckets"].values()
@@ -429,13 +534,13 @@ def test_read_sees_append_from_another_object(spark, tmp_path):
 
     a = make_table(spark, tmp_path)
     a.overwrite(base_df(spark))
-    snap = a.snapshot_dir()
-    stamp = os.stat(snap)
+    stamps = {p: os.stat(p) for p in [a.path, *live_paths(a)]}
     assert a.read().count() == 3
     b = make_table(spark, tmp_path)
     extra = spark.createDataFrame([(40, "delta", 4.0)], ["sku", "name", "price"])
     b.append(with_row_number(extra, start=4).withColumn("_updated_at", F.lit(TS2)))
-    # a coarse clock or a stale attribute cache leaves the mtime unmoved
-    os.utime(snap, ns=(stamp.st_atime_ns, stamp.st_mtime_ns))
+    # a coarse clock or a stale attribute cache leaves the mtimes unmoved
+    for p, st in stamps.items():
+        os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns))
     assert a.read().count() == 4
     assert a.row_count() == 4
