@@ -24,7 +24,8 @@ Config keys (names follow the reference's DAG params where they exist):
     updated_at_column   default '_updated_at'
     export              optional {'path': dir, 'format': fmt,
                         'single_file': bool}
-    day_first           DMY date parsing (legacy Postgres path behavior)
+    day_first           DMY date parsing (legacy Postgres path behavior),
+                        for the load as well as the validation gate
 """
 
 from __future__ import annotations
@@ -40,13 +41,14 @@ from aircan_spark.export import export_ordered
 from aircan_spark.rownum import release_caches, with_row_number
 from aircan_spark.schema import (
     decide_schema_action,
+    descriptor_to_struct,
     sanitize_descriptor,
     struct_to_descriptor,
     unique_keys as descriptor_keys,
 )
 from aircan_spark.sources import infer_format, read_resource
 from aircan_spark.table import ParquetTable, ensure_warehouse
-from aircan_spark.validate import validate as validate_frame
+from aircan_spark.validate import conform, validate as validate_frame
 
 
 class ValidationFailure(RuntimeError):
@@ -74,27 +76,13 @@ def run(spark: SparkSession, config: dict[str, Any]) -> dict[str, Any]:
 
     # --- schema: declared or inferred (reference S6, :271-282) ------------
     descriptor = config.get("schema_descriptor")
-    if descriptor is not None:
+    declared = descriptor is not None
+    if declared:
         descriptor = sanitize_descriptor(descriptor)
-        typed = read_resource(
-            spark, path, config.get("resource_format"), descriptor=descriptor
-        )
-    else:
-        typed = read_resource(spark, path, config.get("resource_format"))
-        descriptor = struct_to_descriptor(typed.schema)
-
-    # --- validation gate (reference 2b, :287-317) ---------------------------
-    report: dict[str, Any] | None = None
-    if config.get("validate"):
-        raw = read_resource(
-            spark, path, config.get("resource_format"), sanitize_names=True
-        )
-        raw = raw.select(*[F.col(c).cast("string").alias(c) for c in raw.columns])
-        report = validate_frame(
-            raw, descriptor, day_first=config.get("day_first", False)
-        )
-        if not report["valid"]:
-            raise ValidationFailure(report)
+    raw = read_resource(spark, path, config.get("resource_format"), descriptor=descriptor)
+    if not declared:
+        descriptor = struct_to_descriptor(raw.schema)
+    day_first = config.get("day_first", False)
 
     # --- target table: plain, or hash-bucketed for partial-rewrite merges --
     keys = config.get("unique_keys") or descriptor_keys(descriptor)
@@ -117,10 +105,11 @@ def run(spark: SparkSession, config: dict[str, Any]) -> dict[str, Any]:
     #   on_schema_drift: 'evolve' (default) keeps the engine's additive
     #   append (D3 — removed columns stay, added columns backfill NULL);
     #   'recreate' mirrors the reference datastore (drop + reload).
+    recreate_schema = None
     if method in ("append", "upsert") and table.exists():
         decision = decide_schema_action(
             table.read().schema,
-            typed.schema,
+            descriptor_to_struct(descriptor) if declared else raw.schema,
             type_overrides=config.get("data_dictionary"),
             append_enabled=True,
         )
@@ -128,17 +117,7 @@ def run(spark: SparkSession, config: dict[str, Any]) -> dict[str, Any]:
             config.get("on_schema_drift", "evolve") == "recreate"
         ):
             method = "overwrite"
-            # Persist the curator-declared types on recreate (the reference
-            # reloads with the data-dictionary schema, api_loader.py:70-150)
-            # — not just use them for the decision. try_cast: a cell that
-            # can't take the declared type becomes NULL rather than failing
-            # the job mid-rewrite (validation is the abort gate, not this).
-            typed = typed.select(
-                *[
-                    F.col(f.name).try_cast(f.dataType).alias(f.name)
-                    for f in decision["schema"].fields
-                ]
-            )
+            recreate_schema = decision["schema"]
 
     # --- row numbering (reference 2c/2d: MAX+1 offset, stream inject) ------
     start = 1
@@ -149,28 +128,50 @@ def run(spark: SparkSession, config: dict[str, Any]) -> dict[str, Any]:
     # pass reads only footers, so persisting it buys nothing; text/gzip
     # re-parses are costly and keep the persist (rownum.py cache rule).
     columnar = infer_format(path, config.get("resource_format")) in ("parquet", "orc")
+    report: dict[str, Any] | None = None
     try:
-        numbered = with_row_number(
-            typed, column=rn_col, start=start, cache=not columnar
+        numbered, rows = with_row_number(
+            raw, column=rn_col, start=start, cache=not columnar, return_count=True
         )
+
+        # --- validation gate (reference 2b, :287-317) -----------------------
+        if config.get("validate"):
+            report = validate_frame(
+                numbered, descriptor, rows, first_id=start, row_column=rn_col,
+                day_first=day_first,
+            )
+            if not report["valid"]:
+                raise ValidationFailure(report)
+
+        typed = conform(numbered, descriptor, day_first) if declared else numbered
+        if recreate_schema is not None:
+            # Persist the curator-declared types on recreate (the reference
+            # reloads with the data-dictionary schema, api_loader.py:70-150)
+            # — not just use them for the decision. try_cast: a cell that
+            # can't take the declared type becomes NULL rather than failing
+            # the job mid-rewrite (validation is the abort gate, not this).
+            typed = typed.select(rn_col, *[
+                F.col(f.name).try_cast(f.dataType).alias(f.name) for f in recreate_schema.fields
+            ])
 
         # --- write branch (reference 3/4a/4b, :360-460) ---------------------
         if method == "upsert":
             if not keys:
                 raise ValueError("upsert requires unique_keys (config or descriptor)")
             if num_buckets:
-                table.upsert(numbered, job_ts=job_ts)
+                table.upsert(typed, job_ts=job_ts)
             else:
-                table.upsert(numbered, keys, job_ts=job_ts)
+                table.upsert(typed, keys, job_ts=job_ts)
         elif method == "append":
-            table.append(numbered.withColumn(ts_col, F.lit(job_ts)))
+            table.append(typed.withColumn(ts_col, F.lit(job_ts)))
         elif method == "overwrite":
-            table.overwrite(numbered.withColumn(ts_col, F.lit(job_ts)))
+            table.overwrite(typed.withColumn(ts_col, F.lit(job_ts)))
         else:
             raise ValueError(f"unknown method: {method!r}")
     finally:
-        # every with_row_number cache (including those upsert created for
-        # insert numbering) is materialized by the write above — release.
+        # every with_row_number cache (the numbered raw frame, and those
+        # upsert created for insert numbering) is materialized by the write
+        # above, or abandoned by a refused load — release.
         release_caches()
 
     # --- export (reference 5, :483-569) --------------------------------------

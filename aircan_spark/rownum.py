@@ -74,7 +74,8 @@ def with_row_number(
     start: int = 1,
     order_by: list[str | Column] | None = None,
     cache: bool = True,
-) -> DataFrame:
+    return_count: bool = False,
+) -> DataFrame | tuple[DataFrame, int]:
     """Prepend a contiguous row-number column starting at ``start``.
 
     ``order_by``: explicit global ordering columns. When given, the frame is
@@ -86,6 +87,8 @@ def with_row_number(
     caching guarantees the two passes see identical rows and order. Disable
     only for deterministic, cheap-to-rescan sources (see the module's cache
     rule).
+
+    ``return_count``: return ``(numbered, rows)``, counted by the count pass.
     """
     prepared = df
     if order_by:
@@ -108,4 +111,5 @@ def with_row_number(
     # partition, shipped with the task closure. No join, no shuffle.
     delta = F.create_map(*entries)[part] if entries else F.lit(0)
     data_cols = [c for c in df.columns if c != column]
-    return prepared.select((F.col(_ROW) + delta).alias(column), *data_cols)
+    numbered = prepared.select((F.col(_ROW) + delta).alias(column), *data_cols)
+    return (numbered, acc - start) if return_count else numbered

@@ -25,7 +25,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from aircan_spark.schema import descriptor_to_struct, sanitize_column_name
+from aircan_spark.schema import sanitize_column_name
 
 # format -> (spark format, reader options); mirrors storage.py:214-222
 _FORMATS = {"csv", "tsv", "json", "ndjson", "jsonl", "parquet", "orc"}
@@ -117,8 +117,8 @@ def read_resource(
 ) -> DataFrame:
     """Read a resource into a DataFrame.
 
-    - csv/tsv: header row consumed (F4/P3), schema from the descriptor when
-      declared else inferred (S6); tsv is normalized properly via
+    - csv/tsv: header row consumed (F4/P3), types inferred when no
+      descriptor is given (S6); tsv is normalized properly via
       ``sep='\\t'`` (fixing the reference quirk at storage.py:115-116 where
       TSV bytes were re-emitted but loaded as comma-CSV).
     - ndjson/jsonl: ``spark.read.json`` line mode (S2).
@@ -130,6 +130,11 @@ def read_resource(
       non-splittable -> single-task read, same as the reference's
       single-threaded stream; at scale recompress on ingest (SURVEY §7.4)
       — ``respill=True`` does exactly that.
+
+    With a ``descriptor``, text sources return every column as a string,
+    under the descriptor's field names in field order (csv/tsv by position,
+    json by key, a JSON scalar as its text); parquet/orc keep their native
+    types. ``validate.conform`` applies the declared types.
 
     ``respill=True`` (SURVEY §7.4 hard-part 4): when the source is a
     non-splittable ``.gz`` text file, rewrite it ONCE to zstd parquet in
@@ -145,9 +150,10 @@ def read_resource(
     if is_http_url(path):
         path = fetch_to_local(path)
 
-    schema: T.StructType | None = None
+    text_schema: T.StructType | None = None
     if descriptor is not None:
-        schema = descriptor_to_struct(descriptor)
+        names = [f["name"] for f in descriptor.get("fields", [])]
+        text_schema = T.StructType([T.StructField(n, T.StringType()) for n in names])
 
     opts = dict(options or {})
     if fmt in ("csv", "tsv"):
@@ -156,10 +162,8 @@ def read_resource(
             .option("sep", "\t" if fmt == "tsv" else opts.pop("sep", ","))
             .option("nullValue", "")
         )
-        if schema is not None:
-            # Read as declared types; malformed cells null out (PERMISSIVE),
-            # which the validation layer reports (validate.py).
-            reader = reader.schema(schema).option("mode", "PERMISSIVE")
+        if text_schema is not None:
+            reader = reader.schema(text_schema)
         else:
             reader = reader.option("inferSchema", "true")
         for k, v in opts.items():
@@ -169,19 +173,15 @@ def read_resource(
         reader = spark.read
         if fmt == "json":
             reader = reader.option("multiLine", "true")
-        if schema is not None:
-            reader = reader.schema(schema)
+        if text_schema is not None:
+            reader = reader.schema(text_schema)
         for k, v in opts.items():
             reader = reader.option(k, v)
         df = reader.json(path)
-        if schema is not None:
-            df = df.select(*[f.name for f in schema.fields])
     elif fmt in ("parquet", "orc"):
         df = spark.read.parquet(path) if fmt == "parquet" else spark.read.orc(path)
-        if schema is not None:
-            df = df.select(
-                *[df[f.name].cast(f.dataType).alias(f.name) for f in schema.fields]
-            )
+        if descriptor is not None:
+            df = df.select(*names)
     else:  # pragma: no cover — infer_format already rejects
         raise ValueError(f"unsupported format: {fmt}")
 

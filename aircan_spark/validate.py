@@ -3,15 +3,22 @@ frictionless validation (/root/reference/aircan/dependencies/utils/
 validation.py:11-102; report handling dags/pipeline_ckan_to_bigquery.py:
 287-317).
 
-The reference re-reads the source row-by-row through frictionless and
-collects type/constraint errors capped at 1000. Here validation is a Spark
-plan over the raw (all-string) frame:
+``conform`` is the one cast: it is the only place a descriptor's declared
+types are applied, and it ends in ``descriptor_to_struct``'s Spark types.
+``pipeline.run`` loads ``conform`` of the frame the gate checked, so a
+cell is either reported or loaded as checked, never silently nulled.
 
-- type errors: attempted cast per the descriptor; a non-null raw cell whose
-  cast is NULL is a ``type-error`` (same detection frictionless does, but
-  vectorized JVM-side, no Python in the loop).
+The reference re-reads the source row-by-row through frictionless and
+collects type/constraint errors capped at 1000. Here the gate is a Spark
+plan over the numbered raw frame (text sources read as strings, columnar
+sources in their native types), which it neither caches nor counts: the
+numbering's count pass supplies ``row_count``.
+
+- type errors: a non-null raw cell whose ``conform`` cast is NULL is a
+  ``type-error``, reported with the cell's source text (same detection
+  frictionless does, but vectorized JVM-side, no Python in the loop).
 - ``required`` violations: NULL/empty in a required field.
-- ``unique`` violations: groupBy(key).count() > 1.
+- ``unique`` violations: groupBy(conformed key).count() > 1.
 
 The error frame is only ever materialized via ``limit(error_cap)`` — the
 scan short-circuits instead of collecting everything.
@@ -21,59 +28,67 @@ from __future__ import annotations
 
 from typing import Any
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
-from aircan_spark.rownum import with_row_number
+from aircan_spark import ROW_NUMBER_COLUMN
 from aircan_spark.schema import descriptor_to_struct
 
 ERROR_CAP = 1000  # reference default limit_errors (pipeline_ckan_to_bigquery.py:296)
 
-# Cast patterns needing explicit formats rather than bare CAST.
-_BOOL_TRUE = ("true", "t", "1", "yes", "y")
-_BOOL_FALSE = ("false", "f", "0", "no", "n")
 
-
-def _typed_cast(col: F.Column, ftype: str, day_first: bool) -> F.Column:
-    """Cast a raw string column to its frictionless type, returning NULL on
-    failure (``try_cast`` — Spark 4 is ANSI by default, a plain CAST would
-    abort the job on the first malformed cell). Boolean parsing mirrors
-    to_bool (dependencies_legacy/utils.py:183-197); day-first dates mirror
-    the Postgres path's DMY datestyle (postgres_loader.py:113,151)."""
-    lowered = F.lower(F.trim(col))
-    if ftype == "boolean":
-        return (
-            F.when(lowered.isin(*_BOOL_TRUE), F.lit(True))
-            .when(lowered.isin(*_BOOL_FALSE), F.lit(False))
-            .otherwise(F.lit(None).cast("boolean"))
+def _cast(col: Column, source: T.DataType, target: T.DataType, day_first: bool) -> Column:
+    """Cast one column to its declared Spark type, NULL on failure
+    (``try_cast`` — Spark 4 is ANSI by default, a plain CAST would abort the
+    job on the first malformed cell). Spark's string-to-boolean cast takes
+    t/true/y/yes/1 and f/false/n/no/0 in any case, as to_bool does
+    (dependencies_legacy/utils.py:183-197); day-first dates mirror the
+    Postgres path's DMY datestyle (postgres_loader.py:113,151)."""
+    if day_first and isinstance(target, T.DateType) and isinstance(source, T.StringType):
+        return F.coalesce(
+            F.try_to_timestamp(col, F.lit("d/M/yyyy")).cast("date"),
+            F.try_to_timestamp(col, F.lit("d-M-yyyy")).cast("date"),
+            col.try_cast("date"),
         )
-    if ftype == "integer" or ftype == "year":
-        return col.try_cast("long")
-    if ftype == "number":
-        return col.try_cast("double")
-    if ftype == "date":
-        if day_first:
-            return F.coalesce(
-                F.try_to_timestamp(col, F.lit("d/M/yyyy")).cast("date"),
-                F.try_to_timestamp(col, F.lit("d-M-yyyy")).cast("date"),
-                col.try_cast("date"),
-            )
-        return col.try_cast("date")
-    if ftype in ("datetime", "timestamptz"):
-        return col.try_cast("timestamp")
-    return col  # string-family types always pass
+    return col.try_cast(target)
+
+
+def _casts(raw: DataFrame, descriptor: dict[str, Any], day_first: bool) -> dict[str, Column]:
+    """Declared field name -> its ``conform`` cast over ``raw``, carrying
+    the descriptor's field metadata."""
+    source = {f.name: f.dataType for f in raw.schema.fields}
+    return {
+        f.name: _cast(F.col(f.name), source[f.name], f.dataType, day_first).alias(
+            f.name, metadata=f.metadata
+        )
+        for f in descriptor_to_struct(descriptor).fields
+    }
+
+
+def conform(raw: DataFrame, descriptor: dict[str, Any], day_first: bool = False) -> DataFrame:
+    """Apply the descriptor's declared types to ``raw``. Columns the
+    descriptor does not declare (the row number) pass through in place."""
+    casts = _casts(raw, descriptor, day_first)
+    return raw.select(*[casts.get(c, F.col(c)) for c in raw.columns])
 
 
 def validate(
-    raw: DataFrame,
+    numbered: DataFrame,
     descriptor: dict[str, Any],
+    row_count: int,
     *,
+    first_id: int = 1,
+    row_column: str = ROW_NUMBER_COLUMN,
     error_cap: int = ERROR_CAP,
-    row_limit: int | None = None,
     day_first: bool = False,
     row_start: int = 2,
 ) -> dict[str, Any]:
-    """Validate a raw (string-typed) frame against a descriptor.
+    """Validate a numbered raw frame against a descriptor.
+
+    ``numbered`` is the raw frame after ``with_row_number``: its
+    ``row_column`` numbers the source rows from ``first_id``, and
+    ``row_count`` is that numbering's count.
 
     Returns a report dict shaped like the reference's abort payload
     (pipeline_ckan_to_bigquery.py:300-311): ``valid``, ``row_count``,
@@ -85,29 +100,18 @@ def validate(
     header row the first data row is row 2 (matching the reference's
     report rows exactly). Pass 1 for headerless sources.
     """
-    if row_limit:
-        raw = raw.limit(row_limit)  # reference limit_rows (validation.py:20-27)
-    raw = raw.cache()
-    row_count = raw.count()
-
     fields = descriptor.get("fields", [])
+    casts = _casts(numbered, descriptor, day_first)
     error_frames: list[DataFrame] = []
 
     # Per-cell type + required errors in ONE projection pass.
     cell_errors = []
     for f in fields:
-        name, ftype = f["name"], f.get("type", "any")
-        if name not in raw.columns:
-            continue
-        constraints = f.get("constraints") or {}
+        name = f["name"]
         col = F.col(name)
         raw_present = col.isNotNull() & (F.trim(col) != "")
-        casted = _typed_cast(col, ftype, day_first)
-        err = F.when(
-            raw_present & casted.isNull() & F.lit(ftype not in ("string", "any")),
-            F.lit("type-error"),
-        )
-        if constraints.get("required"):
+        err = F.when(raw_present & casts[name].isNull(), F.lit("type-error"))
+        if (f.get("constraints") or {}).get("required"):
             err = F.when(~raw_present, F.lit("constraint-error:required")).otherwise(err)
         cell_errors.append(
             F.when(
@@ -117,41 +121,26 @@ def validate(
                     err.alias("code"),
                     col.cast("string").alias("value"),
                 ),
-            ).alias(f"__err_{name}")
+            )
         )
     if cell_errors:
-        # 1-based source row positions (frictionless row numbering), not
-        # opaque monotonically_increasing_id values: partition-offset
-        # numbering over the cached frame preserves source order with no
-        # global window (rownum.py).
-        numbered = with_row_number(raw, column="__row", start=row_start, cache=False)
-        errs = (
-            numbered.select("__row", *cell_errors)
-            .select(
-                "__row",
-                F.explode(
-                    F.filter(
-                        F.array(*[F.col(f"__err_{f['name']}") for f in fields if f["name"] in raw.columns]),
-                        lambda x: x.isNotNull(),
-                    )
-                ).alias("e"),
-            )
-            .select(
-                F.col("__row").alias("row"),
-                F.col("e.field").alias("field"),
-                F.col("e.code").alias("code"),
-                F.col("e.value").alias("value"),
-            )
-        )
+        # 1-based source row positions (frictionless row numbering), from
+        # the load's own numbering.
+        row = F.col(row_column) - F.lit(first_id) + F.lit(row_start)
+        errs = numbered.select(
+            row.alias("row"),
+            F.explode(F.filter(F.array(*cell_errors), lambda x: x.isNotNull())).alias("e"),
+        ).select("row", "e.field", "e.code", "e.value")
         error_frames.append(errs)
 
-    # unique-constraint violations: keys appearing more than once.
+    # unique-constraint violations: conformed keys appearing more than once.
     for f in fields:
-        constraints = f.get("constraints") or {}
-        if constraints.get("unique") and f["name"] in raw.columns:
+        if (f.get("constraints") or {}).get("unique"):
             name = f["name"]
             dupes = (
-                raw.groupBy(name)
+                numbered.select(casts[name])
+                .where(F.col(name).isNotNull())
+                .groupBy(name)
                 .agg(F.count(F.lit(1)).alias("n"))
                 .filter(F.col("n") > 1)
                 .select(
@@ -163,14 +152,12 @@ def validate(
             )
             error_frames.append(dupes)
 
+    collected = []
     if error_frames:
         all_errors = error_frames[0]
         for e in error_frames[1:]:
             all_errors = all_errors.unionByName(e)
         collected = all_errors.limit(error_cap).collect()
-    else:
-        collected = []
-    raw.unpersist(blocking=False)
 
     errors = [r.asDict() for r in collected]
     return {

@@ -6,6 +6,7 @@ import json
 import pytest
 
 from aircan_spark.pipeline import ValidationFailure, run
+from aircan_spark.table import ParquetTable
 
 DESCRIPTOR = {
     "fields": [
@@ -113,21 +114,88 @@ def test_pipeline_bucketed_cycle(spark, tmp_path):
 
 
 def test_pipeline_validation_abort(spark, tmp_path):
+    """A refused load raises, leaves the table's committed version in
+    place and leaves no persisted frame behind. An append numbers its rows
+    from MAX(_id)+1; the errors still name the source rows."""
+    good = str(tmp_path / "good.csv")
+    write_csv(good, [(1, "a", 1.0)])
+    cfg = {
+        "resource_path": good,
+        "table_name": "bad",
+        "warehouse": str(tmp_path / "wh"),
+        "schema_descriptor": DESCRIPTOR,
+        "validate": True,
+    }
+    version = run(spark, cfg)["version"]
     src = str(tmp_path / "bad.csv")
     with open(src, "w") as fh:
         fh.write("sku,name,price\nnot_an_int,x,1.0\n2,,2.0\n")
+    persisted = int(spark.sparkContext._jsc.getPersistentRDDs().size())
     with pytest.raises(ValidationFailure) as exc:
-        run(spark, {
-            "resource_path": src,
-            "table_name": "bad",
-            "warehouse": str(tmp_path / "wh"),
-            "schema_descriptor": DESCRIPTOR,
-            "validate": True,
-        })
+        run(spark, {**cfg, "resource_path": src, "method": "append"})
     report = exc.value.report
     assert report["error_count"] >= 2
     codes = {e["code"] for e in report["errors"]}
     assert "type-error" in codes and "constraint-error:required" in codes
+    assert {(e["row"], e["field"]) for e in report["errors"]} == {(2, "sku"), (3, "name")}
+    assert int(spark.sparkContext._jsc.getPersistentRDDs().size()) == persisted
+    assert ParquetTable(spark, str(tmp_path / "wh"), "bad").current_version() == version
+
+
+# name -> (CSV text, descriptor fields, loaded (values) or refused [errors])
+GATE_CASES = {
+    # cells the gate passed and the load nulled
+    "yes_no_and_day_first_load_as_checked": (
+        "flag,d\nyes,31/12/2020\nno,1/2/2021\n",
+        [{"name": "flag", "type": "boolean"}, {"name": "d", "type": "date"}],
+        [(True, dt.date(2020, 12, 31)), (False, dt.date(2021, 2, 1))],
+    ),
+    # the gate checked inferred doubles: '1000.0', and the valid 5 as '5.0'
+    "integer_error_reports_source_text": (
+        "v\n1e3\n5\n",
+        [{"name": "v", "type": "integer"}],
+        [{"row": 2, "field": "v", "code": "type-error", "value": "1e3"}],
+    ),
+    # header labels differ from the descriptor's names: the gate skipped them
+    "header_names_differ": (
+        "Key,Amount\n1,abc\n",
+        [{"name": "id", "type": "integer"}, {"name": "amount", "type": "number"}],
+        [{"row": 2, "field": "amount", "code": "type-error", "value": "abc"}],
+    ),
+    # uniqueness is checked on the conformed value, not on the text
+    "unique_integer_key_conformed": (
+        "k\n01\n1\n",
+        [{"name": "k", "type": "integer", "constraints": {"unique": True}}],
+        [{"row": -1, "field": "k", "code": "constraint-error:unique", "value": "1"}],
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(GATE_CASES))
+def test_pipeline_gate_checks_the_loaded_frame(spark, tmp_path, case):
+    """The validation gate checks the cells exactly as the load casts them:
+    a cell is either refused, reported as written in the source, or loaded
+    as the value the gate accepted."""
+    text, fields, want = GATE_CASES[case]
+    src = tmp_path / "gate.csv"
+    src.write_text(text)
+    cfg = {
+        "resource_path": str(src),
+        "table_name": "gate",
+        "warehouse": str(tmp_path / "wh"),
+        "schema_descriptor": {"fields": fields},
+        "validate": True,
+        "day_first": True,
+    }
+    if isinstance(want[0], dict):
+        with pytest.raises(ValidationFailure) as exc:
+            run(spark, cfg)
+        assert exc.value.report["errors"] == want
+        return
+    run(spark, cfg)
+    names = [f["name"] for f in fields]
+    got = ParquetTable(spark, cfg["warehouse"], "gate").read().orderBy("_id").select(*names)
+    assert [tuple(r) for r in got.collect()] == want
 
 
 def test_pipeline_inferred_schema(spark, tmp_path):
@@ -289,5 +357,5 @@ def test_pipeline_load_job_counts(spark, tmp_path):
         "parquet_upsert": 13,
         "bucketed_parquet_overwrite": 5,
         "bucketed_correction_upsert": 14,
-        "gzip_csv_validated_overwrite": 14,
+        "gzip_csv_validated_overwrite": 7,
     }

@@ -7,7 +7,7 @@ import os
 from aircan_spark.export import export_ordered
 from aircan_spark.rownum import with_row_number
 from aircan_spark.sources import infer_format, read_resource
-from aircan_spark.validate import validate
+from aircan_spark.validate import conform, validate
 
 DESCRIPTOR = {
     "fields": [
@@ -62,7 +62,7 @@ def _check(df):
 def test_read_csv(spark, tmp_path):
     p = str(tmp_path / "d.csv")
     open(p, "w").write(_csv_text())
-    _check(read_resource(spark, p, descriptor=DESCRIPTOR))
+    _check(conform(read_resource(spark, p, descriptor=DESCRIPTOR), DESCRIPTOR))
 
 
 def test_read_csv_inferred(spark, tmp_path):
@@ -76,14 +76,14 @@ def test_read_csv_inferred(spark, tmp_path):
 def test_read_tsv(spark, tmp_path):
     p = str(tmp_path / "d.tsv")
     open(p, "w").write(_csv_text(sep="\t"))
-    _check(read_resource(spark, p, descriptor=DESCRIPTOR))
+    _check(conform(read_resource(spark, p, descriptor=DESCRIPTOR), DESCRIPTOR))
 
 
 def test_read_csv_gz(spark, tmp_path):
     p = str(tmp_path / "d.csv.gz")
     with gzip.open(p, "wt") as fh:
         fh.write(_csv_text())
-    _check(read_resource(spark, p, descriptor=DESCRIPTOR))
+    _check(conform(read_resource(spark, p, descriptor=DESCRIPTOR), DESCRIPTOR))
 
 
 def test_read_csv_gz_respill_splits_downstream_scan(spark, tmp_path):
@@ -122,13 +122,13 @@ def test_read_ndjson(spark, tmp_path):
     with open(p, "w") as fh:
         for r in ROWS:
             fh.write(json.dumps(r) + "\n")
-    _check(read_resource(spark, p, descriptor=DESCRIPTOR))
+    _check(conform(read_resource(spark, p, descriptor=DESCRIPTOR), DESCRIPTOR))
 
 
 def test_read_json_array(spark, tmp_path):
     p = str(tmp_path / "d.json")
     open(p, "w").write(json.dumps(ROWS, indent=2))
-    _check(read_resource(spark, p, descriptor=DESCRIPTOR))
+    _check(conform(read_resource(spark, p, descriptor=DESCRIPTOR), DESCRIPTOR))
 
 
 def test_read_parquet(spark, tmp_path):
@@ -138,7 +138,7 @@ def test_read_parquet(spark, tmp_path):
     )
     p = str(tmp_path / "d.parquet")
     src.write.parquet(p)
-    _check(read_resource(spark, p, descriptor=DESCRIPTOR))
+    _check(conform(read_resource(spark, p, descriptor=DESCRIPTOR), DESCRIPTOR))
 
 
 def test_messy_headers_sanitized(spark, tmp_path):
@@ -151,12 +151,16 @@ def test_messy_headers_sanitized(spark, tmp_path):
 # ---- validation ----------------------------------------------------------
 
 
+def _validate(raw, **kwargs):
+    """The gate's input: the raw frame numbered once, with its count."""
+    numbered, rows = with_row_number(raw, cache=False, return_count=True)
+    return validate(numbered, DESCRIPTOR, rows, **kwargs)
+
+
 def test_validate_clean(spark, tmp_path):
     p = str(tmp_path / "d.csv")
     open(p, "w").write(_csv_text())
-    raw = read_resource(spark, p, sanitize_names=True)
-    raw = raw.selectExpr(*[f"cast({c} as string) as {c}" for c in raw.columns])
-    report = validate(raw, DESCRIPTOR)
+    report = _validate(read_resource(spark, p, descriptor=DESCRIPTOR))
     assert report["valid"] is True
     assert report["row_count"] == 3
 
@@ -170,7 +174,7 @@ def test_validate_bad_rows(spark):
         ],
         ["sku", "name", "price", "in_stock"],
     )
-    report = validate(raw, DESCRIPTOR)
+    report = _validate(raw)
     assert report["valid"] is False
     codes = sorted({e["code"] for e in report["errors"]})
     assert "type-error" in codes
@@ -195,14 +199,13 @@ def test_validate_row_numbers_frictionless(spark, tmp_path):
         "oops,n2,2.0,false\n"      # row 3: sku type-error
         "3,n3,cheap,true\n"        # row 4: price type-error
     )
-    raw = read_resource(spark, p, sanitize_names=True)
-    raw = raw.selectExpr(*[f"cast({c} as string) as {c}" for c in raw.columns])
-    report = validate(raw, DESCRIPTOR)
+    raw = read_resource(spark, p, descriptor=DESCRIPTOR)
+    report = _validate(raw)
     rows = {(e["field"], e["code"]): e["row"] for e in report["errors"]}
     assert rows[("sku", "type-error")] == 3
     assert rows[("price", "type-error")] == 4
     # headerless convention: first data row is row 1
-    report1 = validate(raw, DESCRIPTOR, row_start=1)
+    report1 = _validate(raw, row_start=1)
     rows1 = {(e["field"], e["code"]): e["row"] for e in report1["errors"]}
     assert rows1[("sku", "type-error")] == 2
     assert rows1[("price", "type-error")] == 3
@@ -211,7 +214,7 @@ def test_validate_row_numbers_frictionless(spark, tmp_path):
 def test_validate_error_cap(spark):
     rows = [("not_an_int", f"n{i}", "x", "z") for i in range(1200)]
     raw = spark.createDataFrame(rows, ["sku", "name", "price", "in_stock"])
-    report = validate(raw, DESCRIPTOR, error_cap=1000)
+    report = _validate(raw, error_cap=1000)
     assert report["error_count"] == 1000  # capped (reference limit_errors)
     assert report["valid"] is False
 
