@@ -10,6 +10,7 @@ scale to a multi-executor cluster:
 - ``schema``    frictionless Table Schema <-> StructType, sanitization, keys
 - ``sources``   format-dispatching reads (csv/tsv/json/ndjson/parquet, gzip)
 - ``rownum``    distributed contiguous row numbering (no global window)
+- ``frames``    scoped lifetime of the frames the library persists
 - ``table``     Parquet-backed managed tables: overwrite/append/upsert/export
 - ``upsert``    join-based MERGE semantics (change detection, _id preserve)
 - ``validate``  row-level schema/constraint validation reports

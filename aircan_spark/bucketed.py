@@ -40,6 +40,7 @@ from pyspark.sql.types import StructType
 
 from aircan_spark import ROW_NUMBER_COLUMN
 from aircan_spark import upsert as upsert_mod
+from aircan_spark.frames import scope
 from aircan_spark.table import ParquetTable, widen, write_observed
 
 _BUCKET = "__bucket"
@@ -153,7 +154,6 @@ class BucketedParquetTable(ParquetTable):
         a 100 TB table reads and rewrites one bucket, not the table.
         """
         m = self.manifest()
-        held: list[DataFrame] = []  # r13: stage persists, drained in finally
         if m is None:
             # Auto-create (reference D2): empty target with the stage schema.
             target_sub = stage.limit(0)
@@ -181,7 +181,7 @@ class BucketedParquetTable(ParquetTable):
         renumbered = 0
         if m["rows"] and ROW_NUMBER_COLUMN not in target_sub.columns:
             renumbered = target_sub.count()
-        try:
+        with scope():  # merge's stage and insert numbering persists
             merged = upsert_mod.merge(
                 target_sub,
                 stage,
@@ -189,15 +189,11 @@ class BucketedParquetTable(ParquetTable):
                 preserve_columns=preserve_columns,
                 job_ts=job_ts,
                 insert_start=insert_start,
-                persists=held,
             )
             schema, merged = widen(StructType.fromJson(m["schema"]), merged)
             written, stats = self._write(
                 merged, v, inserted=F.count_if(F.col(ROW_NUMBER_COLUMN) >= insert_start)
             )
-        finally:  # a failed merge or write must not leak the stage pin
-            for f in held:
-                f.unpersist(blocking=False)
         buckets = dict(m["buckets"])
         buckets.update({b: [d] for b, d in written.items()})
         # untouched buckets cannot raise the max: inserts number above it

@@ -16,6 +16,8 @@ import weakref
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from aircan_spark.frames import scope, share
+
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
 ).split()
@@ -86,18 +88,12 @@ def checkpoint(df: DataFrame, big: bool = False, eager: bool = True) -> DataFram
             atexit.register(shutil.rmtree, ckpt_dir, ignore_errors=True)
             sc.setCheckpointDir(ckpt_dir)
             _MINTED_CKPT_PATH = ckpt_dir
-        from pyspark import StorageLevel
-
         # classic cache-before-checkpoint: the eager count populates the
         # DISK_ONLY persist, so the checkpoint WRITE job streams from
         # disk instead of recomputing the (expensive) lineage a second
-        # time; unpersisted immediately — the checkpoint is the survivor
-        df = df.persist(StorageLevel.DISK_ONLY)
-        try:
-            out = df.checkpoint(eager=True)
-        finally:
-            df.unpersist()
-        return out
+        # time; released at once — the checkpoint is the survivor
+        with scope():
+            return share(df, big=True).checkpoint(eager=True)
     # small bounded frames (per-round labels, collapsed axes) keep the
     # fast in-memory localCheckpoint even after a big frame minted the
     # temp dir — only data-proportional frames pay the disk round-trip

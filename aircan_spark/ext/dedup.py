@@ -28,6 +28,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from aircan_spark.data import checkpoint
+from aircan_spark.frames import share
 
 from aircan_spark.ext.text import normalize_text
 
@@ -64,7 +65,6 @@ def guarded_stats(
     sh: DataFrame,
     max_doc_freq: int,
     shingle_col: str = "shingle",
-    persists: list | None = None,
 ) -> tuple[DataFrame, tuple[int, int]]:
     """One doc-frequency aggregation over the inverted index yields BOTH
     guard artifacts the pair join needs: the rare-shingle whitelist
@@ -89,21 +89,15 @@ def guarded_stats(
     guard join — counting them would inflate ``work`` relative to the
     in-function pass.
 
-    The df-counts frame is persisted DISK_ONLY (data-proportional — one
-    row per distinct shingle) and appended to ``persists`` when given;
-    otherwise the pin is documented caller-released via
-    ``aircan_spark.data.release_session_caches``, the same contract as
-    the inverted index itself."""
-    from pyspark import StorageLevel
-
-    counts = (
+    The df-counts frame (one row per distinct shingle) is
+    ``frames.share``d big, like the inverted index itself: the caller's
+    ``frames.scope()`` releases it."""
+    counts = share(
         sh.filter(F.col(shingle_col).isNotNull())
         .groupBy(shingle_col)
-        .agg(F.count(F.lit(1)).alias("__df"))
-        .persist(StorageLevel.DISK_ONLY)
+        .agg(F.count(F.lit(1)).alias("__df")),
+        big=True,
     )
-    if persists is not None:
-        persists.append(counts)
     row = (
         counts.filter(F.col("__df") <= max_doc_freq)
         .agg(
@@ -172,7 +166,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.3,
     max_doc_freq: int | None = None,
     hash_shingles: bool = False,
-    persists: list | None = None,
 ) -> DataFrame:
     """Exact Jaccard over word n-gram sets for all pairs sharing >= 1
     shingle. Inverted-index self-join: only colliding pairs are scored,
@@ -189,16 +182,12 @@ def ngram_jaccard_pairs(
     shingles/doc). Kept off by default so the result is exactly the string
     Jaccard the DuckDB oracle computes.
 
-    ``persists``: the inverted index is ``persist(DISK_ONLY)``ed, and
-    Spark's CacheManager holds cached plans by STRONG reference — no GC
-    ever frees them, so in a long-lived session every call pins index
-    bytes for the rest of the session (the r11 endurance finding: 98.8 MB
-    surviving a full GC drain at 10x). The returned frame is lazy, so
-    this function cannot unpersist; a caller that MATERIALIZES the pairs
-    during construction (the CC family checkpoints them eagerly) should
-    pass a list here and unpersist its entries once consumed. Callers
-    that return the lazy plan document the cache and leave release to
-    ``aircan_spark.data.release_session_caches``.
+    The inverted index (and the guard's df counts) are ``frames.share``d
+    big. Spark's CacheManager holds cached plans by STRONG reference — no
+    GC ever frees them — and the returned frame is lazy, so a caller
+    opens a ``frames.scope()`` around building AND materializing the
+    pairs (the CC family checkpoints them eagerly); outside a scope the
+    pins are the caller's.
     """
     sh = shingles(df, id_col, text_col, n)
     if hash_shingles:
@@ -207,11 +196,7 @@ def ngram_jaccard_pairs(
     # never the default deserialized-in-heap cache — at the 30x corpus the
     # cached index monopolized the unified memory pool's protected storage
     # region and starved the pair join's sorters into UNABLE_TO_ACQUIRE_MEMORY
-    from pyspark import StorageLevel
-
-    sh = sh.persist(StorageLevel.DISK_ONLY)
-    if persists is not None:
-        persists.append(sh)
+    sh = share(sh, big=True)
     sizes = sh.groupBy(id_col).agg(F.count(F.lit(1)).alias("set_size"))
 
     joinable = sh
@@ -221,7 +206,7 @@ def ngram_jaccard_pairs(
         # scalars from ONE persisted df-counts pass — previously the
         # eager stats pass re-executed the guard join (sh ⨝ rare →
         # groupBy → agg) on top of the per-branch rare recomputes
-        rare, stats = guarded_stats(sh, max_doc_freq, persists=persists)
+        rare, stats = guarded_stats(sh, max_doc_freq)
         joinable = sh.join(rare, "shingle")
 
     # inverted-index self-join with DERIVED parallelism: shuffle
@@ -331,7 +316,6 @@ def minhash_pairs(
     num_hashes: int = 64,
     bands: int = 16,
     threshold: float = 0.3,
-    persists: list | None = None,
 ) -> DataFrame:
     """Candidate pairs via LSH banding, verified with the signature-level
     Jaccard estimate (fraction of agreeing hashes).
@@ -340,16 +324,9 @@ def minhash_pairs(
     well below come out of banding rarely, well above almost surely.
     """
     rows_per_band = num_hashes // bands
-    from pyspark import StorageLevel
-
-    # data-proportional (docs x num_hashes): DISK_ONLY, never heap-cached.
-    # CacheManager pins this strongly for the session — see
-    # ngram_jaccard_pairs' persists note.
-    sigs = minhash_signatures(df, id_col, text_col, n, num_hashes).persist(
-        StorageLevel.DISK_ONLY
-    )
-    if persists is not None:
-        persists.append(sigs)
+    # data-proportional (docs x num_hashes): DISK_ONLY, never heap-cached;
+    # released by the caller's scope — see ngram_jaccard_pairs
+    sigs = share(minhash_signatures(df, id_col, text_col, n, num_hashes), big=True)
 
     # Band buckets derived row-local from signature slices; the candidate
     # join and its dedup carry ONLY (band, bucket, id) — signatures (64
@@ -441,20 +418,15 @@ def simhash_pairs(
     text_col: str = "text",
     max_hamming: int = 3,
     bands: int = 4,
-    persists: list | None = None,
 ) -> DataFrame:
     """Near-dup pairs with hamming(simhash) <= max_hamming. Candidates via
     band join: with 4 bands of 16 bits, any pair within hamming distance 3
     must agree exactly on >= 1 band (pigeonhole) — so banding loses no
     true pair while avoiding the n² comparison."""
     width = 64 // bands
-    from pyspark import StorageLevel
-
-    # data-proportional (one row per doc): DISK_ONLY, never heap-cached.
-    # CacheManager pins this strongly — see ngram_jaccard_pairs' note.
-    sigs = simhash_signatures(df, id_col, text_col).persist(StorageLevel.DISK_ONLY)
-    if persists is not None:
-        persists.append(sigs)
+    # data-proportional (one row per doc): DISK_ONLY, never heap-cached;
+    # released by the caller's scope — see ngram_jaccard_pairs
+    sigs = share(simhash_signatures(df, id_col, text_col), big=True)
     banded = sigs.select(
         id_col,
         "simhash",
@@ -1026,10 +998,8 @@ def containment_pairs(
     merely popular would stop matching). Documents with zero
     discriminative shingles drop out of the result. With the guard off,
     behavior is the original full-universe containment, unchanged."""
-    from pyspark import StorageLevel
-
     # inverted index again (see ngram_jaccard_pairs): DISK_ONLY
-    sh = shingles(df, id_col, text_col, n).persist(StorageLevel.DISK_ONLY)
+    sh = share(shingles(df, id_col, text_col, n), big=True)
 
     joinable = sh
     if max_doc_freq is not None:
@@ -1037,11 +1007,8 @@ def containment_pairs(
         # sides); un-persisted, the rare-shingle agg + df-filter join
         # re-ran per consumer (per-branch pruning defeats stage reuse on
         # the sizes branch, which shuffles by id instead of shingle).
-        # Data-proportional -> DISK_ONLY, released with the session
-        # caches like the index itself.
-        joinable = sh.join(rare_shingles(sh, max_doc_freq), "shingle").persist(
-            StorageLevel.DISK_ONLY
-        )
+        # Data-proportional -> DISK_ONLY, like the index itself.
+        joinable = share(sh.join(rare_shingles(sh, max_doc_freq), "shingle"), big=True)
     sizes = joinable.groupBy(id_col).agg(F.count(F.lit(1)).alias("set_size"))
 
     a = joinable.withColumnRenamed(id_col, "id_a")

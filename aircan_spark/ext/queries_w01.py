@@ -9,6 +9,7 @@ from __future__ import annotations
 
 from aircan_spark.ext._qcommon import *  # noqa: F401,F403
 from aircan_spark.ext._qcommon import EXT_ORACLES, EXT_QUERIES, _load, _t  # noqa: F401
+from aircan_spark.frames import scope
 
 
 # --- text analysis ------------------------------------------------------------
@@ -476,19 +477,15 @@ def ext_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverted-index candidate work at scale (salted-30x: sum(df^2) 1.1e9
     unguarded vs 1.0e7 at df<=64)."""
     docs = _t(spark, sf_dir, "documents")
-    held: list = []
-    pairs = dedup.ngram_jaccard_pairs(
-        docs, n=3, threshold=0.3, max_doc_freq=dedup.HOT_SHINGLE_MAX_DF,
-        persists=held,
-    )
-    out = dedup.dedup_groups(docs, pairs).orderBy("doc_id")
-    # connected_components checkpointed the edge list EAGERLY during the
-    # dedup_groups call above, so the returned plan no longer references
-    # the inverted index — release it here or the CacheManager pins it
+    # connected_components checkpoints the edge list EAGERLY inside
+    # dedup_groups, so the returned plan no longer references the
+    # inverted index — the scope releases it, or the CacheManager pins it
     # for the session (r11 endurance finding: 36.5 MB/query at 10x)
-    for f in held:
-        f.unpersist()
-    return out
+    with scope():
+        pairs = dedup.ngram_jaccard_pairs(
+            docs, n=3, threshold=0.3, max_doc_freq=dedup.HOT_SHINGLE_MAX_DF
+        )
+        return dedup.dedup_groups(docs, pairs).orderBy("doc_id")
 
 
 EXT_DEDUP_GROUPS_SQL = rf"""

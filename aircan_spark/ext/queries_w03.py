@@ -10,6 +10,7 @@ from __future__ import annotations
 from aircan_spark.ext._qcommon import *  # noqa: F401,F403
 from aircan_spark.ext._qcommon import EXT_ORACLES, EXT_QUERIES, _load, _t  # noqa: F401
 from aircan_spark.ext.queries_w02 import *  # noqa: F401,F403
+from aircan_spark.frames import scope
 
 
 # --- round-2 analytics wave: classic warehouse flavors (Q2/Q11/Q16/Q22) +
@@ -2156,16 +2157,13 @@ def ext_dedup_groups_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     # df<=64 hot-shingle guard (r10): fixture-inert, oracle-mirrored —
     # see ext_dedup_groups (this query shares its oracle)
-    held: list = []
-    pairs = dedup.ngram_jaccard_pairs(
-        docs, n=3, threshold=0.3, max_doc_freq=dedup.HOT_SHINGLE_MAX_DF,
-        persists=held,
-    )
-    comp = dedup.connected_components_star(pairs)
-    # the star loop checkpointed its edge list eagerly above — the
-    # inverted index is no longer referenced; release the session pin
-    for f in held:
-        f.unpersist()
+    # the star loop checkpoints its edge list eagerly — the inverted
+    # index is then no longer referenced; the scope releases its pin
+    with scope():
+        pairs = dedup.ngram_jaccard_pairs(
+            docs, n=3, threshold=0.3, max_doc_freq=dedup.HOT_SHINGLE_MAX_DF
+        )
+        comp = dedup.connected_components_star(pairs)
     return (
         docs.select("doc_id")
         .join(comp.withColumnRenamed("id", "doc_id"), "doc_id", "left")

@@ -10,6 +10,7 @@ from __future__ import annotations
 from aircan_spark.ext._qcommon import *  # noqa: F401,F403
 from aircan_spark.ext._qcommon import EXT_ORACLES, EXT_QUERIES, _load, _t  # noqa: F401
 from aircan_spark.ext.queries_w04 import *  # noqa: F401,F403
+from aircan_spark.frames import scope
 
 
 # --- round-3 wave: session mining + feature encodings -------------------------
@@ -914,16 +915,13 @@ def ext_cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents").select("doc_id", "text")
     # df<=64 hot-shingle guard (r10): fixture-inert, oracle-mirrored —
     # see ext_dedup_groups
-    held: list = []
-    pairs = dedup.ngram_jaccard_pairs(
-        docs, n=3, threshold=0.3, max_doc_freq=dedup.HOT_SHINGLE_MAX_DF,
-        persists=held,
-    )
-    groups = dedup.dedup_groups(docs, pairs.select("id_a", "id_b"))
-    # CC checkpointed the edges eagerly — release the inverted index's
-    # session pin (r11 endurance finding)
-    for f in held:
-        f.unpersist()
+    # CC checkpoints the edges eagerly — the scope then releases the
+    # inverted index's session pin (r11 endurance finding)
+    with scope():
+        pairs = dedup.ngram_jaccard_pairs(
+            docs, n=3, threshold=0.3, max_doc_freq=dedup.HOT_SHINGLE_MAX_DF
+        )
+        groups = dedup.dedup_groups(docs, pairs.select("id_a", "id_b"))
     sizes = groups.groupBy("component").agg(
         F.count(F.lit(1)).alias("cluster_size")
     )

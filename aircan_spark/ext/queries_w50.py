@@ -33,6 +33,7 @@ from __future__ import annotations
 
 from aircan_spark.ext._qcommon import *  # noqa: F401,F403
 from aircan_spark.ext._qcommon import EXT_ORACLES, EXT_QUERIES, _load, _t  # noqa: F401
+from aircan_spark.frames import scope
 
 
 def ext_dedup_simhash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -185,18 +186,15 @@ def ext_dedup_ngram_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # collapse shuffle from columnar parquet. Left unpersisted on
     # purpose.
     g = dedup.content_collapse(docs)
-    held: list = []
-    pairs = dedup.ngram_jaccard_pairs(
-        g, n=3, threshold=0.3, max_doc_freq=dedup.HOT_SHINGLE_MAX_DF,
-        persists=held,
-    )
-    comps = dedup.dedup_groups(g, pairs).select(
-        F.col("doc_id").alias("__rep"), F.col("component").alias("__comp")
-    )
-    # CC checkpointed the distinct-content edges eagerly — release the
-    # inverted index's session pin (r11 endurance finding)
-    for f in held:
-        f.unpersist()
+    # CC checkpoints the distinct-content edges eagerly — the scope then
+    # releases the inverted index's session pin (r11 endurance finding)
+    with scope():
+        pairs = dedup.ngram_jaccard_pairs(
+            g, n=3, threshold=0.3, max_doc_freq=dedup.HOT_SHINGLE_MAX_DF
+        )
+        comps = dedup.dedup_groups(g, pairs).select(
+            F.col("doc_id").alias("__rep"), F.col("component").alias("__comp")
+        )
     # expansion join keyed on the content HASH (16-byte key instead of the
     # full text in the widest shuffle); eqNullSafe routes the NULL-text
     # content group (md5(NULL) IS NULL) to its single collapsed row

@@ -12,6 +12,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from aircan_spark.frames import share
+
 # BPE-ish word/punctuation tokenizer: alnum runs or single non-space symbols.
 TOKEN_PATTERN = r"[A-Za-z0-9]+|[^A-Za-z0-9\s]"
 PUNCT_PATTERN = r"[.,;:!?'\"()\[\]{}-]"
@@ -679,11 +681,7 @@ def bigram_nll(
     # branch re-ran the tokenize+explode+count pipeline. DISK_ONLY
     # persist (vocabulary-sized, data-proportional) — the corpus is now
     # tokenized exactly twice (model build + scoring), as documented.
-    from pyspark import StorageLevel as _SL
-
-    big = pairs.groupBy("gram").agg(F.count(F.lit(1)).alias("cab")).persist(
-        _SL.DISK_ONLY
-    )
+    big = share(pairs.groupBy("gram").agg(F.count(F.lit(1)).alias("cab")), big=True)
     ctx = (
         big.withColumn("w1", F.split(F.col("gram"), " ")[0])
         .groupBy("w1")

@@ -38,7 +38,8 @@ from pyspark.sql import functions as F
 
 from aircan_spark import ROW_NUMBER_COLUMN, UPDATED_AT_COLUMN
 from aircan_spark.export import export_ordered
-from aircan_spark.rownum import release_caches, with_row_number
+from aircan_spark.frames import scope
+from aircan_spark.rownum import with_row_number
 from aircan_spark.schema import (
     decide_schema_action,
     descriptor_to_struct,
@@ -129,7 +130,7 @@ def run(spark: SparkSession, config: dict[str, Any]) -> dict[str, Any]:
     # re-parses are costly and keep the persist (rownum.py cache rule).
     columnar = infer_format(path, config.get("resource_format")) in ("parquet", "orc")
     report: dict[str, Any] | None = None
-    try:
+    with scope():  # the numbering's persist, held until the write
         numbered, rows = with_row_number(
             raw, column=rn_col, start=start, cache=not columnar, return_count=True
         )
@@ -168,11 +169,6 @@ def run(spark: SparkSession, config: dict[str, Any]) -> dict[str, Any]:
             table.overwrite(typed.withColumn(ts_col, F.lit(job_ts)))
         else:
             raise ValueError(f"unknown method: {method!r}")
-    finally:
-        # every with_row_number cache (the numbered raw frame, and those
-        # upsert created for insert numbering) is materialized by the write
-        # above, or abandoned by a refused load — release.
-        release_caches()
 
     # --- export (reference 5, :483-569) --------------------------------------
     export_path = None

@@ -33,6 +33,8 @@ read: the range partitioning, whose fetch order breaks ties
 arbitrarily). A columnar file scan without ``order_by`` is re-read
 deterministically, and its count pass reads only footers — pass
 ``cache=False`` there (pipeline.run does so for parquet/orc resources).
+The persist is ``frames.share``d: the caller's ``frames.scope()``
+releases it once the numbered frame is materialized.
 """
 
 from __future__ import annotations
@@ -41,31 +43,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from aircan_spark import ROW_NUMBER_COLUMN
+from aircan_spark.frames import share
 
 _ROW = "__aircan_row"
 _PART_BITS = 33  # MonotonicallyIncreasingID: partition index << 33
-
-# Frames persisted by with_row_number(cache=True) that have not been
-# released yet. The numbered result is lazy, so the cache must outlive this
-# function call — callers that materialize the result (pipeline.run, table
-# writes) call release_caches() afterwards; otherwise LRU eviction applies.
-_ACTIVE_CACHES: list[DataFrame] = []
-
-
-def release_caches() -> int:
-    """Unpersist every frame ``with_row_number`` persisted and not yet
-    released. Call after the numbered frame has been materialized (written
-    or collected); returns the number of caches released. Safe to call
-    repeatedly / with nothing outstanding."""
-    n = 0
-    while _ACTIVE_CACHES:
-        df = _ACTIVE_CACHES.pop()
-        try:
-            df.unpersist(blocking=False)
-            n += 1
-        except Exception:  # session already stopped — nothing to release
-            pass
-    return n
 
 
 def with_row_number(
@@ -97,8 +78,7 @@ def with_row_number(
     prepared = prepared.withColumn(_ROW, F.monotonically_increasing_id())
 
     if cache:
-        prepared = prepared.persist()
-        _ACTIVE_CACHES.append(prepared)
+        prepared = share(prepared)
 
     part = F.shiftright(F.col(_ROW), _PART_BITS)
     counts = prepared.groupBy(part.alias("p")).count().collect()

@@ -36,6 +36,7 @@ from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from aircan_spark import ROW_NUMBER_COLUMN
+from aircan_spark.frames import scope
 from aircan_spark.rownum import with_row_number
 from aircan_spark.table import ParquetTable
 
@@ -77,12 +78,13 @@ def stream_ingest(
         if batch_df.isEmpty():
             return
         start = table.max_id() + 1
-        numbered = with_row_number(batch_df, start=start)
         ts = dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
-        if keys:
-            table.upsert(numbered, keys, job_ts=ts)
-        else:
-            table.append(numbered.withColumn("_updated_at", F.lit(ts)))
+        with scope():  # the batch's numbering persist dies with the batch
+            numbered = with_row_number(batch_df, start=start)
+            if keys:
+                table.upsert(numbered, keys, job_ts=ts)
+            else:
+                table.append(numbered.withColumn("_updated_at", F.lit(ts)))
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)
@@ -669,7 +671,6 @@ def stream_quality_gate(
     gate costs ONE aggregate pass per batch (all checks
     partial-aggregable)."""
     from aircan_spark import profile as _profile
-    from aircan_spark.rownum import with_row_number as _wrn
 
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
@@ -689,7 +690,8 @@ def stream_quality_gate(
             )
             return
         start = table.max_id() + 1
-        table.append(_wrn(batch_df, start=start))
+        with scope():
+            table.append(with_row_number(batch_df, start=start))
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

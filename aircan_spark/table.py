@@ -64,6 +64,7 @@ from pyspark.sql.types import StructType
 
 from aircan_spark import ROW_NUMBER_COLUMN, UPDATED_AT_COLUMN
 from aircan_spark import upsert as upsert_mod
+from aircan_spark.frames import scope
 
 _MANIFEST = "_MANIFEST.json"
 
@@ -348,9 +349,8 @@ class ParquetTable:
         # exact version, so the commit check detects any commit since
         m = self._require()
         stage = self._align_types(stage, m)
-        held: list[DataFrame] = []  # merge's deduped-stage persist (r13)
         v = int(m["version"]) + 1
-        try:
+        with scope():  # merge's stage and insert numbering persists
             merged = upsert_mod.merge(
                 self.read(),
                 stage,
@@ -358,12 +358,8 @@ class ParquetTable:
                 preserve_columns=preserve_columns,
                 job_ts=job_ts,
                 insert_start=self.max_id() + 1,
-                persists=held,
             )
             self._rewrite(merged, v)
-        finally:  # a failed merge or write must not leak the stage pin
-            for f in held:
-                f.unpersist(blocking=False)
 
     def backfill_updated_at(
         self, job_ts: dt.datetime, column: str = UPDATED_AT_COLUMN

@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from aircan_spark import ROW_NUMBER_COLUMN, UPDATED_AT_COLUMN
+from aircan_spark.frames import share
 from aircan_spark.rownum import with_row_number
 
 _T_PRESENT = "__aircan_t_present"
@@ -98,27 +99,22 @@ def merge(
     updated_at_column: str = UPDATED_AT_COLUMN,
     preserve_columns: tuple[str, ...] = (),
     job_ts: dt.datetime | None = None,
-    insert_start: int | None = None,
-    persists: list | None = None,
+    insert_start: int,
 ) -> DataFrame:
     """Compute the merged table as a DataFrame (caller writes it).
 
-    ``insert_start``: explicit first `_id` for inserted rows. Both table
-    kinds pass their recorded MAX(_id)+1 (commit metadata, no scan); a
-    caller merging a SUBSET of the table must pass the table-wide value.
-    The default derives it from ``target`` with one aggregate job, which
-    is only correct when ``target`` is the whole table.
+    ``insert_start``: the first `_id` for inserted rows. Both table kinds
+    pass their recorded MAX(_id)+1 (commit metadata, no scan); a caller
+    merging a SUBSET of the table must pass the table-wide value.
 
-    ``persists`` (r13, guide §5): when given, the DEDUPED stage is
-    persisted (DISK_ONLY — stage size is data-proportional) and appended
-    to the list for the caller to unpersist once the merged frame has
-    been materialized. The deduped stage feeds the update join, the
-    insert anti-join, AND the insert numbering's range-partition
-    sampling and count pass (the count pass fills the numbering's own
-    persist, which the write then reads), so un-persisted it re-runs the
-    stage scan + dedup window up to four times per merge — at 100 TB
-    that is four full passes over the incoming batch. ``None`` keeps the pre-r13
-    plan byte-identical.
+    The DEDUPED stage is ``frames.share``d at ``DISK_ONLY`` (stage size is
+    data-proportional), so open a ``frames.scope()`` around the merge and
+    its write. It feeds the update join, the insert anti-join, AND the
+    insert numbering's range-partition sampling and count pass (the count
+    pass fills the numbering's own persist, which the write then reads),
+    so un-persisted it would re-run the stage scan + dedup window up to
+    four times per merge — at 100 TB that is four full passes over the
+    incoming batch.
 
     Column policy (mirrors warehouse.py:222-245):
     - keys: coalesced from both sides.
@@ -138,12 +134,7 @@ def merge(
         raise ValueError(f"unique keys absent from stage: {missing}")
     job_ts = job_ts or dt.datetime.now(dt.timezone.utc).replace(tzinfo=None)
 
-    stage = dedup_stage(stage, keys)
-    if persists is not None:
-        from pyspark import StorageLevel
-
-        stage = stage.persist(StorageLevel.DISK_ONLY)
-        persists.append(stage)
+    stage = share(dedup_stage(stage, keys), big=True)
 
     system_cols = {row_number_column, updated_at_column, *preserve_columns}
     stage_data_cols = [c for c in stage.columns if c not in keys and c not in system_cols]
@@ -233,14 +224,6 @@ def merge(
     # Number the inserts: MAX(existing _id) + 1.. in key order, via the
     # partition-offset numbering (rownum.py) — never a single-task global
     # window over the merged table.
-    if insert_start is None:
-        if row_number_column in target.columns:
-            max_id = target.agg(
-                F.coalesce(F.max(row_number_column), F.lit(0)).alias("m")
-            ).collect()[0]["m"]
-            insert_start = int(max_id) + 1
-        else:
-            insert_start = 1
     if row_number_column not in target.columns:
         # Bootstrap: target has no numbering to preserve — number the whole
         # merged result contiguously in key order.

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from aircan_spark import ROW_NUMBER_COLUMN, UPDATED_AT_COLUMN
 from aircan_spark.bucketed import BucketedParquetTable
+from aircan_spark.frames import scope
 from aircan_spark.rownum import with_row_number
 from aircan_spark.table import ParquetTable
 
@@ -334,22 +335,18 @@ def test_delete_empty_keys_and_whole_bucket(spark, tmp_path):
 def test_failed_upsert_releases_stage_persist(spark, tmp_path, monkeypatch):
     from test_table_upsert import _fail_table_writes, _persisted_rdds
 
-    from aircan_spark.rownum import release_caches
-
     t = BucketedParquetTable(spark, str(tmp_path), "b", keys=["k"], num_buckets=4)
-    t.overwrite(base_df(spark, n=20))
-    release_caches()
+    with scope():
+        t.overwrite(base_df(spark, n=20))
     before, version = _persisted_rdds(spark), t.manifest()["version"]
     with monkeypatch.context() as m:
         _fail_table_writes(m, t.path)
         with pytest.raises(RuntimeError, match="boom"):
             t.upsert(stage_df(spark), job_ts=TS2)
-    release_caches()  # the insert numbering's persist (pipeline.run does this)
     assert _persisted_rdds(spark) == before
     assert t.manifest()["version"] == version
     assert t.read().count() == 20
     t.upsert(stage_df(spark), job_ts=TS2)
-    release_caches()
     assert t.manifest()["version"] == version + 1
     assert t.read().count() == 22
     assert _persisted_rdds(spark) == before

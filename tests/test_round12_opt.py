@@ -11,6 +11,8 @@ shingles (NULL-text docs) and a hot shingle at the guard boundary.
 
 from pyspark.sql import functions as F
 
+from aircan_spark.frames import scope
+
 
 def _index_fixture(spark):
     # inverted-index rows: shingle s0 is HOT (df 5 > max_doc_freq 3),
@@ -35,34 +37,31 @@ def test_guarded_stats_matches_legacy_passes(spark):
     from aircan_spark.ext.dedup import guarded_stats, rare_shingles
 
     sh = _index_fixture(spark)
-    held: list = []
-    rare, (work, max_block) = guarded_stats(sh, 3, persists=held)
+    with scope():
+        rare, (work, max_block) = guarded_stats(sh, 3)
 
-    # whitelist identical to rare_shingles — including the NULL group
-    # DIFFERENCE being invisible: rare_shingles keeps the NULL row
-    # (df 3 <= 3 passes its filter) but a NULL key never survives the
-    # guard equi-join, so the whitelists agree exactly on every row
-    # that can ever match
-    got = sorted(r[0] for r in rare.collect())
-    want = sorted(
-        r[0]
-        for r in rare_shingles(sh, 3).collect()
-        if r[0] is not None
-    )
-    assert got == want == ["s1", "s2", "s3"]
+        # whitelist identical to rare_shingles — including the NULL group
+        # DIFFERENCE being invisible: rare_shingles keeps the NULL row
+        # (df 3 <= 3 passes its filter) but a NULL key never survives the
+        # guard equi-join, so the whitelists agree exactly on every row
+        # that can ever match
+        got = sorted(r[0] for r in rare.collect())
+        want = sorted(
+            r[0]
+            for r in rare_shingles(sh, 3).collect()
+            if r[0] is not None
+        )
+        assert got == want == ["s1", "s2", "s3"]
 
-    # sizing scalars identical to blocked_self_pairs' own eager pass
-    # over the guarded join: per-block counts of (sh ⨝ rare) are the
-    # rare shingles' dfs — sum(df^2) = 9 + 4 + 1, max(df) = 3
-    joined = sh.join(rare, "shingle")
-    counts = joined.groupBy("shingle").agg(F.count(F.lit(1)).alias("c"))
-    row = counts.agg(
-        F.sum(F.col("c") * F.col("c")).alias("w"), F.max("c").alias("m")
-    ).collect()[0]
-    assert (work, max_block) == (int(row["w"]), int(row["m"])) == (14, 3)
-
-    for f in held:
-        f.unpersist()
+        # sizing scalars identical to blocked_self_pairs' own eager pass
+        # over the guarded join: per-block counts of (sh ⨝ rare) are the
+        # rare shingles' dfs — sum(df^2) = 9 + 4 + 1, max(df) = 3
+        joined = sh.join(rare, "shingle")
+        counts = joined.groupBy("shingle").agg(F.count(F.lit(1)).alias("c"))
+        row = counts.agg(
+            F.sum(F.col("c") * F.col("c")).alias("w"), F.max("c").alias("m")
+        ).collect()[0]
+        assert (work, max_block) == (int(row["w"]), int(row["m"])) == (14, 3)
 
 
 def test_blocked_self_pairs_precomputed_stats_row_identical(spark):
@@ -114,16 +113,12 @@ def test_ngram_jaccard_pairs_single_stats_job(spark):
         ],
         "doc_id bigint, text string",
     )
-    held: list = []
-    pairs = ngram_jaccard_pairs(
-        docs, n=3, threshold=0.3, max_doc_freq=64, persists=held
-    )
-    got = [tuple(r) for r in pairs.collect()]
+    with scope() as held:
+        pairs = ngram_jaccard_pairs(docs, n=3, threshold=0.3, max_doc_freq=64)
+        got = [tuple(r) for r in pairs.collect()]
+        # the scope holds the index AND the df-counts frame, and
+        # releases both on exit
+        assert len(held) == 2
     assert len(got) == 1
     id_a, id_b, jac = got[0]
     assert (id_a, id_b) == (1, 2) and 0.3 <= jac <= 1.0
-    # the persists registry now carries the index AND the df-counts
-    # frame — both released by the caller
-    assert len(held) == 2
-    for f in held:
-        f.unpersist()

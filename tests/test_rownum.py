@@ -134,14 +134,14 @@ def _skewed_16(spark):
 
 
 def test_matches_window_numbering_on_skewed_partitions(spark):
-    from aircan_spark.rownum import release_caches
+    from aircan_spark.frames import scope
 
     df = _skewed_16(spark)
     assert df.rdd.getNumPartitions() == 16
     for kwargs in ({}, {"start": 42}, {"order_by": ["x"]}, {"order_by": ["g", "x"], "start": 7}):
-        got = {tuple(r) for r in with_row_number(df, **kwargs).collect()}
+        with scope():
+            got = {tuple(r) for r in with_row_number(df, **kwargs).collect()}
         assert got == _window_numbering(df, **kwargs), kwargs
-    release_caches()
 
 
 def test_empty_frame_keeps_id_first(spark):

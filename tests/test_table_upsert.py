@@ -13,6 +13,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
+from aircan_spark.frames import scope
 from aircan_spark.rownum import with_row_number
 from aircan_spark.table import ParquetTable
 from aircan_spark.upsert import dedup_stage, merge
@@ -153,9 +154,9 @@ def test_upsert_requires_keys(spark, tmp_path):
     t.overwrite(base_df(spark))
     stage = spark.createDataFrame([(1, "a")], ["sku", "name"])
     with pytest.raises(ValueError):
-        merge(t.read(), stage, [])
+        merge(t.read(), stage, [], insert_start=4)
     with pytest.raises(ValueError, match="absent"):
-        merge(t.read(), stage, ["no_such_key"])
+        merge(t.read(), stage, ["no_such_key"], insert_start=4)
 
 
 def test_backfill_updated_at(spark, tmp_path):
@@ -185,12 +186,22 @@ def test_merge_preserve_columns_insert_takes_stage_value(spark):
         [(10, "a2", "stage-note"), (20, "b", "new-note")],
         "sku int, name string, note string",
     )
-    out = {r["sku"]: r for r in merge(target, stage, ["sku"], preserve_columns=("note",)).collect()}
+    out = {
+        r["sku"]: r
+        for r in merge(
+            target, stage, ["sku"], preserve_columns=("note",), insert_start=2
+        ).collect()
+    }
     assert out[10]["note"] == "keep-me"  # matched: preserved from target
     assert out[20]["note"] == "new-note"  # insert: stage value, not NULL
     # stage LACKS the preserved column -> insert gets NULL
     stage2 = spark.createDataFrame([(30, "c")], "sku int, name string")
-    out2 = {r["sku"]: r for r in merge(target, stage2, ["sku"], preserve_columns=("note",)).collect()}
+    out2 = {
+        r["sku"]: r
+        for r in merge(
+            target, stage2, ["sku"], preserve_columns=("note",), insert_start=2
+        ).collect()
+    }
     assert out2[30]["note"] is None
     assert out2[10]["note"] == "keep-me"
 
@@ -286,11 +297,9 @@ def _fail_table_writes(monkeypatch, table_path):
 
 
 def test_failed_upsert_releases_stage_persist(spark, tmp_path, monkeypatch):
-    from aircan_spark.rownum import release_caches
-
     t = make_table(spark, tmp_path)
-    t.overwrite(base_df(spark))
-    release_caches()
+    with scope():
+        t.overwrite(base_df(spark))
     before, version = _persisted_rdds(spark), t.current_version()
     stage = spark.createDataFrame(
         [(20, "beta2", 2.0), (40, "delta", 4.0)], ["sku", "name", "price"]
@@ -299,12 +308,10 @@ def test_failed_upsert_releases_stage_persist(spark, tmp_path, monkeypatch):
         _fail_table_writes(m, t.path)
         with pytest.raises(RuntimeError, match="boom"):
             t.upsert(stage, ["sku"], job_ts=TS2)
-    release_caches()  # the insert numbering's persist (pipeline.run does this)
     assert _persisted_rdds(spark) == before
     assert t.current_version() == version
     assert t.read().count() == 3
     t.upsert(stage, ["sku"], job_ts=TS2)
-    release_caches()
     assert t.current_version() == version + 1
     assert sorted(r["_id"] for r in t.read().collect()) == [1, 2, 3, 4]
     assert _persisted_rdds(spark) == before
@@ -312,11 +319,9 @@ def test_failed_upsert_releases_stage_persist(spark, tmp_path, monkeypatch):
 
 def test_failed_merge_releases_stage_persist(spark, tmp_path):
     # the stage itself raises: the failure surfaces inside merge()
-    from aircan_spark.rownum import release_caches
-
     t = make_table(spark, tmp_path)
-    t.overwrite(base_df(spark))
-    release_caches()
+    with scope():
+        t.overwrite(base_df(spark))
     before, version = _persisted_rdds(spark), t.current_version()
     stage = spark.createDataFrame(
         [(20, "beta2", 2.0), (40, "delta", 4.0)], ["sku", "name", "price"]
@@ -328,7 +333,6 @@ def test_failed_merge_releases_stage_persist(spark, tmp_path):
     )
     with pytest.raises(Exception, match="boom"):
         t.upsert(stage, ["sku"], job_ts=TS2)
-    release_caches()
     assert _persisted_rdds(spark) == before
     assert t.current_version() == version
 
@@ -382,17 +386,16 @@ def test_failed_write_leaves_previous_version(spark, tmp_path, monkeypatch, kind
     the middle of its job (a UDF throws on one row) leaves readers on
     exactly the previous version, with its stats and no leaked persist,
     and the next append numbers above every visible row."""
-    from aircan_spark.rownum import release_caches
-
     t = make_kind(spark, tmp_path, kind)
-    t.overwrite(base_df(spark))
-    release_caches()
+    with scope():
+        t.overwrite(base_df(spark))
+
     def state():
         return t.read().count(), t.row_count(), t.max_id(), t.current_version()
 
     before, pinned = state(), _persisted_rdd_ids(spark)
-    df = _op_batch(spark, op, start=t.max_id() + 1)
-    with monkeypatch.context() as m:
+    with scope(), monkeypatch.context() as m:
+        df = _op_batch(spark, op, start=t.max_id() + 1)
         if fault == "commit":
             def commit(*args, **kwargs):
                 raise RuntimeError("boom: crashed before the commit")
@@ -402,7 +405,6 @@ def test_failed_write_leaves_previous_version(spark, tmp_path, monkeypatch, kind
             df = df.select(*[_fail_on(c, 20) if c == "sku" else c for c in df.columns])
         with pytest.raises(Exception, match="boom"):
             _run_op(t, op, df)
-    release_caches()  # the insert numbering's persist (pipeline.run does this)
     assert state() == before
     assert _persisted_rdd_ids(spark) == pinned
 
