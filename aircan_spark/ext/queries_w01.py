@@ -477,10 +477,9 @@ def ext_dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     inverted-index candidate work at scale (salted-30x: sum(df^2) 1.1e9
     unguarded vs 1.0e7 at df<=64)."""
     docs = _t(spark, sf_dir, "documents")
-    # connected_components checkpoints the edge list EAGERLY inside
-    # dedup_groups, so the returned plan no longer references the
-    # inverted index — the scope releases it, or the CacheManager pins it
-    # for the session (r11 endurance finding: 36.5 MB/query at 10x)
+    # dedup_groups checkpoints its edge list EAGERLY, so the returned plan
+    # no longer reads the inverted index; unreleased, the CacheManager pins
+    # it for the session (r11 endurance finding: 36.5 MB/query at 10x)
     with scope():
         pairs = dedup.ngram_jaccard_pairs(
             docs, n=3, threshold=0.3, max_doc_freq=dedup.HOT_SHINGLE_MAX_DF

@@ -10,6 +10,7 @@ from __future__ import annotations
 from aircan_spark.ext._qcommon import *  # noqa: F401,F403
 from aircan_spark.ext._qcommon import EXT_ORACLES, EXT_QUERIES, _load, _t  # noqa: F401
 from aircan_spark.ext.queries_w01 import *  # noqa: F401,F403
+from aircan_spark.frames import result_scope
 
 
 # --- corpus statistics / relevance wave ------------------------------------------------
@@ -1208,6 +1209,7 @@ GROUP BY event_type ORDER BY event_type
 """
 
 
+@result_scope
 def ext_segment_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Relative ranking inside each market segment: percent_rank + ntile
     quartiles over account balance (custkey tie-break makes every rank

@@ -10,7 +10,7 @@ from __future__ import annotations
 from aircan_spark.ext._qcommon import *  # noqa: F401,F403
 from aircan_spark.ext._qcommon import EXT_ORACLES, EXT_QUERIES, _load, _t  # noqa: F401
 from aircan_spark.ext.queries_w02 import *  # noqa: F401,F403
-from aircan_spark.frames import scope
+from aircan_spark.frames import result_scope, scope
 
 
 # --- round-2 analytics wave: classic warehouse flavors (Q2/Q11/Q16/Q22) +
@@ -262,6 +262,7 @@ GROUP BY c_nationkey ORDER BY c_nationkey
 """
 
 
+@result_scope
 def ext_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gini coefficient of customer revenue per market segment — the
     standard rank formula G = 2*Σ(i*x_i)/(n*Σx) - (n+1)/n over ascending

@@ -21,6 +21,7 @@ from aircan_spark.ext._qcommon import *  # noqa: F401,F403
 from aircan_spark.ext._qcommon import EXT_ORACLES, EXT_QUERIES, _load, _t  # noqa: F401
 from aircan_spark.ext.queries_w48 import *  # noqa: F401,F403
 from aircan_spark.ext.queries_w46 import _run_maintenance  # noqa: F401
+from aircan_spark.frames import scope
 
 
 _DELETE_PARITY_SQL = r"""
@@ -52,7 +53,6 @@ def _delete_parity(spark: SparkSession, sf_dir: str, bucketed: bool) -> DataFram
     orders = _load(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    numbered = with_row_number(orders, column="_id", order_by=["o_orderkey"])
     wh = tempfile.mkdtemp(prefix="aircan_r6_delete_wh_")
     if bucketed:
         from aircan_spark.bucketed import BucketedParquetTable
@@ -66,7 +66,8 @@ def _delete_parity(spark: SparkSession, sf_dir: str, bucketed: bool) -> DataFram
 
         table = ParquetTable(spark, wh, "t")
         delete = partial(table.delete, keys=["o_orderkey"])
-    table.overwrite(numbered)
+    with scope():  # releases the numbering once it is written
+        table.overwrite(with_row_number(orders, column="_id", order_by=["o_orderkey"]))
     n_del = delete(orders.filter(F.expr("o_orderkey % 7 = 3")).select("o_orderkey"))
     table.vacuum(keep_versions=1)
     # vacuum retires the pre-delete version immediately (read() below is

@@ -1,62 +1,88 @@
 """One owner for the lifetime of the frames the library persists.
 
-``share(df)`` persists ``df`` and hands it to the innermost open
-``scope()``; the scope unpersists everything shared inside it when it
-exits, exceptions included. Open scopes form a ``contextvars`` stack, so
-scopes nest, and threads (foreachBatch callbacks among them) each see
-only their own. Outside any scope the persisted frame is the caller's,
-exactly like a bare ``persist()``.
+``share(df)`` persists ``df`` and registers it with this thread's
+innermost open ``scope()`` (a ``contextvars`` stack: scopes nest, and no
+thread, foreachBatch callbacks included, registers with another's). The
+scope unpersists what was shared in it on exit, exceptions included.
+Outside any scope the frame is the caller's, like a bare ``persist()``.
 
-The rule a caller wraps: ``with scope():`` around "build the plan, then
-materialize it" (a table write, an eager checkpoint, a collect). A lazy
-plan that outlives its scope still runs, but recomputes every frame the
-scope released.
+A caller wraps ``with scope():`` around "build the plan, then
+materialize it". A lazy plan that outlives its scope recomputes what the
+scope released, and a recomputed numbering may not be contiguous (a
+range partitioning samples anew), so a function that returns a lazy plan
+over a shared frame is ``@result_scope``: its frames live as long as the
+frame it returns.
 
-When a persist pays: only when the plan's branches specialize their
-copies of a shared subtree (different filters, projections or
-partitionings of it). Fan-out over IDENTICAL subtrees is already
-deduplicated by AQE's exchange and subquery reuse; a persist there only
-adds a fill job.
-
-Which level: ``big=True`` (``DISK_ONLY``) for data-proportional frames
-(inverted indexes, signatures, pair corpora, merge stages), the default
-level for bounded ones. Default-level blocks sit in the heap as
-deserialized objects and are re-promoted there when read back from a
-spill, so a data-proportional frame at that level starves the joins and
-sorts that read it.
+A persist pays only when branches specialize their copies of a shared
+subtree (different filters, projections or partitionings of it); AQE
+already reuses IDENTICAL subtrees, where a persist only adds a fill job.
+``big=True`` (``DISK_ONLY``) is for data-proportional frames (indexes,
+signatures, pair corpora, merge stages): default-level blocks sit in the
+heap deserialized, are re-promoted there after a spill, and starve the
+joins and sorts that read them. Bounded frames keep the default level.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+import functools
+import threading
+import weakref
+from collections.abc import Callable, Iterator
 from contextlib import contextmanager
 from contextvars import ContextVar
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame
 
-_OPEN: ContextVar[list[DataFrame] | None] = ContextVar("aircan_frames_scope", default=None)
+# the innermost open scope: (its thread, the frames shared in it)
+_OPEN: ContextVar[tuple[int, list[DataFrame]] | None] = ContextVar("aircan_scope", default=None)
+
+
+def _release(held: list[DataFrame]) -> None:
+    for df in held:
+        df.unpersist(blocking=False)
 
 
 @contextmanager
-def scope() -> Iterator[list[DataFrame]]:
+def scope() -> Iterator[None]:
     """Unpersist, on exit, every frame ``share``d inside this block (and
-    not inside a nested scope). Yields the live list of those frames."""
+    not inside a nested scope)."""
     held: list[DataFrame] = []
-    token = _OPEN.set(held)
+    token = _OPEN.set((threading.get_ident(), held))
     try:
-        yield held
+        yield
     finally:
         _OPEN.reset(token)
-        for df in held:
-            df.unpersist(blocking=False)
+        _release(held)
+
+
+def result_scope(build: Callable[..., DataFrame]) -> Callable[..., DataFrame]:
+    """Release the frames ``build`` shares when the frame it returns is
+    garbage-collected (in CPython, once the caller drops it), or at once
+    if it raises. Run or derive from the result only while holding it."""
+
+    @functools.wraps(build)
+    def run(*args, **kwargs) -> DataFrame:
+        held: list[DataFrame] = []
+        token = _OPEN.set((threading.get_ident(), held))
+        try:
+            out = build(*args, **kwargs)
+        except BaseException:
+            _release(held)
+            raise
+        finally:
+            _OPEN.reset(token)
+        weakref.finalize(out, _release, held).atexit = False
+        return out
+
+    return run
 
 
 def share(df: DataFrame, big: bool = False) -> DataFrame:
     """Persist ``df`` (``DISK_ONLY`` when ``big``) and register it with
-    the innermost open scope."""
+    this thread's innermost open scope."""
     out = df.persist(StorageLevel.DISK_ONLY) if big else df.persist()
-    held = _OPEN.get()
-    if held is not None:
-        held.append(out)
+    innermost = _OPEN.get()
+    if innermost is not None and innermost[0] == threading.get_ident():
+        innermost[1].append(out)
     return out

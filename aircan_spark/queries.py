@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aircan_spark.data import load_table as _t
-from aircan_spark.frames import scope
+from aircan_spark.frames import result_scope, scope
 from aircan_spark.rownum import with_row_number
 from aircan_spark.table import ParquetTable
 
@@ -48,6 +48,7 @@ FROM lineitem ORDER BY l_orderkey, l_linenumber
 # --- Q2: P1 row-number injection ---------------------------------------------
 
 
+@result_scope
 def q02_row_number(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders").select("o_orderkey")
     # the engine's distributed numbering operator (rownum.py), not a raw window
@@ -75,6 +76,7 @@ Q03_SQL = "SELECT COALESCE(MAX(o_orderkey), 0) AS max_key FROM orders"
 # --- Q4: A1 offset continuation ----------------------------------------------
 
 
+@result_scope
 def q04_offset_continuation(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_key = (
         _t(spark, sf_dir, "orders")
@@ -284,8 +286,7 @@ def q15_upsert_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     the merged table. Unchanged-value semantics mean the merged table must
     equal the original — which is what the oracle asserts."""
     orders = _t(spark, sf_dir, "orders")
-    # the scope releases every numbering and merge persist; the
-    # checkpoint is the one frame that outlives it
+    # the scope releases every persist; only the checkpoint outlives it
     with scope(), tempfile.TemporaryDirectory(prefix="aircan_q15_") as wh:
         table = ParquetTable(spark, wh, "orders_merge")
         table.overwrite(with_row_number(orders, order_by=["o_orderkey"]))
@@ -355,8 +356,7 @@ def q16_bucketed_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aircan_spark.bucketed import BucketedParquetTable
 
     orders = _t(spark, sf_dir, "orders")
-    # the scope releases every numbering and merge persist; the
-    # checkpoint is the one frame that outlives it
+    # the scope releases every persist; only the checkpoint outlives it
     with scope(), tempfile.TemporaryDirectory(prefix="aircan_q16_") as wh:
         table = BucketedParquetTable(spark, wh, "orders_b", keys=["o_orderkey"], num_buckets=16)
         table.overwrite(with_row_number(orders, order_by=["o_orderkey"]))

@@ -33,8 +33,8 @@ read: the range partitioning, whose fetch order breaks ties
 arbitrarily). A columnar file scan without ``order_by`` is re-read
 deterministically, and its count pass reads only footers — pass
 ``cache=False`` there (pipeline.run does so for parquet/orc resources).
-The persist is ``frames.share``d: the caller's ``frames.scope()``
-releases it once the numbered frame is materialized.
+The persist is ``frames.share``d and released by the caller's
+``frames.scope()`` or ``@frames.result_scope`` (see ``frames``).
 """
 
 from __future__ import annotations

@@ -107,14 +107,10 @@ def merge(
     pass their recorded MAX(_id)+1 (commit metadata, no scan); a caller
     merging a SUBSET of the table must pass the table-wide value.
 
-    The DEDUPED stage is ``frames.share``d at ``DISK_ONLY`` (stage size is
-    data-proportional), so open a ``frames.scope()`` around the merge and
-    its write. It feeds the update join, the insert anti-join, AND the
-    insert numbering's range-partition sampling and count pass (the count
-    pass fills the numbering's own persist, which the write then reads),
-    so un-persisted it would re-run the stage scan + dedup window up to
-    four times per merge — at 100 TB that is four full passes over the
-    incoming batch.
+    The DEDUPED stage is ``frames.share``d big: open a ``frames.scope()``
+    around the merge and its write. It feeds the update join, the insert
+    anti-join and the insert numbering's sample and count passes, each of
+    which would otherwise re-run the stage scan and dedup window.
 
     Column policy (mirrors warehouse.py:222-245):
     - keys: coalesced from both sides.

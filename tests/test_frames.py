@@ -6,6 +6,7 @@ persist (streaming micro-batches, the end-to-end upsert queries) leave no
 persisted RDD behind but what they return.
 """
 
+import contextvars
 import json
 import os
 import re
@@ -29,9 +30,8 @@ def _cached(df):
 def test_scope_releases_on_exit_and_on_exception(spark):
     from aircan_spark.frames import scope, share
 
-    with scope() as held:
+    with scope():
         small, big = share(spark.range(10)), share(spark.range(20), big=True)
-        assert held == [small, big]
         assert small.storageLevel == StorageLevel.MEMORY_AND_DISK_DESER
         assert big.storageLevel == StorageLevel.DISK_ONLY
         assert small.count() == 10 and big.count() == 20
@@ -48,12 +48,11 @@ def test_scope_releases_on_exit_and_on_exception(spark):
 def test_scopes_nest(spark):
     from aircan_spark.frames import scope, share
 
-    with scope() as outer:
+    with scope():
         a = share(spark.range(5))
-        with scope() as inner:
+        with scope():
             b = share(spark.range(6))
         assert not _cached(b) and _cached(a)
-        assert outer == [a] and inner == [b]
         c = share(spark.range(7))
     assert not _cached(a) and not _cached(c)
 
@@ -71,8 +70,9 @@ def test_outside_a_scope_the_frame_is_the_callers(spark):
 def test_scope_exit_in_one_thread_keeps_another_threads_frame(spark):
     """This thread shares a frame and holds its scope open while another
     thread opens, fills and exits its own scope: only the other thread's
-    frame is released. A thread started inside a scope does not register
-    with it."""
+    frame is released. A thread started inside the open scope, even one
+    that runs in a copy of this thread's context (as threads do on
+    interpreters that inherit it), does not register with it."""
     from aircan_spark.frames import scope, share
 
     shared, frames = threading.Event(), {}
@@ -84,19 +84,78 @@ def test_scope_exit_in_one_thread_keeps_another_threads_frame(spark):
             frames["b"].count()
         frames["c"] = share(spark.range(3))
 
+    def started_inside(name, n):
+        frames[name] = share(spark.range(n))
+
     t = threading.Thread(target=other)
     t.start()
-    with scope() as held:
+    with scope():
         a = share(spark.range(40))
         a.count()
         shared.set()
         t.join(120)
         assert not _cached(frames["b"])
         assert _cached(a)
-        assert held == [a]
+        inner = [
+            threading.Thread(target=started_inside, args=("d", 4)),
+            threading.Thread(target=contextvars.copy_context().run,
+                             args=(started_inside, "e", 5)),
+        ]
+        for th in inner:
+            th.start()
+            th.join(60)
     assert not _cached(a)
-    assert _cached(frames["c"])
-    frames["c"].unpersist()
+    for name in "cde":
+        assert _cached(frames[name]), name
+        frames[name].unpersist()
+
+
+def test_result_scope_lives_with_the_returned_frame(spark):
+    """A ``@result_scope`` function's shared frames stay cached while its
+    result is held, are released when the result is dropped, and at once
+    when the function raises."""
+    from aircan_spark.frames import result_scope, share
+
+    made = []
+
+    @result_scope
+    def build(fail=False):
+        made.append(share(spark.range(9)))
+        if fail:
+            raise RuntimeError("boom")
+        return made[-1].filter("id > 2")
+
+    result = build()
+    assert result.count() == 6
+    assert _cached(made[0])
+    del result
+    assert not _cached(made[0])
+
+    before = _persisted_ids(spark)
+    build().write.format("noop").mode("overwrite").save()
+    assert not _cached(made[1])
+    assert _persisted_ids(spark) == before
+
+    with pytest.raises(RuntimeError, match="boom"):
+        build(fail=True)
+    assert not _cached(made[2])
+
+
+@pytest.mark.parametrize("key", ["q02_row_number", "q04_offset_continuation"])
+def test_numbering_queries_release_with_their_result(spark, sf_dir, key):
+    """The registry's numbering queries return a lazy plan over a shared
+    numbering: it stays pinned while the plan is held, and building and
+    running the query again starts from nothing cached."""
+    from aircan_spark.queries import QUERIES
+
+    before = _persisted_ids(spark)
+    result = QUERIES[key](spark, sf_dir)
+    assert len(_persisted_ids(spark) - before) == 1
+    rows = result.count()
+    del result
+    assert _persisted_ids(spark) == before
+    assert QUERIES[key](spark, sf_dir).count() == rows
+    assert _persisted_ids(spark) == before
 
 
 def test_one_persist_owner_in_the_package():

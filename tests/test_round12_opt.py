@@ -113,12 +113,17 @@ def test_ngram_jaccard_pairs_single_stats_job(spark):
         ],
         "doc_id bigint, text string",
     )
-    with scope() as held:
+    def persisted():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    with scope():
         pairs = ngram_jaccard_pairs(docs, n=3, threshold=0.3, max_doc_freq=64)
         got = [tuple(r) for r in pairs.collect()]
         # the scope holds the index AND the df-counts frame, and
         # releases both on exit
-        assert len(held) == 2
+        assert len(persisted() - before) == 2
+    assert persisted() == before
     assert len(got) == 1
     id_a, id_b, jac = got[0]
     assert (id_a, id_b) == (1, 2) and 0.3 <= jac <= 1.0

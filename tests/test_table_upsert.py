@@ -393,9 +393,12 @@ def test_failed_write_leaves_previous_version(spark, tmp_path, monkeypatch, kind
     def state():
         return t.read().count(), t.row_count(), t.max_id(), t.current_version()
 
-    before, pinned = state(), _persisted_rdd_ids(spark)
+    before, outside = state(), _persisted_rdd_ids(spark)
+    # the scope owns only the batch's own numbering: the failing operation
+    # must release every persist it made itself
     with scope(), monkeypatch.context() as m:
         df = _op_batch(spark, op, start=t.max_id() + 1)
+        pinned = _persisted_rdd_ids(spark)
         if fault == "commit":
             def commit(*args, **kwargs):
                 raise RuntimeError("boom: crashed before the commit")
@@ -405,8 +408,9 @@ def test_failed_write_leaves_previous_version(spark, tmp_path, monkeypatch, kind
             df = df.select(*[_fail_on(c, 20) if c == "sku" else c for c in df.columns])
         with pytest.raises(Exception, match="boom"):
             _run_op(t, op, df)
+        assert _persisted_rdd_ids(spark) == pinned
     assert state() == before
-    assert _persisted_rdd_ids(spark) == pinned
+    assert _persisted_rdd_ids(spark) == outside
 
     extra = spark.createDataFrame([(50, "eps", 5.0)], "sku long, name string, price double")
     t.append(
