@@ -8,13 +8,14 @@ aggregator), not from here, unless you are a wave module.
 from __future__ import annotations
 
 import os
+import pathlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from aircan_spark.rownum import with_row_number
+from aircan_spark.rownum import footer_rows, with_row_number
 
 from aircan_spark.data import fan_out
 from aircan_spark.data import load_table as _load
@@ -66,23 +67,17 @@ import threading as _threading
 
 _T_DELEGATING = _threading.local()
 
-_CORPUS_COUNTS: dict[tuple[str, str], int] = {}
-
 
 def corpus_count(spark, sf_dir: str, name: str) -> int:
-    """COUNT(*) of a testdata table, cached per (sf_dir, table).
+    """COUNT(*) of a testdata table (one parquet file), from its footer.
 
     The seven cap-adaptive panel queries need the corpus size at
-    DataFrame-CONSTRUCTION time (the panel modulus is data-derived), so
-    each fn(spark, sf_dir) call triggers a real count scan before the
-    plan even exists — an eager-construction contract that (a) made
-    repeated builds rescan the same immutable parquet and (b) charged
-    the scan to construction, outside bench.py's same-DataFrame warm
-    timings (r8 ADVICE). Testdata is read-only for the life of a
-    session, so the count is cached per (sf_dir, table). When a test has
-    monkeypatched the ``_t`` seam to inject a synthetic frame the cache
-    is BYPASSED (count the injected frame directly) — a cached on-disk
-    count would silently mis-size the panel for the synthetic corpus.
+    DataFrame-CONSTRUCTION time (the panel modulus is data-derived). The
+    footer's record count is read on the driver with 0 Spark jobs, so
+    construction scans nothing and a rewritten file is counted afresh.
+    When a test has monkeypatched the ``_t`` seam to inject a synthetic
+    frame, that frame is counted instead — the on-disk count would
+    mis-size the panel for the synthetic corpus.
     """
     import sys
 
@@ -90,10 +85,9 @@ def corpus_count(spark, sf_dir: str, name: str) -> int:
     patched = getattr(agg, "_t", None) if agg is not None else None
     if patched is not None and patched is not _t:
         return _t(spark, sf_dir, name).count()
-    key = (os.path.abspath(sf_dir), name)
-    if key not in _CORPUS_COUNTS:
-        _CORPUS_COUNTS[key] = _t(spark, sf_dir, name).count()
-    return _CORPUS_COUNTS[key]
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    url = path if "://" in path else pathlib.Path(os.path.abspath(path)).as_uri()
+    return footer_rows(spark, [url])[0]
 
 
 def capped_panel_modulus(n_rows: int, base: int, cap: int) -> int:

@@ -561,7 +561,7 @@ def embedding_pairs(
     )
     if lsh_bits > 0:
         # corpus size for the adaptive bit count: callers that already
-        # know it (the declared query rides the cached corpus_count) pass
+        # know it (the declared query rides the footer corpus_count) pass
         # n_vecs so construction stays lazy — an in-function count() here
         # rescanned the immutable parquet on every rebuild and charged the
         # scan to CONSTRUCTION, outside warm timings (r9 ADVICE)

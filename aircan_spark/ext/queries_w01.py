@@ -817,7 +817,7 @@ def ext_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~0.63, so table hit-rate ~0.63^6=0.06 and recall 1-(1-0.06)^24~0.79
     # on worst-case (exactly-at-threshold) pairs; higher-cosine dupes are
     # found with near-certainty. Bits dial bucket size (candidate volume),
-    # tables dial recall. n_vecs rides the cached corpus_count so repeated
+    # tables dial recall. n_vecs rides corpus_count (footer, 0 jobs) so repeated
     # builds don't rescan the corpus at construction time.
     return dedup.embedding_pairs(
         emb,

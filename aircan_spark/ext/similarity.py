@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import contextlib
 import ctypes
+import threading
 
 import numpy as np
 import pandas as pd
@@ -80,25 +81,43 @@ def _blas_thread_controls() -> list:
     return _BLAS_CONTROLS
 
 
+# One pin for the whole process: the first of any overlapping
+# _single_thread_blas entries saves the pool sizes and pins them to 1, the
+# last exit restores them. Saving per entry would let two threads
+# interleave (A saves 32, B saves A's 1, A restores 32, B restores 1) into
+# a pool left at 1 thread for the rest of the session.
+_BLAS_PIN_LOCK = threading.Lock()
+_BLAS_PINS = 0
+_BLAS_SAVED: list = []
+
+
 @contextlib.contextmanager
 def _single_thread_blas():
     """Pin every process BLAS pool to 1 thread for the duration; restore
-    the previous value on exit. No-op when no controllable BLAS is found."""
-    saved = []
-    for getter, setter in _blas_thread_controls():
-        try:
-            saved.append((setter, int(getter())))
-            setter(1)
-        except Exception:
-            continue
+    the original value when the last overlapping use exits. No-op when no
+    controllable BLAS is found."""
+    global _BLAS_PINS
+    with _BLAS_PIN_LOCK:
+        if _BLAS_PINS == 0:
+            _BLAS_SAVED.clear()
+            for getter, setter in _blas_thread_controls():
+                try:
+                    _BLAS_SAVED.append((setter, int(getter())))
+                    setter(1)
+                except Exception:
+                    continue
+        _BLAS_PINS += 1
     try:
         yield
     finally:
-        for setter, n in saved:
-            try:
-                setter(n)
-            except Exception:
-                pass
+        with _BLAS_PIN_LOCK:
+            _BLAS_PINS -= 1
+            if _BLAS_PINS == 0:
+                for setter, n in _BLAS_SAVED:
+                    try:
+                        setter(n)
+                    except Exception:
+                        pass
 
 
 def _as_double(df: DataFrame, id_col: str, vec_col: str, out: str) -> DataFrame:
@@ -234,7 +253,7 @@ def _sample_matrix(
     This path selects and orders rows by CONTENT hash only:
 
     1. size the corpus — the caller's ``n_rows`` when provided (the
-       wrappers pass the cached ``corpus_count``, so repeated trainer
+       wrappers pass the footer ``corpus_count``, so repeated trainer
        builds never re-count), else one ``count()`` job (footer-stat
        cheap only on raw parquet scans; derived/repartitioned frames pay
        a real scan — which is why callers should thread ``n_rows``) —

@@ -39,7 +39,7 @@ from pyspark.sql import functions as F
 from aircan_spark import ROW_NUMBER_COLUMN, UPDATED_AT_COLUMN
 from aircan_spark.export import export_ordered
 from aircan_spark.frames import scope
-from aircan_spark.rownum import with_row_number
+from aircan_spark.rownum import number_files, with_row_number
 from aircan_spark.schema import (
     decide_schema_action,
     descriptor_to_struct,
@@ -125,15 +125,19 @@ def run(spark: SparkSession, config: dict[str, Any]) -> dict[str, Any]:
     if method in ("append", "upsert") and table.exists():
         start = table.max_id(rn_col) + 1
 
-    # A columnar scan re-reads its files deterministically and its count
-    # pass reads only footers, so persisting it buys nothing; text/gzip
-    # re-parses are costly and keep the persist (rownum.py cache rule).
-    columnar = infer_format(path, config.get("resource_format")) in ("parquet", "orc")
+    # A parquet scan is numbered from its files' footers: no count pass,
+    # no job. Other sources take the count pass; an ORC scan re-reads its
+    # files deterministically, so it skips the persist that text/gzip
+    # re-parses keep (rownum.py cache rule).
+    fmt = infer_format(path, config.get("resource_format"))
     report: dict[str, Any] | None = None
-    with scope():  # the numbering's persist, held until the write
-        numbered, rows = with_row_number(
-            raw, column=rn_col, start=start, cache=not columnar, return_count=True
-        )
+    with scope():  # the count pass's persist, held until the write
+        if fmt == "parquet":
+            numbered, rows = number_files(raw, rn_col, start)
+        else:
+            numbered, rows = with_row_number(
+                raw, column=rn_col, start=start, cache=fmt != "orc", return_count=True
+            )
 
         # --- validation gate (reference 2b, :287-317) -----------------------
         if config.get("validate"):

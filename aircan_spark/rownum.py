@@ -27,19 +27,28 @@ shuffle is ``order_by``'s range partitioning (plus the tiny count
 aggregate). The frame is read twice (counts, then numbering), and both
 reads must see the same rows in the same partitions and order.
 
-Cache rule: persist (``cache=True``) only where re-running the input is
-expensive (text/gzip parsing, joins) or could reorder rows (a shuffle
-read: the range partitioning, whose fetch order breaks ties
-arbitrarily). A columnar file scan without ``order_by`` is re-read
+A parquet file scan needs no count pass: ``number_files`` takes the rows
+of each file from its footer on the driver and numbers
+``_id = start + rows_before(file) + _metadata.row_index``, with files in
+path order (Delta's row tracking reads ``baseRowId + row_index`` the same
+way). It runs 0 Spark jobs and adds nothing to the scan's plan but one
+projection. ``pipeline.run`` uses it for every parquet resource; other
+sources (text, and ORC, which has no ``_metadata.row_index``) take the
+count pass of ``with_row_number``.
+
+Cache rule (count pass only): persist (``cache=True``) only where
+re-running the input is expensive (text/gzip parsing, joins) or could
+reorder rows (a shuffle read: the range partitioning, whose fetch order
+breaks ties arbitrarily). An ORC scan without ``order_by`` is re-read
 deterministically, and its count pass reads only footers — pass
-``cache=False`` there (pipeline.run does so for parquet/orc resources).
+``cache=False`` there (pipeline.run does so).
 The persist is ``frames.share``d and released by the caller's
 ``frames.scope()`` or ``@frames.result_scope`` (see ``frames``).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aircan_spark import ROW_NUMBER_COLUMN
@@ -93,3 +102,64 @@ def with_row_number(
     data_cols = [c for c in df.columns if c != column]
     numbered = prepared.select((F.col(_ROW) + delta).alias(column), *data_cols)
     return (numbered, acc - start) if return_count else numbered
+
+
+def footer_rows(spark: SparkSession, files: list[str]) -> list[int]:
+    """Rows of each parquet file in ``files`` (URL strings, as
+    ``DataFrame.inputFiles()`` gives them), from its footer's record count.
+    Read on the driver through the session's Hadoop FileSystem: 0 Spark
+    jobs, and any path Spark can read."""
+    jvm = spark._jvm
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    parquet = jvm.org.apache.parquet.hadoop
+    counts = []
+    for url in files:
+        path = jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(url))
+        reader = parquet.ParquetFileReader.open(
+            parquet.util.HadoopInputFile.fromPath(path, conf)
+        )
+        try:
+            counts.append(int(reader.getRecordCount()))
+        finally:
+            reader.close()
+    return counts
+
+
+def number_files(
+    df: DataFrame, column: str = ROW_NUMBER_COLUMN, start: int = 1
+) -> tuple[DataFrame, int]:
+    """Number a parquet file scan in (file path, row) order; return
+    ``(numbered, rows)``.
+
+    ``df`` is ``spark.read.parquet(...)``, optionally under column
+    selections and renames. ``_id = base[file] + row_index``, with ``base``
+    a literal map from each scanned file to ``start`` plus the rows of the
+    files before it in path order. A scanned file missing from ``base``
+    fails the job rather than yield a NULL ``_id``.
+    """
+    uri = df.sparkSession._jvm.java.net.URI
+
+    def file_path(url: str) -> str:
+        # inputFiles() spells a local file file:///p where
+        # _metadata.file_path spells it file:/p; rebuilding the URI from
+        # its parts gives the latter, with the same escaping.
+        u = uri(url)
+        return uri(
+            u.getScheme(), u.getAuthority(), u.getPath(), u.getQuery(), u.getFragment()
+        ).toString()
+
+    files = sorted(file_path(url) for url in df.inputFiles())
+    entries: list[Column] = []
+    acc = start
+    for path, n in zip(files, footer_rows(df.sparkSession, files)):
+        entries += [F.lit(path), F.lit(acc).cast("long")]
+        acc += n
+    meta = df.metadataColumn("_metadata")
+    scanned = meta.getField("file_path")
+    base = F.coalesce(
+        F.create_map(*entries)[scanned] if entries else F.lit(None).cast("long"),
+        F.raise_error(F.concat(F.lit("row numbering has no base for "), scanned)),
+    )
+    data_cols = [c for c in df.columns if c != column]
+    numbered = df.select((base + meta.getField("row_index")).alias(column), *data_cols)
+    return numbered, acc - start

@@ -12,7 +12,8 @@ The reference re-reads the source row-by-row through frictionless and
 collects type/constraint errors capped at 1000. Here the gate is a Spark
 plan over the numbered raw frame (text sources read as strings, columnar
 sources in their native types), which it neither caches nor counts: the
-numbering's count pass supplies ``row_count``.
+numbering supplies ``row_count`` (from the footers for a parquet source,
+from its count pass otherwise).
 
 - type errors: a non-null raw cell whose ``conform`` cast is NULL is a
   ``type-error``, reported with the cell's source text (same detection
@@ -86,9 +87,9 @@ def validate(
 ) -> dict[str, Any]:
     """Validate a numbered raw frame against a descriptor.
 
-    ``numbered`` is the raw frame after ``with_row_number``: its
-    ``row_column`` numbers the source rows from ``first_id``, and
-    ``row_count`` is that numbering's count.
+    ``numbered`` is the raw frame after ``with_row_number`` or
+    ``number_files``: its ``row_column`` numbers the source rows from
+    ``first_id``, and ``row_count`` is that numbering's count.
 
     Returns a report dict shaped like the reference's abort payload
     (pipeline_ckan_to_bigquery.py:300-311): ``valid``, ``row_count``,

@@ -1551,3 +1551,25 @@ def test_kmv_merge_law_and_estimate(spark):
     est = {r["g"]: r["kmv_distinct"] for r in sk.kmv_estimates(whole, ["g"], k=128).collect()}
     assert abs(est["big"] - 5000) / 5000 < 3 / (128 ** 0.5), est  # ~3 std errs
     assert est["small"] == 40.0  # below k: exact by construction
+
+
+def test_corpus_count_reads_a_rewritten_file_with_no_job(spark, tmp_path):
+    """corpus_count reads the footer of the file as it is now: a rewrite
+    with a different row count is counted afresh, and no Spark job runs."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from aircan_spark.ext._qcommon import corpus_count
+
+    path = str(tmp_path / "embeddings.parquet")
+    sc = spark.sparkContext
+    got = []
+    sc.setJobGroup("corpus_count_rewrite", "corpus_count_rewrite")
+    try:
+        for n in (7, 3):
+            pq.write_table(pa.table({"vec_id": list(range(n))}), path)
+            got.append(corpus_count(spark, str(tmp_path), "embeddings"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert got == [7, 3]
+    assert len(sc.statusTracker().getJobIdsForGroup("corpus_count_rewrite")) == 0

@@ -142,6 +142,47 @@ def test_pipeline_validation_abort(spark, tmp_path):
     assert ParquetTable(spark, str(tmp_path / "wh"), "bad").current_version() == version
 
 
+def test_pipeline_validated_parquet_reports_bad_cells(spark, tmp_path):
+    """A parquet source keeps its native (here string) types, and the gate
+    checks the declared cast of each cell. The row count comes from the
+    files' footers and an appended load's errors still name the source
+    rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    def parquet(name, sku, names, price):
+        path = str(tmp_path / f"{name}.parquet")
+        pq.write_table(pa.table({"sku": sku, "name": names, "price": price}), path)
+        return path
+
+    cfg = {
+        "resource_path": parquet("good", ["1", "2"], ["a", "b"], ["1.0", "2.0"]),
+        "table_name": "bad_parquet",
+        "warehouse": str(tmp_path / "wh"),
+        "schema_descriptor": DESCRIPTOR,
+        "validate": True,
+        "job_ts": TS1,
+    }
+    version = run(spark, cfg)["version"]
+    src = parquet(
+        "bad",
+        ["3", "x4", "5", "6", "7.5"],
+        ["c", None, "e", "f", "g"],
+        ["3.0", "4.0", "n/a", "6.0", "7.0"],
+    )
+    with pytest.raises(ValidationFailure) as exc:
+        run(spark, {**cfg, "resource_path": src, "method": "append"})
+    report = exc.value.report
+    assert (report["row_count"], report["error_count"]) == (5, 4)
+    assert sorted((e["row"], e["field"], e["code"], e["value"]) for e in report["errors"]) == [
+        (3, "name", "constraint-error:required", None),
+        (3, "sku", "type-error", "x4"),
+        (4, "price", "type-error", "n/a"),
+        (6, "sku", "type-error", "7.5"),
+    ]
+    assert ParquetTable(spark, cfg["warehouse"], "bad_parquet").current_version() == version
+
+
 # name -> (CSV text, descriptor fields, loaded (values) or refused [errors])
 GATE_CASES = {
     # cells the gate passed and the load nulled
@@ -294,8 +335,8 @@ def _load_jobs(spark, group, config):
 def test_pipeline_load_job_counts(spark, tmp_path):
     """Pin the exact Spark job count of each load shape, so a numbering,
     persist or table-metadata regression shows up as a counter diff.
-    Parquet loads number without a persist (count pass reads footers, the
-    write re-scans); the gzip-CSV load keeps its persist. Table reads,
+    Parquet loads number from their files' footers (no count pass, no
+    job); the gzip-CSV load keeps its count pass and persist. Table reads,
     max_id and the report's row count come from the commit record and run
     no job."""
     import gzip
@@ -352,10 +393,10 @@ def test_pipeline_load_job_counts(spark, tmp_path):
         "job_ts": TS1,
     })
     assert got == {
-        "parquet_overwrite": 4,
-        "parquet_append": 4,
-        "parquet_upsert": 13,
-        "bucketed_parquet_overwrite": 5,
-        "bucketed_correction_upsert": 14,
+        "parquet_overwrite": 2,
+        "parquet_append": 2,
+        "parquet_upsert": 11,
+        "bucketed_parquet_overwrite": 3,
+        "bucketed_correction_upsert": 12,
         "gzip_csv_validated_overwrite": 7,
     }

@@ -56,6 +56,84 @@ def test_single_thread_blas_sets_and_restores():
     assert int(getter()) == before
 
 
+def test_single_thread_blas_interleaved_threads_restore_original():
+    """Two driver threads interleave entry and exit (A in, B in, A out,
+    B out): the pool stays at 1 thread while either is inside, and ends at
+    its original size, not at the 1 thread B saw on entry."""
+    import threading
+
+    controls = S._blas_thread_controls()
+    if not controls:
+        pytest.skip("no controllable BLAS in this environment")
+    getter, setter = controls[0]
+    before = int(getter())
+    setter(3)
+    a_in, b_in, a_out = threading.Event(), threading.Event(), threading.Event()
+    seen = {}
+
+    def a():
+        with S._single_thread_blas():
+            a_in.set()
+            b_in.wait(10)
+        a_out.set()
+
+    def b():
+        a_in.wait(10)
+        with S._single_thread_blas():
+            b_in.set()
+            a_out.wait(10)
+            seen["inside_b_after_a_exit"] = int(getter())
+
+    try:
+        threads = [threading.Thread(target=f) for f in (a, b)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(30)
+        assert not any(t.is_alive() for t in threads)
+        assert seen == {"inside_b_after_a_exit": 1}
+        assert int(getter()) == 3
+    finally:
+        setter(before)
+
+
+def test_single_thread_blas_many_threads_stress():
+    """More threads than cores enter and exit the pin in a tight loop with
+    a short switch interval: every thread sees 1 thread inside, and the
+    pool ends at its original size (a lost refcount update breaks one)."""
+    import sys
+    import threading
+
+    controls = S._blas_thread_controls()
+    if not controls:
+        pytest.skip("no controllable BLAS in this environment")
+    getter, setter = controls[0]
+    before = int(getter())
+    interval = sys.getswitchinterval()
+    wrong = []
+
+    def loop():
+        for _ in range(200):
+            with S._single_thread_blas():
+                if int(getter()) != 1:
+                    wrong.append(int(getter()))
+
+    setter(3)
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=loop) for _ in range(16)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(60)
+        assert not any(t.is_alive() for t in threads)
+        assert wrong == []
+        assert int(getter()) == 3
+    finally:
+        sys.setswitchinterval(interval)
+        setter(before)
+
+
 def test_pq_train_bit_identical_under_thread_pinning():
     """pq_train (the ONLY pinned trainer) returns byte-equal codebooks
     with and without the pin, at the committed dsub=4 shape."""

@@ -1,8 +1,11 @@
 """Row-number injection: contiguity, offsets, order preservation, scale shape."""
 
+import pytest
 from pyspark.sql import functions as F
 
-from aircan_spark.rownum import with_row_number
+from aircan_spark.pipeline import run
+from aircan_spark.rownum import number_files, with_row_number
+from aircan_spark.table import ParquetTable
 
 
 def test_contiguous_from_one(spark):
@@ -163,3 +166,92 @@ def test_desc_order_keys(spark):
     got = [(r["seg"], r["v"], r["k"]) for r in out.orderBy("_gi").collect()]
     assert got == sorted(data, key=lambda t: (t[0], -t[1], t[2]))
     assert sorted(r["_gi"] for r in out.collect()) == list(range(1, 201))
+
+
+# --- number_files: parquet scans numbered from their footers -----------------
+
+
+def _write_files(root, files):
+    """Write each {relative path: [vals]} as its own parquet file."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    for rel, vals in files.items():
+        path = root / rel
+        path.parent.mkdir(parents=True, exist_ok=True)
+        pq.write_table(pa.table({"v": vals}), str(path))
+
+
+def _jobs(spark, group, fn):
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_number_files_builds_with_no_job_exchange_or_cache(spark, tmp_path):
+    _write_files(tmp_path / "src", {"a.parquet": list(range(7)), "b.parquet": list(range(5))})
+    df = spark.read.parquet(str(tmp_path / "src"))
+    (numbered, rows), jobs = _jobs(spark, "number_files_build", lambda: number_files(df, start=11))
+    assert (rows, jobs) == (12, 0)
+    plan = _plan(numbered)
+    assert "Exchange" not in plan and "InMemoryRelation" not in plan, plan
+    assert "InMemoryTableScan" not in plan, plan
+    assert numbered.columns == ["_id", "v"]
+    assert sorted(r["_id"] for r in numbered.collect()) == list(range(11, 23))
+    (tmp_path / "empty").mkdir()
+    numbered, rows = number_files(spark.read.schema("v long").parquet(str(tmp_path / "empty")))
+    assert (rows, numbered.collect()) == (0, [])
+
+
+def test_pipeline_numbers_multi_file_source_in_path_order(spark, tmp_path):
+    """part-0 is the smaller file; Spark packs splits largest first, so a
+    split-order numbering would give part-1's rows the first ids."""
+    small = [f"s{i}" for i in range(3)]
+    large = [f"{'x' * 200}{i}" for i in range(400)]
+    src = tmp_path / "src.parquet"
+    _write_files(src, {"part-0.parquet": small, "part-1.parquet": large})
+    assert (src / "part-0.parquet").stat().st_size < (src / "part-1.parquet").stat().st_size
+    res = run(spark, {"resource_path": str(src), "table_name": "t",
+                      "warehouse": str(tmp_path / "wh")})
+    assert res["rows"] == 403
+    got = ParquetTable(spark, str(tmp_path / "wh"), "t").read().orderBy("_id")
+    assert [(r["_id"], r["v"]) for r in got.collect()] == list(
+        enumerate(small + large, start=1)
+    )
+
+
+@pytest.mark.parametrize("layout", ["hive_partitions", "space_and_percent"])
+def test_pipeline_numbers_every_file_once(spark, tmp_path, layout):
+    """Partition dirs repeat the part-file name, and the source path needs
+    URL escaping: every row still gets one of 1..N."""
+    if layout == "hive_partitions":
+        src = tmp_path / "src.parquet"
+        files = {f"k={k}/part-0.parquet": [k * 100 + i for i in range(k + 2)] for k in range(3)}
+    else:
+        src = tmp_path / "my src 100%.parquet"
+        files = {"part-0.parquet": list(range(4)), "part 1%.parquet": list(range(4, 9))}
+    _write_files(src, files)
+    n = sum(len(v) for v in files.values())
+    res = run(spark, {"resource_path": str(src), "resource_format": "parquet",
+                      "table_name": "t", "warehouse": str(tmp_path / "wh")})
+    ids = [r["_id"] for r in ParquetTable(spark, str(tmp_path / "wh"), "t").read().collect()]
+    assert res["rows"] == n
+    assert sorted(ids) == list(range(1, n + 1))
+
+
+def test_pipeline_fails_on_scanned_file_without_base(spark, tmp_path, monkeypatch):
+    """A file the scan reads but the numbering did not list fails the load;
+    no table version is committed with a NULL _id."""
+    src = tmp_path / "src.parquet"
+    _write_files(src, {"part-0.parquet": [1, 2], "part-1.parquet": [3]})
+    cls = type(spark.range(1))
+    listed = cls.inputFiles
+    monkeypatch.setattr(cls, "inputFiles", lambda self: sorted(listed(self))[:-1])
+    with pytest.raises(Exception, match="row numbering has no base for"):
+        run(spark, {"resource_path": str(src), "table_name": "t",
+                    "warehouse": str(tmp_path / "wh")})
+    assert not ParquetTable(spark, str(tmp_path / "wh"), "t").exists()
