@@ -10,10 +10,11 @@
                          cold-only.
 
 Each query is forced end-to-end with a noop sink (full computation, no
-driver collect bottleneck). The final stdout line is a SHORT parseable
-JSON summary (r01 lesson: a 115-key inline map overflowed the driver's
-tail capture -> parsed:null); the full per-query map goes to
-bench_queries.json next to this file.
+driver collect bottleneck) by scripts/run_queries.py. The final stdout
+line is a SHORT parseable JSON summary (r01 lesson: a 115-key inline map
+overflowed the driver's tail capture -> parsed:null); the full per-query
+maps, and the runner's per-query record (construction jobs, jobs and
+tasks per pass, residue), go to bench_queries.json next to this file.
 """
 
 from __future__ import annotations
@@ -23,7 +24,31 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
+sys.path.insert(0, os.path.join(HERE, "scripts"))
+
+
+def summary_line(summary: dict, cold: dict[str, float], sample_keys: list[str]) -> str:
+    """The SHORT final line: the driver tail-captures the LAST 2000 chars
+    of stdout and parses the final JSON line within them (r01 lesson: a
+    full 474-key inline map is ~12 KB, left-truncates, parsed:null).
+    "queries" carries the cold seconds of ``sample_keys`` (the
+    driver-declared sample: the first 50 registry entries, the exact set
+    CORRECTNESS_r* hash-checks every round; stable keys, so cross-round
+    per-query ratios are computable), rounded to 0.01 s with compact
+    separators. A hard length guard drops precision and then the map
+    itself before ever risking a >2000-char line: the suite totals must
+    always parse."""
+    for ndigits in (2, 1):
+        candidate = dict(summary)
+        candidate["queries"] = {
+            k: round(cold[k], ndigits) for k in sample_keys if k in cold
+        }
+        encoded = json.dumps(candidate, separators=(",", ":"))
+        if len(encoded) <= 1950:
+            return encoded
+    return json.dumps(summary, separators=(",", ":"))
 
 
 def main() -> None:
@@ -31,8 +56,11 @@ def main() -> None:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
-    from aircan_spark.session import get_spark
+    from pyspark.sql import functions as F
+    from run_queries import rebuild_keys, run_queries, warm_up
+
     from aircan_spark.queries import QUERIES
+    from aircan_spark.session import get_spark
 
     spark = get_spark(
         app_name="aircan_spark_bench",
@@ -41,25 +69,7 @@ def main() -> None:
         extra_conf={"spark.ui.showConsoleProgress": "false"},
     )
     spark.sparkContext.setLogLevel("ERROR")
-
-    # Warm the JVM + file cache outside the timed region.
-    from aircan_spark.data import load_table
-
-    load_table(spark, sf_dir, "lineitem").count()
-
-    # Pre-spawn the Python/Arrow UDF workers (one per core) so the first
-    # pandas-UDF query measures the operator, not one-time worker startup —
-    # on a cluster these workers are long-lived (spark.python.worker.reuse).
-    import pandas as pd  # noqa: F401
-    from pyspark.sql import functions as F
-
-    def _noop_batches(it):
-        for b in it:
-            yield b
-
-    spark.range(int(cpus) * 4, numPartitions=int(cpus)).mapInPandas(
-        _noop_batches, "id long"
-    ).write.format("noop").mode("overwrite").save()
+    warm_up(spark, sf_dir)
 
     # Host-noise calibration probe (r4 verdict #4): a FIXED trivial query
     # (1M-row range -> 101-key hash agg -> noop sink, 9 reps) whose cost is
@@ -87,81 +97,43 @@ def main() -> None:
             "max_s": round(reps[-1], 3),
         }
 
+    def _run(keys: list[str], passes: int) -> dict[str, dict]:
+        # the timing contract: a failing query fails the bench
+        records = run_queries(spark, keys, sf_dir, passes=passes)
+        failed = {k: r["error"] for k, r in records.items() if r["status"] != "ok"}
+        if failed:
+            raise RuntimeError(f"queries failed: {failed}")
+        return records
+
+    def _cold(rec: dict) -> float:
+        return round(rec["construct_s"] + rec["passes"][0]["s"], 3)
+
     calibration_pre = _calibration()
 
     # Warm pass is ON by default (r5 verdict #6: the per-round artifact
     # must carry cold AND warm in the parsed block — r5's driver run left
     # warm_total null because warm was opt-in). SPARK_GRAFT_WARM=0 skips
-    # it for quick local iteration.
+    # it for quick local iteration. Warm = the second pass over the SAME
+    # DataFrame: analyzed/optimized plan reused, JIT hot — the
+    # steady-state cost a long-lived session pays.
     warm_mode = os.environ.get("SPARK_GRAFT_WARM", "1") != "0"
-    cold: dict[str, float] = {}
-    warm: dict[str, float] | None = {} if warm_mode else None
-    for name, fn in QUERIES.items():
-        start = time.perf_counter()
-        df = fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        cold[name] = round(time.perf_counter() - start, 3)
-        if warm_mode:
-            # warm = re-execute the SAME DataFrame: analyzed/optimized plan
-            # reused, JIT hot — the steady-state cost a long-lived session
-            # pays. Rebuilding via fn() would re-run Catalyst and measure
-            # compile again.
-            start = time.perf_counter()
-            df.write.format("noop").mode("overwrite").save()
-            warm[name] = round(time.perf_counter() - start, 3)
+    records = _run(list(QUERIES), 2 if warm_mode else 1)
+    cold = {k: _cold(r) for k, r in records.items()}
+    warm: dict[str, float] | None = (
+        {k: round(r["passes"][1]["s"], 3) for k, r in records.items()} if warm_mode else None
+    )
     # Headline stays the COLD total for cross-round comparability with
     # r1-r5 and BASELINE; warm rides alongside.
     timings = cold
 
-    # Standalone-warm for checkpoint-backed queries: their fn() eagerly
-    # materializes truncated lineage (data.checkpoint), so the same-DataFrame
-    # warm number above reuses the cold pass's checkpoint blocks and
-    # understates a from-scratch re-run. Rebuild via fn() a second time (JIT
-    # hot, files cached, but checkpoints re-materialized and Catalyst re-run)
-    # — the honest steady-state number for these (r03 verdict #4).
-    CHECKPOINT_QUERIES = [
-        "ext_theil_sen", "ext_pca_power", "ext_dedup_groups",
-        "ext_dedup_groups_star", "ext_pagerank", "ext_bfs",
-        "ext_entity_clusters", "ext_communities", "ext_lof",
-        # r8: hits became checkpoint-backed (eager checkpoint() blocks +
-        # collected normalization scalars inside fn()) — without a full
-        # fn() rebuild its warm number reuses the cold pass's blocks
-        "ext_hits",
-        # r12: _cooc_edges now checkpoints the shared co-occurrence edge
-        # list at construction (one build instead of up to 24 duplicated
-        # subtree executions per query) — every consumer joins the
-        # checkpoint-backed cohort. kcore/clustering_coeff were already
-        # checkpoint-backed (construction-time edge build) and are
-        # listed now for the same honest-warm reason.
-        "ext_triangles", "ext_kcore", "ext_clustering_coeff",
-        "ext_bipartite_check", "ext_transitivity", "ext_rich_club",
-        # r12: panel-kNN edge list checkpointed at construction (one
-        # brute-scorer pass instead of 3-4 duplicated subtree runs)
-        "ext_assortativity", "ext_modularity",
-        # r12: basket frame checkpointed at construction (one
-        # distinct+collect_set pass instead of three)
-        "ext_association_rules",
-        # r12: distinct user-item list checkpointed at construction
-        # (one JSON-parse+distinct pass instead of three)
-        "ext_cooccurrence",
-        # r12 batch 3 (honest-warm backfill): these three were ALWAYS
-        # checkpoint-backed (greedy's round chain; the other two route
-        # through connected_components), so their same-DataFrame warm
-        # numbers have always reused the cold pass's blocks — they just
-        # were never listed. The lazy-checkpoint batch did not change
-        # block reuse at warm; listing them now completes the protocol.
-        "ext_greedy_coverage", "ext_cluster_size_histogram",
-        "ext_dedup_ngram_groups",
-    ]
+    # Standalone-warm for the keys whose fn() ran Spark jobs or returned a
+    # plan over a checkpoint: the same-DataFrame warm number above reuses
+    # that work and understates a from-scratch re-run. Rebuild via fn() a
+    # second time (JIT hot, files cached, checkpoints re-materialized and
+    # Catalyst re-run) — the honest steady-state number (r03 verdict #4).
     warm_rebuild: dict[str, float] | None = None
     if warm_mode:
-        warm_rebuild = {}
-        for name in CHECKPOINT_QUERIES:
-            if name not in QUERIES:
-                continue
-            start = time.perf_counter()
-            QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-            warm_rebuild[name] = round(time.perf_counter() - start, 3)
+        warm_rebuild = {k: _cold(r) for k, r in _run(rebuild_keys(records), 1).items()}
 
     calibration_post = _calibration()
 
@@ -194,23 +166,16 @@ def main() -> None:
             ]
             flagged = sorted(flagged, key=lambda n: -warm[n])[:20]
             calibration_retime = _calibration()
-            for name in flagged:
-                t0 = time.perf_counter()
-                df = QUERIES[name](spark, sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                rt_cold = round(time.perf_counter() - t0, 3)
-                t0 = time.perf_counter()
-                df.write.format("noop").mode("overwrite").save()
+            for name, rec in _run(flagged, 2).items():
                 ab_retimes[name] = {
                     "in_run_warm": warm[name],
-                    "retime_cold": rt_cold,
-                    "retime_warm": round(time.perf_counter() - t0, 3),
+                    "retime_cold": _cold(rec),
+                    "retime_warm": round(rec["passes"][1]["s"], 3),
                 }
 
     total = round(sum(timings.values()), 3)
     top = sorted(timings.items(), key=lambda kv: -kv[1])[:5]
-    here = os.path.dirname(os.path.abspath(__file__))
-    with open(os.path.join(here, "bench_queries.json"), "w") as f:
+    with open(os.path.join(HERE, "bench_queries.json"), "w") as f:
         json.dump(
             {
                 "sf_dir": sf_dir,
@@ -225,24 +190,12 @@ def main() -> None:
                 "ab_retimes": ab_retimes,
                 "queries": cold,
                 "queries_warm": warm,
+                "records": records,
             },
             f,
             indent=1,
             sort_keys=True,
         )
-    # SHORT final line — the driver tail-captures the LAST 2000 chars of
-    # stdout and parses the final JSON line within them (r01 lesson: a
-    # full 474-key inline map is ~12 KB, left-truncates, parsed:null).
-    # r13 (VERDICT r12 #2): restore the driver's per-query visibility
-    # without risking the parse — "queries" carries the cold seconds for
-    # the DRIVER-DECLARED SAMPLE (the first 50 registry entries, the
-    # exact set CORRECTNESS_r* hash-checks every round; stable keys, so
-    # cross-round per-query speedups/scaling ratios are computable),
-    # values rounded to 0.01 s, compact separators. A hard length guard
-    # drops precision and then the map itself before ever risking a
-    # >2000-char line: the suite totals must always parse. The full
-    # 474-key map (cold+warm) still lands in bench_queries.json.
-    sample_keys = list(QUERIES)[:50]
     summary = {
         "metric": "suite_seconds",
         "value": total,
@@ -256,19 +209,7 @@ def main() -> None:
         "top5": {k: v for k, v in top},
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
     }
-    line = None
-    for ndigits in (2, 1):
-        candidate = dict(summary)
-        candidate["queries"] = {
-            k: round(cold[k], ndigits) for k in sample_keys if k in cold
-        }
-        encoded = json.dumps(candidate, separators=(",", ":"))
-        if len(encoded) <= 1950:
-            line = encoded
-            break
-    if line is None:  # suite grew past the budget: totals still parse
-        line = json.dumps(summary, separators=(",", ":"))
-    print(line)
+    print(summary_line(summary, cold, list(QUERIES)[:50]))
 
 
 if __name__ == "__main__":

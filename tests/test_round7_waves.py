@@ -237,7 +237,7 @@ def test_hits_top10_compiles_to_take_ordered(spark, sf_dir):
 
 # --- non-vacuousness rewrites (r6 verdict item #2) ---------------------------
 # A declared query returning 0 rows at a checked SF proves nothing; the
-# sweep now HARD-FAILS zero-row results (scripts/sweep_sf.py). The two
+# sweep now HARD-FAILS zero-row results (test_oracle.guard_result). The two
 # structurally-empty-at-small-SF queries were rewritten to fire at every
 # SF while keeping their plan shape.
 
@@ -259,21 +259,12 @@ def test_idle_customers_fires_at_smallest_sf(spark, sf_dir):
 
 
 def _sweep_guard():
-    """Import scripts/sweep_sf.py's guard_result by file path (scripts/
-    is not a package) so the invariants are tested BEHAVIORALLY — a
-    source-grep pin would keep passing even if the raise became
-    unreachable (r7 ADVICE #3)."""
-    import importlib.util
+    """The sweep's guard_result, imported so the invariants are tested
+    BEHAVIORALLY — a source-grep pin would keep passing even if the raise
+    became unreachable (r7 ADVICE #3)."""
+    from test_oracle import guard_result
 
-    import aircan_spark.queries as Q
-
-    path = os.path.join(
-        os.path.dirname(Q.__file__), "..", "scripts", "sweep_sf.py"
-    )
-    spec = importlib.util.spec_from_file_location("sweep_sf_under_test", path)
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-    return mod.guard_result
+    return guard_result
 
 
 def test_sweep_hard_fails_zero_row_results():
