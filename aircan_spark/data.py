@@ -100,39 +100,6 @@ def checkpoint(df: DataFrame, big: bool = False, eager: bool = True) -> DataFram
     return df.localCheckpoint(eager=eager)
 
 
-def release_session_caches(spark, gc_rounds: int = 3, settle_sec: float = 1.0):
-    """Release every DataFrame cache entry and drain unreachable blocks.
-
-    Spark's CacheManager holds cached plans by STRONG reference, so a
-    library function that returns a lazy plan over a ``persist()``ed
-    index (minhash/simhash signatures, shingle inverted indexes) pins
-    those bytes for the LIFE OF THE SESSION once the consumer is done —
-    no GC ever frees them (r11 endurance finding: 98.8 MB surviving a
-    full GC drain at 10x; terabytes at 100 TB). Queries that materialize
-    their index during construction release it in-function (the CC
-    family); for the rest, a long-lived session calls THIS between
-    pipelines: clearCache drops the CacheManager pins, then alternating
-    Python/JVM GC passes let the ContextCleaner reap localCheckpoint and
-    RDD blocks whose owners are gone. Returns (n_rdds, bytes) still
-    persisted afterwards — anything nonzero is strongly held by LIVE
-    references (a real leak or a frame still in use)."""
-    import gc
-    import time as _time
-
-    spark.catalog.clearCache()
-    sc = spark.sparkContext
-    n, b = 0, 0
-    for _ in range(max(1, gc_rounds)):
-        gc.collect()
-        sc._jvm.System.gc()
-        _time.sleep(settle_sec)
-        infos = sc._jsc.sc().getRDDStorageInfo()
-        n, b = len(infos), sum(i.memSize() + i.diskSize() for i in infos)
-        if b == 0:
-            break
-    return n, b
-
-
 def fan_out(df: DataFrame, min_ratio: int = 1) -> DataFrame:
     """Spread a narrow scan across the cluster for compute-heavy operators.
 

@@ -30,6 +30,7 @@ from aircan_spark.ext import (
     text,
     vectors,
 )
+from aircan_spark.frames import scope, share
 
 
 def _t(spark, sf_dir, name):

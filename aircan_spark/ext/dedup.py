@@ -956,9 +956,6 @@ def connected_components_star(
         # edge set stops changing; count-equality then set-equality check
         n = ss.count()
         done = n == prev_count and ss.exceptAll(e).isEmpty()
-        # ss is materialized independently — drop the superseded round's
-        # DISK_ONLY blocks instead of accumulating one edge copy per round
-        e.unpersist()
         prev_count = n
         e = ss
         if done:

@@ -9,7 +9,6 @@ from __future__ import annotations
 
 from aircan_spark.ext._qcommon import *  # noqa: F401,F403
 from aircan_spark.ext._qcommon import EXT_ORACLES, EXT_QUERIES, _load, _t  # noqa: F401
-from aircan_spark.frames import scope
 
 
 # --- text analysis ------------------------------------------------------------

@@ -2258,19 +2258,16 @@ def ext_pareto_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     orders = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    from pyspark import StorageLevel as _SL
-
     # r13 (guide §5, the ext_gini shape): per_cust feeds the P90
     # threshold pass AND the tagged share pass — un-persisted, the
     # 3-table join + custkey aggregation ran twice. Data-proportional
-    # (one row per customer) -> DISK_ONLY; released by
-    # release_session_caches.
-    per_cust = (
+    # (one row per customer) -> DISK_ONLY.
+    per_cust = share(
         li.join(orders, li["l_orderkey"] == orders["o_orderkey"])
         .join(cust, orders["o_custkey"] == cust["c_custkey"])
         .groupBy("c_mktsegment", "c_custkey")
-        .agg(F.sum("rev").cast("decimal(38,6)").alias("crev"))
-        .persist(_SL.DISK_ONLY)
+        .agg(F.sum("rev").cast("decimal(38,6)").alias("crev")),
+        big=True,
     )
     thresholds = per_cust.groupBy("c_mktsegment").agg(
         F.round(F.percentile(F.col("crev").cast("double"), F.lit(0.9)), 4).alias("p90")

@@ -10,7 +10,7 @@ from __future__ import annotations
 from aircan_spark.ext._qcommon import *  # noqa: F401,F403
 from aircan_spark.ext._qcommon import EXT_ORACLES, EXT_QUERIES, _load, _t  # noqa: F401
 from aircan_spark.ext.queries_w02 import *  # noqa: F401,F403
-from aircan_spark.frames import result_scope, scope
+from aircan_spark.frames import result_scope
 
 
 # --- round-2 analytics wave: classic warehouse flavors (Q2/Q11/Q16/Q22) +
@@ -107,16 +107,15 @@ def ext_nation_value_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_supp = li.groupBy("l_suppkey").agg(
         F.sum("rev").cast("decimal(38,6)").alias("srev")
     )
-    per_nation = (
+    # r13 (guide §5): per_nation feeds the global-total scalar AND
+    # the share projection — un-persisted, the lineitem suppkey
+    # exchange ran twice. Bounded (O(nations) rows) -> default
+    # level.
+    per_nation = share(
         per_supp.join(F.broadcast(sup), per_supp["l_suppkey"] == sup["s_suppkey"])
         .join(F.broadcast(nat), sup["s_nationkey"] == nat["n_nationkey"])
         .groupBy("n_name")
         .agg(F.sum("srev").cast("decimal(38,6)").alias("value"))
-        # r13 (guide §5): per_nation feeds the global-total scalar AND
-        # the share projection — un-persisted, the lineitem suppkey
-        # exchange ran twice. Bounded (O(nations) rows) -> default
-        # level; released by release_session_caches.
-        .persist()
     )
     total = per_nation.agg(F.sum("value").cast("decimal(38,6)").alias("tot"))
     return (
@@ -371,13 +370,11 @@ def ext_chi_square(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 (guide §5, the cramers_v pattern): cells feeds the row/column/
     # grand margins AND the final contribution join — un-persisted, the
     # orders x customer join + contingency exchange ran 4x. Bounded
-    # (segments x priorities) -> default level; released by
-    # release_session_caches.
-    cells = (
+    # (segments x priorities) -> default level.
+    cells = share(
         orders.join(cust, orders["o_custkey"] == cust["c_custkey"])
         .groupBy("c_mktsegment", "o_orderpriority")
         .agg(F.count(F.lit(1)).alias("observed"))
-        .persist()
     )
     row_tot = cells.groupBy("c_mktsegment").agg(F.sum("observed").alias("rt"))
     col_tot = cells.groupBy("o_orderpriority").agg(F.sum("observed").alias("ct"))

@@ -649,13 +649,13 @@ def ext_entity_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12: `vals` feeds both sides of the blocked fuzzy join (executed
     # EAGERLY when CC checkpoints the edge list at construction) and the
     # label-expansion join — the distinct-name collapse re-ran per
-    # consumer. Data-proportional -> DISK_ONLY
-    # (release_session_caches drains).
-    from pyspark import StorageLevel as _SL
-
-    vals = named.groupBy("c_name").agg(
-        F.min("c_custkey").alias("vid"), F.count(F.lit(1)).alias("vn")
-    ).persist(_SL.DISK_ONLY)
+    # consumer. Data-proportional -> DISK_ONLY.
+    vals = share(
+        named.groupBy("c_name").agg(
+            F.min("c_custkey").alias("vid"), F.count(F.lit(1)).alias("vn")
+        ),
+        big=True,
+    )
     vpairs = entity.fuzzy_self_join(
         vals, "vid", "c_name", max_dist=1, tail=2
     ).select("id_a", "id_b")
@@ -906,15 +906,13 @@ def ext_abc_xyz(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregates — and exchanges — canonicalize differently and the
     # fact table was re-scanned per branch. DISK_ONLY persist (the
     # data-proportional discipline) computes the grid once.
-    from pyspark import StorageLevel as _SL
-
-    monthly = (
+    monthly = share(
         li.groupBy("l_partkey", "m")
         .agg(
             F.sum("iq").alias("mq"),
             F.sum("rev").cast("decimal(38,12)").alias("mrev"),
-        )
-        .persist(_SL.DISK_ONLY)
+        ),
+        big=True,
     )
     rev = monthly.groupBy("l_partkey").agg(
         F.sum("mrev").cast("decimal(38,12)").alias("revenue")
@@ -1579,11 +1577,7 @@ def ext_winnow_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the md5+conv fingerprint is the query's dominant per-row kernel).
     # DISK_ONLY persist (data-proportional inverted index — the
     # ngram_jaccard_pairs discipline).
-    from pyspark import StorageLevel as _SL
-
-    pr = docs.select(
-        "doc_id", F.explode(selected).alias("p")
-    ).persist(_SL.DISK_ONLY)
+    pr = share(docs.select("doc_id", F.explode(selected).alias("p")), big=True)
     freq = pr.groupBy("p").agg(F.count(F.lit(1)).alias("df")).filter(
         F.col("df") <= 64
     )
@@ -1646,10 +1640,10 @@ def ext_label_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 (guide §5): cent feeds the norm aggregate AND the per-vector
     # scoring join — un-persisted, the full-corpus centroid pass
     # (explode + decimal means) ran twice. Bounded (labels x dims) ->
-    # default level; released by release_session_caches.
-    cent = vectors.label_centroids(emb).select(
-        "label", "pos", "centroid_val"
-    ).persist()
+    # default level.
+    cent = share(
+        vectors.label_centroids(emb).select("label", "pos", "centroid_val")
+    )
     cnorm = cent.groupBy("label").agg(
         F.sum(F.col("centroid_val") * F.col("centroid_val")).alias("cn")
     )
@@ -1666,19 +1660,20 @@ def ext_label_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.col("v") * F.col("v")).alias("vn"),
         )
     )
-    from pyspark import StorageLevel as _SL
-
     # r13: scored feeds the per-label threshold percentile AND the final
     # flag join — un-persisted, the whole posexplode + centroid join +
     # regroup pipeline ran twice. Data-proportional (one row per vector)
-    # -> DISK_ONLY; released by release_session_caches.
-    scored = per_vec.join(F.broadcast(cnorm), "label").select(
-        "vec_id",
-        "label",
-        F.round(
-            F.col("dot") / F.sqrt(F.col("vn") * F.col("cn")), 6
-        ).alias("cos_to_centroid"),
-    ).persist(_SL.DISK_ONLY)
+    # -> DISK_ONLY.
+    scored = share(
+        per_vec.join(F.broadcast(cnorm), "label").select(
+            "vec_id",
+            "label",
+            F.round(
+                F.col("dot") / F.sqrt(F.col("vn") * F.col("cn")), 6
+            ).alias("cos_to_centroid"),
+        ),
+        big=True,
+    )
     thr = scored.groupBy("label").agg(
         F.expr("percentile(cos_to_centroid, 0.05)").alias("t05")
     )
@@ -2091,9 +2086,8 @@ def ext_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     # margins), and per-branch pruning specializes each copy past
     # ReuseExchange — un-persisted, the events scan + contingency
     # exchange re-ran up to 6x per execution (16 textual scans in the
-    # before plan). Bounded frame (n_types x 7 rows) -> default level;
-    # pin released by release_session_caches.
-    cells = ev.groupBy("event_type", "wd").agg(F.count(F.lit(1)).alias("c")).persist()
+    # before plan). Bounded frame (n_types x 7 rows) -> default level.
+    cells = share(ev.groupBy("event_type", "wd").agg(F.count(F.lit(1)).alias("c")))
     mx = cells.groupBy("event_type").agg(F.sum("c").alias("cx"))
     my = cells.groupBy("wd").agg(F.sum("c").alias("cy"))
     tot = cells.agg(F.sum("c").alias("n"))
@@ -2196,12 +2190,13 @@ def ext_survival_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 (guide §5): days feeds the broadcast total AND the risk walk —
     # un-persisted, the whole per_user collapse + horizon cross + day
     # aggregation re-ran for each (8 textual scans in the before plan).
-    # Bounded frame (O(distinct days) rows) -> default level; pin
-    # released by release_session_caches.
-    days = dur.groupBy("t").agg(
-        F.sum(F.when(F.col("event"), 1).otherwise(0)).alias("d"),
-        F.sum(F.when(~F.col("event"), 1).otherwise(0)).alias("cens"),
-    ).persist()
+    # Bounded frame (O(distinct days) rows) -> default level.
+    days = share(
+        dur.groupBy("t").agg(
+            F.sum(F.when(F.col("event"), 1).otherwise(0)).alias("d"),
+            F.sum(F.when(~F.col("event"), 1).otherwise(0)).alias("cens"),
+        )
+    )
     total = days.agg(F.sum(F.col("d") + F.col("cens")).alias("n_users"))
     w_prev = Window.orderBy("t").rowsBetween(
         Window.unboundedPreceding, -1

@@ -148,15 +148,16 @@ def ext_target_encoding(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").cast("decimal(18,2)").alias("tp"),
     )
     cust = _t(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")
-    from pyspark import StorageLevel as _SL
-
     # r13 (guide §5): base feeds the per-segment sums, the global-mean
     # scalar AND the final encode join — un-persisted, the orders x
     # customer broadcast join ran 3x. Data-proportional (one row per
-    # order) -> DISK_ONLY; released by release_session_caches.
-    base = orders.join(
-        F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"]
-    ).select("o_orderkey", "c_mktsegment", "tp").persist(_SL.DISK_ONLY)
+    # order) -> DISK_ONLY.
+    base = share(
+        orders.join(
+            F.broadcast(cust), orders["o_custkey"] == cust["c_custkey"]
+        ).select("o_orderkey", "c_mktsegment", "tp"),
+        big=True,
+    )
     seg = base.groupBy("c_mktsegment").agg(
         F.sum("tp").alias("seg_sum"), F.count(F.lit(1)).alias("seg_n")
     )
@@ -393,9 +394,7 @@ def ext_user_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # renames kept them from sharing a stage, so the events scan +
     # distinct ran per branch (12 parquet scans in the measured plan).
     # DISK_ONLY persist (linear in users x types, data-proportional).
-    from pyspark import StorageLevel as _SL
-
-    ui = ev.select("user_id", "event_type").distinct().persist(_SL.DISK_ONLY)
+    ui = share(ev.select("user_id", "event_type").distinct(), big=True)
     deg = ui.groupBy("user_id").agg(F.count(F.lit(1)).alias("deg"))
     w_anchor = Window.partitionBy("event_type").orderBy(
         F.md5(F.col("user_id").cast("string")), F.col("user_id")
@@ -823,11 +822,13 @@ def ext_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     to the pre-ceiling history. Norms broadcast; the head is
     k-bounded. Weights round to 6 BEFORE pairing so ranking can't
     straddle engine ulp."""
-    from pyspark import StorageLevel as _SL
-
     docs = _t(spark, sf_dir, "documents")
     n_docs = docs.agg(F.count(F.lit(1)).alias("nd"))
-    wts = (
+    # r13 (guide §5): wts feeds the norms pass AND both sides of the
+    # term-at-a-time pair join — un-persisted, the whole tokenize +
+    # tf + df-join TF-IDF pipeline ran 3x (32 textual scans in the
+    # before plan). Data-proportional (postings) -> DISK_ONLY.
+    wts = share(
         text.tf_idf(docs)
         .crossJoin(F.broadcast(n_docs))
         .filter(
@@ -836,13 +837,8 @@ def ext_tfidf_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(64), F.least(F.floor(F.col("nd") / 20), F.lit(1024))
             )
         )
-        .select("doc_id", "word", "tf_idf")
-        # r13 (guide §5): wts feeds the norms pass AND both sides of the
-        # term-at-a-time pair join — un-persisted, the whole tokenize +
-        # tf + df-join TF-IDF pipeline ran 3x (32 textual scans in the
-        # before plan). Data-proportional (postings) -> DISK_ONLY;
-        # released by release_session_caches.
-        .persist(_SL.DISK_ONLY)
+        .select("doc_id", "word", "tf_idf"),
+        big=True,
     )
     norms = wts.groupBy("doc_id").agg(
         F.sqrt(F.sum(F.col("tf_idf") * F.col("tf_idf"))).alias("nrm")

@@ -107,11 +107,12 @@ def ext_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = _t(spark, sf_dir, "orders")
     # r13 (guide §5): daily feeds the mean scalar, the denominator pass
     # and BOTH lag-join sides — un-persisted, the orders scan + day
-    # exchange ran 4x. Bounded (O(days) rows) -> default level;
-    # released by release_session_caches.
-    daily = orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("xc")
-    ).persist()
+    # exchange ran 4x. Bounded (O(days) rows) -> default level.
+    daily = share(
+        orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
+            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("xc")
+        )
+    )
     stats = daily.agg(
         F.count(F.lit(1)).alias("nd"),
         (F.sum("xc").cast("double") / F.count(F.lit(1))).alias("mu"),

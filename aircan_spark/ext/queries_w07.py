@@ -429,8 +429,6 @@ def ext_dup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     skew.blocked_self_pairs (partitions derived from sum(df^2),
     oversized shingles triangular-split). Then an O(bands) collapse;
     the cumulative runs on the 20-row band axis."""
-    from pyspark import StorageLevel as _SL
-
     from aircan_spark.skew import blocked_self_pairs
 
     docs = _t(spark, sf_dir, "documents")
@@ -438,14 +436,12 @@ def ext_dup_threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     # blocked_self_pairs runs an EAGER stats pass over it at
     # construction — un-persisted, the tokenize+explode+distinct
     # pipeline re-ran per consumer (the same fix as the collapsed
-    # sibling). Data-proportional -> DISK_ONLY
-    # (release_session_caches drains).
-    sh = dedup.shingles(docs, n=3).persist(_SL.DISK_ONLY)
+    # sibling). Data-proportional -> DISK_ONLY.
+    sh = share(dedup.shingles(docs, n=3), big=True)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     # r12 batch 4: whitelist + blocked sizing scalars from ONE persisted
     # df-counts pass (dedup.guarded_stats) — the eager stats pass no
-    # longer re-executes the guard join. Pin released with the session
-    # caches like the index itself.
+    # longer re-executes the guard join. Shared like the index itself.
     rare, stats = dedup.guarded_stats(sh, dedup.HOT_SHINGLE_MAX_DF)
     inter = (
         blocked_self_pairs(sh.join(rare, "shingle"), "shingle", "doc_id", stats=stats)
@@ -1435,10 +1431,12 @@ def ext_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 (guide §5): daily feeds the mean scalar, the denominator pass
     # and BOTH lag-join sides — un-persisted, the orders scan + day
     # exchange ran 4x (the ext_acf shape). Bounded (O(days) rows) ->
-    # default level; released by release_session_caches.
-    daily = orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("xc")
-    ).persist()
+    # default level.
+    daily = share(
+        orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
+            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("xc")
+        )
+    )
     stats = daily.agg(
         F.count(F.lit(1)).alias("nd"),
         (F.sum("xc").cast("double") / F.count(F.lit(1))).alias("mu"),
@@ -2258,44 +2256,40 @@ def ext_theil_sen(spark: SparkSession, sf_dir: str) -> DataFrame:
     cold / 3.2 s warm at sf0.1; the value is bit-identical to
     percentile()/quantile_cont on every path)."""
     orders = _t(spark, sf_dir, "orders")
-    daily = (
-        orders.groupBy(F.to_date("o_orderdate").alias("day"))
-        .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("x"))
-        # materialize the O(days) axis once: the selection below runs three
-        # jobs over the pair frame, and without materialization each
-        # re-scans the fact table. persist (not checkpoint): this query's
-        # RESULT is a literal frame built from the eagerly computed median,
-        # so both intermediates can be explicitly RELEASED before returning
-        # — the r10 endurance smoke found the checkpointed slope frame
-        # (~220 MB at 10x) outliving the query for the whole session
-        .persist()
-    )
-    a = daily.select(F.col("day").alias("d1"), F.col("x").alias("x1"))
-    b = daily.select(F.col("day").alias("d2"), F.col("x").alias("x2"))
-    # try_divide: the histogram-filter predicate below gets pushed into the
-    # join and may be evaluated BEFORE the d1<d2 conjunct; on a same-day
-    # pair datediff is 0 and Spark-4 ANSI throws even for double division.
-    # try_divide yields NULL there, and those pairs are excluded by the
-    # join condition anyway — values on surviving pairs are identical.
-    slopes = a.join(b, F.col("d1") < F.col("d2")).select(
-        F.try_divide(
-            (F.col("x2") - F.col("x1")).cast("double"),
-            F.datediff("d2", "d1").cast("double"),
-        ).alias("s")
-    )
-    # materialize the O(days^2) slope frame ONCE (a few MB of doubles):
-    # the selection below runs three jobs (bounds, histogram, bucket
-    # collect) and without materialization each re-executes the pair
-    # nested-loop join — measured 13.9s -> ~7s cold at sf0.1
-    slopes = slopes.persist()
-    try:
+    # persist (not checkpoint): this query's RESULT is a literal frame
+    # built from the eagerly computed median, so the scope releases both
+    # intermediates before returning — the r10 endurance smoke found the
+    # checkpointed slope frame (~220 MB at 10x) outliving the query for
+    # the whole session
+    with scope():
+        # materialize the O(days) axis once: the selection below runs
+        # three jobs over the pair frame, and without materialization
+        # each re-scans the fact table
+        daily = share(
+            orders.groupBy(F.to_date("o_orderdate").alias("day"))
+            .agg(F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("x"))
+        )
+        a = daily.select(F.col("day").alias("d1"), F.col("x").alias("x1"))
+        b = daily.select(F.col("day").alias("d2"), F.col("x").alias("x2"))
+        # try_divide: the histogram-filter predicate below gets pushed into
+        # the join and may be evaluated BEFORE the d1<d2 conjunct; on a
+        # same-day pair datediff is 0 and Spark-4 ANSI throws even for
+        # double division. try_divide yields NULL there, and those pairs
+        # are excluded by the join condition anyway — values on surviving
+        # pairs are identical.
+        slopes = a.join(b, F.col("d1") < F.col("d2")).select(
+            F.try_divide(
+                (F.col("x2") - F.col("x1")).cast("double"),
+                F.datediff("d2", "d1").cast("double"),
+            ).alias("s")
+        )
+        # materialize the O(days^2) slope frame ONCE (a few MB of
+        # doubles): the selection below runs three jobs (bounds,
+        # histogram, bucket collect) and without materialization each
+        # re-executes the pair nested-loop join — measured 13.9s -> ~7s
+        # cold at sf0.1
+        slopes = share(slopes)
         n, med = _theil_sen_median(slopes)
-    finally:
-        # the median is a driver-side scalar now — nothing downstream
-        # reads these frames; leaving them persisted leaked ~220 MB into
-        # every later query of the session (endurance smoke, r10)
-        slopes.unpersist()
-        daily.unpersist()
     out = spark.createDataFrame(
         [(n, med)], "n_pairs long, med double"
     )
@@ -2338,11 +2332,12 @@ def ext_hist2d(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r13 (guide §5): cells feeds the broadcast total AND the share
     # projection — un-persisted, the lineitem binning pass ran twice per
-    # execution. Bounded frame (bands x cent-levels) -> default level;
-    # pin released by release_session_caches.
-    cells = li.groupBy("q_band", "disc_pct").agg(
-        F.count(F.lit(1)).alias("n_lines"), F.sum("ec").alias("rev_c")
-    ).persist()
+    # execution. Bounded frame (bands x cent-levels) -> default level.
+    cells = share(
+        li.groupBy("q_band", "disc_pct").agg(
+            F.count(F.lit(1)).alias("n_lines"), F.sum("ec").alias("rev_c")
+        )
+    )
     tot = cells.agg(F.sum("rev_c").alias("t"))
     return (
         cells.crossJoin(F.broadcast(tot))

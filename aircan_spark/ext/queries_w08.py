@@ -25,18 +25,15 @@ def ext_exposure_fairness(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: ranking over the retrieval-bounded candidate set
     (X251's bound); exposure and pool shares are two O(sources)
     collapses against broadcast totals."""
-    from pyspark import StorageLevel as _SL
-
     docs = _t(spark, sf_dir, "documents")
     # r13 (guide §5): cand feeds the exposure ranking AND the pool
     # counts — un-persisted, the whole BM25 scoring pipeline ran twice.
-    # Data-proportional (candidate set) -> DISK_ONLY; released by
-    # release_session_caches.
-    cand = (
+    # Data-proportional (candidate set) -> DISK_ONLY.
+    cand = share(
         text.bm25_scores(docs, BM25_QUERY_TERMS)
         .select("doc_id", "score")
-        .join(docs.select("doc_id", "source"), "doc_id")
-        .persist(_SL.DISK_ONLY)
+        .join(docs.select("doc_id", "source"), "doc_id"),
+        big=True,
     )
     wr = Window.orderBy(F.col("score").desc(), F.col("doc_id"))
     ranked = cand.withColumn("rank", F.row_number().over(wr))
@@ -290,54 +287,56 @@ def ext_gmm_em(spark: SparkSession, sf_dir: str) -> DataFrame:
     move driver-side as scalars (the accepted scalar-collect class)."""
     import math as _math
 
-    from pyspark import StorageLevel as _SL
-
     orders = _t(spark, sf_dir, "orders")
     # r13 (guide §5): the six sequential aggregate passes (init + 5 EM
     # steps) each re-scanned orders parquet and re-evaluated the cent
     # projection. The 1-column frame is persisted DISK_ONLY (data-
     # proportional: one double per order) so pass 1 materializes it and
     # passes 2-6 read the cached column — 6 parquet scans -> 1. All six
-    # consumers are eager collects inside this fn(), so the pin is
-    # released before returning (the output frame is built from scalars).
-    xs = orders.select(
-        (F.round(F.col("o_totalprice") * 100).cast("long") / 100.0).alias("x")
-    ).persist(_SL.DISK_ONLY)
-    init = xs.agg(
-        F.expr("percentile(x, 0.25)").alias("mu1"),
-        F.expr("percentile(x, 0.75)").alias("mu2"),
-        F.stddev_pop("x").alias("sd"),
-    ).collect()[0]
-    pi1, mu1, sd1 = 0.5, float(init["mu1"]), float(init["sd"])
-    pi2, mu2, sd2 = 0.5, float(init["mu2"]), float(init["sd"])
-    c = float(_math.sqrt(2.0 * _math.pi))
-    for _ in range(5):
-        d1 = (F.lit(pi1) / (c * sd1)) * F.exp(
-            -((F.col("x") - mu1) * (F.col("x") - mu1)) / (2.0 * sd1 * sd1)
+    # consumers are eager collects inside this fn(), so the scope
+    # releases the pin before returning, an EM step's error included
+    # (the output frame is built from scalars).
+    with scope():
+        xs = share(
+            orders.select(
+                (F.round(F.col("o_totalprice") * 100).cast("long") / 100.0).alias("x")
+            ),
+            big=True,
         )
-        d2 = (F.lit(pi2) / (c * sd2)) * F.exp(
-            -((F.col("x") - mu2) * (F.col("x") - mu2)) / (2.0 * sd2 * sd2)
-        )
-        r2 = d2 / (d1 + d2)
-        step = xs.agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(r2).alias("w2"),
-            F.sum(r2 * F.col("x")).alias("s2"),
-            F.sum(r2 * F.col("x") * F.col("x")).alias("q2"),
-            F.sum((1.0 - r2) * F.col("x")).alias("s1"),
-            F.sum((1.0 - r2) * F.col("x") * F.col("x")).alias("q1"),
-            F.sum(F.log(d1 + d2)).alias("ll"),
+        init = xs.agg(
+            F.expr("percentile(x, 0.25)").alias("mu1"),
+            F.expr("percentile(x, 0.75)").alias("mu2"),
+            F.stddev_pop("x").alias("sd"),
         ).collect()[0]
-        n = float(step["n"])
-        w2 = float(step["w2"])
-        w1 = n - w2
-        mu1 = float(step["s1"]) / w1
-        mu2 = float(step["s2"]) / w2
-        sd1 = _math.sqrt(max(float(step["q1"]) / w1 - mu1 * mu1, 1e-6))
-        sd2 = _math.sqrt(max(float(step["q2"]) / w2 - mu2 * mu2, 1e-6))
-        pi1, pi2 = w1 / n, w2 / n
-        avg_ll = float(step["ll"]) / n
-    xs.unpersist(blocking=False)  # all consumers collected above
+        pi1, mu1, sd1 = 0.5, float(init["mu1"]), float(init["sd"])
+        pi2, mu2, sd2 = 0.5, float(init["mu2"]), float(init["sd"])
+        c = float(_math.sqrt(2.0 * _math.pi))
+        for _ in range(5):
+            d1 = (F.lit(pi1) / (c * sd1)) * F.exp(
+                -((F.col("x") - mu1) * (F.col("x") - mu1)) / (2.0 * sd1 * sd1)
+            )
+            d2 = (F.lit(pi2) / (c * sd2)) * F.exp(
+                -((F.col("x") - mu2) * (F.col("x") - mu2)) / (2.0 * sd2 * sd2)
+            )
+            r2 = d2 / (d1 + d2)
+            step = xs.agg(
+                F.count(F.lit(1)).alias("n"),
+                F.sum(r2).alias("w2"),
+                F.sum(r2 * F.col("x")).alias("s2"),
+                F.sum(r2 * F.col("x") * F.col("x")).alias("q2"),
+                F.sum((1.0 - r2) * F.col("x")).alias("s1"),
+                F.sum((1.0 - r2) * F.col("x") * F.col("x")).alias("q1"),
+                F.sum(F.log(d1 + d2)).alias("ll"),
+            ).collect()[0]
+            n = float(step["n"])
+            w2 = float(step["w2"])
+            w1 = n - w2
+            mu1 = float(step["s1"]) / w1
+            mu2 = float(step["s2"]) / w2
+            sd1 = _math.sqrt(max(float(step["q1"]) / w1 - mu1 * mu1, 1e-6))
+            sd2 = _math.sqrt(max(float(step["q2"]) / w2 - mu2 * mu2, 1e-6))
+            pi1, pi2 = w1 / n, w2 / n
+            avg_ll = float(step["ll"]) / n
     out = spark.createDataFrame(
         [(int(n), pi1, mu1, sd1, mu2, sd2, avg_ll)],
         "n_orders long, pi1 double, mu1 double, sd1 double, "
@@ -771,8 +770,6 @@ def ext_levene(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per-group exact medians broadcast back, one moment
     pass over the row-local absolute deviations, O(groups) F
     arithmetic."""
-    from pyspark import StorageLevel as _SL
-
     orders = _t(spark, sf_dir, "orders")
     cust = _t(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("o_custkey"), "c_mktsegment"
@@ -780,11 +777,14 @@ def ext_levene(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 (guide §5): x feeds the per-group medians AND the deviation
     # join — un-persisted, the orders x customer join ran twice (and the
     # g moments a third time below). Data-proportional (one row per
-    # order) -> DISK_ONLY; released by release_session_caches.
-    x = orders.join(cust, "o_custkey").select(
-        "c_mktsegment",
-        (F.round(F.col("o_totalprice") * 100).cast("long") / 100.0).alias("x"),
-    ).persist(_SL.DISK_ONLY)
+    # order) -> DISK_ONLY.
+    x = share(
+        orders.join(cust, "o_custkey").select(
+            "c_mktsegment",
+            (F.round(F.col("o_totalprice") * 100).cast("long") / 100.0).alias("x"),
+        ),
+        big=True,
+    )
     med = x.groupBy("c_mktsegment").agg(
         F.expr("percentile(x, 0.5)").alias("md")
     )
@@ -793,11 +793,13 @@ def ext_levene(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r13: g feeds the totals scalar AND the F-statistic pass — bounded
     # (O(segments) rows) -> default level.
-    g = z.groupBy("c_mktsegment").agg(
-        F.count(F.lit(1)).alias("ng"),
-        F.sum("z").alias("sz"),
-        F.sum(F.col("z") * F.col("z")).alias("szz"),
-    ).persist()
+    g = share(
+        z.groupBy("c_mktsegment").agg(
+            F.count(F.lit(1)).alias("ng"),
+            F.sum("z").alias("sz"),
+            F.sum(F.col("z") * F.col("z")).alias("szz"),
+        )
+    )
     tot = g.agg(
         F.sum("ng").alias("n"),
         F.count(F.lit(1)).alias("k"),

@@ -766,12 +766,13 @@ def ext_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     # expansion; un-materialized, the join+distinct+collect_set pipeline
     # ran twice. DISK_ONLY persist (per-part customer arrays are
     # data-proportional).
-    from pyspark import StorageLevel as _SL
-
-    degs = cp.groupBy("part").agg(
-        F.sort_array(F.collect_set("cust")).alias("custs"),
-        F.countDistinct("cust").alias("deg"),
-    ).filter(F.col("deg") >= 2).persist(_SL.DISK_ONLY)
+    degs = share(
+        cp.groupBy("part").agg(
+            F.sort_array(F.collect_set("cust")).alias("custs"),
+            F.countDistinct("cust").alias("deg"),
+        ).filter(F.col("deg") >= 2),
+        big=True,
+    )
     lo = degs.agg(F.min("deg").alias("min_deg"))
     parts = degs.crossJoin(F.broadcast(lo)).filter(
         F.col("deg") <= F.col("min_deg") + 4

@@ -133,10 +133,9 @@ def _cramers_pair(df: DataFrame, a: str, b: str, label: str) -> DataFrame:
     # pairs in the measured plan). A lazy persist of the bounded cell
     # frame computes the contingency ONCE per pair; the margins are
     # sub-millisecond re-aggregates of the cached cells.
-    cells = (
+    cells = share(
         df.groupBy(F.col(a).alias("ka"), F.col(b).alias("kb"))
         .agg(F.count(F.lit(1)).alias("o"))
-        .persist()
     )
     rt = cells.groupBy("ka").agg(F.sum("o").alias("rt"))
     ct = cells.groupBy("kb").agg(F.sum("o").alias("ct"))

@@ -192,15 +192,13 @@ def ext_seat_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     nation = _t(spark, sf_dir, "nation").select(
         F.col("n_nationkey").alias("c_nationkey"), "n_name"
     )
-    rev = (
+    # r13 (guide §5): rev feeds the total scalar, the deficit pass
+    # and the ranked pass — un-persisted, the orders join + nation
+    # exchange ran 3x. Bounded (O(nations) rows) -> default level.
+    rev = share(
         orders.join(F.broadcast(cust), "o_custkey")
         .groupBy("c_nationkey")
         .agg(F.sum("cents").alias("rev"))
-        # r13 (guide §5): rev feeds the total scalar, the deficit pass
-        # and the ranked pass — un-persisted, the orders join + nation
-        # exchange ran 3x. Bounded (O(nations) rows) -> default level;
-        # released by release_session_caches.
-        .persist()
     )
     tot = rev.agg(F.sum("rev").alias("tot"))
     base = (
@@ -374,8 +372,6 @@ def ext_zone_map_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("CAST(o_orderkey DIV 256 AS BIGINT)").alias("zone"),
         "o_orderdate",
     )
-    from pyspark import StorageLevel as _SL
-
     # r13 (guide §5): the zone stats fed four per-quarter conditional
     # re-aggregations (orders scan + zone exchange x4) and the exact
     # match counts scanned orders four MORE times. zones persists
@@ -383,29 +379,34 @@ def ext_zone_map_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per-quarter match counts fold into ONE conditional pass whose
     # per-quarter sums are selected per output row — identical integer
     # sums, one orders scan instead of four.
-    zones = orders.groupBy("zone").agg(
-        F.min("o_orderdate").alias("zmin"),
-        F.max("o_orderdate").alias("zmax"),
-        F.count(F.lit(1)).alias("zrows"),
-    ).persist(_SL.DISK_ONLY)
+    zones = share(
+        orders.groupBy("zone").agg(
+            F.min("o_orderdate").alias("zmin"),
+            F.max("o_orderdate").alias("zmax"),
+            F.count(F.lit(1)).alias("zrows"),
+        ),
+        big=True,
+    )
     quarters = [
         ("1996Q1", "1996-01-01", "1996-03-31"),
         ("1996Q2", "1996-04-01", "1996-06-30"),
         ("1996Q3", "1996-07-01", "1996-09-30"),
         ("1996Q4", "1996-10-01", "1996-12-31"),
     ]
-    match_all = orders.agg(
-        *[
-            F.sum(
-                F.expr(
-                    f"CASE WHEN o_orderdate >= DATE'{lo}'"
-                    f" AND o_orderdate <= DATE'{hi}' THEN 1 ELSE 0 END"
-                )
-            ).alias(f"m_{label}")
-            for label, lo, hi in quarters
-        ],
-        F.count(F.lit(1)).alias("rows_total"),
-    ).persist()
+    match_all = share(
+        orders.agg(
+            *[
+                F.sum(
+                    F.expr(
+                        f"CASE WHEN o_orderdate >= DATE'{lo}'"
+                        f" AND o_orderdate <= DATE'{hi}' THEN 1 ELSE 0 END"
+                    )
+                ).alias(f"m_{label}")
+                for label, lo, hi in quarters
+            ],
+            F.count(F.lit(1)).alias("rows_total"),
+        )
+    )
     outs = []
     for label, lo, hi in quarters:
         zagg = zones.agg(

@@ -45,12 +45,14 @@ def ext_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13 (guide §5): cent feeds the member-scatter join and BOTH sides
     # of the centroid-distance pair join — un-persisted, the full-corpus
     # explode + centroid exchange ran 3x. Bounded (labels x dims) ->
-    # default level; released by release_session_caches.
-    cent = q.groupBy("label", "pos").agg(
-        F.sum("vq").alias("s"), F.count(F.lit(1)).alias("n")
-    ).select(
-        "label", "pos", F.expr("CAST(s AS DOUBLE)/n/1e6").alias("c"), "n"
-    ).persist()
+    # default level.
+    cent = share(
+        q.groupBy("label", "pos").agg(
+            F.sum("vq").alias("s"), F.count(F.lit(1)).alias("n")
+        ).select(
+            "label", "pos", F.expr("CAST(s AS DOUBLE)/n/1e6").alias("c"), "n"
+        )
+    )
     member_terms = q.join(cent.select("label", "pos", "c"), ["label", "pos"]).select(
         "vec_id",
         "label",
@@ -66,10 +68,12 @@ def ext_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13: scatter feeds both ratio-join sides — un-persisted, the whole
     # member-distance chain (explode join + two regroups) ran twice.
     # Bounded (O(labels) rows) -> default level.
-    scatter = dists.groupBy("label").agg(
-        F.expr("CAST(SUM(dq) AS DOUBLE)/COUNT(*)/1e6").alias("s_i"),
-        F.count(F.lit(1)).alias("n_members"),
-    ).persist()
+    scatter = share(
+        dists.groupBy("label").agg(
+            F.expr("CAST(SUM(dq) AS DOUBLE)/COUNT(*)/1e6").alias("s_i"),
+            F.count(F.lit(1)).alias("n_members"),
+        )
+    )
     ca = cent.select(F.col("label").alias("la"), "pos", F.col("c").alias("c_a"))
     cb = cent.select(F.col("label").alias("lb"), "pos", F.col("c").alias("c_b"))
     cdist = (

@@ -38,7 +38,12 @@ def ext_forecast_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: fact-to-(nation, month) rollup, a broadcast spine
     fill, trend fits from exact moments on the O(nations x months)
     axis, O(regions) output."""
-    mo_raw = (
+    # r13 (guide §5): mo_raw feeds the spine distinct, the nations
+    # distinct AND the zero-fill left join — un-persisted, the
+    # 3-table join + rollup ran 3x (the before plan carried 60
+    # parquet scans / 150 Exchanges). Bounded (nations x months) ->
+    # default level.
+    mo_raw = share(
         _t(spark, sf_dir, "orders")
         .join(
             _t(spark, sf_dir, "customer").select(
@@ -67,16 +72,13 @@ def ext_forecast_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
                 " AS BIGINT)"
             ).alias("y")
         )
-        # r13 (guide §5): mo_raw feeds the spine distinct, the nations
-        # distinct AND the zero-fill left join — un-persisted, the
-        # 3-table join + rollup ran 3x (the before plan carried 60
-        # parquet scans / 150 Exchanges). Bounded (nations x months) ->
-        # default level; released by release_session_caches.
-        .persist()
     )
     spine = mo_raw.select("mo").distinct()
     nations = mo_raw.select("n_regionkey", "c_nationkey").distinct()
-    mo = (
+    # r13: the zero-filled grid feeds the horizon scalar and BOTH
+    # trend fits (nation-level + region-direct) — same bounded size
+    # as mo_raw, same persist rationale.
+    mo = share(
         nations.crossJoin(F.broadcast(spine))
         .join(mo_raw, ["n_regionkey", "c_nationkey", "mo"], "left")
         .select(
@@ -85,10 +87,6 @@ def ext_forecast_reconciliation(spark: SparkSession, sf_dir: str) -> DataFrame:
             "mo",
             F.expr("COALESCE(y, 0L)").alias("y"),
         )
-        # r13: the zero-filled grid feeds the horizon scalar and BOTH
-        # trend fits (nation-level + region-direct) — same bounded size
-        # as mo_raw, same persist rationale.
-        .persist()
     )
     horizon = mo.agg(F.max("mo").alias("mmax"))
 

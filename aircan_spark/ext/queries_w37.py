@@ -55,16 +55,16 @@ def ext_segment_price_premium(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("uc"),
         )
     )
-    from pyspark import StorageLevel as _SL
-
     # r13 (guide §5): cells feeds both pairing sides and (below) the
     # global sums — un-persisted, the 3-table join + (part, auto)
     # aggregation ran 3x (cells twice + a separate glob pass over li).
-    # Data-proportional (O(parts) rows) -> DISK_ONLY; released by
-    # release_session_caches.
-    cells = li.groupBy("l_partkey", "auto").agg(
-        F.count(F.lit(1)).alias("n"), F.sum("uc").alias("s")
-    ).persist(_SL.DISK_ONLY)
+    # Data-proportional (O(parts) rows) -> DISK_ONLY.
+    cells = share(
+        li.groupBy("l_partkey", "auto").agg(
+            F.count(F.lit(1)).alias("n"), F.sum("uc").alias("s")
+        ),
+        big=True,
+    )
     a = cells.filter("auto = 1").select(
         "l_partkey", F.col("n").alias("na"), F.col("s").alias("sa")
     )
@@ -180,10 +180,9 @@ def ext_topk_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     # consecutive-week join + sizes); un-materialized, the events JSON
     # rollup + window ran per branch. Bounded frame (10 rows/week) —
     # lazy persist at the default level.
-    top = (
+    top = share(
         wi.withColumn("rk", F.row_number().over(ww))
         .filter("rk <= 10")
-        .persist()
     )
     a = top.select("wk", "item")
     b = top.select((F.col("wk") - 1).alias("wk"), F.col("item").alias("item_b"))
@@ -279,11 +278,13 @@ def ext_encoding_advisor(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r12: the single-row stats frame feeds the four per-column union
     # branches; un-materialized, the full window + aggregate pass over
     # lineitem ran once PER BRANCH. One-row frame — lazy persist.
-    runs = li.agg(
-        F.count(F.lit(1)).alias("n"),
-        *[F.sum(f"chg_{c}").alias(f"runs_{c}") for c in cols],
-        *[F.countDistinct(c).alias(f"nd_{c}") for c in cols],
-    ).persist()
+    runs = share(
+        li.agg(
+            F.count(F.lit(1)).alias("n"),
+            *[F.sum(f"chg_{c}").alias(f"runs_{c}") for c in cols],
+            *[F.countDistinct(c).alias(f"nd_{c}") for c in cols],
+        )
+    )
     rows = None
     for c in cols:
         r = runs.select(

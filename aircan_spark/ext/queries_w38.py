@@ -118,22 +118,19 @@ def ext_events_to_convert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("user_id")
         .agg(F.min(F.struct("us", "event_id")).alias("fp"))
     )
-    from pyspark import StorageLevel as _SL
-
     # r13 (guide §5): k feeds the length-axis histogram (-> both
     # quantile filters) AND the mean/instant base aggregate —
     # un-persisted, the events x first-purchase join + per-user count
-    # ran 3x. Data-proportional (one row per converter) -> DISK_ONLY;
-    # released by release_session_caches.
-    k = (
+    # ran 3x. Data-proportional (one row per converter) -> DISK_ONLY.
+    k = share(
         ev.join(firstp, "user_id")
         .groupBy("user_id")
         .agg(
             F.sum(
                 F.expr("CAST(STRUCT(us, event_id) < fp AS LONG)")
             ).alias("k")
-        )
-        .persist(_SL.DISK_ONLY)
+        ),
+        big=True,
     )
     ks = k.groupBy("k").agg(F.count(F.lit(1)).alias("cnt"))
     wv = Window.orderBy("k").rowsBetween(Window.unboundedPreceding, 0)

@@ -218,8 +218,6 @@ def ext_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     the max-subtree recompute grows with every round (4-6.7s warm
     standalone before; ~3.0s after, the residual being the events-scan
     JSON extraction and 14 small-job scheduling)."""
-    from pyspark import StorageLevel
-
     from aircan_spark.data import checkpoint
 
     edges = (
@@ -235,8 +233,9 @@ def ext_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
         # persisted partitioning (InMemoryRelation preserves it), so
         # each round's only shuffle is the O(items) authority regroup
         .repartition("user_id")
-    ).persist(StorageLevel.DISK_ONLY)
-    try:
+    )
+    with scope():
+        edges = share(edges, big=True)
         # a0 = 1e6 for every item
         a = edges.select("item").distinct().withColumn(
             "a", F.lit(1000000).cast("long")
@@ -284,8 +283,6 @@ def ext_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
             .orderBy(F.col("authority").desc(), "item")
             .limit(10)
         )
-    finally:
-        edges.unpersist()
 
 
 EXT_HITS_SQL = r"""

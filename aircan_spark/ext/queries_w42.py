@@ -35,17 +35,16 @@ def ext_poisson_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: one per-user count pass, then 5 EM rounds of O(60)
     arithmetic on the histogram axis."""
-    hist = (
+    # r13 (guide §5): hist feeds the init scalars AND all five EM
+    # cross-joins — un-persisted, the per-user count pass over
+    # events ran 6x per execution. Bounded (O(distinct k) rows) ->
+    # default level.
+    hist = share(
         _t(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(F.sum(F.expr("CAST(event_type = 'purchase' AS LONG)")).alias("k"))
         .groupBy("k")
         .agg(F.count(F.lit(1)).alias("c"))
-        # r13 (guide §5): hist feeds the init scalars AND all five EM
-        # cross-joins — un-persisted, the per-user count pass over
-        # events ran 6x per execution. Bounded (O(distinct k) rows) ->
-        # default level; released by release_session_caches.
-        .persist()
     )
     init = hist.agg(
         F.expr(

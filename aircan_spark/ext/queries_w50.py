@@ -50,8 +50,6 @@ def ext_dedup_simhash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair form, with O(n) + O(|values|^2) work instead of O(pairs).
     Weights ride DECIMAL (counts are ~n/|values|; ca*cb sums cross 2^63
     near sf~3000 in int64 — the image_near_dup audit)."""
-    from pyspark import StorageLevel as _SL
-
     docs = _t(spark, sf_dir, "documents")
     # r12: `vals` feeds THREE branches (both band-join sides + the
     # within term) — un-persisted, the whole collapse+signature pipeline
@@ -59,14 +57,12 @@ def ext_dedup_simhash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     # is cheap; `g` itself is deliberately NOT persisted — full-text
     # rows at DISK_ONLY cost more to serialize+re-read than recomputing
     # the map-side-combined collapse from columnar parquet (measured
-    # A/B). Pin released by data.release_session_caches.
+    # A/B).
     g = dedup.content_collapse(docs)
     sigs = dedup.simhash_signatures(g).join(
         g.select("doc_id", "n_copies"), "doc_id"
     )
-    vals = sigs.groupBy("simhash").agg(F.sum("n_copies").alias("c")).persist(
-        _SL.DISK_ONLY
-    )
+    vals = share(sigs.groupBy("simhash").agg(F.sum("n_copies").alias("c")), big=True)
     width, bands = 16, 4
     banded = vals.select(
         "simhash",
@@ -126,19 +122,16 @@ def ext_dedup_minhash_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     64, each exactly representable), so the output is bounded no matter
     the corpus. Identical integers to GROUP BY est_jaccard over the pair
     form at any multiplicity."""
-    from pyspark import StorageLevel as _SL
-
     docs = _t(spark, sf_dir, "documents")
     # r12: the narrow (doc_id, n_copies) projection feeds both
     # count-attach joins + the within term — persist IT (cheap rows),
     # not full-text `g` (full-text DISK_ONLY rows cost more to
     # serialize+re-read than recomputing the map-side-combined collapse
     # from parquet — measured A/B). The signature build inside
-    # minhash_pairs persists its own index. Pin released by
-    # data.release_session_caches.
+    # minhash_pairs persists its own index.
     g = dedup.content_collapse(docs)
     pairs = dedup.minhash_pairs(g, threshold=0.3)
-    counts = g.select("doc_id", "n_copies").persist(_SL.DISK_ONLY)
+    counts = share(g.select("doc_id", "n_copies"), big=True)
     cross = (
         pairs.join(counts.withColumnRenamed("doc_id", "id_a").withColumnRenamed("n_copies", "ca"), "id_a")
         .join(counts.withColumnRenamed("doc_id", "id_b").withColumnRenamed("n_copies", "cb"), "id_b")
@@ -290,8 +283,6 @@ def ext_fuzzy_join_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     every sweep proves the collapse equivalent."""
     from aircan_spark.ext import entity
 
-    from pyspark import StorageLevel as _SL
-
     cust = (
         _t(spark, sf_dir, "customer")
         .select("c_custkey", "c_name")
@@ -299,11 +290,13 @@ def ext_fuzzy_join_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # r12: `names` feeds both sides of the blocked levenshtein self-join,
     # both count-attach joins and the within term — the distinct-name
-    # collapse re-ran per consumer. Data-proportional -> DISK_ONLY
-    # (release_session_caches drains).
-    names = cust.groupBy("c_name").agg(
-        F.min("c_custkey").alias("name_id"), F.count(F.lit(1)).alias("c")
-    ).persist(_SL.DISK_ONLY)
+    # collapse re-ran per consumer. Data-proportional -> DISK_ONLY.
+    names = share(
+        cust.groupBy("c_name").agg(
+            F.min("c_custkey").alias("name_id"), F.count(F.lit(1)).alias("c")
+        ),
+        big=True,
+    )
     pairs = entity.fuzzy_self_join(names, "name_id", "c_name", max_dist=1, tail=2)
     counts = names.select("name_id", "c")
     cross = (
@@ -359,16 +352,13 @@ def ext_dedup_embedding_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     self-cosine rounds to 1.0 at 6 digits). Rows-only contract (the
     hyperplane buckets are not SQL-expressible — same as the pair form);
     tests pin groups == GROUP BY cosine over the pair output."""
-    from pyspark import StorageLevel as _SL
-
     emb = _t(spark, sf_dir, "embeddings")
     # r12: the narrow (vec_id, c) projection feeds both count-attach
     # joins + the within term — persist IT. Persisting full `g`
     # (vector arrays at DISK_ONLY) was measured SLOWER than recomputing
     # the collapse from parquet (serialized-row re-reads beat columnar
     # decode nowhere); the pair kernel's own wide consumers stay on the
-    # recompute path by design. Pin released by
-    # data.release_session_caches.
+    # recompute path by design.
     g = emb.groupBy("embedding").agg(
         F.min("vec_id").alias("vec_id"), F.count(F.lit(1)).alias("c")
     )
@@ -376,7 +366,7 @@ def ext_dedup_embedding_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = dedup.embedding_pairs(
         g, threshold=0.4, lsh_bits=6, num_tables=24, n_vecs=n_instances
     )
-    counts = g.select("vec_id", "c").persist(_SL.DISK_ONLY)
+    counts = share(g.select("vec_id", "c"), big=True)
     cross = (
         pairs.join(
             counts.withColumnRenamed("vec_id", "id_a").withColumnRenamed("c", "ca"),
@@ -414,8 +404,6 @@ def ext_dup_threshold_curve_collapsed(spark: SparkSession, sf_dir: str) -> DataF
     the pair form's join semantics (a NULL-text doc never pairs).
     Cumulative counts ride the 21-row band axis. Fully oracled: the
     DuckDB mirror performs the identical collapse + weighted curve."""
-    from pyspark import StorageLevel
-
     from aircan_spark.skew import blocked_self_pairs
 
     docs = _t(spark, sf_dir, "documents")
@@ -430,18 +418,12 @@ def ext_dup_threshold_curve_collapsed(spark: SparkSession, sf_dir: str) -> DataF
     # (sizes / rare / pair join). Un-persisted, the stats action
     # recomputed the whole collapse+shingle+distinct pipeline once per
     # build on top of the main run. Same contract as the pair family's
-    # inverted indexes (data-proportional -> DISK_ONLY, CacheManager pin
-    # released by release_session_caches).
-    sh = (
-        dedup.shingles(g)
-        .filter(F.col("shingle").isNotNull())
-        .persist(StorageLevel.DISK_ONLY)
-    )
+    # inverted indexes (data-proportional -> DISK_ONLY).
+    sh = share(dedup.shingles(g).filter(F.col("shingle").isNotNull()), big=True)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
     # r12 batch 4: whitelist + blocked sizing scalars from ONE persisted
     # df-counts pass (dedup.guarded_stats) — the eager stats pass no
-    # longer re-executes the guard join. Pin released with the session
-    # caches like the index itself.
+    # longer re-executes the guard join. Shared like the index itself.
     rare, stats = dedup.guarded_stats(sh, dedup.HOT_SHINGLE_MAX_DF)
     inter = (
         blocked_self_pairs(sh.join(rare, "shingle"), "shingle", "doc_id", stats=stats)
@@ -450,7 +432,7 @@ def ext_dup_threshold_curve_collapsed(spark: SparkSession, sf_dir: str) -> DataF
     )
     # narrow (doc_id, n_copies) rows feed BOTH count-attach joins — one
     # collapse run materialized cheaply instead of two recomputes.
-    counts = g.select("doc_id", "n_copies").persist(StorageLevel.DISK_ONLY)
+    counts = share(g.select("doc_id", "n_copies"), big=True)
     ju = (
         inter.join(
             sizes.select(F.col("doc_id").alias("id_a"), F.col("n").alias("na")),

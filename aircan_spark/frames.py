@@ -5,13 +5,20 @@ innermost open ``scope()`` (a ``contextvars`` stack: scopes nest, and no
 thread, foreachBatch callbacks included, registers with another's). The
 scope unpersists what was shared in it on exit, exceptions included.
 Outside any scope the frame is the caller's, like a bare ``persist()``.
+This module is the package's one ``persist`` site.
 
 A caller wraps ``with scope():`` around "build the plan, then
-materialize it". A lazy plan that outlives its scope recomputes what the
-scope released, and a recomputed numbering may not be contiguous (a
-range partitioning samples anew), so a function that returns a lazy plan
-over a shared frame is ``@result_scope``: its frames live as long as the
-frame it returns.
+materialize it"; a function that consumes its frames eagerly opens its
+own. A lazy plan that outlives its scope recomputes what the scope
+released. That costs time but gives the same rows, except where a
+recompute could give different rows: a numbering (a range partitioning
+samples anew, so it may not be contiguous) or a sample. A function that
+returns a lazy plan over such a shared frame is ``@result_scope``: its
+frames live as long as the frame it returns. Any other lazy plan leaves
+its frames to the caller's scope.
+
+Checkpoints are not persists: the JVM's ContextCleaner frees
+``localCheckpoint`` blocks once nothing references their RDD.
 
 A persist pays only when branches specialize their copies of a shared
 subtree (different filters, projections or partitionings of it); AQE

@@ -286,7 +286,7 @@ def q15_upsert_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
     the merged table. Unchanged-value semantics mean the merged table must
     equal the original — which is what the oracle asserts."""
     orders = _t(spark, sf_dir, "orders")
-    # the scope releases every persist; only the checkpoint outlives it
+    # the scope releases every persist; the result is a literal frame
     with scope(), tempfile.TemporaryDirectory(prefix="aircan_q15_") as wh:
         table = ParquetTable(spark, wh, "orders_merge")
         table.overwrite(with_row_number(orders, order_by=["o_orderkey"]))
@@ -301,8 +301,8 @@ def q15_upsert_e2e(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("string")
             .alias("total"),
         )
-        result = result.localCheckpoint()  # materialize before tempdir vanishes
-    return result
+        # materialize before tempdir vanishes
+        return spark.createDataFrame(result.collect(), result.schema)
 
 
 Q15_SQL = """
@@ -356,7 +356,7 @@ def q16_bucketed_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     from aircan_spark.bucketed import BucketedParquetTable
 
     orders = _t(spark, sf_dir, "orders")
-    # the scope releases every persist; only the checkpoint outlives it
+    # the scope releases every persist; the result is a literal frame
     with scope(), tempfile.TemporaryDirectory(prefix="aircan_q16_") as wh:
         table = BucketedParquetTable(spark, wh, "orders_b", keys=["o_orderkey"], num_buckets=16)
         table.overwrite(with_row_number(orders, order_by=["o_orderkey"]))
@@ -372,8 +372,8 @@ def q16_bucketed_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("string")
             .alias("total"),
         )
-        result = result.localCheckpoint()  # materialize before tempdir vanishes
-    return result
+        # materialize before tempdir vanishes
+        return spark.createDataFrame(result.collect(), result.schema)
 
 
 Q16_SQL = """

@@ -27,10 +27,10 @@ timeout or divergence, or when more than 5 MB stays persisted after the
 final drain:
 
     # whole-registry smoke, budget per key, heavy tier last
-    python scripts/run_queries.py /tmp/sf10eq_salted --shuffle 256 --budget 600 --clear-cache --out SMOKE.json
+    python scripts/run_queries.py /tmp/sf10eq_salted --shuffle 256 --budget 600 --out SMOKE.json
     # the heavy tier alone (the 100x rung)
-    python scripts/run_queries.py /tmp/sf10eq_salted --keys heavy --shuffle 256 --clear-cache
-    # session endurance: back to back, nothing cleared, per-key residue
+    python scripts/run_queries.py /tmp/sf10eq_salted --keys heavy --shuffle 256
+    # session endurance: back to back, per-key residue
     python scripts/run_queries.py /tmp/sf1eq --keys always
     # scale curve: the last pass's ratio per key, second dir over first
     python scripts/run_queries.py testdata/sf0.1 /tmp/sf1eq --passes 2 --keys ext_hits ext_gini
@@ -79,7 +79,7 @@ ALWAYS = [
     "ext_theil_sen",
 ]
 TIERS = {"heavy": HEAVY, "always": ALWAYS}
-# persisted bytes a whole run may leave after release_session_caches
+# persisted bytes a whole run may leave after the final GC drain
 RESIDUE_BUDGET_MB = 5.0
 _GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
 
@@ -117,6 +117,20 @@ def _keep(into: dict) -> Callable[[str, object], dict]:
 def _persisted(sc) -> dict[int, int]:
     """Bytes (memory + disk) of each persisted RDD with stored blocks."""
     return {i.id(): i.memSize() + i.diskSize() for i in sc._jsc.sc().getRDDStorageInfo()}
+
+
+def _drain(sc) -> tuple[int, int]:
+    """(RDDs, bytes) still persisted after up to three alternating Python
+    and JVM GC rounds let the ContextCleaner reap blocks whose owners are
+    gone. Nothing is cleared: what remains is held by a live reference."""
+    for _ in range(3):
+        gc.collect()
+        sc._jvm.System.gc()
+        time.sleep(1.0)
+        left = _persisted(sc)
+        if not left:
+            break
+    return len(left), sum(left.values())
 
 
 class _Counter:
@@ -235,7 +249,6 @@ def run_queries(
     passes: int = 1,
     collect: Callable[[str, object], dict] | None = None,
     budget_s: float | None = None,
-    clear_cache: bool = False,
     out: str | None = None,
     header: dict | None = None,
 ) -> dict[str, dict]:
@@ -243,13 +256,11 @@ def run_queries(
     ``{key: record}`` in ``keys`` order. ``collect(key, pandas_frame)``
     returns fields added to the key's record. With ``out``, the artifact
     ``{**header, n_done, n_total, queries}`` is rewritten after every
-    key. ``clear_cache`` drops every cached frame before each key."""
+    key."""
     from aircan_spark.queries import QUERIES
 
     records: dict[str, dict] = {}
     for i, key in enumerate(keys, 1):
-        if clear_cache:
-            spark.catalog.clearCache()
         records[key] = _run_one(spark, key, QUERIES[key], sf_dir, passes, collect, budget_s)
         print(f"[{i}/{len(keys)}] {key}: {_describe(records[key])}", file=sys.stderr, flush=True)
         if out:
@@ -292,12 +303,9 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--shuffle", type=int, help="shuffle partitions (default: the core count)")
     ap.add_argument("--passes", type=int, default=1, help="noop-sink passes over the same DataFrame")
     ap.add_argument("--budget", type=float, help="seconds per key before its jobs are cancelled")
-    ap.add_argument("--clear-cache", action="store_true",
-                    help="clearCache before each key (per-query scaling; leave off for session endurance)")
     ap.add_argument("--out", help="JSON artifact, rewritten after every key")
     args = ap.parse_args(argv)
 
-    from aircan_spark.data import release_session_caches
     from aircan_spark.session import get_spark
     from test_oracle import oracle_diff
 
@@ -321,16 +329,16 @@ def main(argv: list[str] | None = None) -> int:
             got: dict = {}
             run = {"sf_dir": sf_dir, "cores": run_cores,
                    "shuffle": int(spark.conf.get("spark.sql.shuffle.partitions")),
-                   "passes": args.passes, "budget_s": args.budget, "clear_cache": args.clear_cache}
+                   "passes": args.passes, "budget_s": args.budget}
             run["queries"] = run_queries(
                 spark, keys, sf_dir, passes=args.passes,
                 collect=_keep(got) if compare else None,
-                budget_s=args.budget, clear_cache=args.clear_cache,
+                budget_s=args.budget,
                 out=args.out, header={"runs": runs, **run},
             )
             runs.append(run)
             results.append(got)
-        final = release_session_caches(spark)
+        final = _drain(spark.sparkContext)
         spark.stop()
 
     artifact: dict = {"runs": runs, "final_residue_rdds": final[0],

@@ -1,5 +1,6 @@
 import os
 import sys
+import uuid
 
 import pytest
 
@@ -23,6 +24,20 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR
+
+
+def count_jobs(spark, fn):
+    """Run ``fn`` under its own job group; return (its result, the Spark
+    jobs it ran)."""
+    sc = spark.sparkContext
+    group = f"count-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events arrive async
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def load(spark, sf_dir, name):

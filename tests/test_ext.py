@@ -1558,18 +1558,15 @@ def test_corpus_count_reads_a_rewritten_file_with_no_job(spark, tmp_path):
     with a different row count is counted afresh, and no Spark job runs."""
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from conftest import count_jobs
 
     from aircan_spark.ext._qcommon import corpus_count
 
     path = str(tmp_path / "embeddings.parquet")
-    sc = spark.sparkContext
-    got = []
-    sc.setJobGroup("corpus_count_rewrite", "corpus_count_rewrite")
-    try:
-        for n in (7, 3):
-            pq.write_table(pa.table({"vec_id": list(range(n))}), path)
-            got.append(corpus_count(spark, str(tmp_path), "embeddings"))
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert got == [7, 3]
-    assert len(sc.statusTracker().getJobIdsForGroup("corpus_count_rewrite")) == 0
+
+    def rewrite_and_count(n):
+        pq.write_table(pa.table({"vec_id": list(range(n))}), path)
+        return corpus_count(spark, str(tmp_path), "embeddings")
+
+    got, jobs = count_jobs(spark, lambda: [rewrite_and_count(n) for n in (7, 3)])
+    assert (got, jobs) == ([7, 3], 0)

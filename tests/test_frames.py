@@ -2,8 +2,8 @@
 
 A scope releases what was shared inside it on exit, exceptions included;
 scopes nest; each thread sees only its own scopes. The engine paths that
-persist (streaming micro-batches, the end-to-end upsert queries) leave no
-persisted RDD behind but what they return.
+persist (streaming micro-batches, the end-to-end upsert queries, the wave
+queries inside a scope) leave no persisted RDD behind.
 """
 
 import contextvars
@@ -159,17 +159,19 @@ def test_numbering_queries_release_with_their_result(spark, sf_dir, key):
 
 
 def test_one_persist_owner_in_the_package():
-    """``.persist(`` / ``.cache()`` appear only in frames.py and the wave
-    query modules (whose lazy plans a per-query runner scope will own);
-    the numbering-cache list and the persists= lists are gone."""
+    """``.persist(`` / ``.cache()`` appear only in frames.py; the
+    numbering-cache list, the persists= lists and the session sweep are
+    gone."""
     persist = re.compile(r"\.persist\(|\.cache\(\)")
-    gone = re.compile(r"release_caches|_ACTIVE_CACHES|persists=|persists: list")
+    gone = re.compile(
+        r"release_caches|_ACTIVE_CACHES|persists=|persists: list"
+        r"|release_session_caches|clear_cache"
+    )
     stray, leftovers = [], []
     for path in sorted(PACKAGE.rglob("*.py")):
         rel = path.relative_to(PACKAGE).as_posix()
         text = path.read_text()
-        allowed = rel == "frames.py" or re.fullmatch(r"ext/queries_w\d+\.py", rel)
-        if persist.search(text) and not allowed:
+        if persist.search(text) and rel != "frames.py":
             stray.append(rel)
         if gone.search(text):
             leftovers.append(rel)
@@ -236,11 +238,59 @@ def test_stream_quality_gate_leaves_no_persisted_rdd(spark, tmp_path):
 
 
 @pytest.mark.parametrize("key", ["q15_upsert_e2e", "q16_bucketed_upsert"])
-def test_upsert_queries_add_only_their_checkpoint(spark, sf_dir, key):
+def test_upsert_queries_leave_no_persisted_rdd(spark, sf_dir, key):
+    """The end-to-end upserts return their 1-row aggregate as a literal
+    frame: nothing they persisted or checkpointed outlives them."""
     from aircan_spark import queries
 
     before = _persisted_ids(spark)
     result = getattr(queries, key)(spark, sf_dir)
     added = _persisted_ids(spark) - before
     assert result.count() == 1
-    assert len(added) == 1  # the returned localCheckpoint
+    assert added == set()
+
+
+def _cache_manager_empty(spark):
+    return spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def _persisted_frames(spark):
+    """Ids of the persisted RDDs that are not checkpoints."""
+    rdds = spark.sparkContext._jsc.getPersistentRDDs()
+    return {int(k) for k in rdds.keySet() if not rdds.get(k).rdd().isCheckpointed()}
+
+
+@pytest.mark.parametrize(
+    "key",
+    ["ext_levene", "ext_gmm_em", "ext_theil_sen", "ext_hits", "ext_tfidf_cosine_pairs"],
+)
+def test_wave_query_in_a_scope_leaves_nothing_persisted(spark, sf_dir, key):
+    """Built and run inside a scope, a wave query's shared frames are
+    released at exit, with no clearCache: the CacheManager is empty and no
+    persisted frame is added. (ext_hits' round checkpoints are not
+    persists; the JVM's ContextCleaner owns them.)"""
+    from aircan_spark.frames import scope
+    from aircan_spark.queries import QUERIES
+
+    spark.catalog.clearCache()  # earlier tests' queries leave caller-owned pins
+    before = _persisted_frames(spark)
+    with scope():
+        QUERIES[key](spark, sf_dir).write.format("noop").mode("overwrite").save()
+    assert _cache_manager_empty(spark)
+    assert _persisted_frames(spark) - before == set()
+
+
+def test_levene_outside_a_scope_keeps_its_two_pins(spark, sf_dir):
+    """With no scope open (how perfbench builds it), ext_levene's two
+    shares are the caller's pins: a second build and run reuses them and
+    adds no persisted RDD."""
+    from aircan_spark.queries import QUERIES
+
+    spark.catalog.clearCache()  # earlier tests' queries leave caller-owned pins
+    before = _persisted_ids(spark)
+    want = QUERIES["ext_levene"](spark, sf_dir).collect()
+    pins = _persisted_ids(spark) - before
+    assert len(pins) == 2
+    assert QUERIES["ext_levene"](spark, sf_dir).collect() == want
+    assert _persisted_ids(spark) - before == pins
+    spark.catalog.clearCache()  # this test's own pins

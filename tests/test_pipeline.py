@@ -4,6 +4,7 @@ import datetime as dt
 import json
 
 import pytest
+from conftest import count_jobs
 
 from aircan_spark.pipeline import ValidationFailure, run
 from aircan_spark.table import ParquetTable
@@ -321,15 +322,9 @@ def test_dag_task_body_runs_pipeline(spark, tmp_path):
     assert res["rows"] == 2
 
 
-def _load_jobs(spark, group, config):
-    """Run one pipeline load under its own job group; return its job count."""
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        run(spark, config)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
+def _load_jobs(spark, config):
+    """Run one pipeline load; return its job count."""
+    return count_jobs(spark, lambda: run(spark, config))[1]
 
 
 def test_pipeline_load_job_counts(spark, tmp_path):
@@ -361,7 +356,7 @@ def test_pipeline_load_job_counts(spark, tmp_path):
     wh = str(tmp_path / "wh")
     got = {}
     for method, src in resources.items():
-        got[f"parquet_{method}"] = _load_jobs(spark, f"pin_parquet_{method}", {
+        got[f"parquet_{method}"] = _load_jobs(spark, {
             "resource_path": src,
             "table_name": "pinned",
             "warehouse": wh,
@@ -371,19 +366,19 @@ def test_pipeline_load_job_counts(spark, tmp_path):
         })
     bucketed = {"table_name": "pinned_b", "warehouse": wh, "num_buckets": 4,
                 "schema_descriptor": DESCRIPTOR}
-    got["bucketed_parquet_overwrite"] = _load_jobs(spark, "pin_bucketed_overwrite", {
+    got["bucketed_parquet_overwrite"] = _load_jobs(spark, {
         **bucketed, "resource_path": resources["overwrite"], "method": "overwrite",
         "job_ts": TS1,
     })
     correction = parquet("fix", [(i, f"c{i}", float(i)) for i in (3, 77, 150)])
-    got["bucketed_correction_upsert"] = _load_jobs(spark, "pin_bucketed_upsert", {
+    got["bucketed_correction_upsert"] = _load_jobs(spark, {
         **bucketed, "resource_path": correction, "method": "upsert", "job_ts": TS2,
     })
     gz = str(tmp_path / "snap.csv.gz")
     with gzip.open(gz, "wt") as fh:
         fh.write("sku,name,price\n")
         fh.writelines(f"{s},{n},{p}\n" for s, n, p in snapshot)
-    got["gzip_csv_validated_overwrite"] = _load_jobs(spark, "pin_gzip_csv", {
+    got["gzip_csv_validated_overwrite"] = _load_jobs(spark, {
         "resource_path": gz,
         "table_name": "pinned_csv",
         "warehouse": wh,

@@ -1,8 +1,8 @@
-"""Round-11: data.release_session_caches is the session-lifecycle hook
-for the CacheManager pin class (lazy pair queries persist index frames
-the consumer's lifetime owns; the CacheManager holds them by STRONG
-reference, so nothing short of clearCache ever frees them). Pin both
-halves: the pin is real (survives GC), and the release drains it.
+"""Round-11: the CacheManager pin class. A lazy pair query persists an
+index frame whose lifetime its consumer owns, and the CacheManager holds
+it by STRONG reference, so no GC frees it. Pin both halves: outside a
+scope the pin survives GC; the ``frames.scope`` it is built in releases
+it at exit, with no clearCache.
 """
 
 from __future__ import annotations
@@ -11,33 +11,37 @@ import gc
 import time
 
 
-def _persisted_bytes(spark):
-    infos = spark.sparkContext._jsc.sc().getRDDStorageInfo()
-    return sum(i.memSize() + i.diskSize() for i in infos)
+def _persisted_ids(spark):
+    return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
 
 
-def test_release_session_caches_drains_the_pin(spark):
-    from pyspark.sql import functions as F
-
-    from aircan_spark.data import release_session_caches
-    from aircan_spark.ext import dedup
-
-    docs = spark.createDataFrame(
-        [(i, f"alpha beta gamma delta {i} epsilon zeta") for i in range(300)],
+def _docs(spark, word):
+    return spark.createDataFrame(
+        [(i, f"alpha beta {word} delta {i} epsilon zeta") for i in range(300)],
         "doc_id long, text string",
     )
-    pairs = dedup.ngram_jaccard_pairs(docs, n=3, threshold=0.1)
+
+
+def test_scope_drains_the_pair_index_pin(spark):
+    from aircan_spark.ext import dedup
+    from aircan_spark.frames import scope
+
+    before = _persisted_ids(spark)
+    pairs = dedup.ngram_jaccard_pairs(_docs(spark, "gamma"), n=3, threshold=0.1)
     pairs.count()  # materialize -> the DISK_ONLY index is now populated
     del pairs
-
     # the pin survives both GCs: CacheManager holds it strongly
     gc.collect()
     spark.sparkContext._jvm.System.gc()
     time.sleep(1.0)
-    assert _persisted_bytes(spark) > 0
+    pinned = _persisted_ids(spark) - before
+    assert pinned
 
-    n, b = release_session_caches(spark, gc_rounds=3, settle_sec=0.5)
-    assert (n, b) == (0, 0), f"release left {n} rdds / {b} bytes"
+    with scope():
+        pairs = dedup.ngram_jaccard_pairs(_docs(spark, "kappa"), n=3, threshold=0.1)
+        pairs.count()
+    assert _persisted_ids(spark) - before == pinned
+    spark.catalog.clearCache()  # the first half's caller-owned pin
 
 
 def test_cc_family_releases_in_function(spark, monkeypatch):

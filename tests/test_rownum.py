@@ -1,6 +1,7 @@
 """Row-number injection: contiguity, offsets, order preservation, scale shape."""
 
 import pytest
+from conftest import count_jobs
 from pyspark.sql import functions as F
 
 from aircan_spark.pipeline import run
@@ -182,20 +183,10 @@ def _write_files(root, files):
         pq.write_table(pa.table({"v": vals}), str(path))
 
 
-def _jobs(spark, group, fn):
-    sc = spark.sparkContext
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
-
-
 def test_number_files_builds_with_no_job_exchange_or_cache(spark, tmp_path):
     _write_files(tmp_path / "src", {"a.parquet": list(range(7)), "b.parquet": list(range(5))})
     df = spark.read.parquet(str(tmp_path / "src"))
-    (numbered, rows), jobs = _jobs(spark, "number_files_build", lambda: number_files(df, start=11))
+    (numbered, rows), jobs = count_jobs(spark, lambda: number_files(df, start=11))
     assert (rows, jobs) == (12, 0)
     plan = _plan(numbered)
     assert "Exchange" not in plan and "InMemoryRelation" not in plan, plan

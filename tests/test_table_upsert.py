@@ -11,6 +11,7 @@ Covers the reference's golden assertions (FIXTURES.md B9):
 import datetime as dt
 
 import pytest
+from conftest import count_jobs
 from pyspark.sql import functions as F
 
 from aircan_spark.frames import scope
@@ -454,20 +455,6 @@ def test_read_after_append_ignores_dir_mtime(spark, tmp_path):
     for p, st in stamps.items():
         os.utime(p, ns=(st.st_atime_ns, st.st_mtime_ns))
     assert t.read().count() == 4
-
-
-def count_jobs(spark, fn):
-    """Run ``fn`` under its own job group; return (result, Spark jobs run)."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"count-jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def live_paths(table):
