@@ -18,7 +18,7 @@ scale to a multi-executor cluster:
 - ``bucketed``  hash-bucketed tables with partial-rewrite upsert (scale path)
 - ``skew``      salted aggregation / salted replicate join for hot keys
 - ``pipeline``  the end-to-end resource ingestion lifecycle
-- ``sinks``     JDBC / batched HTTP sinks, format transcode
+- ``sinks``     Postgres COPY / batched HTTP sinks, format transcode
 - ``streaming`` incremental ingest, windowed + session + stateful aggs
 - ``callbacks`` status reporting / failure email side-channel
 - ``ext``       beyond-reference operators: dedup (exact/jaccard/minhash/

@@ -36,37 +36,8 @@ from aircan_spark.frames import scope, share
 def _t(spark, sf_dir, name):
     """Load + fan_out: every ext operator is compute-heavy per row, so a
     single-split local scan must not serialize it onto one core (no-op on
-    inputs that already have enough splits).
-
-    Delegation seam: tests historically monkeypatch ``_t`` on the
-    aggregator module (aircan_spark.ext.queries) to inject synthetic
-    frames. Wave modules resolve ``_t`` here, so this function first
-    checks whether the aggregator's attribute has been replaced and, if
-    so, routes through it — keeping that seam working across the
-    monolith split without touching any test."""
-    import sys
-
-    agg = sys.modules.get("aircan_spark.ext.queries")
-    patched = getattr(agg, "_t", None) if agg is not None else None
-    if (
-        patched is not None
-        and patched is not _t
-        and not getattr(_T_DELEGATING, "active", False)
-    ):
-        # re-entrancy guard: a patch that captured this function as the
-        # "real" loader and calls back into it must reach the real load,
-        # not recurse through the seam again
-        _T_DELEGATING.active = True
-        try:
-            return patched(spark, sf_dir, name)
-        finally:
-            _T_DELEGATING.active = False
+    inputs that already have enough splits)."""
     return fan_out(_load(spark, sf_dir, name))
-
-
-import threading as _threading
-
-_T_DELEGATING = _threading.local()
 
 
 def corpus_count(spark, sf_dir: str, name: str) -> int:
@@ -76,16 +47,7 @@ def corpus_count(spark, sf_dir: str, name: str) -> int:
     DataFrame-CONSTRUCTION time (the panel modulus is data-derived). The
     footer's record count is read on the driver with 0 Spark jobs, so
     construction scans nothing and a rewritten file is counted afresh.
-    When a test has monkeypatched the ``_t`` seam to inject a synthetic
-    frame, that frame is counted instead — the on-disk count would
-    mis-size the panel for the synthetic corpus.
     """
-    import sys
-
-    agg = sys.modules.get("aircan_spark.ext.queries")
-    patched = getattr(agg, "_t", None) if agg is not None else None
-    if patched is not None and patched is not _t:
-        return _t(spark, sf_dir, name).count()
     path = os.path.join(sf_dir, f"{name}.parquet")
     url = path if "://" in path else pathlib.Path(os.path.abspath(path)).as_uri()
     return footer_rows(spark, [url])[0]

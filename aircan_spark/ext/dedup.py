@@ -916,7 +916,9 @@ def connected_components_star(
       smaller neighbors (and itself) to the minimum.
     Fixed point = star forests: every edge is (node, component-min).
     Equivalence with hash-min is property-tested on random graphs,
-    chains, and stars."""
+    chains, and stars. Like hash-min, raises RuntimeError when no fixed
+    point is reached within ``max_iter`` rounds instead of returning the
+    partial stars as components."""
     e = pairs.select(F.col(id_a).alias("a"), F.col(id_b).alias("b")).filter(
         F.col("a") != F.col("b")
     )
@@ -960,6 +962,12 @@ def connected_components_star(
         e = ss
         if done:
             break
+    else:
+        raise RuntimeError(
+            f"connected_components_star did not converge within max_iter="
+            f"{max_iter} rounds: the star edge set was still changing. "
+            f"Raise max_iter."
+        )
     # final stars: u -> component min v; minima label themselves
     return (
         e.select(F.col("u").alias("id"), F.col("v").alias("component"))

@@ -17,12 +17,7 @@ order) and re-exports every wave-module name, so existing imports —
 from __future__ import annotations
 
 from aircan_spark.ext._qcommon import *  # noqa: F401,F403
-from aircan_spark.ext._qcommon import (  # noqa: F401
-    EXT_ORACLES,
-    EXT_QUERIES,
-    _load,
-    _t,
-)
+from aircan_spark.ext._qcommon import EXT_ORACLES, EXT_QUERIES  # noqa: F401
 from aircan_spark.ext import (  # noqa: F401
     queries_w01,
     queries_w02,

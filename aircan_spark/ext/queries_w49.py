@@ -20,7 +20,6 @@ from functools import partial
 from aircan_spark.ext._qcommon import *  # noqa: F401,F403
 from aircan_spark.ext._qcommon import EXT_ORACLES, EXT_QUERIES, _load, _t  # noqa: F401
 from aircan_spark.ext.queries_w48 import *  # noqa: F401,F403
-from aircan_spark.ext.queries_w46 import _run_maintenance  # noqa: F401
 from aircan_spark.frames import scope
 
 

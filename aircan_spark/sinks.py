@@ -1,10 +1,10 @@
-"""Auxiliary sinks — JDBC bulk load, HTTP batch API sink, format convert.
+"""Auxiliary sinks — Postgres bulk load, HTTP batch API sink, format convert.
 
 Reference analogs:
-- K8 JDBC load: load_csv_to_postgres_via_copy (/root/reference/aircan/
-  dependencies_legacy/postgres_loader.py:86-212) — 85k-row pandas chunks
-  through COPY. Spark-first: ``df.write.format("jdbc")`` when a driver jar
-  is present; the COPY fast path stays available via foreachPartition.
+- K8 Postgres load: load_csv_to_postgres_via_copy (dependencies_legacy/
+  postgres_loader.py:86-212) — 85k-row pandas chunks
+  through COPY. Spark-first: the COPY runs per partition via
+  foreachPartition (``copy_to_postgres``).
 - K9 HTTP API sink: load_resource_via_api (dependencies_legacy/
   api_loader.py:214-265) + chunky (dependencies_legacy/utils.py:158-168) —
   250-row batched POSTs. Spark-first: ``foreachPartition`` so every
@@ -28,7 +28,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 API_BATCH_SIZE = 250  # reference: aircan_datastore_chunk_insert_rows_size
-JDBC_BATCH_SIZE = 85_000  # reference: pandas chunksize in the COPY path
 
 
 def chunky(iterable, size: int):
@@ -60,29 +59,6 @@ def _json_safe(value: Any) -> Any:
 
 def rows_to_records(rows) -> list[dict[str, Any]]:
     return [{k: _json_safe(v) for k, v in row.asDict().items()} for row in rows]
-
-
-def write_jdbc(
-    df: DataFrame,
-    url: str,
-    table: str,
-    mode: str = "append",
-    properties: dict[str, str] | None = None,
-    batch_size: int = JDBC_BATCH_SIZE,
-) -> None:
-    """JDBC sink (K8). Executor-parallel: each partition opens its own
-    connection; ``batchsize`` mirrors the reference's 85k-row chunking.
-    (Requires the JDBC driver jar on the Spark classpath — not present in
-    this container, so covered by plan-level tests only.)"""
-    writer = (
-        df.write.format("jdbc")
-        .option("url", url)
-        .option("dbtable", table)
-        .option("batchsize", str(batch_size))
-    )
-    for k, v in (properties or {}).items():
-        writer = writer.option(k, v)
-    writer.mode(mode).save()
 
 
 def post_in_batches(
@@ -118,21 +94,6 @@ def convert_csv_to_json(
             json.dump(records, fh)
         return dst
     df.write.mode("overwrite").json(dst)
-    return dst
-
-
-def export_dump_to_path(df: DataFrame, dst: str, fmt: str = "csv") -> str:
-    """K11 re-export analog: dump a table to a cloud/local path. The
-    reference downloads the datastore dump URL and re-uploads to S3; with
-    the warehouse in Spark this is a direct write (s3a:// works unchanged
-    when Hadoop cloud connectors are configured)."""
-    writer = df.write.mode("overwrite")
-    if fmt == "csv":
-        writer.option("header", "true").csv(dst)
-    elif fmt in ("json", "ndjson"):
-        writer.json(dst)
-    else:
-        writer.parquet(dst)
     return dst
 
 

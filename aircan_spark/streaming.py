@@ -172,14 +172,6 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def event_stream_from_table(
-    spark: SparkSession, events_dir: str, schema: T.StructType
-) -> DataFrame:
-    """File-source stream over parquet event files (the testdata `events`
-    shape); one micro-batch per file with default trigger."""
-    return spark.readStream.schema(schema).parquet(events_dir)
-
-
 def sessionized_activity(
     events: DataFrame,
     gap: str = "30 minutes",
@@ -230,68 +222,6 @@ def stream_dedup(
     return events.dropDuplicates(keys)
 
 
-def stream_interval_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: str,
-    left_ts: str = "ts",
-    right_ts: str = "ts",
-    lower: str = "-10 minutes",
-    upper: str = "0 seconds",
-    watermark: str = "1 hour",
-    right_cols: list[str] | None = None,
-    suffix: str = "_right",
-) -> DataFrame:
-    """Stream-stream interval join (attribution: each left event pairs
-    with the right events of the same key inside
-    ``[left.ts + lower, left.ts + upper)``, inner semantics).
-
-    Streaming inputs get watermarks on BOTH sides plus the event-time
-    range condition — exactly what Spark needs to bound join state: each
-    side buffers only rows younger than watermark + window span, evicted
-    as the watermark advances, so state is O(rate x horizon) regardless
-    of stream age. The join itself hash-partitions both sides by the
-    key — one shuffle each, the same cost shape as the batch
-    ``ext.relational.range_join`` (which is this operator's
-    batch-parity oracle in tests).
-
-    Batch frames run the identical predicate as a plain join — same
-    semantics on bounded input, letting the equivalence test compare
-    stream output against the bucketed batch implementation."""
-    if right_cols is None:
-        right_cols = [c for c in right.columns if c != on]
-
-    r_renamed = right.select(
-        F.col(on).alias("__rkey"),
-        *[F.col(c).alias(f"__r_{c}") for c in right_cols],
-    )
-    l_in, r_in = left, r_renamed
-    if left.isStreaming:
-        l_in = l_in.withWatermark(left_ts, watermark)
-    if right.isStreaming:
-        r_in = r_in.withWatermark(f"__r_{right_ts}", watermark)
-
-    def shift(interval: str):
-        iv = F.expr(f"INTERVAL {interval.lstrip('-').strip()}")
-        return (
-            F.col(left_ts) - iv
-            if interval.strip().startswith("-")
-            else F.col(left_ts) + iv
-        )
-
-    cond = (
-        (F.col(on) == F.col("__rkey"))
-        & (F.col(f"__r_{right_ts}") >= shift(lower))
-        & (F.col(f"__r_{right_ts}") < shift(upper))
-    )
-    joined = l_in.join(r_in, cond, "inner").drop("__rkey")
-    taken = set(left.columns)
-    for c in right_cols:
-        name = c + suffix if c in taken else c
-        joined = joined.withColumnRenamed(f"__r_{c}", name)
-    return joined
-
-
 def stream_enrich(
     stream: DataFrame,
     dim: DataFrame,
@@ -325,9 +255,10 @@ def stream_enrich(
 
 
 def read_sketch_state(spark: SparkSession, sketch_dir: str) -> DataFrame:
-    """Read the current committed sketch from a ``stream_sketch_maintenance``
-    state directory by resolving its atomic pointer file. Raises
-    FileNotFoundError when no state has been committed yet."""
+    """Read the current committed state from a
+    ``stream_multi_state_maintenance`` state directory by resolving its
+    atomic pointer file. Raises FileNotFoundError when no state has been
+    committed yet."""
     import json as _json
     import os as _os
 
@@ -337,142 +268,6 @@ def read_sketch_state(spark: SparkSession, sketch_dir: str) -> DataFrame:
     with open(pointer_path) as fh:
         pointer = _json.load(fh)
     return spark.read.parquet(_os.path.join(sketch_dir, pointer["version"]))
-
-
-def stream_sketch_maintenance(
-    spark: SparkSession,
-    source_dir: str,
-    schema: T.StructType,
-    item_col: str,
-    sketch_dir: str,
-    checkpoint_dir: str,
-    depth: int = 4,
-    width: int = 1024,
-    seed: int = 42,
-    available_now: bool = False,
-    source_format: str = "json",
-    max_files_per_trigger: int | None = None,
-):
-    """Incrementally maintain a count-min sketch over a file stream: each
-    micro-batch builds its own sketch (fixed depth x width) and MERGES it
-    into the stored one by count addition — the streaming face of the CMS
-    merge law (ext/sketch.py). The stored summary stays O(depth*width)
-    no matter how much data has streamed through; downstream frequency
-    estimates never rescan history.
-
-    Exactly-once per batch, crash- and restart-safe:
-
-    - Each committed state is a fully-written versioned directory
-      (``v{run_id}-{batch_id}``); a tiny JSON *pointer* file names the
-      current one and is itself replaced atomically (tmp + ``os.replace``).
-      The batch id lives INSIDE the same atomically-committed artifact as
-      the sketch, so a crash between "sketch written" and "marker written"
-      cannot double-merge a replayed batch — the pointer still names the
-      pre-batch state and the replay recomputes the identical merge.
-    - The pointer also records a *run id* minted per checkpoint directory
-      (``_sketch_run_id`` inside the checkpoint dir). Restarting with a
-      FRESH checkpoint but the same sketch_dir restarts batch ids at 0;
-      the run-id mismatch makes the stale guard inapplicable and the
-      sketch REBUILDS from the re-streamed source instead of silently
-      skipping every batch (or double-counting into dead state).
-    - A missing state path is the only condition treated as "first batch";
-      any other read failure propagates (a transient/corrupt read must not
-      silently discard the accumulated sketch).
-
-    Returns the StreamingQuery; caller awaits/stops it."""
-    from aircan_spark.ext import sketch as cms
-
-    return stream_state_maintenance(
-        spark,
-        source_dir,
-        schema,
-        build_fn=lambda b: cms.count_min_build(
-            b.select(item_col), item_col, depth=depth, width=width, seed=seed
-        ),
-        merge_fn=cms.count_min_merge,
-        state_dir=sketch_dir,
-        checkpoint_dir=checkpoint_dir,
-        available_now=available_now,
-        source_format=source_format,
-        max_files_per_trigger=max_files_per_trigger,
-    )
-
-
-def stream_hll_maintenance(
-    spark: SparkSession,
-    source_dir: str,
-    schema: T.StructType,
-    item_col: str,
-    sketch_dir: str,
-    checkpoint_dir: str,
-    b: int = 10,
-    seed: int = 42,
-    available_now: bool = False,
-    source_format: str = "json",
-    max_files_per_trigger: int | None = None,
-):
-    """Incrementally maintain HyperLogLog registers over a file stream —
-    the distinct-count twin of ``stream_sketch_maintenance``: per batch
-    ``hll_build``, merged into the stored registers by per-register
-    GREATEST (``hll_merge``). Same atomic-pointer exactly-once machinery
-    (``stream_state_maintenance``); ``read_sketch_state`` +
-    ``sketch.hll_estimate`` give the running distinct estimate without
-    ever rescanning history."""
-    from aircan_spark.ext import sketch as sk
-
-    return stream_state_maintenance(
-        spark,
-        source_dir,
-        schema,
-        build_fn=lambda df: sk.hll_build(
-            df.select(item_col), item_col, b=b, seed=seed
-        ),
-        merge_fn=sk.hll_merge,
-        state_dir=sketch_dir,
-        checkpoint_dir=checkpoint_dir,
-        available_now=available_now,
-        source_format=source_format,
-        max_files_per_trigger=max_files_per_trigger,
-    )
-
-
-def stream_state_maintenance(
-    spark: SparkSession,
-    source_dir: str,
-    schema: T.StructType,
-    build_fn,
-    merge_fn,
-    state_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = False,
-    source_format: str = "json",
-    max_files_per_trigger: int | None = None,
-):
-    """Generic exactly-once maintenance of a SMALL mergeable state over a
-    file stream (the machinery behind the CMS and HLL maintainers):
-    ``build_fn(batch_df) -> state delta``, ``merge_fn(current, delta) ->
-    merged``. Commit protocol (see ``stream_sketch_maintenance``'s
-    docstring for the full rationale): versioned state directories + an
-    atomically-replaced JSON pointer carrying {run_id, batch_id, version},
-    run identity minted per checkpoint lineage, missing-state-only
-    first-batch fallback, corrupt reads propagate.
-
-    ``source_format`` selects the file source ("json" or "parquet");
-    ``max_files_per_trigger`` bounds each micro-batch's file count —
-    with availableNow this splits a bounded backlog into MULTIPLE real
-    micro-batches, each committing one merge through the pointer
-    machinery (how the batch-parity declared queries exercise the merge
-    law end-to-end, not just on a single batch)."""
-    return stream_multi_state_maintenance(
-        spark,
-        source_dir,
-        schema,
-        [{"build_fn": build_fn, "merge_fn": merge_fn, "state_dir": state_dir}],
-        checkpoint_dir,
-        available_now=available_now,
-        source_format=source_format,
-        max_files_per_trigger=max_files_per_trigger,
-    )
 
 
 def stream_multi_state_maintenance(
@@ -485,28 +280,50 @@ def stream_multi_state_maintenance(
     source_format: str = "json",
     max_files_per_trigger: int | None = None,
 ):
-    """The N-state generalization of ``stream_state_maintenance``: ONE
-    file stream drives any number of independent state machines, each
-    with its own state directory, atomic pointer, and exactly-once
-    replay guard — so the fixed streaming cost (query startup + per-
-    micro-batch scheduling) is paid once instead of N times, while
-    every maintainer's merge law is still individually exercised per
-    batch (r7 verdict item #4).
+    """Exactly-once maintenance of small mergeable states over one file
+    stream: each micro-batch builds a delta per state and MERGES it into
+    the stored one (count addition, register GREATEST, min-k re-take,
+    keyed ADD — the merge laws of ext/sketch.py). A stored state stays as
+    small as its sketch no matter how much data has streamed through, and
+    downstream estimates never rescan history. One stream drives every
+    state, so the fixed streaming cost (query startup + per-micro-batch
+    scheduling) is paid once however many states ride it.
 
     Each entry of ``maintainers``: ``{"build_fn", "merge_fn",
-    "state_dir", "slice_fn"?}``. ``slice_fn(batch_df) -> DataFrame``
-    carves this maintainer's rows out of a shared backlog (e.g. a
+    "state_dir", "slice_fn"?}``. ``build_fn(batch_df) -> delta``,
+    ``merge_fn(current, delta) -> merged``. ``slice_fn(batch_df) ->
+    DataFrame`` carves this state's rows out of a shared backlog (e.g. a
     source-tagged union of two tables); omitted = whole batch. An empty
-    slice skips that maintainer for the batch (nothing to merge; its
-    pointer is untouched, and replay safety is per-maintainer via the
-    batch-id guard).
+    slice commits an empty delta, which every merge law treats as the
+    identity.
 
-    Commit protocol per maintainer — identical to the single-state
-    docstring above: versioned state dirs + atomically-replaced JSON
-    pointer {run_id, batch_id, version}, run identity minted per
-    checkpoint lineage (shared across maintainers — one checkpoint, one
-    lineage), missing-state-only first-batch fallback, corrupt reads
-    propagate."""
+    Commit protocol, per state; crash- and restart-safe:
+
+    - Each committed state is a fully-written versioned directory
+      (``v{run_id}-{batch_id}``); a tiny JSON *pointer* file
+      ``{run_id, batch_id, version}`` names the current one and is itself
+      replaced atomically (tmp + ``os.replace``). The batch id lives
+      INSIDE the same atomically-committed pointer that names the state,
+      so a crash between "state written" and "pointer replaced" cannot
+      double-merge a replayed batch — the pointer still names the
+      pre-batch state and the replay recomputes the identical merge.
+    - The pointer also records a *run id* minted per checkpoint lineage
+      (``_sketch_run_id`` inside the checkpoint dir, shared by every
+      state of the stream). Restarting with a FRESH checkpoint but the
+      same state dirs restarts batch ids at 0; the run-id mismatch makes
+      the replay guard inapplicable and each state REBUILDS from the
+      re-streamed source instead of silently skipping every batch (or
+      double-counting into dead state).
+    - A missing state is the only first-batch condition: a state that a
+      committed pointer names must be readable, and any other read
+      failure propagates (a transient/corrupt read must not silently
+      discard the accumulated state).
+
+    ``source_format`` selects the file source ("json" or "parquet");
+    ``max_files_per_trigger`` bounds each micro-batch's file count — with
+    availableNow this splits a bounded backlog into several real
+    micro-batches, each committing one merge. Returns the StreamingQuery;
+    the caller awaits/stops it."""
     import json as _json
     import os as _os
     import shutil as _shutil
@@ -610,42 +427,6 @@ def stream_multi_state_maintenance(
     return writer.start()
 
 
-def stream_bottomk_maintenance(
-    spark: SparkSession,
-    source_dir: str,
-    schema: T.StructType,
-    key_col: str,
-    sketch_dir: str,
-    checkpoint_dir: str,
-    k: int = 2000,
-    seed: int = 42,
-    available_now: bool = False,
-    source_format: str = "json",
-    max_files_per_trigger: int | None = None,
-):
-    """Incrementally maintain a bottom-k (KMV) uniform sample over a file
-    stream — the SAMPLE twin of the CMS/HLL maintainers: per batch
-    ``bottomk_sample``, merged by union + re-take-k (``bottomk_merge``,
-    idempotent and associative, so replay cannot skew the sample). Same
-    atomic-pointer exactly-once machinery (``stream_state_maintenance``).
-    The stored state stays O(k) rows forever; downstream quantile /
-    distribution estimates read the sample without rescanning history."""
-    from aircan_spark.ext import sketch as sk
-
-    return stream_state_maintenance(
-        spark,
-        source_dir,
-        schema,
-        build_fn=lambda df: sk.bottomk_sample(df, [key_col], k=k, seed=seed),
-        merge_fn=lambda cur, delta: sk.bottomk_merge(cur, delta, k=k),
-        state_dir=sketch_dir,
-        checkpoint_dir=checkpoint_dir,
-        available_now=available_now,
-        source_format=source_format,
-        max_files_per_trigger=max_files_per_trigger,
-    )
-
-
 def stream_quality_gate(
     spark: SparkSession,
     source_dir: str,
@@ -700,95 +481,3 @@ def stream_quality_gate(
     if available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-def stream_moments_maintenance(
-    spark: SparkSession,
-    source_dir: str,
-    schema: T.StructType,
-    key_col: str,
-    value_col: str,
-    sketch_dir: str,
-    checkpoint_dir: str,
-    available_now: bool = False,
-    source_format: str = "json",
-    max_files_per_trigger: int | None = None,
-):
-    """Incrementally maintain per-key moment partials (n, Σx, Σx²) over
-    a file stream — the KEYED-aggregate face of the atomic-pointer
-    machinery (CMS/HLL/KMV maintain one global sketch; this maintains a
-    row per key): per batch one groupBy builds the delta, merge is a
-    full-outer ADD by key (the algebraic-moment merge law, X172).
-    Downstream mean/stddev/z-score reads derive from the stored
-    partials without rescanning history — the state a streaming anomaly
-    detector scores against."""
-
-    def build(df: DataFrame) -> DataFrame:
-        v = F.col(value_col).cast("double")
-        return df.groupBy(F.col(key_col).alias("key")).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(v).alias("s1"),
-            F.sum(v * v).alias("s2"),
-        )
-
-    def merge(cur: DataFrame, delta: DataFrame) -> DataFrame:
-        both = cur.unionByName(delta)
-        return both.groupBy("key").agg(
-            F.sum("n").alias("n"),
-            F.sum("s1").alias("s1"),
-            F.sum("s2").alias("s2"),
-        )
-
-    return stream_state_maintenance(
-        spark,
-        source_dir,
-        schema,
-        build_fn=build,
-        merge_fn=merge,
-        state_dir=sketch_dir,
-        checkpoint_dir=checkpoint_dir,
-        available_now=available_now,
-        source_format=source_format,
-        max_files_per_trigger=max_files_per_trigger,
-    )
-
-
-def stream_kmv_maintenance(
-    spark: SparkSession,
-    source_dir: str,
-    schema: T.StructType,
-    item_col: str,
-    group_cols: list[str],
-    sketch_dir: str,
-    checkpoint_dir: str,
-    k: int = 256,
-    available_now: bool = False,
-    source_format: str = "json",
-    max_files_per_trigger: int | None = None,
-):
-    """Incrementally maintain per-group KMV distinct sketches over a file
-    stream — the set-resemblance twin of ``stream_hll_maintenance``:
-    per batch ``kmv_minima``, merged into the stored minima by
-    union + re-take (``kmv_merge``). Same atomic-pointer exactly-once
-    machinery; ``read_sketch_state`` + ``sketch.kmv_estimates`` give
-    running per-group distinct estimates, and the stored minima also
-    support union/intersection/Jaccard across groups (X238) — which
-    HLL registers cannot."""
-    from aircan_spark.ext import sketch as sk
-
-    return stream_state_maintenance(
-        spark,
-        source_dir,
-        schema,
-        build_fn=lambda df: sk.kmv_minima(
-            df.select(*group_cols, item_col), item_col, group_cols, k=k
-        ).select(*group_cols, "h"),
-        merge_fn=lambda cur, delta: sk.kmv_merge(cur, delta, group_cols, k=k).select(
-            *group_cols, "h"
-        ),
-        state_dir=sketch_dir,
-        checkpoint_dir=checkpoint_dir,
-        available_now=available_now,
-        source_format=source_format,
-        max_files_per_trigger=max_files_per_trigger,
-    )

@@ -23,7 +23,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from run_queries import run_queries  # noqa: E402  (puts the repo and tests/ on sys.path)
+from run_queries import run_queries  # noqa: E402  (puts the repo and tests/ on sys.path, the repo on PYTHONPATH)
 from test_oracle import oracle_diff, oracle_views  # noqa: E402
 
 from aircan_spark.queries import ORACLES, QUERIES  # noqa: E402

@@ -54,6 +54,9 @@ from collections.abc import Callable
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tests"))
+# Python workers import aircan_spark (the UDF keys) from their PYTHONPATH,
+# which the session inherits from this process when it starts
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [REPO, os.environ.get("PYTHONPATH")]))
 
 # The heavy tier at 100x (salted sf10-equivalent): candidate-volume
 # quadratics, overflow-fixed moments, ANN, sketch dedup, the graph/CC

@@ -42,3 +42,20 @@ def count_jobs(spark, fn):
 
 def load(spark, sf_dir, name):
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+
+
+def table_dir(tmp_path, base_dir, **tables):
+    """A data dir holding each of ``tables`` (name -> DataFrame) as the
+    table ``{name}.parquet``, with ``base_dir``'s other tables symlinked
+    beside them. Each frame is written by pyarrow as ONE file, so the
+    footer count of ``corpus_count`` sees the synthetic rows."""
+    import pyarrow.parquet as pq
+
+    out = tmp_path / "tables"
+    out.mkdir()
+    for name, df in tables.items():
+        pq.write_table(df.toArrow(), str(out / f"{name}.parquet"))
+    for entry in os.listdir(base_dir):
+        if not (out / entry).exists():
+            (out / entry).symlink_to(os.path.join(base_dir, entry))
+    return str(out)

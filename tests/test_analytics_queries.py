@@ -6,6 +6,7 @@ plans the docstrings promise."""
 
 import datetime as dt
 
+from conftest import table_dir
 from pyspark.sql import functions as F
 
 SF = "/root/testdata/sf0.001"
@@ -18,7 +19,7 @@ def _plan(df):
 # --- sessionize: gap boundary semantics --------------------------------------
 
 
-def test_sessionize_gap_boundary(spark, monkeypatch):
+def test_sessionize_gap_boundary(spark, tmp_path):
     """A gap of EXACTLY 30 minutes stays in the same session (the break
     condition is strictly greater-than); 30min + 1us breaks."""
     import aircan_spark.ext.queries as Q
@@ -31,10 +32,10 @@ def test_sessionize_gap_boundary(spark, monkeypatch):
         (2, base, 200),
     ]
     ev = spark.createDataFrame(rows, "user_id long, ts timestamp, event_id long")
-    monkeypatch.setattr(Q, "_t", lambda _s, _d, _n: ev)
+    sf = table_dir(tmp_path, SF, events=ev)
     got = {
         (r.user_id, r.session_idx): r.n_events
-        for r in Q.ext_sessionize(spark, SF).collect()
+        for r in Q.ext_sessionize(spark, sf).collect()
     }
     assert got == {(1, 1): 2, (1, 2): 1, (2, 1): 1}
 
@@ -42,7 +43,7 @@ def test_sessionize_gap_boundary(spark, monkeypatch):
 # --- funnel: attribution window inclusivity ----------------------------------
 
 
-def test_funnel_window_inclusivity(spark, monkeypatch):
+def test_funnel_window_inclusivity(spark, tmp_path):
     """Click exactly 1h before the purchase IS attributed (closed lower
     bound); click at the purchase instant is NOT (open upper bound)."""
     import aircan_spark.ext.queries as Q
@@ -59,8 +60,7 @@ def test_funnel_window_inclusivity(spark, monkeypatch):
     ev = spark.createDataFrame(
         rows, "user_id long, ts timestamp, event_id long, event_type string"
     )
-    monkeypatch.setattr(Q, "_t", lambda _s, _d, _n: ev)
-    out = Q.ext_funnel(spark, SF).collect()
+    out = Q.ext_funnel(spark, table_dir(tmp_path, SF, events=ev)).collect()
     assert len(out) == 1
     r = out[0]
     assert (r.n_purchases, r.n_attributed) == (3, 1)
@@ -69,7 +69,7 @@ def test_funnel_window_inclusivity(spark, monkeypatch):
 # --- argminmax: deterministic tie-break --------------------------------------
 
 
-def test_argminmax_tie_break(spark, monkeypatch):
+def test_argminmax_tie_break(spark, tmp_path):
     """Equal values resolve to the smallest event_id for MIN and the
     largest for MAX (lexicographic struct ordering)."""
     import aircan_spark.ext.queries as Q
@@ -81,8 +81,7 @@ def test_argminmax_tie_break(spark, monkeypatch):
         ("click", 9.0, 8),   # tie on max value -> event_id 8 wins MAX
     ]
     ev = spark.createDataFrame(rows, "event_type string, value double, event_id long")
-    monkeypatch.setattr(Q, "_t", lambda _s, _d, _n: ev)
-    r = Q.ext_argminmax(spark, SF).collect()[0]
+    r = Q.ext_argminmax(spark, table_dir(tmp_path, SF, events=ev)).collect()[0]
     assert (r.min_event_id, r.max_event_id) == (3, 8)
 
 

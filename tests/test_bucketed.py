@@ -206,62 +206,6 @@ def test_read_version_time_travel(spark, tmp_path):
         t.read_version(v1 - 1 if v1 > 0 else 999)
 
 
-def test_aggtable_refresh_equals_full_recompute(spark, tmp_path):
-    """Three delta refreshes must equal one full-recompute GROUP BY over
-    the concatenated input — counts exactly, sums decimal-exactly."""
-    from aircan_spark.aggtable import AggTable
-
-    def batch(lo, hi):
-        return spark.range(lo, hi).select(
-            (F.col("id") % 7).alias("k"),
-            (F.col("id") * 1.5).alias("v"),
-        )
-
-    at = AggTable(spark, str(tmp_path), "agg", keys=["k"], sum_cols=["v"], num_buckets=4)
-    full = None
-    for lo, hi in [(0, 100), (100, 250), (250, 300)]:
-        b = batch(lo, hi)
-        at.refresh(b, job_ts=TS2)
-        full = b if full is None else full.unionByName(b)
-
-    got = {
-        r["k"]: (r["n"], str(r["sum_v"]))
-        for r in at.read().collect()
-    }
-    want = {
-        r["k"]: (r["n"], str(r["s"]))
-        for r in full.groupBy("k")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum(F.col("v").cast("decimal(28,6)")).cast("decimal(28,6)").alias("s"),
-        )
-        .collect()
-    }
-    assert got == want
-
-
-def test_aggtable_refresh_touches_only_delta_buckets(spark, tmp_path):
-    """A delta hitting one key must leave every other bucket's manifest
-    pointers verbatim (partial rewrite, not O(table))."""
-    from aircan_spark.aggtable import AggTable
-
-    at = AggTable(spark, str(tmp_path), "agg", keys=["k"], sum_cols=["v"], num_buckets=8)
-    base = spark.range(0, 64).select(F.col("id").alias("k"), F.lit(1.0).alias("v"))
-    at.refresh(base, job_ts=TS1)
-    before = at.table.manifest()["buckets"]
-
-    one = spark.createDataFrame([(5, 10.0)], "k long, v double")
-    at.refresh(one, job_ts=TS2)
-    after = at.table.manifest()["buckets"]
-
-    from aircan_spark.bucketed import bucket_expr
-    touched = spark.createDataFrame([(5,)], "k long").select(
-        bucket_expr(["k"], 8).alias("b")
-    ).collect()[0]["b"]
-    changed = [b for b in after if after[b] != before.get(b)]
-    assert changed == [str(touched)]
-
-
 def test_diff_versions_insert_update_delete(spark, tmp_path):
     """The snapshot diff labels inserted/updated keys; untouched keys are
     absent. (Upserts never delete, so 'deleted' needs an overwrite.)"""
@@ -392,23 +336,6 @@ def test_commit_record_invariant(spark, tmp_path):
     assert t.manifest()["buckets"][str(target_b)] == []
     assert_record_invariant(spark, t, max_id=24)
     assert t.row_count() == 22 - n
-
-
-def test_aggtable_refresh_keeps_record_exact(spark, tmp_path):
-    """AggTable rows carry no _id, so each refresh's merge renumbers the
-    touched buckets' rows; the recorded row count must stay exact."""
-    from test_table_upsert import assert_record_invariant
-
-    from aircan_spark.aggtable import AggTable
-
-    at = AggTable(spark, str(tmp_path), "agg", keys=["k"], sum_cols=["v"], num_buckets=4)
-    for lo, hi in [(0, 7), (3, 11), (5, 9)]:
-        delta = spark.range(lo, hi).select(
-            F.col("id").alias("k"), (F.col("id") * 1.5).alias("v")
-        )
-        at.refresh(delta, job_ts=TS2)
-        assert_record_invariant(spark, at.table)
-    assert at.table.row_count() == 11
 
 
 def test_narrower_append_keeps_table_columns(spark, tmp_path):

@@ -179,6 +179,36 @@ def test_one_persist_owner_in_the_package():
     assert leftovers == []
 
 
+def test_no_test_only_seams_or_code_in_the_package():
+    """No package module looks itself up in ``sys.modules`` (the old
+    loader seam), the deleted test-only names stay gone from the package,
+    scripts and DAGs, and no test swaps a module's ``_t`` loader: a test
+    hands a query synthetic data as a table dir (``conftest.table_dir``)."""
+    repo = PACKAGE.parent
+    seam = re.compile(r"sys\.modules")
+    gone = re.compile(
+        r"\b(AggTable|aggtable|stream_interval_join|event_stream_from_table"
+        r"|stream_(sketch|hll|bottomk|moments|kmv|state)_maintenance"
+        r"|write_jdbc|export_dump_to_path|JDBC_BATCH_SIZE"
+        r"|_run_maintenance|_staged_split_dir|_T_DELEGATING)\b"
+    )
+    patch_t = re.compile(r"""setattr\([^,]+,\s*["']_t["']|\._t\s*=[^=]""")
+    seams, leftovers, patches = [], [], []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        if seam.search(path.read_text()):
+            seams.append(path.relative_to(repo).as_posix())
+    for top in ("aircan_spark", "scripts", "dags"):
+        for path in sorted((repo / top).rglob("*.py")):
+            if gone.search(path.read_text()):
+                leftovers.append(path.relative_to(repo).as_posix())
+    for path in sorted((repo / "tests").glob("*.py")):
+        if patch_t.search(path.read_text()):
+            patches.append(path.name)
+    assert seams == []
+    assert leftovers == []
+    assert patches == []
+
+
 def _write_batches(src, rows_per_file):
     os.makedirs(src)
     for i, rows in enumerate(rows_per_file):

@@ -874,6 +874,20 @@ def test_star_cc_equivalence_and_depth(spark):
     assert got == {i: 0 for i in range(20)}
 
 
+def test_star_cc_raises_when_not_converged(spark):
+    """large-star/small-star with too small a round budget must RAISE, as
+    hash-min does, never return the partial stars as components."""
+    import pytest
+
+    from aircan_spark.ext import dedup
+
+    chain = spark.createDataFrame(
+        [(i, i + 1) for i in range(63)], "id_a long, id_b long"
+    )
+    with pytest.raises(RuntimeError, match="did not converge"):
+        dedup.connected_components_star(chain, max_iter=2)
+
+
 def test_triangle_count_known_graphs(spark):
     from aircan_spark.ext import graph
 

@@ -6,11 +6,13 @@ Spark's whole-text shingle for documents with FEWER than n words
 no short docs, so this class is invisible to devcheck/sweeps — pin it
 with a synthetic corpus through BOTH engines."""
 
+import os
+
 import duckdb
 import pytest
+from conftest import table_dir
 from pyspark.sql import functions as F  # noqa: F401
 
-from aircan_spark.ext import queries as Q
 from aircan_spark.ext.queries_w01 import (
     EXT_ROLLING_FINGERPRINT_SQL,
     ext_rolling_fingerprint,
@@ -18,7 +20,7 @@ from aircan_spark.ext.queries_w01 import (
 
 
 @pytest.fixture()
-def short_docs(spark, tmp_path):
+def short_docs(spark, tmp_path, sf_dir):
     rows = [
         (1, ""),  # empty -> one '' shingle
         (2, "solo"),  # 1 word
@@ -27,22 +29,17 @@ def short_docs(spark, tmp_path):
         (5, "alpha beta gamma delta"),  # normal >= 3-word doc
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    path = str(tmp_path / "documents.parquet")
-    df.coalesce(1).write.mode("overwrite").parquet(path)
-    return df, path
+    return table_dir(tmp_path, sf_dir, documents=df)
 
 
-def test_rolling_fingerprint_oracle_covers_short_docs(
-    spark, short_docs, monkeypatch
-):
-    df, path = short_docs
-    monkeypatch.setattr(Q, "_t", lambda _s, _d, _n: df)
+def test_rolling_fingerprint_oracle_covers_short_docs(spark, short_docs):
     got = {
         r["doc_id"]: (r["n_prints"], r["prints_digest"])
-        for r in ext_rolling_fingerprint(spark, "unused").collect()
+        for r in ext_rolling_fingerprint(spark, short_docs).collect()
     }
+    path = os.path.join(short_docs, "documents.parquet")
     con = duckdb.connect()
-    con.sql(f"CREATE VIEW documents AS SELECT * FROM '{path}/*.parquet'")
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM '{path}'")
     want = {
         int(r[0]): (int(r[1]), r[2])
         for r in con.sql(EXT_ROLLING_FINGERPRINT_SQL).fetchall()

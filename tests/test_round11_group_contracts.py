@@ -16,6 +16,7 @@ The equivalence argument each test pins:
 from __future__ import annotations
 
 import pytest
+from conftest import table_dir
 from pyspark.sql import functions as F
 
 import aircan_spark.ext.queries as Q
@@ -82,12 +83,12 @@ def _agg_pairs(pairs, metric):
 
 
 @pytest.mark.parametrize("corpus", ["fixture", "dup_heavy"])
-def test_simhash_groups_equals_aggregated_pairs(spark, monkeypatch, corpus):
+def test_simhash_groups_equals_aggregated_pairs(spark, tmp_path, corpus):
+    sf = SF
     if corpus == "dup_heavy":
-        docs = _dup_heavy_docs(spark)
-        monkeypatch.setattr(Q, "_t", lambda _s, _d, _n: docs)
-    groups = _hist(Q.ext_dedup_simhash_groups(spark, SF), ("hamming",))
-    pairs = _agg_pairs(Q.ext_dedup_simhash(spark, SF), "hamming")
+        sf = table_dir(tmp_path, SF, documents=_dup_heavy_docs(spark))
+    groups = _hist(Q.ext_dedup_simhash_groups(spark, sf), ("hamming",))
+    pairs = _agg_pairs(Q.ext_dedup_simhash(spark, sf), "hamming")
     assert groups == pairs
     if corpus == "dup_heavy":
         # multiplicity floor: 12 contents x C(7,2) within-pairs at hamming 0
@@ -95,24 +96,24 @@ def test_simhash_groups_equals_aggregated_pairs(spark, monkeypatch, corpus):
 
 
 @pytest.mark.parametrize("corpus", ["fixture", "dup_heavy"])
-def test_minhash_groups_equals_aggregated_pairs(spark, monkeypatch, corpus):
+def test_minhash_groups_equals_aggregated_pairs(spark, tmp_path, corpus):
+    sf = SF
     if corpus == "dup_heavy":
-        docs = _dup_heavy_docs(spark)
-        monkeypatch.setattr(Q, "_t", lambda _s, _d, _n: docs)
-    groups = _hist(Q.ext_dedup_minhash_groups(spark, SF), ("est_jaccard",))
-    pairs = _agg_pairs(Q.ext_dedup_minhash(spark, SF), "est_jaccard")
+        sf = table_dir(tmp_path, SF, documents=_dup_heavy_docs(spark))
+    groups = _hist(Q.ext_dedup_minhash_groups(spark, sf), ("est_jaccard",))
+    pairs = _agg_pairs(Q.ext_dedup_minhash(spark, sf), "est_jaccard")
     assert groups == pairs
     if corpus == "dup_heavy":
         assert groups.get((1.0,), 0) >= 12 * 21
 
 
 @pytest.mark.parametrize("corpus", ["fixture", "dup_heavy"])
-def test_fuzzy_join_groups_equals_aggregated_pairs(spark, monkeypatch, corpus):
+def test_fuzzy_join_groups_equals_aggregated_pairs(spark, tmp_path, corpus):
+    sf = SF
     if corpus == "dup_heavy":
-        cust = _dup_heavy_cust(spark)
-        monkeypatch.setattr(Q, "_t", lambda _s, _d, _n: cust)
-    groups = _hist(Q.ext_fuzzy_join_groups(spark, SF), ("dist",))
-    pairs = _agg_pairs(Q.ext_fuzzy_join(spark, SF), "dist")
+        sf = table_dir(tmp_path, SF, customer=_dup_heavy_cust(spark))
+    groups = _hist(Q.ext_fuzzy_join_groups(spark, sf), ("dist",))
+    pairs = _agg_pairs(Q.ext_fuzzy_join(spark, sf), "dist")
     assert groups == pairs
     if corpus == "dup_heavy":
         # 5 names x C(6,2) verbatim pairs at dist 0; the two NULL-name
@@ -120,17 +121,16 @@ def test_fuzzy_join_groups_equals_aggregated_pairs(spark, monkeypatch, corpus):
         assert groups[(0,)] == 5 * 15
 
 
-def test_ngram_groups_collapse_survives_verbatim_replication(spark, monkeypatch):
+def test_ngram_groups_collapse_survives_verbatim_replication(spark, tmp_path):
     """The instance-level ext_dedup_groups loses ALL edges on a verbatim
     corpus (every shingle's instance df >= multiplicity > guard), while
     the collapsed sibling keeps the true near-dup components and groups
     verbatim copies — the exact recall failure the group contract fixes."""
     reps = 70  # past HOT_SHINGLE_MAX_DF=64: every instance-level shingle
     # doc-freq is >= 70, so the guard prunes the ENTIRE instance index
-    docs = _dup_heavy_docs(spark, reps=reps)
-    monkeypatch.setattr(Q, "_t", lambda _s, _d, _n: docs)
+    sf = table_dir(tmp_path, SF, documents=_dup_heavy_docs(spark, reps=reps))
 
-    collapsed = Q.ext_dedup_ngram_groups(spark, SF).collect()
+    collapsed = Q.ext_dedup_ngram_groups(spark, sf).collect()
     comp = {r.doc_id: r.component for r in collapsed}
     assert len(collapsed) == 12 * reps
     # verbatim copies always share a component (exact-dedup collapse):
@@ -148,7 +148,7 @@ def test_ngram_groups_collapse_survives_verbatim_replication(spark, monkeypatch)
     # df<=64 guard (including the <3-word contents' whole-text shingle),
     # the index is fully pruned and recall collapses to zero. This IS
     # the failure the collapsed sibling exists to fix.
-    instance = Q.ext_dedup_groups(spark, SF).collect()
+    instance = Q.ext_dedup_groups(spark, sf).collect()
     assert all(r.is_representative for r in instance)
 
 
@@ -172,12 +172,12 @@ def _dup_heavy_emb(spark, reps: int = 9, n_base: int = 40, dim: int = 16):
 
 
 @pytest.mark.parametrize("corpus", ["fixture", "dup_heavy"])
-def test_embedding_groups_equals_aggregated_pairs(spark, monkeypatch, corpus):
+def test_embedding_groups_equals_aggregated_pairs(spark, tmp_path, corpus):
+    sf = SF
     if corpus == "dup_heavy":
-        emb = _dup_heavy_emb(spark)
-        monkeypatch.setattr(Q, "_t", lambda _s, _d, _n: emb)
-    groups = _hist(Q.ext_dedup_embedding_groups(spark, SF), ("cosine",))
-    pairs = _agg_pairs(Q.ext_dedup_embedding_lsh(spark, SF), "cosine")
+        sf = table_dir(tmp_path, SF, embeddings=_dup_heavy_emb(spark))
+    groups = _hist(Q.ext_dedup_embedding_groups(spark, sf), ("cosine",))
+    pairs = _agg_pairs(Q.ext_dedup_embedding_lsh(spark, sf), "cosine")
     assert groups == pairs
     if corpus == "dup_heavy":
         # 40 distinct vectors (39 after... all distinct) x C(9,2) within-

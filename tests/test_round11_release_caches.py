@@ -10,6 +10,8 @@ from __future__ import annotations
 import gc
 import time
 
+from conftest import table_dir
+
 
 def _persisted_ids(spark):
     return {int(k) for k in spark.sparkContext._jsc.getPersistentRDDs().keySet()}
@@ -44,7 +46,7 @@ def test_scope_drains_the_pair_index_pin(spark):
     spark.catalog.clearCache()  # the first half's caller-owned pin
 
 
-def test_cc_family_releases_in_function(spark, monkeypatch):
+def test_cc_family_releases_in_function(spark, tmp_path, sf_dir):
     """The CC-family queries unpersist their inverted index during
     construction (their eager edge checkpoint makes it dead weight) —
     building AND running one must leave the CacheManager empty."""
@@ -54,6 +56,6 @@ def test_cc_family_releases_in_function(spark, monkeypatch):
         [(i, f"one two three four five {i % 7} six") for i in range(100)],
         "doc_id long, text string",
     )
-    monkeypatch.setattr(Q, "_t", lambda _s, _d, _n: docs)
-    Q.ext_dedup_groups(spark, "/root/testdata/sf0.001").count()
+    sf = table_dir(tmp_path, sf_dir, documents=docs)
+    Q.ext_dedup_groups(spark, sf).count()
     assert spark._jsparkSession.sharedState().cacheManager().isEmpty()

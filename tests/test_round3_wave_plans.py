@@ -7,7 +7,10 @@ physical plans and invariants the docstrings promise."""
 import datetime as dt
 
 import pytest
+from conftest import table_dir
 from pyspark.sql import functions as F
+
+from aircan_spark.data import load_table
 
 SF = "/root/testdata/sf0.001"
 
@@ -101,7 +104,7 @@ def test_kmeans_step_inertia_not_above_seeding(spark):
         assert -1.0 <= r["mean_silhouette"] <= 1.0
 
 
-def test_auc_flipping_labels_complements(spark, monkeypatch):
+def test_auc_flipping_labels_complements(spark, tmp_path):
     """AUC(score -> y) + AUC(score -> NOT y) must sum to 1 (rank-sum
     symmetry) — a strong internal consistency check of the tie
     handling."""
@@ -109,19 +112,12 @@ def test_auc_flipping_labels_complements(spark, monkeypatch):
 
     auc = Q.ext_auc(spark, SF).collect()[0]["auc"]
 
-    real_t = Q._t
-
-    def flipped(spark_, sf_dir, name):
-        df = real_t(spark_, sf_dir, name)
-        if name == "documents":
-            df = df.withColumn(
-                "lang",
-                F.when(F.col("lang") == "en", F.lit("zz")).otherwise(F.lit("en")),
-            )
-        return df
-
-    monkeypatch.setattr(Q, "_t", flipped)
-    flipped_auc = Q.ext_auc(spark, SF).collect()[0]["auc"]
+    flipped = load_table(spark, SF, "documents").withColumn(
+        "lang",
+        F.when(F.col("lang") == "en", F.lit("zz")).otherwise(F.lit("en")),
+    )
+    sf = table_dir(tmp_path, SF, documents=flipped)
+    flipped_auc = Q.ext_auc(spark, sf).collect()[0]["auc"]
     assert auc + flipped_auc == pytest.approx(1.0, abs=2e-6)
 
 
@@ -140,7 +136,7 @@ def test_pca_power_unit_norm_and_positive_eigenvalue(spark):
     assert first["component"] >= 0
 
 
-def test_mann_kendall_detects_known_trend(spark, monkeypatch):
+def test_mann_kendall_detects_known_trend(spark, tmp_path):
     """A strictly increasing synthetic series must report 'increasing'
     with S = n(n-1)/2 exactly (every pair concordant)."""
     import aircan_spark.ext.queries as Q
@@ -153,15 +149,7 @@ def test_mann_kendall_detects_known_trend(spark, monkeypatch):
         rows, "o_orderkey long, o_orderdate timestamp, o_totalprice double"
     )
 
-    real_t = Q._t
-
-    def with_synth(spark_, sf_dir, name):
-        if name == "orders":
-            return synth
-        return real_t(spark_, sf_dir, name)
-
-    monkeypatch.setattr(Q, "_t", with_synth)
-    r = Q.ext_mann_kendall(spark, SF).collect()[0]
+    r = Q.ext_mann_kendall(spark, table_dir(tmp_path, SF, orders=synth)).collect()[0]
     assert r["trend"] == "increasing"
     assert r["s_stat"] == 40 * 39 // 2
 
@@ -170,7 +158,6 @@ def test_optimal_threshold_maximizes_f1_over_sweep(spark):
     """Brute-force recompute of the F1 sweep in pandas must agree with
     the picked maximum."""
     from aircan_spark.ext.queries import ext_optimal_threshold
-    from aircan_spark.data import load_table
     from aircan_spark.ext import text
 
     picked = ext_optimal_threshold(spark, SF).collect()[0]
@@ -263,7 +250,7 @@ def test_skyline_is_mutually_nondominated(spark):
             )
 
 
-def test_wasserstein_identical_distributions_are_zero(spark, monkeypatch):
+def test_wasserstein_identical_distributions_are_zero(spark, tmp_path):
     """When both segments see the SAME order-value distribution (forced
     by overwriting every total with a constant), W1 must be exactly 0;
     on the real data it must be non-negative."""
@@ -272,16 +259,11 @@ def test_wasserstein_identical_distributions_are_zero(spark, monkeypatch):
     base = Q.ext_wasserstein(spark, SF).collect()[0]["w1_dollars"]
     assert base >= 0
 
-    real_t = Q._t
-
-    def constant(spark_, sf_dir, name):
-        df = real_t(spark_, sf_dir, name)
-        if name == "orders":
-            df = df.withColumn("o_totalprice", F.lit(1234.56))
-        return df
-
-    monkeypatch.setattr(Q, "_t", constant)
-    assert Q.ext_wasserstein(spark, SF).collect()[0]["w1_dollars"] == 0.0
+    constant = load_table(spark, SF, "orders").withColumn(
+        "o_totalprice", F.lit(1234.56)
+    )
+    sf = table_dir(tmp_path, SF, orders=constant)
+    assert Q.ext_wasserstein(spark, sf).collect()[0]["w1_dollars"] == 0.0
 
 
 def test_lof_scores_positive_and_outlier_ordering(spark):
@@ -295,7 +277,7 @@ def test_lof_scores_positive_and_outlier_ordering(spark):
     assert scores == sorted(scores, reverse=True)
 
 
-def test_runs_test_alternating_series_reports_oscillation(spark, monkeypatch):
+def test_runs_test_alternating_series_reports_oscillation(spark, tmp_path):
     """A strictly alternating high/low series has the maximum number of
     runs -> strongly positive z (oscillation)."""
     import aircan_spark.ext.queries as Q
@@ -308,15 +290,7 @@ def test_runs_test_alternating_series_reports_oscillation(spark, monkeypatch):
     synth = spark.createDataFrame(
         rows, "o_orderkey long, o_orderdate timestamp, o_totalprice double"
     )
-    real_t = Q._t
-
-    def with_synth(spark_, sf_dir, name):
-        if name == "orders":
-            return synth
-        return real_t(spark_, sf_dir, name)
-
-    monkeypatch.setattr(Q, "_t", with_synth)
-    r = Q.ext_runs_test(spark, SF).collect()[0]
+    r = Q.ext_runs_test(spark, table_dir(tmp_path, SF, orders=synth)).collect()[0]
     assert r["n_runs"] == 40  # every step alternates
     assert r["z"] > 1.96 and r["nonrandom"]
 

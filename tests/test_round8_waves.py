@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 def test_staged_split_dir_reclaims_stale_dir(spark, sf_dir):
     import aircan_spark.ext.queries_w46 as w46
 
-    d1, _ = w46._staged_split_dir(spark, sf_dir, "orders", ["o_orderkey"], n=2)
+    d1, _ = w46._staged_backlog(spark, sf_dir)
     # corrupt the staged split: drop one part file -> intact check fails
     removed = False
     for f in os.listdir(d1):
@@ -27,7 +27,7 @@ def test_staged_split_dir_reclaims_stale_dir(spark, sf_dir):
             removed = True
             break
     assert removed
-    d2, _ = w46._staged_split_dir(spark, sf_dir, "orders", ["o_orderkey"], n=2)
+    d2, _ = w46._staged_backlog(spark, sf_dir)
     assert d2 != d1
     assert not os.path.exists(d1)  # stale dir reclaimed, not leaked
 

@@ -103,6 +103,23 @@ def test_collect_adds_its_fields_and_the_result_scope_is_released(spark, sf_dir,
     assert rec["residue_rdds"] == 0
 
 
+def test_udf_key_runs_with_another_working_directory(tmp_path, sf_dir):
+    """Python workers import aircan_spark for a UDF key; the runner puts
+    the checkout on their path, wherever it is started from."""
+    import subprocess
+
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = tmp_path / "run.json"
+    proc = subprocess.run(
+        [sys.executable, os.path.join(REPO, "scripts", "run_queries.py"), sf_dir,
+         "--keys", "ext_image_dhash", "--cores", "2", "--out", str(out)],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    rec = json.loads(out.read_text())["runs"][0]["queries"]["ext_image_dhash"]
+    assert rec["status"] == "ok", rec.get("error", "")[-2000:]
+    assert proc.returncode == 0, proc.stdout[-2000:]
+
+
 def test_bench_summary_line_fits_474_keys_with_five_digit_timings():
     sys.path.insert(0, REPO)
     from bench import summary_line

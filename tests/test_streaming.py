@@ -11,8 +11,10 @@ from pyspark.sql import types as T
 
 from aircan_spark.data import load_table
 from aircan_spark.streaming import (
+    read_sketch_state,
     running_user_totals,
     stream_ingest,
+    stream_multi_state_maintenance,
     windowed_event_counts,
 )
 from aircan_spark.table import ParquetTable
@@ -36,6 +38,19 @@ def _await(query, timeout=120):
     query.awaitTermination(timeout)
     if query.isActive:
         query.stop()
+
+
+def _maintain(spark, src, schema, tmp_path, build_fn, merge_fn, ckpt="ckpt"):
+    """Stream ``src`` to completion through ``stream_multi_state_maintenance``
+    with one state in ``tmp_path/state``; return the committed state."""
+    state = str(tmp_path / "state")
+    q = stream_multi_state_maintenance(
+        spark, str(src), schema,
+        [{"build_fn": build_fn, "merge_fn": merge_fn, "state_dir": state}],
+        str(tmp_path / ckpt), available_now=True,
+    )
+    q.awaitTermination(120)
+    return read_sketch_state(spark, state)
 
 
 def test_stream_ingest_append_two_batches(spark, tmp_path):
@@ -215,62 +230,6 @@ def test_stream_dedup_drops_redelivered_rows(spark, tmp_path):
     assert stream_dedup(doubled, ["event_id"]).count() == 100  # batch fallback
 
 
-def test_stream_interval_join_equals_batch_range_join(spark, tmp_path):
-    """Stream-stream interval join (watermarked both sides) must produce
-    exactly the pairs the batch bucketed range_join produces on the same
-    data."""
-    from aircan_spark.ext.relational import range_join
-    from aircan_spark.streaming import stream_interval_join
-
-    events = load_table(spark, "/root/testdata/sf0.001", "events").select(
-        "event_id", "user_id", "ts"
-    )
-    clicks = events.limit(150)
-    views = events.limit(300).select(
-        F.col("event_id").alias("view_id"), "user_id", "ts"
-    )
-    lsrc, rsrc = str(tmp_path / "clicks"), str(tmp_path / "views")
-    clicks.write.parquet(lsrc)
-    views.write.parquet(rsrc)
-
-    want = {
-        (r["event_id"], r["view_id"])
-        for r in range_join(
-            clicks,
-            views,
-            on="user_id",
-            lower="-30 minutes",
-            upper="0 seconds",
-            right_cols=["view_id"],
-        ).collect()
-    }
-
-    ls = spark.readStream.schema(spark.read.parquet(lsrc).schema).parquet(lsrc)
-    rs = spark.readStream.schema(spark.read.parquet(rsrc).schema).parquet(rsrc)
-    joined = stream_interval_join(
-        ls,
-        rs,
-        on="user_id",
-        lower="-30 minutes",
-        upper="0 seconds",
-        watermark="2 hours",
-        right_cols=["view_id", "ts"],
-    ).select("event_id", "view_id")
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("sj")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    _await(q)
-    got = {
-        (r["event_id"], r["view_id"])
-        for r in spark.sql("SELECT event_id, view_id FROM sj").collect()
-    }
-    assert got == want and len(want) > 0
-
-
 def test_stream_enrich_equals_batch(spark, tmp_path):
     """Stream-static enrichment: a parquet-file stream joined to the
     static customer dim produces exactly the batch join's rows, and
@@ -332,7 +291,6 @@ def test_stream_sketch_maintenance_merge_law(spark, tmp_path):
     from pyspark.sql import types as T
 
     from aircan_spark.ext import sketch as cms
-    from aircan_spark.streaming import read_sketch_state, stream_sketch_maintenance
 
     src = tmp_path / "src"
     src.mkdir()
@@ -345,21 +303,11 @@ def test_stream_sketch_maintenance_merge_law(spark, tmp_path):
             for it in items:
                 fh.write(_json.dumps({"item": it}) + "\n")
 
-    q = stream_sketch_maintenance(
-        spark,
-        str(src),
-        schema,
-        "item",
-        sketch_dir=str(tmp_path / "state"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        depth=3,
-        width=128,
-        seed=5,
-        available_now=True,
+    stored = _maintain(
+        spark, src, schema, tmp_path,
+        lambda b: cms.count_min_build(b.select("item"), "item", depth=3, width=128, seed=5),
+        cms.count_min_merge,
     )
-    q.awaitTermination(120)
-
-    stored = read_sketch_state(spark, str(tmp_path / "state"))
     direct = cms.count_min_build(
         spark.createDataFrame([(i,) for i in all_items], "item string"),
         "item",
@@ -400,7 +348,6 @@ def test_stream_sketch_restart_semantics(spark, tmp_path):
     from pyspark.sql import types as T
 
     from aircan_spark.ext import sketch as cms
-    from aircan_spark.streaming import read_sketch_state, stream_sketch_maintenance
 
     src = tmp_path / "src"
     src.mkdir()
@@ -411,12 +358,11 @@ def test_stream_sketch_restart_semantics(spark, tmp_path):
             fh.write(_json.dumps({"item": it}) + "\n")
 
     def run(ckpt: str) -> None:
-        q = stream_sketch_maintenance(
-            spark, str(src), schema, "item",
-            sketch_dir=str(tmp_path / "state"), checkpoint_dir=str(tmp_path / ckpt),
-            depth=3, width=64, seed=7, available_now=True,
+        _maintain(
+            spark, src, schema, tmp_path,
+            lambda b: cms.count_min_build(b.select("item"), "item", depth=3, width=64, seed=7),
+            cms.count_min_merge, ckpt=ckpt,
         )
-        q.awaitTermination(120)
 
     run("ckpt1")
     first = sorted(map(tuple, read_sketch_state(spark, str(tmp_path / "state")).collect()))
@@ -459,7 +405,6 @@ def test_stream_hll_maintenance_matches_batch(spark, tmp_path):
     from pyspark.sql import types as T
 
     from aircan_spark.ext import sketch as sk
-    from aircan_spark.streaming import read_sketch_state, stream_hll_maintenance
 
     src = tmp_path / "src"
     src.mkdir()
@@ -472,14 +417,11 @@ def test_stream_hll_maintenance_matches_batch(spark, tmp_path):
             for it in items:
                 fh.write(_json.dumps({"item": it}) + "\n")
 
-    q = stream_hll_maintenance(
-        spark, str(src), schema, "item",
-        sketch_dir=str(tmp_path / "state"), checkpoint_dir=str(tmp_path / "ckpt"),
-        b=10, seed=3, available_now=True,
+    stored = _maintain(
+        spark, src, schema, tmp_path,
+        lambda df: sk.hll_build(df.select("item"), "item", b=10, seed=3),
+        sk.hll_merge,
     )
-    q.awaitTermination(120)
-
-    stored = read_sketch_state(spark, str(tmp_path / "state"))
     direct = sk.hll_build(
         spark.createDataFrame([(i,) for i in all_items], "item string"),
         "item", b=10, seed=3,
@@ -500,7 +442,6 @@ def test_stream_bottomk_maintenance_matches_batch(spark, tmp_path):
     from pyspark.sql import types as T
 
     from aircan_spark.ext import sketch as sk
-    from aircan_spark.streaming import read_sketch_state, stream_bottomk_maintenance
 
     src = tmp_path / "src"
     src.mkdir()
@@ -513,14 +454,11 @@ def test_stream_bottomk_maintenance_matches_batch(spark, tmp_path):
             for it in items:
                 fh.write(_json.dumps({"item": it}) + "\n")
 
-    q = stream_bottomk_maintenance(
-        spark, str(src), schema, "item",
-        sketch_dir=str(tmp_path / "state"), checkpoint_dir=str(tmp_path / "ckpt"),
-        k=100, seed=5, available_now=True,
+    stored = _maintain(
+        spark, src, schema, tmp_path,
+        lambda df: sk.bottomk_sample(df, ["item"], k=100, seed=5),
+        lambda cur, delta: sk.bottomk_merge(cur, delta, k=100),
     )
-    q.awaitTermination(120)
-
-    stored = read_sketch_state(spark, str(tmp_path / "state"))
     direct = sk.bottomk_sample(
         spark.createDataFrame([(i,) for i in all_items], "item string"),
         ["item"], k=100, seed=5,
@@ -582,8 +520,6 @@ def test_stream_moments_maintenance_matches_batch(spark, tmp_path):
 
     from pyspark.sql import types as T
 
-    from aircan_spark.streaming import read_sketch_state, stream_moments_maintenance
-
     src = tmp_path / "src"
     src.mkdir()
     rows_all = []
@@ -600,16 +536,20 @@ def test_stream_moments_maintenance_matches_batch(spark, tmp_path):
     schema = T.StructType(
         [T.StructField("k", T.StringType()), T.StructField("v", T.DoubleType())]
     )
-    q = stream_moments_maintenance(
-        spark, str(src), schema, "k", "v",
-        sketch_dir=str(tmp_path / "state"), checkpoint_dir=str(tmp_path / "ckpt"),
-        available_now=True,
-    )
-    q.awaitTermination(120)
+    def build(df):
+        v = F.col("v").cast("double")
+        return df.groupBy(F.col("k").alias("key")).agg(
+            F.count(F.lit(1)).alias("n"), F.sum(v).alias("s1"), F.sum(v * v).alias("s2")
+        )
+
+    def merge(cur, delta):
+        return cur.unionByName(delta).groupBy("key").agg(
+            F.sum("n").alias("n"), F.sum("s1").alias("s1"), F.sum("s2").alias("s2")
+        )
 
     stored = {
         r["key"]: (r["n"], r["s1"], r["s2"])
-        for r in read_sketch_state(spark, str(tmp_path / "state")).collect()
+        for r in _maintain(spark, src, schema, tmp_path, build, merge).collect()
     }
     direct = (
         spark.createDataFrame([(r["k"], r["v"]) for r in rows_all], "key string, v double")
@@ -635,7 +575,6 @@ def test_stream_kmv_maintenance_matches_batch(spark, tmp_path):
     from pyspark.sql import types as T
 
     from aircan_spark.ext import sketch as sk
-    from aircan_spark.streaming import read_sketch_state, stream_kmv_maintenance
 
     src = tmp_path / "src"
     src.mkdir()
@@ -656,14 +595,11 @@ def test_stream_kmv_maintenance_matches_batch(spark, tmp_path):
             for g, it in rows:
                 fh.write(_json.dumps({"g": g, "item": it}) + "\n")
 
-    q = stream_kmv_maintenance(
-        spark, str(src), schema, "item", ["g"],
-        sketch_dir=str(tmp_path / "state"), checkpoint_dir=str(tmp_path / "ckpt"),
-        k=128, available_now=True,
+    stored = _maintain(
+        spark, src, schema, tmp_path,
+        lambda df: sk.kmv_minima(df.select("g", "item"), "item", ["g"], k=128).select("g", "h"),
+        lambda cur, delta: sk.kmv_merge(cur, delta, ["g"], k=128).select("g", "h"),
     )
-    q.awaitTermination(120)
-
-    stored = read_sketch_state(spark, str(tmp_path / "state"))
     direct = sk.kmv_minima(
         spark.createDataFrame(all_rows, "g string, item string"),
         "item", ["g"], k=128,
