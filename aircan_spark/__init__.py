@@ -8,7 +8,8 @@ operations is a Spark DataFrame plan, optimized by Catalyst and designed to
 scale to a multi-executor cluster:
 
 - ``schema``    frictionless Table Schema <-> StructType, sanitization, keys
-- ``sources``   format-dispatching reads (csv/tsv/json/ndjson/parquet, gzip)
+- ``sources``   format-dispatching reads (csv/tsv/json/ndjson/parquet, gzip);
+                parquet schemas from a footer, with no inference job
 - ``rownum``    distributed contiguous row numbering (no global window)
 - ``frames``    scoped lifetime of the frames the library persists
 - ``table``     Parquet-backed managed tables: overwrite/append/upsert/export

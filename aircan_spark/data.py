@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aircan_spark.frames import scope, share
+from aircan_spark.sources import read_parquet
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -152,11 +153,13 @@ def fan_out(df: DataFrame, min_ratio: int = 1) -> DataFrame:
 # {(abspath, mtime_ns, size): DataFrame}. A DataFrame is an immutable lazy
 # PLAN — caching the object caches table METADATA (schema, resolved scan),
 # exactly what a warehouse catalog (HMS/Iceberg) provides a real engine;
-# every execution still reads the parquet bytes. Without this, each of the
-# ~1000 load_table calls in a 474-query suite re-runs parquet schema
-# inference (measured 100-215 ms/call vs 46 ms schema-supplied and ~0 for
-# a cache hit). Keyed on (mtime_ns, size) so a rewritten file misses; the
-# weak session key drops the catalog with its session.
+# every execution still reads the parquet bytes. The schema comes from the
+# file's footer on the driver (``sources.read_parquet``, no job), so what
+# the memo saves each of the ~1000 load_table calls in a 474-query suite
+# is the listing, the footer read and the frame's analysis, and for the
+# ``fan_out`` callers the partition-count probe memoized on the frame
+# object. Keyed on (mtime_ns, size) so a rewritten file misses; the weak
+# session key drops the catalog with its session.
 _TABLE_CACHE: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )
@@ -187,7 +190,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 def _load_table_uncached(spark: SparkSession, path: str, name: str) -> DataFrame:
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+        df = read_parquet(spark, path)
         # Some driver snapshots store ts as INT64 TIMESTAMP(NANOS) (arrives
         # as a raw long under nanosAsLong), others as plain timestamp[us].
         # Convert only the long case: ns -> µs via integer division (float
@@ -204,4 +207,4 @@ def _load_table_uncached(spark: SparkSession, path: str, name: str) -> DataFrame
             spark.conf.set("spark.sql.session.timeZone", "UTC")
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(path)
+    return read_parquet(spark, path)

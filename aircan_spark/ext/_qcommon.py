@@ -31,6 +31,7 @@ from aircan_spark.ext import (
     vectors,
 )
 from aircan_spark.frames import scope, share
+from aircan_spark.sources import read_parquet
 
 
 def _t(spark, sf_dir, name):

@@ -1344,7 +1344,7 @@ def ext_partitioned_export(spark: SparkSession, sf_dir: str) -> DataFrame:
         "aircan_part_export_" + hashlib.md5(sf_dir.encode()).hexdigest()[:12],
     )
     export_partitioned(docs, out, ["source"])
-    back = spark.read.parquet(out).filter(
+    back = read_parquet(spark, out).filter(
         F.col("source").isin("src1", "src2", "src3")
     )
     return (

@@ -1515,7 +1515,7 @@ def _events_stream(spark: SparkSession, sf_dir: str):
     src = f"{sf_dir}/events.parquet"
     stage = tempfile.mkdtemp(prefix="aircan_r5_events_dir_")
     _os.symlink(_os.path.abspath(src), _os.path.join(stage, "events.parquet"))
-    schema = spark.read.parquet(src).schema
+    schema = read_parquet(spark, src).schema
     return spark.readStream.schema(schema).parquet(stage)
 
 

@@ -174,7 +174,7 @@ def ext_stream_dlq_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     if _os.path.isdir(dlq_dir):
         parts.append(
-            spark.read.parquet(dlq_dir)
+            read_parquet(spark, dlq_dir)
             .select("o_orderkey", "o_totalprice")
             .withColumn("destination", F.lit("dlq"))
         )

@@ -32,9 +32,10 @@ of each file from its footer on the driver and numbers
 ``_id = start + rows_before(file) + _metadata.row_index``, with files in
 path order (Delta's row tracking reads ``baseRowId + row_index`` the same
 way). It runs 0 Spark jobs and adds nothing to the scan's plan but one
-projection. ``pipeline.run`` uses it for every parquet resource; other
-sources (text, and ORC, which has no ``_metadata.row_index``) take the
-count pass of ``with_row_number``.
+projection. ``pipeline.run`` uses it for every parquet resource, whose
+read (``sources.read_parquet``, schema from a footer) runs none either;
+other sources (text, and ORC, which has no ``_metadata.row_index``) take
+the count pass of ``with_row_number``.
 
 Cache rule (count pass only): persist (``cache=True``) only where
 re-running the input is expensive (text/gzip parsing, joins) or could
@@ -131,7 +132,7 @@ def number_files(
     """Number a parquet file scan in (file path, row) order; return
     ``(numbered, rows)``.
 
-    ``df`` is ``spark.read.parquet(...)``, optionally under column
+    ``df`` is a ``sources.read_parquet`` scan, optionally under column
     selections and renames. ``_id = base[file] + row_index``, with ``base``
     a literal map from each scanned file to ``start`` plus the rows of the
     files before it in path order. A scanned file missing from ``base``

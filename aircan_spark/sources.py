@@ -10,18 +10,27 @@ natively — the producer/consumer queue machinery disappears.
 HTTP sources are fetched driver-side to a Spark-readable local path first
 (the reference's streaming was an artifact of having no cluster FS; on a
 real cluster sources land on HDFS/S3/GCS and Spark reads them directly).
+
+``read_parquet`` owns every parquet read in the package whose schema is
+not recorded: it takes Spark's inferred schema from one footer on the
+driver, so a parquet load runs no schema-inference job. Reads that pass a
+recorded schema (``ParquetTable``'s scan, the stream readers) do not need
+it.
 """
 
 from __future__ import annotations
 
 import hashlib
+import json
 import os
 import tempfile
 import time
 import urllib.error
+import urllib.parse
 import urllib.request
 from typing import Any
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -125,7 +134,8 @@ def read_resource(
     - json: JSON **array** documents via ``multiLine`` (S3) — the
       reference's ijson incremental parse becomes a declarative read.
     - parquet/orc: native vectorized columnar readers (S4; orc is a
-      beyond-reference format Spark provides for free).
+      beyond-reference format Spark provides for free). Parquet goes
+      through ``read_parquet``: no schema-inference job.
     - ``.gz`` sources decompress transparently (S5). NOTE a gzip file is
       non-splittable -> single-task read, same as the reference's
       single-threaded stream; at scale recompress on ingest (SURVEY §7.4)
@@ -179,7 +189,7 @@ def read_resource(
             reader = reader.option(k, v)
         df = reader.json(path)
     elif fmt in ("parquet", "orc"):
-        df = spark.read.parquet(path) if fmt == "parquet" else spark.read.orc(path)
+        df = read_parquet(spark, path) if fmt == "parquet" else spark.read.orc(path)
         if descriptor is not None:
             df = df.select(*names)
     else:  # pragma: no cover — infer_format already rejects
@@ -201,5 +211,85 @@ def read_resource(
             .write.option("compression", "zstd")
             .parquet(target)
         )
-        df = spark.read.parquet(target)
+        df = read_parquet(spark, target)
     return df
+
+
+# SparkHadoopUtil.isGlobPath: a path holding any of these is globbed.
+_GLOB_CHARS = frozenset("{}[]*?\\")
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """Read the parquet file, directory or glob at ``path`` under the
+    schema Spark would infer, without the one-task job Spark runs to infer
+    it.
+
+    Spark's inference (``ParquetUtils.inferSchema``) reads one footer: of
+    the listed files sorted by Hadoop path string, ``_common_metadata``
+    first, then ``_metadata``, then the first data file. Here the same
+    listing picks the same file with no job, its footer is read on the
+    driver, and Spark's own ``ParquetFileFormat.readSchemaFromFooter``
+    converts it under the session conf. An empty listing (Spark raises its
+    own error) and ``spark.sql.parquet.mergeSchema=true`` (every footer is
+    merged) keep Spark's inference.
+    """
+    jvm = spark._jvm
+    state = spark._jsparkSession.sessionState()
+    hadoop_conf = state.newHadoopConf()
+    merging = state.conf().isParquetSchemaMergingEnabled()
+    schema_file = None if merging else _schema_file(spark, path, hadoop_conf)
+    if schema_file is None:
+        return spark.read.parquet(path)
+    parquet = jvm.org.apache.parquet.hadoop
+    reader = parquet.ParquetFileReader.open(
+        parquet.util.HadoopInputFile.fromPath(schema_file, hadoop_conf)
+    )
+    try:
+        footer = parquet.Footer(schema_file, reader.getFooter())
+    finally:
+        reader.close()
+    spark_parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    schema = spark_parquet.ParquetFileFormat.readSchemaFromFooter(
+        footer, spark_parquet.ParquetToSparkSchemaConverter(state.conf())
+    )
+    return spark.read.schema(T.StructType.fromJson(json.loads(schema.json()))).parquet(path)
+
+
+def _schema_file(spark: SparkSession, path: str, hadoop_conf: Any) -> Any:
+    """The Hadoop ``Path`` whose footer Spark's inference reads, or None
+    when nothing is listed. A plain file Spark does not hide is its own
+    listing (``getFileStatus``); anything else is listed as Spark lists
+    it, by the ``inputFiles()`` of a read under an empty placeholder
+    schema. Neither runs a Spark job."""
+    jvm = spark._jvm
+    fs_path = jvm.org.apache.hadoop.fs.Path
+    if not _GLOB_CHARS & set(path):
+        try:
+            status = fs_path(path).getFileSystem(hadoop_conf).getFileStatus(fs_path(path))
+        except Py4JJavaError:
+            status = None  # missing or unreadable: Spark's listing raises its error
+        if (
+            status is not None
+            and status.isFile()
+            and not jvm.org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(
+                status.getPath().getName()
+            )
+        ):
+            return status.getPath()
+    listed = spark.read.schema(T.StructType()).parquet(path).inputFiles()
+    if not listed:
+        return None
+    summaries = {"_common_metadata": 0, "_metadata": 1}
+    url = min(
+        listed,
+        key=lambda u: (summaries.get(u.rsplit("/", 1)[-1], 2), _hadoop_path_string(u)),
+    )
+    return fs_path(jvm.java.net.URI(url))
+
+
+def _hadoop_path_string(url: str) -> str:
+    """``new Path(new URI(url)).toString()`` for a listed file's URI: the
+    key Spark sorts files by, with the path part decoded."""
+    u = urllib.parse.urlsplit(url)
+    authority = f"//{u.netloc}" if u.netloc else ""
+    return f"{u.scheme}:{authority}{urllib.parse.unquote(u.path)}"

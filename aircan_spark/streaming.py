@@ -38,6 +38,7 @@ from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from aircan_spark import ROW_NUMBER_COLUMN
 from aircan_spark.frames import scope
 from aircan_spark.rownum import with_row_number
+from aircan_spark.sources import read_parquet
 from aircan_spark.table import ParquetTable
 
 
@@ -267,7 +268,7 @@ def read_sketch_state(spark: SparkSession, sketch_dir: str) -> DataFrame:
         raise FileNotFoundError(f"no committed sketch state in {sketch_dir}")
     with open(pointer_path) as fh:
         pointer = _json.load(fh)
-    return spark.read.parquet(_os.path.join(sketch_dir, pointer["version"]))
+    return read_parquet(spark, _os.path.join(sketch_dir, pointer["version"]))
 
 
 def stream_multi_state_maintenance(
@@ -366,7 +367,7 @@ def stream_multi_state_maintenance(
             state_path = _os.path.join(state_dir, pointer["version"])
             # state named by a committed pointer must be readable —
             # anything else is a real error, never "start over"
-            current = sess.read.parquet(state_path)
+            current = read_parquet(sess, state_path)
             merged = m["merge_fn"](current, delta)
         else:
             # no pointer (true first batch) or foreign run id (fresh

@@ -330,10 +330,10 @@ def _load_jobs(spark, config):
 def test_pipeline_load_job_counts(spark, tmp_path):
     """Pin the exact Spark job count of each load shape, so a numbering,
     persist or table-metadata regression shows up as a counter diff.
-    Parquet loads number from their files' footers (no count pass, no
-    job); the gzip-CSV load keeps its count pass and persist. Table reads,
-    max_id and the report's row count come from the commit record and run
-    no job."""
+    Parquet loads take their schema and row numbers from their files'
+    footers (no inference job, no count pass); the gzip-CSV load keeps its
+    count pass and persist. Table reads, max_id and the report's row count
+    come from the commit record and run no job."""
     import gzip
 
     def parquet(name, rows):
@@ -388,10 +388,10 @@ def test_pipeline_load_job_counts(spark, tmp_path):
         "job_ts": TS1,
     })
     assert got == {
-        "parquet_overwrite": 2,
-        "parquet_append": 2,
-        "parquet_upsert": 11,
-        "bucketed_parquet_overwrite": 3,
-        "bucketed_correction_upsert": 12,
+        "parquet_overwrite": 1,
+        "parquet_append": 1,
+        "parquet_upsert": 10,
+        "bucketed_parquet_overwrite": 2,
+        "bucketed_correction_upsert": 11,
         "gzip_csv_validated_overwrite": 7,
     }

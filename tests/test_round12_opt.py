@@ -123,7 +123,9 @@ def test_ngram_jaccard_pairs_single_stats_job(spark):
         # the scope holds the index AND the df-counts frame, and
         # releases both on exit
         assert len(persisted() - before) == 2
-    assert persisted() == before
+    # only what the test added: an RDD an earlier test left may be
+    # dropped by the ContextCleaner inside this window
+    assert not (persisted() - before)
     assert len(got) == 1
     id_a, id_b, jac = got[0]
     assert (id_a, id_b) == (1, 2) and 0.3 <= jac <= 1.0
