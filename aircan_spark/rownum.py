@@ -54,6 +54,7 @@ from pyspark.sql import functions as F
 
 from aircan_spark import ROW_NUMBER_COLUMN
 from aircan_spark.frames import share
+from aircan_spark.sources import parquet_footer
 
 _ROW = "__aircan_row"
 _PART_BITS = 33  # MonotonicallyIncreasingID: partition index << 33
@@ -107,23 +108,11 @@ def with_row_number(
 
 def footer_rows(spark: SparkSession, files: list[str]) -> list[int]:
     """Rows of each parquet file in ``files`` (URL strings, as
-    ``DataFrame.inputFiles()`` gives them), from its footer's record count.
-    Read on the driver through the session's Hadoop FileSystem: 0 Spark
-    jobs, and any path Spark can read."""
-    jvm = spark._jvm
-    conf = spark._jsparkSession.sessionState().newHadoopConf()
-    parquet = jvm.org.apache.parquet.hadoop
-    counts = []
-    for url in files:
-        path = jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(url))
-        reader = parquet.ParquetFileReader.open(
-            parquet.util.HadoopInputFile.fromPath(path, conf)
-        )
-        try:
-            counts.append(int(reader.getRecordCount()))
-        finally:
-            reader.close()
-    return counts
+    ``DataFrame.inputFiles()`` gives them), from its footer's row groups,
+    read on the driver by ``sources.parquet_footer``: 0 Spark jobs."""
+    fs_path, uri = spark._jvm.org.apache.hadoop.fs.Path, spark._jvm.java.net.URI
+    footers = (parquet_footer(spark, fs_path(uri(url))) for url in files)
+    return [sum(block.getRowCount() for block in f.getBlocks()) for f in footers]
 
 
 def number_files(

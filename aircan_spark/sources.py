@@ -26,11 +26,9 @@ import os
 import tempfile
 import time
 import urllib.error
-import urllib.parse
 import urllib.request
 from typing import Any
 
-from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
@@ -215,10 +213,6 @@ def read_resource(
     return df
 
 
-# SparkHadoopUtil.isGlobPath: a path holding any of these is globbed.
-_GLOB_CHARS = frozenset("{}[]*?\\")
-
-
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """Read the parquet file, directory or glob at ``path`` under the
     schema Spark would infer, without the one-task job Spark runs to infer
@@ -233,21 +227,15 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     own error) and ``spark.sql.parquet.mergeSchema=true`` (every footer is
     merged) keep Spark's inference.
     """
-    jvm = spark._jvm
     state = spark._jsparkSession.sessionState()
-    hadoop_conf = state.newHadoopConf()
     merging = state.conf().isParquetSchemaMergingEnabled()
-    schema_file = None if merging else _schema_file(spark, path, hadoop_conf)
+    schema_file = None if merging else _schema_file(spark, path)
     if schema_file is None:
         return spark.read.parquet(path)
-    parquet = jvm.org.apache.parquet.hadoop
-    reader = parquet.ParquetFileReader.open(
-        parquet.util.HadoopInputFile.fromPath(schema_file, hadoop_conf)
+    jvm = spark._jvm
+    footer = jvm.org.apache.parquet.hadoop.Footer(
+        schema_file, parquet_footer(spark, schema_file)
     )
-    try:
-        footer = parquet.Footer(schema_file, reader.getFooter())
-    finally:
-        reader.close()
     spark_parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
     schema = spark_parquet.ParquetFileFormat.readSchemaFromFooter(
         footer, spark_parquet.ParquetToSparkSchemaConverter(state.conf())
@@ -255,41 +243,32 @@ def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     return spark.read.schema(T.StructType.fromJson(json.loads(schema.json()))).parquet(path)
 
 
-def _schema_file(spark: SparkSession, path: str, hadoop_conf: Any) -> Any:
-    """The Hadoop ``Path`` whose footer Spark's inference reads, or None
-    when nothing is listed. A plain file Spark does not hide is its own
-    listing (``getFileStatus``); anything else is listed as Spark lists
-    it, by the ``inputFiles()`` of a read under an empty placeholder
-    schema. Neither runs a Spark job."""
-    jvm = spark._jvm
-    fs_path = jvm.org.apache.hadoop.fs.Path
-    if not _GLOB_CHARS & set(path):
-        try:
-            status = fs_path(path).getFileSystem(hadoop_conf).getFileStatus(fs_path(path))
-        except Py4JJavaError:
-            status = None  # missing or unreadable: Spark's listing raises its error
-        if (
-            status is not None
-            and status.isFile()
-            and not jvm.org.apache.spark.util.HadoopFSUtils.shouldFilterOutPathName(
-                status.getPath().getName()
-            )
-        ):
-            return status.getPath()
-    listed = spark.read.schema(T.StructType()).parquet(path).inputFiles()
-    if not listed:
-        return None
-    summaries = {"_common_metadata": 0, "_metadata": 1}
-    url = min(
-        listed,
-        key=lambda u: (summaries.get(u.rsplit("/", 1)[-1], 2), _hadoop_path_string(u)),
+def parquet_footer(spark: SparkSession, path: Any) -> Any:
+    """The ``ParquetMetadata`` of the parquet file at the Hadoop ``Path``
+    ``path``, read on the driver through the session's Hadoop FileSystem:
+    no Spark job, and any path Spark can read."""
+    parquet = spark._jvm.org.apache.parquet.hadoop
+    conf = spark._jsparkSession.sessionState().newHadoopConf()
+    reader = parquet.ParquetFileReader.open(
+        parquet.util.HadoopInputFile.fromPath(path, conf)
     )
-    return fs_path(jvm.java.net.URI(url))
+    try:
+        return reader.getFooter()
+    finally:
+        reader.close()
 
 
-def _hadoop_path_string(url: str) -> str:
-    """``new Path(new URI(url)).toString()`` for a listed file's URI: the
-    key Spark sorts files by, with the path part decoded."""
-    u = urllib.parse.urlsplit(url)
-    authority = f"//{u.netloc}" if u.netloc else ""
-    return f"{u.scheme}:{authority}{urllib.parse.unquote(u.path)}"
+def _schema_file(spark: SparkSession, path: str) -> Any:
+    """The Hadoop ``Path`` whose footer Spark's inference reads, or None
+    when nothing is listed. ``path`` is listed as Spark lists it, by the
+    ``inputFiles()`` of a read under an empty placeholder schema, which
+    runs no Spark job."""
+    listed = spark.read.schema(T.StructType()).parquet(path).inputFiles()
+    jvm = spark._jvm
+    files = [jvm.org.apache.hadoop.fs.Path(jvm.java.net.URI(url)) for url in listed]
+    summaries = {"_common_metadata": 0, "_metadata": 1}
+    return min(
+        files,
+        key=lambda f: (summaries.get(f.getName(), 2), f.toString()),
+        default=None,
+    )
