@@ -19,7 +19,10 @@ Config keys (names follow the reference's DAG params where they exist):
     method              'overwrite' | 'append' | 'upsert' (reference
                         bq_write_method / datastore_append_or_upsert)
     unique_keys         upsert keys; else from descriptor constraints
-    validate            bool — row-level validation gate (abort on invalid)
+    validate            bool — row-level validation gate (abort on invalid):
+                        an overwrite or append is written, and its commit
+                        refused, on the counts its write job observed; an
+                        upsert is checked before its merge
     row_number_column   default '_id'
     updated_at_column   default '_updated_at'
     export              optional {'path': dir, 'format': fmt,
@@ -33,7 +36,7 @@ from __future__ import annotations
 import datetime as dt
 from typing import Any
 
-from pyspark.sql import SparkSession
+from pyspark.sql import Observation, SparkSession
 from pyspark.sql import functions as F
 
 from aircan_spark import ROW_NUMBER_COLUMN, UPDATED_AT_COLUMN
@@ -49,7 +52,7 @@ from aircan_spark.schema import (
 )
 from aircan_spark.sources import infer_format, read_resource
 from aircan_spark.table import ParquetTable, ensure_warehouse
-from aircan_spark.validate import conform, validate as validate_frame
+from aircan_spark.validate import cell_error_count, conform, validate as validate_frame
 
 
 class ValidationFailure(RuntimeError):
@@ -125,30 +128,53 @@ def run(spark: SparkSession, config: dict[str, Any]) -> dict[str, Any]:
     if method in ("append", "upsert") and table.exists():
         start = table.max_id(rn_col) + 1
 
-    # A parquet scan is numbered from its files' footers: no count pass,
-    # no job. Other sources take the count pass; an ORC scan re-reads its
-    # files deterministically, so it skips the persist that text/gzip
-    # re-parses keep (rownum.py cache rule).
+    # A parquet scan is numbered from its files' footers, and a
+    # one-partition source (a gzip text file) from offsets {0: start}: no
+    # count pass, no job. Other sources take the count pass; an ORC scan
+    # re-reads its files deterministically, so it skips the persist that
+    # text re-parses keep (rownum.py cache rule).
     fmt = infer_format(path, config.get("resource_format"))
     report: dict[str, Any] | None = None
-    with scope():  # the count pass's persist, held until the write
+    check = None
+    with scope():  # a count pass's persist, held until the write
+        rows = None
         if fmt == "parquet":
             numbered, rows = number_files(raw, rn_col, start)
         else:
-            numbered, rows = with_row_number(
-                raw, column=rn_col, start=start, cache=fmt != "orc", return_count=True
-            )
+            numbered = with_row_number(raw, column=rn_col, start=start, cache=fmt != "orc")
+        source = numbered
 
         # --- validation gate (reference 2b, :287-317) -----------------------
         if config.get("validate"):
-            report = validate_frame(
-                numbered, descriptor, rows, first_id=start, row_column=rn_col,
-                day_first=day_first,
-            )
-            if not report["valid"]:
-                raise ValidationFailure(report)
+            def gate(row_count: int, cell_errors: int | None = None) -> None:
+                nonlocal report
+                report = validate_frame(
+                    numbered, descriptor, row_count, cell_errors=cell_errors,
+                    first_id=start, row_column=rn_col, day_first=day_first,
+                )
+                if not report["valid"]:
+                    raise ValidationFailure(report)
 
-        typed = conform(numbered, descriptor, day_first) if declared else numbered
+            if method == "upsert":
+                # The merge reads the stage through a dedup and a persist,
+                # where an observation never arrives on an empty stage: the
+                # gate runs before the merge, counting the source if the
+                # numbering did not.
+                gate(numbered.count() if rows is None else rows)
+            else:
+                # The write job counts the source's rows and bad cells, and
+                # the commit runs the gate on them before it publishes.
+                obs = Observation()
+                source = numbered.observe(
+                    obs,
+                    F.count(F.lit(1)).alias("row_count"),
+                    cell_error_count(numbered, descriptor, day_first).alias("cell_errors"),
+                )
+
+                def check() -> None:
+                    gate(**obs.get)
+
+        typed = conform(source, descriptor, day_first) if declared else source
         if recreate_schema is not None:
             # Persist the curator-declared types on recreate (the reference
             # reloads with the data-dictionary schema, api_loader.py:70-150)
@@ -168,9 +194,9 @@ def run(spark: SparkSession, config: dict[str, Any]) -> dict[str, Any]:
             else:
                 table.upsert(typed, keys, job_ts=job_ts)
         elif method == "append":
-            table.append(typed.withColumn(ts_col, F.lit(job_ts)))
+            table.append(typed.withColumn(ts_col, F.lit(job_ts)), check)
         elif method == "overwrite":
-            table.overwrite(typed.withColumn(ts_col, F.lit(job_ts)))
+            table.overwrite(typed.withColumn(ts_col, F.lit(job_ts)), check)
         else:
             raise ValueError(f"unknown method: {method!r}")
 

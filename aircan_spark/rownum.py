@@ -27,15 +27,24 @@ shuffle is ``order_by``'s range partitioning (plus the tiny count
 aggregate). The frame is read twice (counts, then numbering), and both
 reads must see the same rows in the same partitions and order.
 
-A parquet file scan needs no count pass: ``number_files`` takes the rows
-of each file from its footer on the driver and numbers
+A frame of one partition needs no count pass: its offsets are ``{0:
+start}``. Without ``order_by``, ``with_row_number`` asks a frame whose
+plan holds no exchange for its partition count, which plans the scan on
+the driver and runs no job (a frame with an exchange keeps the count
+pass: AQE would run its shuffle stages to answer). An unsplittable gzip
+source is one partition, so its numbering is one projection, with no job
+and no persist, and the same literal-map ``_id`` (and schema) a count
+pass gives.
+
+A parquet file scan needs no count pass either: ``number_files`` takes
+the rows of each file from its footer on the driver and numbers
 ``_id = start + rows_before(file) + _metadata.row_index``, with files in
 path order (Delta's row tracking reads ``baseRowId + row_index`` the same
 way). It runs 0 Spark jobs and adds nothing to the scan's plan but one
 projection. ``pipeline.run`` uses it for every parquet resource, whose
 read (``sources.read_parquet``, schema from a footer) runs none either;
-other sources (text, and ORC, which has no ``_metadata.row_index``) take
-the count pass of ``with_row_number``.
+other sources (text, and ORC, which has no ``_metadata.row_index``) go
+through ``with_row_number``.
 
 Cache rule (count pass only): persist (``cache=True``) only where
 re-running the input is expensive (text/gzip parsing, joins) or could
@@ -60,27 +69,36 @@ _ROW = "__aircan_row"
 _PART_BITS = 33  # MonotonicallyIncreasingID: partition index << 33
 
 
+def _one_partition(df: DataFrame) -> bool:
+    """Whether ``df`` is one partition, asked only of a plan without an
+    exchange or subquery (AQE would run their stages to answer): its
+    partitions are then planned on the driver, with no job."""
+    qe = df._jdf.queryExecution()
+    plan = qe.executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan" or "Exchange" in plan.toString():
+        return False
+    return qe.toRdd().getNumPartitions() == 1
+
+
 def with_row_number(
     df: DataFrame,
     column: str = ROW_NUMBER_COLUMN,
     start: int = 1,
     order_by: list[str | Column] | None = None,
     cache: bool = True,
-    return_count: bool = False,
-) -> DataFrame | tuple[DataFrame, int]:
+) -> DataFrame:
     """Prepend a contiguous row-number column starting at ``start``.
 
     ``order_by``: explicit global ordering columns. When given, the frame is
     range-repartitioned on them first so the numbering is a true global
     order. When omitted, source order is preserved (file/split order), which
-    matches the reference's ingest numbering.
+    matches the reference's ingest numbering, and a one-partition frame is
+    numbered without a count pass (no job, no persist).
 
-    ``cache``: the algorithm reads the frame twice (counts, then numbering);
-    caching guarantees the two passes see identical rows and order. Disable
-    only for deterministic, cheap-to-rescan sources (see the module's cache
-    rule).
-
-    ``return_count``: return ``(numbered, rows)``, counted by the count pass.
+    ``cache``: the count pass reads the frame twice (counts, then
+    numbering); caching guarantees the two passes see identical rows and
+    order. Disable only for deterministic, cheap-to-rescan sources (see the
+    module's cache rule).
     """
     prepared = df
     if order_by:
@@ -88,11 +106,13 @@ def with_row_number(
         prepared = df.repartitionByRange(*cols).sortWithinPartitions(*cols)
     prepared = prepared.withColumn(_ROW, F.monotonically_increasing_id())
 
-    if cache:
-        prepared = share(prepared)
-
     part = F.shiftright(F.col(_ROW), _PART_BITS)
-    counts = prepared.groupBy(part.alias("p")).count().collect()
+    if not order_by and _one_partition(df):
+        counts = [(0, 0)]  # offsets {0: start}, whatever its row count
+    else:
+        if cache:
+            prepared = share(prepared)
+        counts = prepared.groupBy(part.alias("p")).count().collect()
     entries: list[Column] = []
     acc = start
     for p, n in sorted(counts):
@@ -102,8 +122,7 @@ def with_row_number(
     # partition, shipped with the task closure. No join, no shuffle.
     delta = F.create_map(*entries)[part] if entries else F.lit(0)
     data_cols = [c for c in df.columns if c != column]
-    numbered = prepared.select((F.col(_ROW) + delta).alias(column), *data_cols)
-    return (numbered, acc - start) if return_count else numbered
+    return prepared.select((F.col(_ROW) + delta).alias(column), *data_cols)
 
 
 def footer_rows(spark: SparkSession, files: list[str]) -> list[int]:

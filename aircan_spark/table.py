@@ -37,17 +37,30 @@ Reference analogs: table lifecycle D1/D2/D7 (warehouse.py:61-69,138-151,
 445-456), loads K2/K3 (warehouse.py:73-135,300-359), upsert J1
 (warehouse.py:430-491).
 
+A load may pass a pre-commit ``check``: the commit runs it after the
+write and before it publishes, and when it raises, the attempt's data dir
+is deleted and the version does not move (Delta enforces CHECK
+constraints inside the write transaction the same way). ``pipeline.run``'s
+validation gate is one: the write job observes the source's row and bad
+cell counts, and the gate reads them there.
+
 Concurrency contract (the reference gets this from BigQuery job atomicity;
 this engine states it explicitly): ONE writer per table at a time is the
-supported mode. Every write practices optimistic concurrency — it bases
-its commit on the manifest version it read and commits version + 1; a
-concurrent commit in between raises ``ConcurrentWriteError`` at the
-publish (first committer wins) and nothing is published. The
-check-then-publish window is microseconds but not zero, and two writers
-based on the same version write the same data dir name; serializing
-concurrent writers for real requires a transactional catalog
-(Delta/Iceberg), which is exactly what a production deployment would swap
-in here.
+supported mode. Every write bases its commit on the manifest version it
+read and commits version + 1; a concurrent commit in between raises
+``ConcurrentWriteError`` at the publish (first committer wins), and the
+manifest is not replaced. The committed DATA is not protected: two
+writers based on the same version write the same data dir name with
+``mode("overwrite")``, so a stale writer that writes after the winner's
+commit replaces the committed ``data_v{N}`` files before its own commit
+is refused, and the committed version then reads the stale writer's rows.
+Nor is the check-then-publish atomic across processes (every writer
+replaces the manifest through the same tmp file), and a commit deletes
+any ``data_v*`` dir no retained version lists, another writer's
+in-flight dir included. Concurrent writers need a write-once dir per
+attempt and an exclusive put-if-absent commit per version (the Delta
+log), or a transactional catalog (Delta/Iceberg), which is what a
+production deployment would swap in here.
 """
 
 from __future__ import annotations
@@ -101,6 +114,16 @@ def widen(old: StructType, df: DataFrame) -> tuple[StructType, DataFrame]:
     return schema, df.select(*[c for c in schema.names if c in df.columns])
 
 
+def _listed(m: dict) -> set[str]:
+    """The data dirs that manifest ``m`` or its retained history lists."""
+    return {
+        d.split("/")[0]
+        for snap in [m, *m["history"]]
+        for dirs in snap["buckets"].values()
+        for d in dirs
+    }
+
+
 class ParquetTable:
     def __init__(self, spark: SparkSession, warehouse: str, name: str):
         self.spark = spark
@@ -151,12 +174,29 @@ class ParquetTable:
         return int(row["m"])
 
     def _commit(
-        self, version: int, buckets: dict, rows: int, max_id: int, schema: dict
+        self,
+        version: int,
+        buckets: dict,
+        rows: int,
+        max_id: int,
+        schema: dict,
+        check: Callable[[], None] | None = None,
     ) -> None:
-        """Publish ``version`` of the manifest unless another writer
-        committed since this operation read version - 1; the previous
-        version moves into the history."""
+        """Publish ``version`` of the manifest unless ``check`` raises or
+        another writer committed since this operation read version - 1; the
+        previous version moves into the history. A refused ``check``
+        deletes the attempt's dir ``data_v{version}``, unless a committed
+        version lists it."""
         os.makedirs(self.path, exist_ok=True)
+        if check is not None:
+            try:
+                check()
+            except BaseException:
+                data_dir = f"data_v{version}"
+                m = self.manifest()
+                if m is None or data_dir not in _listed(m):
+                    shutil.rmtree(os.path.join(self.path, data_dir), ignore_errors=True)
+                raise
         prev = self.manifest()
         now = int(prev["version"]) if prev else 0
         if version != now + 1:
@@ -185,12 +225,7 @@ class ParquetTable:
         with open(tmp, "w") as fh:
             json.dump(m, fh)
         os.replace(tmp, self._manifest_path())
-        live = {
-            d.split("/")[0]
-            for snap in [m, *m["history"]]
-            for dirs in snap["buckets"].values()
-            for d in dirs
-        }
+        live = _listed(m)
         removed = 0
         for entry in os.listdir(self.path):
             target = os.path.join(self.path, entry)
@@ -273,26 +308,30 @@ class ParquetTable:
                 cols.append(df[f.name])
         return df.select(*cols) if changed else df
 
-    def overwrite(self, df: DataFrame) -> None:
+    def overwrite(self, df: DataFrame, check: Callable[[], None] | None = None) -> None:
         """WRITE_TRUNCATE analog (reference K2): the table as a new data
-        dir, committed as the next version."""
-        self._rewrite(df, self.current_version() + 1)
+        dir, committed as the next version unless ``check`` refuses it."""
+        self._rewrite(df, self.current_version() + 1, check)
 
-    def _rewrite(self, df: DataFrame, version: int) -> None:
+    def _rewrite(
+        self, df: DataFrame, version: int, check: Callable[[], None] | None = None
+    ) -> None:
         """Write ``df`` as the whole table and commit it as ``version``."""
         written, stats = self._write(df, version)
         buckets = {b: [d] for b, d in written.items()}
-        self._commit(version, buckets, stats["rows"], stats["max_id"], df.schema.jsonValue())
+        self._commit(
+            version, buckets, stats["rows"], stats["max_id"], df.schema.jsonValue(), check
+        )
 
-    def append(self, df: DataFrame) -> None:
+    def append(self, df: DataFrame, check: Callable[[], None] | None = None) -> None:
         """WRITE_APPEND with additive schema evolution (reference K3/D3):
         the batch, cast to the table's types, is written as a new data dir
         added to the dir lists it lands in — zero rewrite of existing data
         — and committed as the next version with the rows added, the max
-        raised and the schema widened."""
+        raised and the schema widened, unless ``check`` refuses it."""
         m = self.manifest()
         if m is None:
-            self.overwrite(df)
+            self.overwrite(df, check)
             return
         schema, df = widen(StructType.fromJson(m["schema"]), self._align_types(df, m))
         v = int(m["version"]) + 1
@@ -306,6 +345,7 @@ class ParquetTable:
             int(m["rows"]) + stats["rows"],
             max(int(m["max_id"]), stats["max_id"]),
             schema.jsonValue(),
+            check,
         )
 
     def delete(self, keys_df: DataFrame, keys: list[str]) -> int:

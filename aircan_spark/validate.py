@@ -12,8 +12,12 @@ The reference re-reads the source row-by-row through frictionless and
 collects type/constraint errors capped at 1000. Here the gate is a Spark
 plan over the numbered raw frame (text sources read as strings, columnar
 sources in their native types), which it neither caches nor counts: the
-numbering supplies ``row_count`` (from the footers for a parquet source,
-from its count pass otherwise).
+caller supplies ``row_count``. ``pipeline.run`` gates an overwrite or
+append inside its write: the write job observes the source's rows and
+``cell_error_count``, and the table's pre-commit check calls ``validate``
+with both. With no bad cell, only the unique aggregates run; the report
+query (below) runs only on a load it refuses. An upsert is gated before
+its merge, with the numbering's count or one count of the source.
 
 - type errors: a non-null raw cell whose ``conform`` cast is NULL is a
   ``type-error``, reported with the cell's source text (same detection
@@ -74,11 +78,39 @@ def conform(raw: DataFrame, descriptor: dict[str, Any], day_first: bool = False)
     return raw.select(*[casts.get(c, F.col(c)) for c in raw.columns])
 
 
+def _cell_codes(raw: DataFrame, descriptor: dict[str, Any], day_first: bool) -> dict[str, Column]:
+    """Declared field name -> the error code of its cell in ``raw``, NULL
+    for a cell that passes: ``type-error`` for a present cell whose
+    ``conform`` cast is NULL, ``constraint-error:required`` for a missing
+    cell of a required field. The one per-cell predicate: the report lists
+    these cells and ``cell_error_count`` counts them."""
+    casts = _casts(raw, descriptor, day_first)
+    codes = {}
+    for f in descriptor.get("fields", []):
+        name = f["name"]
+        col = F.col(name)
+        raw_present = col.isNotNull() & (F.trim(col) != "")
+        err = F.when(raw_present & casts[name].isNull(), F.lit("type-error"))
+        if (f.get("constraints") or {}).get("required"):
+            err = F.when(~raw_present, F.lit("constraint-error:required")).otherwise(err)
+        codes[name] = err
+    return codes
+
+
+def cell_error_count(raw: DataFrame, descriptor: dict[str, Any], day_first: bool = False) -> Column:
+    """Aggregate over ``raw``: its cells that fail their declared cast or
+    ``required``, the cells the report lists. ``pipeline.run`` observes it
+    on the write job, so a load with no bad cell runs no cell query."""
+    codes = _cell_codes(raw, descriptor, day_first).values()
+    return sum((F.count_if(err.isNotNull()) for err in codes), F.lit(0).cast("long"))
+
+
 def validate(
     numbered: DataFrame,
     descriptor: dict[str, Any],
     row_count: int,
     *,
+    cell_errors: int | None = None,
     first_id: int = 1,
     row_column: str = ROW_NUMBER_COLUMN,
     error_cap: int = ERROR_CAP,
@@ -89,7 +121,11 @@ def validate(
 
     ``numbered`` is the raw frame after ``with_row_number`` or
     ``number_files``: its ``row_column`` numbers the source rows from
-    ``first_id``, and ``row_count`` is that numbering's count.
+    ``first_id``, and ``row_count`` is its row count.
+
+    ``cell_errors``: the frame's ``cell_error_count``, when the caller
+    already observed it. At 0 only the unique aggregates run; otherwise
+    the report query lists the bad cells as well.
 
     Returns a report dict shaped like the reference's abort payload
     (pipeline_ckan_to_bigquery.py:300-311): ``valid``, ``row_count``,
@@ -106,31 +142,24 @@ def validate(
     error_frames: list[DataFrame] = []
 
     # Per-cell type + required errors in ONE projection pass.
-    cell_errors = []
-    for f in fields:
-        name = f["name"]
-        col = F.col(name)
-        raw_present = col.isNotNull() & (F.trim(col) != "")
-        err = F.when(raw_present & casts[name].isNull(), F.lit("type-error"))
-        if (f.get("constraints") or {}).get("required"):
-            err = F.when(~raw_present, F.lit("constraint-error:required")).otherwise(err)
-        cell_errors.append(
-            F.when(
-                err.isNotNull(),
-                F.struct(
-                    F.lit(name).alias("field"),
-                    err.alias("code"),
-                    col.cast("string").alias("value"),
-                ),
-            )
+    bad_cells = [
+        F.when(
+            err.isNotNull(),
+            F.struct(
+                F.lit(name).alias("field"),
+                err.alias("code"),
+                F.col(name).cast("string").alias("value"),
+            ),
         )
-    if cell_errors:
+        for name, err in _cell_codes(numbered, descriptor, day_first).items()
+    ]
+    if bad_cells and cell_errors != 0:
         # 1-based source row positions (frictionless row numbering), from
         # the load's own numbering.
         row = F.col(row_column) - F.lit(first_id) + F.lit(row_start)
         errs = numbered.select(
             row.alias("row"),
-            F.explode(F.filter(F.array(*cell_errors), lambda x: x.isNotNull())).alias("e"),
+            F.explode(F.filter(F.array(*bad_cells), lambda x: x.isNotNull())).alias("e"),
         ).select("row", "e.field", "e.code", "e.value")
         error_frames.append(errs)
 

@@ -1,5 +1,6 @@
 import os
 import sys
+import threading
 import uuid
 
 import pytest
@@ -38,6 +39,28 @@ def count_jobs(spark, fn):
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events arrive async
     return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def within(seconds, fn):
+    """Return ``fn()``, or fail the test when it has not returned after
+    ``seconds`` (a call that blocks, like an ``Observation.get`` whose
+    metrics never arrive, is left behind in a daemon thread)."""
+    out = {}
+
+    def call():
+        try:
+            out["value"] = fn()
+        except BaseException as exc:
+            out["error"] = exc
+
+    t = threading.Thread(target=call, daemon=True)
+    t.start()
+    t.join(seconds)
+    if t.is_alive():
+        pytest.fail(f"did not return within {seconds} s")
+    if "error" in out:
+        raise out["error"]
+    return out["value"]
 
 
 def load(spark, sf_dir, name):

@@ -2,11 +2,13 @@
 
 import datetime as dt
 import json
+import os
 
 import pytest
-from conftest import count_jobs
+from conftest import count_jobs, within
 
 from aircan_spark.pipeline import ValidationFailure, run
+from aircan_spark.sources import read_resource
 from aircan_spark.table import ParquetTable
 
 DESCRIPTOR = {
@@ -26,6 +28,17 @@ def write_csv(path, rows):
         fh.write("sku,name,price\n")
         for r in rows:
             fh.write(",".join(str(x) if x is not None else "" for x in r) + "\n")
+
+
+def _persisted(spark):
+    return int(spark.sparkContext._jsc.getPersistentRDDs().size())
+
+
+def _data_dirs(wh, name):
+    root = os.path.join(wh, name)
+    if not os.path.isdir(root):
+        return []
+    return sorted(e for e in os.listdir(root) if e.startswith("data_v"))
 
 
 def test_overwrite_append_upsert_export_cycle(spark, tmp_path):
@@ -131,15 +144,17 @@ def test_pipeline_validation_abort(spark, tmp_path):
     src = str(tmp_path / "bad.csv")
     with open(src, "w") as fh:
         fh.write("sku,name,price\nnot_an_int,x,1.0\n2,,2.0\n")
-    persisted = int(spark.sparkContext._jsc.getPersistentRDDs().size())
+    persisted = _persisted(spark)
+    dirs = _data_dirs(cfg["warehouse"], "bad")
     with pytest.raises(ValidationFailure) as exc:
         run(spark, {**cfg, "resource_path": src, "method": "append"})
     report = exc.value.report
+    assert _data_dirs(cfg["warehouse"], "bad") == dirs
     assert report["error_count"] >= 2
     codes = {e["code"] for e in report["errors"]}
     assert "type-error" in codes and "constraint-error:required" in codes
     assert {(e["row"], e["field"]) for e in report["errors"]} == {(2, "sku"), (3, "name")}
-    assert int(spark.sparkContext._jsc.getPersistentRDDs().size()) == persisted
+    assert _persisted(spark) == persisted
     assert ParquetTable(spark, str(tmp_path / "wh"), "bad").current_version() == version
 
 
@@ -165,6 +180,8 @@ def test_pipeline_validated_parquet_reports_bad_cells(spark, tmp_path):
         "job_ts": TS1,
     }
     version = run(spark, cfg)["version"]
+    persisted = _persisted(spark)
+    dirs = _data_dirs(cfg["warehouse"], "bad_parquet")
     src = parquet(
         "bad",
         ["3", "x4", "5", "6", "7.5"],
@@ -182,6 +199,110 @@ def test_pipeline_validated_parquet_reports_bad_cells(spark, tmp_path):
         (6, "sku", "type-error", "7.5"),
     ]
     assert ParquetTable(spark, cfg["warehouse"], "bad_parquet").current_version() == version
+    assert _data_dirs(cfg["warehouse"], "bad_parquet") == dirs
+    assert _persisted(spark) == persisted
+
+
+KINDS = {"flat": {}, "bucketed": {"num_buckets": 4}}
+
+
+@pytest.mark.parametrize("method", ["overwrite", "append"])
+@pytest.mark.parametrize("kind", sorted(KINDS))
+def test_validated_load_refused_or_committed(spark, tmp_path, kind, method):
+    """The gate rides the write: a refused overwrite or append leaves the
+    committed version, its data dirs and the persisted frames as they were,
+    with the full report; an accepted one commits the next version."""
+    wh = str(tmp_path / "wh")
+    first = str(tmp_path / "first.csv")
+    write_csv(first, [(1, "a", 1.0), (2, "b", 2.0)])
+    cfg = {
+        "table_name": "gated", "warehouse": wh, "schema_descriptor": DESCRIPTOR,
+        "validate": True, "job_ts": TS1, **KINDS[kind],
+    }
+    run(spark, {**cfg, "resource_path": first, "method": "overwrite"})
+    table = ParquetTable(spark, wh, "gated")
+    dirs = _data_dirs(wh, "gated")
+    persisted = _persisted(spark)
+
+    bad = str(tmp_path / "bad.csv")
+    write_csv(bad, [(3, "c", "cheap"), (4, None, 4.0), (3, "d", 5.0)])
+    with pytest.raises(ValidationFailure) as exc:
+        run(spark, {**cfg, "resource_path": bad, "method": method})
+    assert exc.value.report == {
+        "valid": False,
+        "row_count": 3,
+        "error_count": 3,
+        "error_cap": 1000,
+        "errors": [
+            {"row": 2, "field": "price", "code": "type-error", "value": "cheap"},
+            {"row": 3, "field": "name", "code": "constraint-error:required", "value": None},
+            {"row": -1, "field": "sku", "code": "constraint-error:unique", "value": "3"},
+        ],
+    }
+    assert (table.current_version(), table.row_count()) == (1, 2)
+    assert _data_dirs(wh, "gated") == dirs
+    assert _persisted(spark) == persisted
+
+    dupe = str(tmp_path / "dupe.csv")
+    write_csv(dupe, [(7, "g", 7.0), (7, "h", 8.0)])
+    with pytest.raises(ValidationFailure) as exc:
+        run(spark, {**cfg, "resource_path": dupe, "method": method})
+    assert exc.value.report["errors"] == [
+        {"row": -1, "field": "sku", "code": "constraint-error:unique", "value": "7"}
+    ]
+    assert exc.value.report["row_count"] == 2
+    assert table.current_version() == 1 and _data_dirs(wh, "gated") == dirs
+
+    good = str(tmp_path / "good.csv")
+    write_csv(good, [(5, "e", 5.0), (6, "f", None)])
+    res = run(spark, {**cfg, "resource_path": good, "method": method})
+    assert res["validation"] == {
+        "valid": True, "row_count": 2, "error_count": 0, "error_cap": 1000, "errors": [],
+    }
+    got = table.read().orderBy("_id").select("_id", "sku").collect()
+    want = [(1, 1), (2, 2), (3, 5), (4, 6)] if method == "append" else [(1, 5), (2, 6)]
+    assert (res["version"], [tuple(r) for r in got]) == (2, want)
+    assert _persisted(spark) == persisted
+
+
+@pytest.mark.parametrize("method", ["overwrite", "append", "upsert"])
+@pytest.mark.parametrize("kind", sorted(KINDS))
+def test_header_only_source_is_valid_and_loads_nothing(spark, tmp_path, kind, method):
+    """A source with a header and no rows passes the gate with row_count
+    0 under every method, and the gate's counts arrive (no blocked wait)."""
+    wh = str(tmp_path / "wh")
+    first = str(tmp_path / "first.csv")
+    write_csv(first, [(1, "a", 1.0)])
+    empty = str(tmp_path / "empty.csv")
+    write_csv(empty, [])
+    cfg = {"table_name": "empty", "warehouse": wh, "schema_descriptor": DESCRIPTOR,
+           "job_ts": TS1, **KINDS[kind]}
+    run(spark, {**cfg, "resource_path": first, "method": "overwrite"})
+    res = within(120, lambda: run(spark, {
+        **cfg, "resource_path": empty, "method": method, "validate": True,
+    }))
+    assert res["validation"] == {
+        "valid": True, "row_count": 0, "error_count": 0, "error_cap": 1000, "errors": [],
+    }
+    assert res["rows"] == (0 if method == "overwrite" else 1)
+
+
+@pytest.mark.parametrize("kind", sorted(KINDS))
+def test_refused_upsert_into_missing_table_commits_nothing(spark, tmp_path, kind):
+    """An upsert's gate runs before the merge: a refused upsert into a
+    table that does not exist yet does not even create it empty."""
+    wh = str(tmp_path / "wh")
+    bad = str(tmp_path / "bad.csv")
+    write_csv(bad, [("x1", "a", 1.0)])
+    with pytest.raises(ValidationFailure) as exc:
+        run(spark, {"resource_path": bad, "table_name": "fresh", "warehouse": wh,
+                    "schema_descriptor": DESCRIPTOR, "method": "upsert",
+                    "validate": True, **KINDS[kind]})
+    assert exc.value.report["errors"] == [
+        {"row": 2, "field": "sku", "code": "type-error", "value": "x1"}
+    ]
+    assert not ParquetTable(spark, wh, "fresh").exists()
+    assert not os.path.exists(os.path.join(wh, "fresh"))
 
 
 # name -> (CSV text, descriptor fields, loaded (values) or refused [errors])
@@ -230,9 +351,13 @@ def test_pipeline_gate_checks_the_loaded_frame(spark, tmp_path, case):
         "day_first": True,
     }
     if isinstance(want[0], dict):
+        persisted = _persisted(spark)
         with pytest.raises(ValidationFailure) as exc:
             run(spark, cfg)
         assert exc.value.report["errors"] == want
+        assert not ParquetTable(spark, cfg["warehouse"], "gate").exists()
+        assert _data_dirs(cfg["warehouse"], "gate") == []
+        assert _persisted(spark) == persisted
         return
     run(spark, cfg)
     names = [f["name"] for f in fields]
@@ -331,9 +456,12 @@ def test_pipeline_load_job_counts(spark, tmp_path):
     """Pin the exact Spark job count of each load shape, so a numbering,
     persist or table-metadata regression shows up as a counter diff.
     Parquet loads take their schema and row numbers from their files'
-    footers (no inference job, no count pass); the gzip-CSV load keeps its
-    count pass and persist. Table reads, max_id and the report's row count
-    come from the commit record and run no job."""
+    footers (no inference job, no count pass); a gzip CSV is one partition,
+    numbered with no count pass either, and its validation gate rides the
+    write: the write job counts the rows and bad cells, and only the unique
+    check runs besides. A text source of several partitions keeps its count
+    pass and numbers its rows in source order. Table reads, max_id and the
+    report's row count come from the commit record and run no job."""
     import gzip
 
     def parquet(name, rows):
@@ -378,20 +506,32 @@ def test_pipeline_load_job_counts(spark, tmp_path):
     with gzip.open(gz, "wt") as fh:
         fh.write("sku,name,price\n")
         fh.writelines(f"{s},{n},{p}\n" for s, n, p in snapshot)
+    text = {"table_name": "pinned_csv", "warehouse": wh, "schema_descriptor": DESCRIPTOR,
+            "method": "overwrite", "job_ts": TS1}
     got["gzip_csv_validated_overwrite"] = _load_jobs(spark, {
-        "resource_path": gz,
-        "table_name": "pinned_csv",
-        "warehouse": wh,
-        "schema_descriptor": DESCRIPTOR,
-        "method": "overwrite",
-        "validate": True,
-        "job_ts": TS1,
+        **text, "resource_path": gz, "validate": True,
     })
+    got["gzip_csv_overwrite"] = _load_jobs(spark, {**text, "resource_path": gz})
+    csv = str(tmp_path / "snap.csv")
+    with gzip.open(gz, "rt") as src, open(csv, "w") as dst:
+        dst.write(src.read())
+    split = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(split)
+    spark.conf.set(split, "1000")  # the 3.3 KB file is read in splits
+    try:
+        assert read_resource(spark, csv, descriptor=DESCRIPTOR).rdd.getNumPartitions() > 1
+        got["csv_multi_partition_overwrite"] = _load_jobs(spark, {**text, "resource_path": csv})
+    finally:
+        spark.conf.set(split, saved)
+    loaded = ParquetTable(spark, wh, "pinned_csv").read().orderBy("_id").select("_id", "sku")
+    assert [tuple(r) for r in loaded.collect()] == [(s, s) for s, _, _ in snapshot]
     assert got == {
         "parquet_overwrite": 1,
         "parquet_append": 1,
         "parquet_upsert": 10,
         "bucketed_parquet_overwrite": 2,
         "bucketed_correction_upsert": 11,
-        "gzip_csv_validated_overwrite": 7,
+        "gzip_csv_validated_overwrite": 3,
+        "gzip_csv_overwrite": 1,
+        "csv_multi_partition_overwrite": 4,
     }

@@ -169,6 +169,72 @@ def test_desc_order_keys(spark):
     assert sorted(r["_gi"] for r in out.collect()) == list(range(1, 201))
 
 
+def _text_source(spark, tmp_path, n=2000):
+    """The same rows as a gzip CSV (one partition: gzip does not split)
+    and as a plain CSV read in several splits."""
+    import gzip
+
+    text = "val\n" + "".join(f"row_{i}\n" for i in range(n))
+    gz = tmp_path / "src.csv.gz"
+    with gzip.open(gz, "wt") as fh:
+        fh.write(text)
+    plain = tmp_path / "src.csv"
+    plain.write_text(text)
+    reader = spark.read.option("header", "true").schema("val string")
+    return reader.csv(str(gz)), reader.csv(str(plain))
+
+
+def test_one_partition_frame_numbers_without_count_pass(spark, tmp_path):
+    """A one-partition frame has the offsets {0: start}: the numbering
+    builds with no job and no persist, and gives the ids and the schema
+    (``_id`` nullability included) the count pass gives."""
+    one, split = _text_source(spark, tmp_path)
+    assert one.rdd.getNumPartitions() == 1
+    persisted = int(spark.sparkContext._jsc.getPersistentRDDs().size())
+    numbered, jobs = count_jobs(spark, lambda: with_row_number(one, start=5))
+    assert jobs == 0
+    assert int(spark.sparkContext._jsc.getPersistentRDDs().size()) == persisted
+    assert "InMemoryRelation" not in _plan(numbered)
+
+    key = "spark.sql.files.maxPartitionBytes"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "4096")
+    try:
+        assert split.rdd.getNumPartitions() > 1
+        from aircan_spark.frames import scope
+
+        with scope():
+            counted = with_row_number(split, start=5)
+            want = [tuple(r) for r in counted.orderBy("_id").collect()]
+    finally:
+        spark.conf.set(key, saved)
+    assert numbered.schema == counted.schema
+    assert [tuple(r) for r in numbered.orderBy("_id").collect()] == want
+    assert want[0] == (5, "row_0") and want[-1] == (2004, "row_1999")
+
+
+def test_frame_with_exchange_runs_no_extra_job(spark):
+    """The partition count is asked only of a frame without an exchange:
+    AQE would run a shuffle stage to answer. A frame with one keeps the
+    count pass and runs no job besides it."""
+    from aircan_spark.frames import scope
+
+    def grouped():
+        return spark.range(0, 500, numPartitions=3).groupBy((F.col("id") % 7).alias("k")).count()
+
+    def count_pass():
+        tagged = grouped().withColumn("m", F.monotonically_increasing_id()).persist()
+        try:
+            return tagged.groupBy(F.shiftright("m", 33)).count().collect()
+        finally:
+            tagged.unpersist()
+
+    with scope():
+        numbered, jobs = count_jobs(spark, lambda: with_row_number(grouped()))
+        assert sorted(r["_id"] for r in numbered.collect()) == list(range(1, 8))
+    assert jobs == count_jobs(spark, count_pass)[1]
+
+
 # --- number_files: parquet scans numbered from their footers -----------------
 
 

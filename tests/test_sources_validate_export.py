@@ -153,8 +153,8 @@ def test_messy_headers_sanitized(spark, tmp_path):
 
 def _validate(raw, **kwargs):
     """The gate's input: the raw frame numbered once, with its count."""
-    numbered, rows = with_row_number(raw, cache=False, return_count=True)
-    return validate(numbered, DESCRIPTOR, rows, **kwargs)
+    numbered = with_row_number(raw, cache=False)
+    return validate(numbered, DESCRIPTOR, numbered.count(), **kwargs)
 
 
 def test_validate_clean(spark, tmp_path):
