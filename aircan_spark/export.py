@@ -6,7 +6,9 @@ reference materializes a sorted temp table, extracts shards, then
 recursively composes GCS blobs 32-at-a-time with a header blob prepended
 for CSV. On Spark the workaround disappears: ``orderBy("_id").write`` is a
 range-partitioned global sort producing shards whose lexicographic part
-order IS the sort order (O2 for free).
+order IS the sort order (O2 for free). A frame of one partition (a table
+written as one file) is sorted within that partition instead: one job,
+one shard, no shuffle, and the same bytes once composed.
 
 Two output modes:
 - sharded (default, the scale path): part files, CSV shards each carry a
@@ -31,6 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from aircan_spark import ROW_NUMBER_COLUMN
+from aircan_spark.frames import one_partition
 
 EXPORT_EXT = {
     "csv": "csv",
@@ -69,7 +72,10 @@ def export_ordered(
             f"an ordered export without its order column would silently "
             f"produce arbitrary order — pass the right order_column"
         )
-    ordered = df.orderBy(F.col(order_column).asc())
+    if one_partition(df):  # sorted in its one task, no range shuffle
+        ordered = df.coalesce(1).sortWithinPartitions(F.col(order_column).asc())
+    else:
+        ordered = df.orderBy(F.col(order_column).asc())
     shard_dir = os.path.join(out_dir, f"_shards_{ext}")
 
     if ext == "csv":

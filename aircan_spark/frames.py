@@ -27,6 +27,9 @@ already reuses IDENTICAL subtrees, where a persist only adds a fill job.
 signatures, pair corpora, merge stages): default-level blocks sit in the
 heap deserialized, are re-promoted there after a spill, and starve the
 joins and sorts that read them. Bounded frames keep the default level.
+
+``one_partition`` finds, with no job, a frame whose ``coalesce(1)``
+reports ``SinglePartition``: an aggregate or sort over it plans no shuffle.
 """
 
 from __future__ import annotations
@@ -83,6 +86,17 @@ def result_scope(build: Callable[..., DataFrame]) -> Callable[..., DataFrame]:
         return out
 
     return run
+
+
+def one_partition(df: DataFrame) -> bool:
+    """Whether ``df`` is one partition, asked only of a plan without an
+    exchange or subquery (AQE would run their stages to answer): its
+    partitions are then planned on the driver, with no job."""
+    qe = df._jdf.queryExecution()
+    plan = qe.executedPlan()
+    if plan.nodeName() == "AdaptiveSparkPlan" or "Exchange" in plan.toString():
+        return False
+    return qe.toRdd().getNumPartitions() == 1
 
 
 def share(df: DataFrame, big: bool = False) -> DataFrame:

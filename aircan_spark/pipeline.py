@@ -21,8 +21,9 @@ Config keys (names follow the reference's DAG params where they exist):
     unique_keys         upsert keys; else from descriptor constraints
     validate            bool — row-level validation gate (abort on invalid):
                         an overwrite or append is written, and its commit
-                        refused, on the counts its write job observed; an
-                        upsert is checked before its merge
+                        refused, on the counts its write job observed and
+                        the keys it wrote; an upsert is checked before its
+                        merge
     row_number_column   default '_id'
     updated_at_column   default '_updated_at'
     export              optional {'path': dir, 'format': fmt,
@@ -36,7 +37,7 @@ from __future__ import annotations
 import datetime as dt
 from typing import Any
 
-from pyspark.sql import Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from aircan_spark import ROW_NUMBER_COLUMN, UPDATED_AT_COLUMN
@@ -130,27 +131,31 @@ def run(spark: SparkSession, config: dict[str, Any]) -> dict[str, Any]:
 
     # A parquet scan is numbered from its files' footers, and a
     # one-partition source (a gzip text file) from offsets {0: start}: no
-    # count pass, no job. Other sources take the count pass; an ORC scan
-    # re-reads its files deterministically, so it skips the persist that
-    # text re-parses keep (rownum.py cache rule).
+    # count pass, no job. Other sources take the count pass, which returns
+    # its total for the upsert gate; an ORC scan re-reads its files
+    # deterministically, so it skips the persist that text re-parses keep
+    # (rownum.py cache rule).
     fmt = infer_format(path, config.get("resource_format"))
     report: dict[str, Any] | None = None
     check = None
     with scope():  # a count pass's persist, held until the write
-        rows = None
         if fmt == "parquet":
             numbered, rows = number_files(raw, rn_col, start)
         else:
-            numbered = with_row_number(raw, column=rn_col, start=start, cache=fmt != "orc")
+            numbered, rows = with_row_number(
+                raw, column=rn_col, start=start, cache=fmt != "orc", return_count=True
+            )
         source = numbered
 
         # --- validation gate (reference 2b, :287-317) -----------------------
         if config.get("validate"):
-            def gate(row_count: int, cell_errors: int | None = None) -> None:
+            def gate(
+                row_count: int, cell_errors: int | None = None, loaded: DataFrame | None = None
+            ) -> None:
                 nonlocal report
                 report = validate_frame(
                     numbered, descriptor, row_count, cell_errors=cell_errors,
-                    first_id=start, row_column=rn_col, day_first=day_first,
+                    loaded=loaded, first_id=start, row_column=rn_col, day_first=day_first,
                 )
                 if not report["valid"]:
                     raise ValidationFailure(report)
@@ -163,7 +168,8 @@ def run(spark: SparkSession, config: dict[str, Any]) -> dict[str, Any]:
                 gate(numbered.count() if rows is None else rows)
             else:
                 # The write job counts the source's rows and bad cells, and
-                # the commit runs the gate on them before it publishes.
+                # the commit runs the gate on them before it publishes, with
+                # the unique check over the key columns the attempt wrote.
                 obs = Observation()
                 source = numbered.observe(
                     obs,
@@ -171,8 +177,8 @@ def run(spark: SparkSession, config: dict[str, Any]) -> dict[str, Any]:
                     cell_error_count(numbered, descriptor, day_first).alias("cell_errors"),
                 )
 
-                def check() -> None:
-                    gate(**obs.get)
+                def check(attempt: DataFrame) -> None:
+                    gate(**obs.get, loaded=attempt)
 
         typed = conform(source, descriptor, day_first) if declared else source
         if recreate_schema is not None:

@@ -28,13 +28,13 @@ aggregate). The frame is read twice (counts, then numbering), and both
 reads must see the same rows in the same partitions and order.
 
 A frame of one partition needs no count pass: its offsets are ``{0:
-start}``. Without ``order_by``, ``with_row_number`` asks a frame whose
-plan holds no exchange for its partition count, which plans the scan on
-the driver and runs no job (a frame with an exchange keeps the count
-pass: AQE would run its shuffle stages to answer). An unsplittable gzip
-source is one partition, so its numbering is one projection, with no job
-and no persist, and the same literal-map ``_id`` (and schema) a count
-pass gives.
+start}``. Without ``order_by``, ``with_row_number`` asks
+``frames.one_partition``, which answers with no job for a plan without an
+exchange (a frame with an exchange keeps the count pass). An unsplittable
+gzip source is one partition, so its numbering is one projection, with no
+job and no persist, and the same literal-map ``_id`` (and schema) a count
+pass gives. ``return_count`` also returns the count pass's total, as
+``number_files`` returns its footers' rows.
 
 A parquet file scan needs no count pass either: ``number_files`` takes
 the rows of each file from its footer on the driver and numbers
@@ -62,22 +62,11 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from aircan_spark import ROW_NUMBER_COLUMN
-from aircan_spark.frames import share
+from aircan_spark.frames import one_partition, share
 from aircan_spark.sources import parquet_footer
 
 _ROW = "__aircan_row"
 _PART_BITS = 33  # MonotonicallyIncreasingID: partition index << 33
-
-
-def _one_partition(df: DataFrame) -> bool:
-    """Whether ``df`` is one partition, asked only of a plan without an
-    exchange or subquery (AQE would run their stages to answer): its
-    partitions are then planned on the driver, with no job."""
-    qe = df._jdf.queryExecution()
-    plan = qe.executedPlan()
-    if plan.nodeName() == "AdaptiveSparkPlan" or "Exchange" in plan.toString():
-        return False
-    return qe.toRdd().getNumPartitions() == 1
 
 
 def with_row_number(
@@ -86,7 +75,8 @@ def with_row_number(
     start: int = 1,
     order_by: list[str | Column] | None = None,
     cache: bool = True,
-) -> DataFrame:
+    return_count: bool = False,
+) -> DataFrame | tuple[DataFrame, int | None]:
     """Prepend a contiguous row-number column starting at ``start``.
 
     ``order_by``: explicit global ordering columns. When given, the frame is
@@ -99,6 +89,9 @@ def with_row_number(
     numbering); caching guarantees the two passes see identical rows and
     order. Disable only for deterministic, cheap-to-rescan sources (see the
     module's cache rule).
+
+    ``return_count``: return ``(numbered, rows)``, ``rows`` being the count
+    pass's total, or None for a frame numbered without one.
     """
     prepared = df
     if order_by:
@@ -107,22 +100,26 @@ def with_row_number(
     prepared = prepared.withColumn(_ROW, F.monotonically_increasing_id())
 
     part = F.shiftright(F.col(_ROW), _PART_BITS)
-    if not order_by and _one_partition(df):
+    rows = None
+    if not order_by and one_partition(df):
         counts = [(0, 0)]  # offsets {0: start}, whatever its row count
     else:
         if cache:
             prepared = share(prepared)
         counts = prepared.groupBy(part.alias("p")).count().collect()
+        rows = sum(n for _, n in counts)
     entries: list[Column] = []
     acc = start
-    for p, n in sorted(counts):
+    # Offsets enter the plan as a literal map, one entry per non-empty
+    # partition (partition 0 for an empty frame, so ``_id`` is nullable on
+    # every load), shipped with the task closure. No join, no shuffle.
+    for p, n in sorted(counts) or [(0, 0)]:
         entries += [F.lit(p).cast("long"), F.lit(acc - (p << _PART_BITS)).cast("long")]
         acc += n
-    # Offsets enter the plan as a literal map, one entry per non-empty
-    # partition, shipped with the task closure. No join, no shuffle.
-    delta = F.create_map(*entries)[part] if entries else F.lit(0)
+    delta = F.create_map(*entries)[part]
     data_cols = [c for c in df.columns if c != column]
-    return prepared.select((F.col(_ROW) + delta).alias(column), *data_cols)
+    numbered = prepared.select((F.col(_ROW) + delta).alias(column), *data_cols)
+    return (numbered, rows) if return_count else numbered
 
 
 def footer_rows(spark: SparkSession, files: list[str]) -> list[int]:

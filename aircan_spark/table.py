@@ -37,12 +37,13 @@ Reference analogs: table lifecycle D1/D2/D7 (warehouse.py:61-69,138-151,
 445-456), loads K2/K3 (warehouse.py:73-135,300-359), upsert J1
 (warehouse.py:430-491).
 
-A load may pass a pre-commit ``check``: the commit runs it after the
-write and before it publishes, and when it raises, the attempt's data dir
-is deleted and the version does not move (Delta enforces CHECK
-constraints inside the write transaction the same way). ``pipeline.run``'s
-validation gate is one: the write job observes the source's row and bad
-cell counts, and the gate reads them there.
+A load may pass a pre-commit ``check(attempt)``: the commit runs it on a
+scan of the dirs this write produced, after the write and before it
+publishes, and when it raises, the attempt's data dir is deleted and the
+version does not move (Delta checks its CHECK constraints on the rows a
+transaction wrote, inside its commit). ``pipeline.run``'s validation gate
+is one: it reads the source's row and bad cell counts the write job
+observed, and checks the attempt's keys for duplicates.
 
 Concurrency contract (the reference gets this from BigQuery job atomicity;
 this engine states it explicitly): ONE writer per table at a time is the
@@ -80,6 +81,7 @@ from aircan_spark import upsert as upsert_mod
 from aircan_spark.frames import scope
 
 _MANIFEST = "_MANIFEST.json"
+Check = Callable[[DataFrame], None]  # a pre-commit check of the attempt's rows
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -180,19 +182,22 @@ class ParquetTable:
         rows: int,
         max_id: int,
         schema: dict,
-        check: Callable[[], None] | None = None,
+        check: Check | None = None,
     ) -> None:
         """Publish ``version`` of the manifest unless ``check`` raises or
         another writer committed since this operation read version - 1; the
-        previous version moves into the history. A refused ``check``
-        deletes the attempt's dir ``data_v{version}``, unless a committed
-        version lists it."""
+        previous version moves into the history. ``check`` is passed a scan
+        of the dirs this attempt wrote (``data_v{version}``) with ``schema``,
+        built with no job. A refused ``check`` deletes the attempt's dir,
+        unless a committed version lists it."""
         os.makedirs(self.path, exist_ok=True)
+        data_dir = f"data_v{version}"
         if check is not None:
+            attempt = {b: [d for d in dirs if d.split("/")[0] == data_dir]
+                       for b, dirs in buckets.items()}
             try:
-                check()
+                check(self._scan({"buckets": attempt, "schema": schema}))
             except BaseException:
-                data_dir = f"data_v{version}"
                 m = self.manifest()
                 if m is None or data_dir not in _listed(m):
                     shutil.rmtree(os.path.join(self.path, data_dir), ignore_errors=True)
@@ -308,14 +313,12 @@ class ParquetTable:
                 cols.append(df[f.name])
         return df.select(*cols) if changed else df
 
-    def overwrite(self, df: DataFrame, check: Callable[[], None] | None = None) -> None:
+    def overwrite(self, df: DataFrame, check: Check | None = None) -> None:
         """WRITE_TRUNCATE analog (reference K2): the table as a new data
         dir, committed as the next version unless ``check`` refuses it."""
         self._rewrite(df, self.current_version() + 1, check)
 
-    def _rewrite(
-        self, df: DataFrame, version: int, check: Callable[[], None] | None = None
-    ) -> None:
+    def _rewrite(self, df: DataFrame, version: int, check: Check | None = None) -> None:
         """Write ``df`` as the whole table and commit it as ``version``."""
         written, stats = self._write(df, version)
         buckets = {b: [d] for b, d in written.items()}
@@ -323,7 +326,7 @@ class ParquetTable:
             version, buckets, stats["rows"], stats["max_id"], df.schema.jsonValue(), check
         )
 
-    def append(self, df: DataFrame, check: Callable[[], None] | None = None) -> None:
+    def append(self, df: DataFrame, check: Check | None = None) -> None:
         """WRITE_APPEND with additive schema evolution (reference K3/D3):
         the batch, cast to the table's types, is written as a new data dir
         added to the dir lists it lands in — zero rewrite of existing data

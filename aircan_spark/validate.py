@@ -15,15 +15,18 @@ sources in their native types), which it neither caches nor counts: the
 caller supplies ``row_count``. ``pipeline.run`` gates an overwrite or
 append inside its write: the write job observes the source's rows and
 ``cell_error_count``, and the table's pre-commit check calls ``validate``
-with both. With no bad cell, only the unique aggregates run; the report
+with both and the attempt's written rows, whose key columns the unique
+aggregates read. With no bad cell, only those aggregates run; the report
 query (below) runs only on a load it refuses. An upsert is gated before
-its merge, with the numbering's count or one count of the source.
+its merge over the source, with the numbering's count or one count of
+the source.
 
 - type errors: a non-null raw cell whose ``conform`` cast is NULL is a
   ``type-error``, reported with the cell's source text (same detection
   frictionless does, but vectorized JVM-side, no Python in the loop).
 - ``required`` violations: NULL/empty in a required field.
-- ``unique`` violations: groupBy(conformed key).count() > 1.
+- ``unique`` violations: groupBy(conformed key).count() > 1, listed in
+  ascending key order.
 
 The error frame is only ever materialized via ``limit(error_cap)`` — the
 scan short-circuits instead of collecting everything.
@@ -38,6 +41,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from aircan_spark import ROW_NUMBER_COLUMN
+from aircan_spark.frames import one_partition
 from aircan_spark.schema import descriptor_to_struct
 
 ERROR_CAP = 1000  # reference default limit_errors (pipeline_ckan_to_bigquery.py:296)
@@ -111,6 +115,7 @@ def validate(
     row_count: int,
     *,
     cell_errors: int | None = None,
+    loaded: DataFrame | None = None,
     first_id: int = 1,
     row_column: str = ROW_NUMBER_COLUMN,
     error_cap: int = ERROR_CAP,
@@ -126,6 +131,13 @@ def validate(
     ``cell_errors``: the frame's ``cell_error_count``, when the caller
     already observed it. At 0 only the unique aggregates run; otherwise
     the report query lists the bad cells as well.
+
+    ``loaded``: the rows written from ``numbered``, its fields conformed.
+    When given, the unique aggregates read its key columns, not the
+    source's, so the check reads what is loaded. A one-partition frame (a
+    one-file attempt, a gzip source) is aggregated in one job, no shuffle.
+    Duplicate keys follow the cell errors in ascending key order (the
+    smallest, past ``error_cap``), however the frame is partitioned.
 
     Returns a report dict shaped like the reference's abort payload
     (pipeline_ckan_to_bigquery.py:300-311): ``valid``, ``row_count``,
@@ -163,16 +175,21 @@ def validate(
         ).select("row", "e.field", "e.code", "e.value")
         error_frames.append(errs)
 
-    # unique-constraint violations: conformed keys appearing more than once.
+    # unique-constraint violations: conformed keys appearing more than once,
+    # in ascending key order (a top-k, so the cap keeps the smallest keys).
     for f in fields:
         if (f.get("constraints") or {}).get("unique"):
             name = f["name"]
+            keys = numbered.select(casts[name]) if loaded is None else loaded.select(name)
+            if one_partition(keys):
+                keys = keys.coalesce(1)  # aggregated in its one task, no shuffle
+            # count(name) is 0 for the NULL key: no NULL filter for the scan
             dupes = (
-                numbered.select(casts[name])
-                .where(F.col(name).isNotNull())
-                .groupBy(name)
-                .agg(F.count(F.lit(1)).alias("n"))
+                keys.groupBy(name)
+                .agg(F.count(name).alias("n"))
                 .filter(F.col("n") > 1)
+                .orderBy(name)
+                .limit(error_cap)
                 .select(
                     F.lit(-1).cast("long").alias("row"),
                     F.lit(name).alias("field"),

@@ -1,3 +1,4 @@
+import contextlib
 import os
 import sys
 import threading
@@ -8,6 +9,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from aircan_spark.session import get_spark  # noqa: E402
+from perfbench.trace import group_counters  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -29,7 +31,8 @@ def sf_dir():
 
 def count_jobs(spark, fn):
     """Run ``fn`` under its own job group; return (its result, the Spark
-    jobs it ran)."""
+    jobs it ran, their ``{"input": bytes read, "shuffle": bytes shuffle
+    written}``)."""
     sc = spark.sparkContext
     group = f"count-jobs-{uuid.uuid4().hex}"
     sc.setJobGroup(group, group)
@@ -38,7 +41,19 @@ def count_jobs(spark, fn):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
     sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events arrive async
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    c = group_counters(sc, [group])[group]
+    return out, c["jobs"], {"input": int(c["input_bytes"]), "shuffle": int(c["shuffle_write_bytes"])}
+
+
+@contextlib.contextmanager
+def session_conf(spark, key, value):
+    """Set the session conf ``key`` to ``value`` for the block."""
+    saved = spark.conf.get(key)
+    spark.conf.set(key, str(value))
+    try:
+        yield
+    finally:
+        spark.conf.set(key, saved)
 
 
 def within(seconds, fn):

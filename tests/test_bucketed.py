@@ -380,3 +380,42 @@ def test_append_and_upsert_cast_to_table_types(spark, tmp_path):
     assert sorted((r["k"], r["price"]) for r in got.collect()) == [
         (1, 10), (2, 21), (3, 30), (4, 40)
     ]
+
+
+@pytest.mark.parametrize("bucketed", [False, True])
+def test_check_is_passed_the_attempts_rows(spark, tmp_path, bucketed):
+    """A load's pre-commit check gets a scan of the dirs this attempt
+    wrote (``data_v{N}``, or ``data_v{N}/__bucket=b`` for a bucketed
+    table) under the schema the commit records: the appended batch, not
+    the committed rows. A refusal deletes those dirs and leaves the
+    version."""
+    t = (
+        BucketedParquetTable(spark, str(tmp_path), "t", keys=["k"], num_buckets=4)
+        if bucketed
+        else ParquetTable(spark, str(tmp_path), "t")
+    )
+    t.overwrite(base_df(spark, 20))
+    batch = base_df(spark, 30).filter(F.col("k") > 20)
+    seen = {}
+
+    def check(attempt):
+        seen["rows"] = sorted(tuple(r) for r in attempt.select(ROW_NUMBER_COLUMN, "k").collect())
+        seen["files"] = attempt.inputFiles()
+        seen["schema"] = attempt.schema
+
+    t.append(batch, check)
+    assert seen["rows"] == [(i, i) for i in range(21, 31)]
+    assert seen["schema"] == t.read().schema
+    if bucketed:
+        dirs = {f.split("/data_v2/")[1].split("/")[0] for f in seen["files"]}
+        assert len(dirs) > 1 and all(d.startswith("__bucket=") for d in dirs), dirs
+    else:
+        assert all("/data_v2/part-" in f for f in seen["files"]), seen["files"]
+
+    def refuse(attempt):
+        raise ValueError("refused")
+
+    with pytest.raises(ValueError, match="refused"):
+        t.append(base_df(spark, 40).filter(F.col("k") > 30), refuse)
+    assert (t.current_version(), t.row_count()) == (2, 30)
+    assert not (tmp_path / "t" / "data_v3").exists()

@@ -1568,5 +1568,5 @@ def test_corpus_count_reads_a_rewritten_file_with_no_job(spark, tmp_path):
         pq.write_table(pa.table({"vec_id": list(range(n))}), path)
         return corpus_count(spark, str(tmp_path), "embeddings")
 
-    got, jobs = count_jobs(spark, lambda: [rewrite_and_count(n) for n in (7, 3)])
+    got, jobs, _ = count_jobs(spark, lambda: [rewrite_and_count(n) for n in (7, 3)])
     assert (got, jobs) == ([7, 3], 0)

@@ -5,7 +5,7 @@ import json
 import os
 
 import pytest
-from conftest import count_jobs, within
+from conftest import count_jobs, session_conf, within
 
 from aircan_spark.pipeline import ValidationFailure, run
 from aircan_spark.sources import read_resource
@@ -305,6 +305,88 @@ def test_refused_upsert_into_missing_table_commits_nothing(spark, tmp_path, kind
     assert not os.path.exists(os.path.join(wh, "fresh"))
 
 
+SPLIT = "spark.sql.files.maxPartitionBytes"  # text sources are read in splits of this
+
+
+@pytest.mark.parametrize("method", ["overwrite", "upsert"])
+def test_duplicate_keys_reported_in_key_order(spark, tmp_path, method):
+    """A refused report lists duplicate keys after the bad cells, in
+    ascending key order, however the rows are partitioned: one split or
+    several of the source (an upsert's gate) and one file or several of
+    the attempt (an overwrite's gate) give the same report."""
+    keys = [9, 3, 7, 5, 42, 100, 64, 13]
+    src = str(tmp_path / "dupes.csv")
+    write_csv(src, [(k, f"n{i}", "x" if i == 4 else 1.0) for i, k in enumerate(keys * 2)])
+    cfg = {"resource_path": src, "warehouse": str(tmp_path / "wh"), "method": method,
+           "schema_descriptor": DESCRIPTOR, "validate": True}
+    reports = {}
+    for splits in (False, True):
+        with session_conf(spark, SPLIT, 64 if splits else 128 << 20):
+            assert (read_resource(spark, src).rdd.getNumPartitions() > 1) == splits
+            with pytest.raises(ValidationFailure) as exc:
+                run(spark, {**cfg, "table_name": f"dupes_{splits}"})
+        reports[splits] = exc.value.report
+    assert reports[True] == reports[False]
+    assert reports[False]["errors"] == [
+        {"row": 6, "field": "price", "code": "type-error", "value": "x"}
+    ] + [
+        {"row": -1, "field": "sku", "code": "constraint-error:unique", "value": str(k)}
+        for k in sorted(keys)
+    ]
+
+
+def test_header_only_source_records_one_schema(spark, tmp_path):
+    """A header-only source records the same manifest schema, ``_id``
+    nullable, whether it is read as one partition or in several splits
+    (an empty count pass maps partition 0 as a one-partition frame does)."""
+    empty = str(tmp_path / "empty.csv")
+    write_csv(empty, [])
+    wh = str(tmp_path / "wh")
+    schemas = {}
+    for splits in (False, True):
+        with session_conf(spark, SPLIT, 4 if splits else 128 << 20):
+            parts = read_resource(spark, empty, descriptor=DESCRIPTOR).rdd.getNumPartitions()
+            assert (parts > 1) == splits
+            run(spark, {"resource_path": empty, "table_name": f"empty_{splits}", "warehouse": wh,
+                        "schema_descriptor": DESCRIPTOR, "job_ts": TS1})
+        schemas[splits] = ParquetTable(spark, wh, f"empty_{splits}").manifest()["schema"]
+    assert schemas[True] == schemas[False]
+    assert schemas[False]["fields"][0]["name"] == "_id"
+    assert schemas[False]["fields"][0]["nullable"] is True
+
+
+def test_recreate_gate_checks_the_curators_types(spark, tmp_path):
+    """Under ``on_schema_drift='recreate'`` the attempt holds the
+    curator's types, and the unique check reads them: keys distinct as
+    declared numbers but equal once loaded as integers are refused, and
+    the committed version stays."""
+    wh = str(tmp_path / "wh")
+    fields = [{"name": "sku", "type": "number", "constraints": {"unique": True}},
+              {"name": "name", "type": "string"}]
+    first = tmp_path / "v1.csv"
+    first.write_text("sku,name\n1,a\n2,b\n")
+    base = {"table_name": "drift", "warehouse": wh, "validate": True, "job_ts": TS1}
+    run(spark, {**base, "resource_path": str(first), "schema_descriptor": {"fields": fields}})
+    drift = {**base, "method": "append", "on_schema_drift": "recreate",
+             "data_dictionary": {"sku": "integer"},
+             "schema_descriptor": {"fields": fields + [{"name": "extra", "type": "string"}]}}
+    dupes = tmp_path / "dupes.csv"
+    dupes.write_text("sku,name,extra\n1.2,c,x\n1.4,d,y\n2.5,e,z\n")
+    with pytest.raises(ValidationFailure) as exc:
+        run(spark, {**drift, "resource_path": str(dupes)})
+    assert exc.value.report["errors"] == [
+        {"row": -1, "field": "sku", "code": "constraint-error:unique", "value": "1"}
+    ]
+    table = ParquetTable(spark, wh, "drift")
+    assert (table.current_version(), _data_dirs(wh, "drift")) == (1, ["data_v1"])
+    good = tmp_path / "good.csv"
+    good.write_text("sku,name,extra\n1.2,c,x\n2.5,e,z\n")
+    assert run(spark, {**drift, "resource_path": str(good)})["method"] == "overwrite"
+    assert [tuple(r) for r in table.read().orderBy("_id").select("_id", "sku").collect()] == [
+        (1, 1), (2, 2)
+    ]
+
+
 # name -> (CSV text, descriptor fields, loaded (values) or refused [errors])
 GATE_CASES = {
     # cells the gate passed and the load nulled
@@ -449,7 +531,13 @@ def test_dag_task_body_runs_pipeline(spark, tmp_path):
 
 def _load_jobs(spark, config):
     """Run one pipeline load; return its job count."""
-    return count_jobs(spark, lambda: run(spark, config))[1]
+    return _load_io(spark, config)[0]
+
+
+def _load_io(spark, config):
+    """Run one pipeline load; return its job count and its
+    ``{"input", "shuffle"}`` bytes."""
+    return count_jobs(spark, lambda: run(spark, config))[1:]
 
 
 def test_pipeline_load_job_counts(spark, tmp_path):
@@ -459,9 +547,12 @@ def test_pipeline_load_job_counts(spark, tmp_path):
     footers (no inference job, no count pass); a gzip CSV is one partition,
     numbered with no count pass either, and its validation gate rides the
     write: the write job counts the rows and bad cells, and only the unique
-    check runs besides. A text source of several partitions keeps its count
-    pass and numbers its rows in source order. Table reads, max_id and the
-    report's row count come from the commit record and run no job."""
+    check runs besides, over the one file the attempt wrote, in one job with
+    no shuffle. The ordered export of that one-file table is one job too. A
+    text source of several partitions keeps its count pass and numbers its
+    rows in source order; its validated upsert gates on the count pass's
+    total. Table reads, max_id and the report's row count come from the
+    commit record and run no job."""
     import gzip
 
     def parquet(name, rows):
@@ -508,30 +599,41 @@ def test_pipeline_load_job_counts(spark, tmp_path):
         fh.writelines(f"{s},{n},{p}\n" for s, n, p in snapshot)
     text = {"table_name": "pinned_csv", "warehouse": wh, "schema_descriptor": DESCRIPTOR,
             "method": "overwrite", "job_ts": TS1}
-    got["gzip_csv_validated_overwrite"] = _load_jobs(spark, {
+    got["gzip_csv_validated_overwrite"], validated_io = _load_io(spark, {
         **text, "resource_path": gz, "validate": True,
     })
-    got["gzip_csv_overwrite"] = _load_jobs(spark, {**text, "resource_path": gz})
+    # the source is read once, by the write; the check scans the file the
+    # write produced, no more
+    written = ParquetTable(spark, wh, "pinned_csv").read().select("sku")
+    key_bytes = count_jobs(spark, written.collect)[2]["input"]
+    assert validated_io == {"input": os.path.getsize(gz) + key_bytes, "shuffle": 0}
+    got["gzip_csv_validated_overwrite_export"], export_io = _load_io(spark, {
+        **text, "resource_path": gz, "validate": True,
+        "export": {"path": str(tmp_path / "out"), "format": "csv", "single_file": True},
+    })
+    assert export_io["shuffle"] == 0
+    got["gzip_csv_overwrite"], plain_io = _load_io(spark, {**text, "resource_path": gz})
+    assert plain_io == {"input": os.path.getsize(gz), "shuffle": 0}
     csv = str(tmp_path / "snap.csv")
     with gzip.open(gz, "rt") as src, open(csv, "w") as dst:
         dst.write(src.read())
-    split = "spark.sql.files.maxPartitionBytes"
-    saved = spark.conf.get(split)
-    spark.conf.set(split, "1000")  # the 3.3 KB file is read in splits
-    try:
+    with session_conf(spark, SPLIT, 1000):  # the 3.3 KB file is read in splits
         assert read_resource(spark, csv, descriptor=DESCRIPTOR).rdd.getNumPartitions() > 1
         got["csv_multi_partition_overwrite"] = _load_jobs(spark, {**text, "resource_path": csv})
-    finally:
-        spark.conf.set(split, saved)
-    loaded = ParquetTable(spark, wh, "pinned_csv").read().orderBy("_id").select("_id", "sku")
-    assert [tuple(r) for r in loaded.collect()] == [(s, s) for s, _, _ in snapshot]
+        loaded = ParquetTable(spark, wh, "pinned_csv").read().orderBy("_id").select("_id", "sku")
+        assert [tuple(r) for r in loaded.collect()] == [(s, s) for s, _, _ in snapshot]
+        got["csv_multi_partition_validated_upsert"] = _load_jobs(spark, {
+            **text, "resource_path": csv, "method": "upsert", "validate": True, "job_ts": TS2,
+        })
     assert got == {
         "parquet_overwrite": 1,
         "parquet_append": 1,
         "parquet_upsert": 10,
         "bucketed_parquet_overwrite": 2,
         "bucketed_correction_upsert": 11,
-        "gzip_csv_validated_overwrite": 3,
+        "gzip_csv_validated_overwrite": 2,
+        "gzip_csv_validated_overwrite_export": 3,
         "gzip_csv_overwrite": 1,
         "csv_multi_partition_overwrite": 4,
+        "csv_multi_partition_validated_upsert": 14,
     }

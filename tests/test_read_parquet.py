@@ -222,7 +222,7 @@ def test_reads_run_no_job(spark, layouts):
     a file or a Spark-written directory, partitioned or not, and the rows
     read are Spark's."""
     for layout in ("spark_file", "spark_dir_multi_file", "spark_partition_by"):
-        df, jobs = count_jobs(spark, lambda: read_parquet(spark, layouts[layout]))
+        df, jobs, _ = count_jobs(spark, lambda: read_parquet(spark, layouts[layout]))
         assert jobs == 0, layout
         assert sorted(df.collect()) == sorted(spark.read.parquet(layouts[layout]).collect())
 
@@ -233,7 +233,7 @@ def test_merge_schema_keeps_sparks_inference(spark, layouts):
     path = layouts["spark_partition_by"]
     spark.conf.set("spark.sql.parquet.mergeSchema", "true")
     try:
-        df, jobs = count_jobs(spark, lambda: read_parquet(spark, path))
+        df, jobs, _ = count_jobs(spark, lambda: read_parquet(spark, path))
         assert jobs == 1
         assert df.schema == spark.read.parquet(path).schema
     finally:
@@ -246,7 +246,7 @@ def test_load_table_runs_no_job(spark, sf_dir):
 
     saved = data._TABLE_CACHE.pop(spark, None)
     try:
-        df, jobs = count_jobs(spark, lambda: data.load_table(spark, sf_dir, "orders"))
+        df, jobs, _ = count_jobs(spark, lambda: data.load_table(spark, sf_dir, "orders"))
     finally:
         data._TABLE_CACHE.pop(spark, None)
         if saved is not None:

@@ -191,7 +191,7 @@ def test_one_partition_frame_numbers_without_count_pass(spark, tmp_path):
     one, split = _text_source(spark, tmp_path)
     assert one.rdd.getNumPartitions() == 1
     persisted = int(spark.sparkContext._jsc.getPersistentRDDs().size())
-    numbered, jobs = count_jobs(spark, lambda: with_row_number(one, start=5))
+    numbered, jobs, _ = count_jobs(spark, lambda: with_row_number(one, start=5))
     assert jobs == 0
     assert int(spark.sparkContext._jsc.getPersistentRDDs().size()) == persisted
     assert "InMemoryRelation" not in _plan(numbered)
@@ -230,7 +230,7 @@ def test_frame_with_exchange_runs_no_extra_job(spark):
             tagged.unpersist()
 
     with scope():
-        numbered, jobs = count_jobs(spark, lambda: with_row_number(grouped()))
+        numbered, jobs, _ = count_jobs(spark, lambda: with_row_number(grouped()))
         assert sorted(r["_id"] for r in numbered.collect()) == list(range(1, 8))
     assert jobs == count_jobs(spark, count_pass)[1]
 
@@ -252,7 +252,7 @@ def _write_files(root, files):
 def test_number_files_builds_with_no_job_exchange_or_cache(spark, tmp_path):
     _write_files(tmp_path / "src", {"a.parquet": list(range(7)), "b.parquet": list(range(5))})
     df = spark.read.parquet(str(tmp_path / "src"))
-    (numbered, rows), jobs = count_jobs(spark, lambda: number_files(df, start=11))
+    (numbered, rows), jobs, _ = count_jobs(spark, lambda: number_files(df, start=11))
     assert (rows, jobs) == (12, 0)
     plan = _plan(numbered)
     assert "Exchange" not in plan and "InMemoryRelation" not in plan, plan

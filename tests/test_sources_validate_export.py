@@ -1,8 +1,11 @@
 """Source format matrix, validation reports, ordered export."""
 
+import glob
 import gzip
 import json
 import os
+
+from conftest import count_jobs, session_conf
 
 from aircan_spark.export import export_ordered
 from aircan_spark.rownum import with_row_number
@@ -269,6 +272,58 @@ def test_export_csv_sharded_order(spark, tmp_path):
                     first_of_each.append(int(line.split(",")[0]))
         assert first_of_each == sorted(first_of_each)
     assert sorted(ids) == list(range(1, 5001))
+
+
+def _scrambled_table(spark, tmp_path, files):
+    """A table of 200 rows whose ``_id`` order is not its file order, in
+    ``files`` data files (an overwrite, then appends)."""
+    from aircan_spark.table import ParquetTable
+
+    t = ParquetTable(spark, str(tmp_path / "wh"), "t")
+    ids = [(i * 37) % 200 + 1 for i in range(200)]
+    for n in range(files):
+        rows = [(i, f"v{i % 7}", i * 0.5) for i in ids[n::files]]
+        df = spark.createDataFrame(rows, "_id long, v string, x double").coalesce(1)
+        (t.append if n else t.overwrite)(df)
+    return t
+
+
+# AQE would coalesce a small range sort into one shard
+COALESCE = "spark.sql.adaptive.coalescePartitions.enabled"
+
+
+def test_export_one_file_table_sorts_in_its_one_task(spark, tmp_path):
+    """A table written as one file is one partition: its export sorts in
+    that partition's one task (one job, no shuffle), and composes the same
+    bytes as the range sort of the same rows."""
+    t = _scrambled_table(spark, tmp_path, files=1)
+    out, jobs, io = count_jobs(
+        spark, lambda: export_ordered(t.read(), str(tmp_path / "one"), "csv", single_file=True)
+    )
+    assert (jobs, io["shuffle"]) == (1, 0)
+    ranged = t.read().repartition(3)  # an exchange: the range-sort path
+    with session_conf(spark, COALESCE, "false"):
+        want = export_ordered(ranged, str(tmp_path / "ranged"), "csv", single_file=True)
+    assert open(out, "rb").read() == open(want, "rb").read()
+    assert [int(line.split(",")[0]) for line in open(out).read().splitlines()[1:]] == list(
+        range(1, 201)
+    )
+
+
+def test_export_several_file_table_keeps_range_sort(spark, tmp_path):
+    """A table of several files keeps the range-partitioned sort: the
+    shards' part order is the ``_id`` order."""
+    t = _scrambled_table(spark, tmp_path, files=3)
+    with session_conf(spark, COALESCE, "false"):
+        out, _, io = count_jobs(spark, lambda: export_ordered(t.read(), str(tmp_path / "o"), "csv"))
+    assert io["shuffle"] > 0
+    shards = []
+    for part in sorted(glob.glob(os.path.join(out, "part-*"))):
+        ids = [int(line.split(",")[0]) for line in open(part).read().splitlines()[1:]]
+        if ids:
+            shards.append(ids)
+    assert len(shards) > 1
+    assert [i for ids in shards for i in ids] == list(range(1, 201))
 
 
 def test_read_orc_and_export_orc_roundtrip(spark, tmp_path):

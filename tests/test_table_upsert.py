@@ -435,7 +435,7 @@ def test_read_version_uses_recorded_schema(spark, tmp_path, kind):
         [(50, "eps", 5.0, 99)], "sku long, name string, price double, supplier_id long"
     )
     t.append(with_row_number(extra, start=4).withColumn("_updated_at", F.lit(TS2)))
-    old, jobs = count_jobs(spark, lambda: t.read_version(prev))
+    old, jobs, _ = count_jobs(spark, lambda: t.read_version(prev))
     assert jobs == 0
     assert "supplier_id" not in old.columns
     assert sorted(map(tuple, old.collect())) == want
@@ -473,7 +473,7 @@ def assert_record_invariant(spark, table, max_id=None):
     job, and each answer equals what a scan of the live files gives.
     ``max_id``: the value the record must keep instead of the scanned one
     (a bucketed delete keeps the pre-delete max so ids are never reused)."""
-    (rows, got_max, schema), jobs = count_jobs(
+    (rows, got_max, schema), jobs, _ = count_jobs(
         spark, lambda: (table.row_count(), table.max_id(), table.read().schema)
     )
     assert jobs == 0
