@@ -164,8 +164,9 @@ def run(spark: SparkSession, config: dict[str, Any]) -> dict[str, Any]:
                 # The merge reads the stage through a dedup and a persist,
                 # where an observation never arrives on an empty stage: the
                 # gate runs before the merge, counting the source if the
-                # numbering did not.
-                gate(numbered.count() if rows is None else rows)
+                # numbering did not (a one-partition source, counted in
+                # its one task with no shuffle).
+                gate(numbered.coalesce(1).count() if rows is None else rows)
             else:
                 # The write job counts the source's rows and bad cells, and
                 # the commit runs the gate on them before it publishes, with

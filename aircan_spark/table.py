@@ -14,24 +14,30 @@ al., VLDB 2020):
 
 ``buckets`` maps a bucket id to the data dirs that hold its rows. The flat
 ``ParquetTable`` is the one-bucket case, ``{"0": ["data_v1", "data_v2"]}``;
-``BucketedParquetTable`` (bucketed.py) hash-buckets rows by key so upsert
-and delete rewrite only the buckets they touch. ``rows``, ``max_id``
-(MAX(_id), 0 without an ``_id`` column) and ``schema`` are counted by each
-write job itself (``write_observed``), so ``read()`` (recorded schema, no
-footer inference), ``max_id()`` and ``row_count()`` run no Spark job
-(reference A1, warehouse.py:13-31). ``history`` keeps the previous
-version's ``{version, buckets, schema}``, which ``read_version`` scans the
-same way; the commit deletes data dirs no retained version lists.
+``BucketedParquetTable`` (bucketed.py) hash-buckets rows by key. ``rows``,
+``max_id`` and ``schema`` are counted by each write job itself
+(``write_observed``), so ``read()`` (recorded schema, no footer
+inference), ``max_id()`` and ``row_count()`` run no Spark job (reference
+A1, warehouse.py:13-31). ``max_id`` is the highest ``_id`` written since
+the last overwrite (0 without an ``_id`` column): no later write lowers
+it, so an insert never reuses the id of a deleted row. ``history`` keeps
+the previous version's ``{version, buckets, schema}``, which
+``read_version`` scans the same way; the commit deletes data dirs no
+retained version lists.
 
 Each load is one atomic commit, as each is one warehouse job in the
 reference (warehouse.py:300-359,430-491): overwrite (K2) writes the table
 as a new dir; append (K3/D3) writes the batch as a new dir and adds it to
 the dir lists, with the schema widened to the union (old fields, then new
-— reference ALLOW_FIELD_ADDITION, warehouse.py:106-172); upsert (J1) and
-delete rewrite. A write that fails before its commit leaves an unlisted dir
-that readers never see and the next commit removes. (Production
-deployments would use Delta/Iceberg; the mechanism here keeps the engine
-dependency-free while preserving the semantics.)
+— reference ALLOW_FIELD_ADDITION, warehouse.py:106-172). Upsert (J1),
+delete and compact share one path for both kinds: rewrite the buckets a
+key set touches and commit, the other buckets keeping their dirs. Each
+kind supplies its layout (``_write``) and the buckets a key set touches
+(``_touched``): every listed bucket for the flat table, with no job. A
+write that fails before its commit leaves an unlisted dir that readers
+never see and the next commit removes. (Production deployments would use
+Delta/Iceberg; the mechanism here keeps the engine dependency-free while
+preserving the semantics.)
 
 Reference analogs: table lifecycle D1/D2/D7 (warehouse.py:61-69,138-151,
 445-456), loads K2/K3 (warehouse.py:73-135,300-359), upsert J1
@@ -76,7 +82,7 @@ from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from aircan_spark import ROW_NUMBER_COLUMN, UPDATED_AT_COLUMN
+from aircan_spark import ROW_NUMBER_COLUMN
 from aircan_spark import upsert as upsert_mod
 from aircan_spark.frames import scope
 
@@ -316,15 +322,10 @@ class ParquetTable:
     def overwrite(self, df: DataFrame, check: Check | None = None) -> None:
         """WRITE_TRUNCATE analog (reference K2): the table as a new data
         dir, committed as the next version unless ``check`` refuses it."""
-        self._rewrite(df, self.current_version() + 1, check)
-
-    def _rewrite(self, df: DataFrame, version: int, check: Check | None = None) -> None:
-        """Write ``df`` as the whole table and commit it as ``version``."""
-        written, stats = self._write(df, version)
+        v = self.current_version() + 1
+        written, stats = self._write(df, v)
         buckets = {b: [d] for b, d in written.items()}
-        self._commit(
-            version, buckets, stats["rows"], stats["max_id"], df.schema.jsonValue(), check
-        )
+        self._commit(v, buckets, stats["rows"], stats["max_id"], df.schema.jsonValue(), check)
 
     def append(self, df: DataFrame, check: Check | None = None) -> None:
         """WRITE_APPEND with additive schema evolution (reference K3/D3):
@@ -351,29 +352,48 @@ class ParquetTable:
             check,
         )
 
-    def delete(self, keys_df: DataFrame, keys: list[str]) -> int:
-        """Targeted key delete (GDPR): rewrite the table without rows
-        whose key tuple appears in ``keys_df`` (LEFT ANTI), committed as
-        a new version — the previous version stays readable until the
-        history retires it, and ``_id`` numbering is unaffected (MAX over
-        survivors can only shrink; inserts still number above any
-        historical max via the table's own MAX+1). This is the
-        full-rewrite form; ``BucketedParquetTable.delete`` is the
-        bucket-pruned 100 TB path. Returns rows deleted (both counts come
-        from the manifest)."""
-        current = self.read()
-        n_before = self.row_count()
-        remaining = current.join(
-            keys_df.select(*keys).distinct(), on=keys, how="left_anti"
-        )
-        self.overwrite(remaining)
-        return n_before - self.row_count()
+    # ---- rewrites: upsert, delete and compact --------------------------------
+    def _touched(self, m: dict, keys_df: DataFrame) -> list[str]:
+        """The buckets of version ``m`` that the key tuples of ``keys_df``
+        can be in: for the flat table, every listed bucket, with no job."""
+        return list(m["buckets"])
 
-    def create_empty_like(self, df: DataFrame) -> None:
-        """Schema-only clone: CREATE TABLE .. AS SELECT .. WHERE 1=0
-        (reference D2/F3, warehouse.py:138-151)."""
-        if not self.exists():
-            self.overwrite(df.limit(0))
+    def _rewrite_buckets(
+        self,
+        m: dict,
+        touched: list[str],
+        target: DataFrame,
+        df: DataFrame,
+        **extra: Column,
+    ) -> int:
+        """Write ``df`` as the rows of the buckets ``touched`` of version
+        ``m`` (``target`` scans their old rows) and commit it as the next
+        version: the other buckets keep their dirs, ``df``'s new columns
+        widen the schema, and ``max_id`` never drops. The touched buckets'
+        old row count is the write's observed ``kept`` aggregate when
+        ``extra`` has one (a rewrite that writes every old row back), the
+        manifest's rows when no untouched bucket holds any, and otherwise
+        counted. Returns the rows the rewrite took out."""
+        v = int(m["version"]) + 1
+        schema, df = widen(StructType.fromJson(m["schema"]), df)
+        written, stats = self._write(df, v, **extra)
+        if "kept" in stats:
+            before = stats["kept"]
+        elif all(b in touched for b, dirs in m["buckets"].items() if dirs):
+            before = int(m["rows"])
+        else:
+            before = target.count()
+        # a touched bucket the rewrite leaves empty lists no dir
+        buckets = {**m["buckets"], **{b: [] for b in touched}}
+        buckets.update({b: [d] for b, d in written.items()})
+        self._commit(
+            v,
+            buckets,
+            int(m["rows"]) - before + stats["rows"],
+            max(int(m["max_id"]), stats["max_id"]),
+            schema.jsonValue(),
+        )
+        return before - stats["rows"]
 
     def upsert(
         self,
@@ -383,39 +403,73 @@ class ParquetTable:
         preserve_columns: tuple[str, ...] = (),
         job_ts: dt.datetime | None = None,
     ) -> None:
-        """MERGE the stage into this table (reference J1 flow,
-        warehouse.py:430-491): auto-create from stage schema when absent,
-        dedup + join-merge, rewrite as a new version."""
-        if not self.exists():
-            self.create_empty_like(stage)
-        # the version is read BEFORE the table: the merge plan scans this
-        # exact version, so the commit check detects any commit since
-        m = self._require()
-        stage = self._align_types(stage, m)
-        v = int(m["version"]) + 1
+        """MERGE the stage into this table on ``keys`` (reference J1 flow,
+        warehouse.py:430-491): dedup + join-merge of the buckets the
+        stage's keys touch, rewritten as a new version; a missing table is
+        created from the stage (reference D2) as version 1."""
+        self._upsert(stage, keys, preserve_columns, job_ts)
+
+    def _upsert(
+        self,
+        stage: DataFrame,
+        keys: list[str],
+        preserve_columns: tuple[str, ...],
+        job_ts: dt.datetime | None,
+    ) -> None:
+        m = self.manifest()
+        if m is None:  # merge into an empty target with the stage's columns
+            m = {"version": 0, "rows": 0, "max_id": 0, "buckets": {},
+                 "schema": StructType().jsonValue()}
+            touched, target = [], stage.limit(0)
+        else:
+            # cast before the probe: a key's bucket depends on its type
+            stage = self._align_types(stage, m)
+            touched = self._touched(m, stage)
+            target = self._scan(m, touched)
+        start = int(m["max_id"]) + 1
+        # merge writes every old row back with its _id and numbers the
+        # inserts from start, unless the table has no _id: then it
+        # renumbers the old rows as well, and those are counted instead
+        extra = {}
+        if ROW_NUMBER_COLUMN in target.columns:
+            old = F.col(ROW_NUMBER_COLUMN)
+            extra["kept"] = F.count_if(old.isNull() | (old < start))
         with scope():  # merge's stage and insert numbering persists
             merged = upsert_mod.merge(
-                self.read(),
+                target,
                 stage,
                 keys,
                 preserve_columns=preserve_columns,
                 job_ts=job_ts,
-                insert_start=self.max_id() + 1,
+                insert_start=start,
             )
-            self._rewrite(merged, v)
+            self._rewrite_buckets(m, touched, target, merged, **extra)
 
-    def backfill_updated_at(
-        self, job_ts: dt.datetime, column: str = UPDATED_AT_COLUMN
-    ) -> None:
-        """UPDATE t SET _updated_at=@ts WHERE _updated_at IS NULL
-        (reference F1, warehouse.py:337-357) as a coalesce projection."""
-        v = self.current_version() + 1
-        df = self.read()
-        if column not in df.columns:
-            df = df.withColumn(column, F.lit(job_ts))
-        else:
-            df = df.withColumn(column, F.coalesce(F.col(column), F.lit(job_ts)))
-        self._rewrite(df, v)
+    def delete(self, keys_df: DataFrame, keys: list[str]) -> int:
+        """Targeted key delete (GDPR): rewrite the buckets the key tuples
+        of ``keys_df`` touch without the rows that match one (LEFT ANTI),
+        committed as a new version — the previous version stays readable
+        until the history retires it. Returns the rows deleted."""
+        m = self._require()
+        keys_df = keys_df.select(*keys).distinct()
+        touched = self._touched(m, keys_df)
+        if not touched:
+            return 0
+        target = self._scan(m, touched)
+        remaining = target.join(keys_df, on=keys, how="left_anti")
+        return self._rewrite_buckets(m, touched, target, remaining)
+
+    def compact(self, min_dirs: int = 2) -> list[int]:
+        """Rewrite each bucket whose rows span >= ``min_dirs`` data dirs
+        (an append adds a dir per batch; a scan of many small files loses
+        locality) as one dir, its rows untouched; the other buckets keep
+        their dirs. Returns the compacted bucket ids."""
+        m = self.manifest()
+        todo = [b for b, dirs in (m["buckets"] if m else {}).items() if len(dirs) >= min_dirs]
+        if todo:
+            target = self._scan(m, todo)
+            self._rewrite_buckets(m, todo, target, target, kept=F.count(F.lit(1)))
+        return [int(b) for b in todo]
 
     def drop(self) -> None:
         shutil.rmtree(self.path, ignore_errors=True)

@@ -148,8 +148,18 @@ def test_gc_drops_unreferenced_dirs(spark, tmp_path):
     assert on_disk == live
 
 
-def test_compact_merges_fragmented_buckets(spark, tmp_path):
-    t = BucketedParquetTable(spark, str(tmp_path), "t", keys=["k"], num_buckets=4)
+def make_kind(spark, tmp_path, kind):
+    """A flat table (one bucket) or a 4-bucket table on the ``k`` key."""
+    if kind == "flat":
+        return ParquetTable(spark, str(tmp_path), "t")
+    return BucketedParquetTable(spark, str(tmp_path), "t", keys=["k"], num_buckets=4)
+
+
+@pytest.mark.parametrize("kind", ["flat", "bucketed"])
+def test_compact_merges_fragmented_buckets(spark, tmp_path, kind):
+    from test_table_upsert import assert_record_invariant
+
+    t = make_kind(spark, tmp_path, kind)
     t.overwrite(base_df(spark, n=40))
     for start in (41, 43):
         extra = with_row_number(
@@ -172,10 +182,12 @@ def test_compact_merges_fragmented_buckets(spark, tmp_path):
         assert len(after_m[b]) == 1, "compacted bucket is one dir"
     assert t.read().orderBy("k").collect() == before  # content identical
     assert t.max_id() == 44
+    assert_record_invariant(spark, t)
 
 
-def test_compact_noop_when_unfragmented(spark, tmp_path):
-    t = BucketedParquetTable(spark, str(tmp_path), "t", keys=["k"], num_buckets=4)
+@pytest.mark.parametrize("kind", ["flat", "bucketed"])
+def test_compact_noop_when_unfragmented(spark, tmp_path, kind):
+    t = make_kind(spark, tmp_path, kind)
     t.overwrite(base_df(spark, n=20))
     v = t.manifest()["version"]
     assert t.compact() == []
@@ -204,28 +216,6 @@ def test_read_version_time_travel(spark, tmp_path):
 
     with pytest.raises(ValueError, match="not retained"):
         t.read_version(v1 - 1 if v1 > 0 else 999)
-
-
-def test_diff_versions_insert_update_delete(spark, tmp_path):
-    """The snapshot diff labels inserted/updated keys; untouched keys are
-    absent. (Upserts never delete, so 'deleted' needs an overwrite.)"""
-    t = BucketedParquetTable(spark, str(tmp_path), "t", keys=["k"], num_buckets=8)
-    t.overwrite(base_df(spark, n=10))        # keys 1..10
-    v1 = t.current_version()
-    t.upsert(stage_df(spark), job_ts=TS2)
-    diff = {r["k"]: r["change"] for r in t.diff_versions(v1).collect()}
-    st = {r["k"] for r in stage_df(spark).select("k").collect()}
-    changed_or_new = set(diff)
-    assert changed_or_new <= st              # only staged keys differ
-    assert "deleted" not in diff.values()
-    assert any(v == "inserted" for v in diff.values()) or \
-           any(v == "updated" for v in diff.values())
-
-    # overwrite to a shrunken table -> deletions appear
-    v2 = t.current_version()
-    t.overwrite(base_df(spark, n=3))
-    diff2 = {r["k"]: r["change"] for r in t.diff_versions(v2).collect()}
-    assert any(v == "deleted" for v in diff2.values())
 
 
 def test_delete_partial_rewrite_and_time_travel(spark, tmp_path):

@@ -548,10 +548,11 @@ def test_pipeline_load_job_counts(spark, tmp_path):
     numbered with no count pass either, and its validation gate rides the
     write: the write job counts the rows and bad cells, and only the unique
     check runs besides, over the one file the attempt wrote, in one job with
-    no shuffle. The ordered export of that one-file table is one job too. A
-    text source of several partitions keeps its count pass and numbers its
-    rows in source order; its validated upsert gates on the count pass's
-    total. Table reads, max_id and the report's row count come from the
+    no shuffle. The ordered export of that one-file table is one job too.
+    Its validated upsert gates before the merge on a count of its one
+    partition, one job with no shuffle. A text source of several partitions
+    keeps its count pass and numbers its rows in source order; its
+    validated upsert gates on the count pass's total. Table reads, max_id and the report's row count come from the
     commit record and run no job."""
     import gzip
 
@@ -614,6 +615,9 @@ def test_pipeline_load_job_counts(spark, tmp_path):
     assert export_io["shuffle"] == 0
     got["gzip_csv_overwrite"], plain_io = _load_io(spark, {**text, "resource_path": gz})
     assert plain_io == {"input": os.path.getsize(gz), "shuffle": 0}
+    got["gzip_csv_validated_upsert"] = _load_jobs(spark, {
+        **text, "resource_path": gz, "method": "upsert", "validate": True, "job_ts": TS2,
+    })
     csv = str(tmp_path / "snap.csv")
     with gzip.open(gz, "rt") as src, open(csv, "w") as dst:
         dst.write(src.read())
@@ -634,6 +638,7 @@ def test_pipeline_load_job_counts(spark, tmp_path):
         "gzip_csv_validated_overwrite": 2,
         "gzip_csv_validated_overwrite_export": 3,
         "gzip_csv_overwrite": 1,
+        "gzip_csv_validated_upsert": 11,
         "csv_multi_partition_overwrite": 4,
         "csv_multi_partition_validated_upsert": 14,
     }

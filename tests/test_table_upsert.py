@@ -160,18 +160,6 @@ def test_upsert_requires_keys(spark, tmp_path):
         merge(t.read(), stage, ["no_such_key"], insert_start=4)
 
 
-def test_backfill_updated_at(spark, tmp_path):
-    t = make_table(spark, tmp_path)
-    df = base_df(spark).withColumn(
-        "_updated_at", F.when(F.col("sku") == 10, F.lit(TS1))
-    )
-    t.overwrite(df)
-    t.backfill_updated_at(TS2)
-    rows = {r["sku"]: r["_updated_at"] for r in t.read().collect()}
-    assert rows[10] == TS1  # already set: untouched
-    assert rows[20] == TS2 and rows[30] == TS2  # NULLs backfilled
-
-
 def test_merge_preserve_columns_insert_takes_stage_value(spark):
     """Reference MERGE includes all stage columns in the INSERT — preserve
     applies only to the UPDATE SET (warehouse.py merge_upsert_anyvalue_dedup).
@@ -250,6 +238,58 @@ def test_concurrent_commit_detected(spark, tmp_path, kind):
             t._commit(version, stale["buckets"], 2, 2, stale["schema"])
     assert t.manifest() == published  # the concurrent commit survives
     assert t.read().count() == 1
+
+
+@pytest.mark.parametrize("kind", KINDS)
+def test_upsert_keeps_column_order(spark, tmp_path, kind):
+    """An upsert writes the table's columns in the table's order, also
+    when the key is not the first column, and its files agree with the
+    commit record (a footer-merged scan orders by whichever file it lists
+    first)."""
+    t = make_kind(spark, tmp_path, kind)
+    df = spark.createDataFrame(
+        [("alpha", 10, 1.0), ("beta", 20, 2.0)], "name string, sku long, price double"
+    )
+    t.overwrite(with_row_number(df, order_by=["sku"]).withColumn("_updated_at", F.lit(TS1)))
+    columns = t.read().columns
+    assert columns.index("name") < columns.index("sku")
+    stage = spark.createDataFrame(
+        [("beta2", 20, 2.5), ("gamma", 30, 3.0)], "name string, sku long, price double"
+    )
+    t.upsert(stage, *key_args(t), job_ts=TS2)
+    assert t.read().columns == columns
+    assert spark.read.option("mergeSchema", "true").parquet(*live_paths(t)).columns == columns
+    assert_record_invariant(spark, t)
+
+
+@pytest.mark.parametrize("kind", KINDS)
+def test_first_upsert_commits_version_one(spark, tmp_path, kind):
+    """An upsert into a missing table creates it from the stage in one
+    commit: version 1, holding exactly the stage's rows, numbered in key
+    order."""
+    t = make_kind(spark, tmp_path, kind, "fresh")
+    stage = spark.createDataFrame(
+        [(20, "beta", 2.0), (10, "alpha", 1.0)], "sku long, name string, price double"
+    )
+    t.upsert(stage, *key_args(t), job_ts=TS1)
+    assert t.current_version() == 1
+    assert t.manifest()["history"] == []
+    got = sorted((r["_id"], r["sku"], r["name"], r["price"]) for r in t.read().collect())
+    assert got == [(1, 10, "alpha", 1.0), (2, 20, "beta", 2.0)]
+    assert_record_invariant(spark, t)
+
+
+@pytest.mark.parametrize("kind", KINDS)
+def test_delete_never_frees_an_id(spark, tmp_path, kind):
+    """A delete of the row holding MAX(_id) keeps max_id, so the next
+    append numbers above the deleted row instead of reusing its id."""
+    t = make_kind(spark, tmp_path, kind)
+    t.overwrite(base_df(spark))  # sku 10, 20, 30 -> _id 1, 2, 3
+    assert t.delete(spark.createDataFrame([(30,)], "sku long"), *key_args(t)) == 1
+    assert (t.row_count(), t.max_id()) == (2, 3)
+    extra = spark.createDataFrame([(40, "delta", 4.0)], "sku long, name string, price double")
+    t.append(with_row_number(extra, start=t.max_id() + 1).withColumn("_updated_at", F.lit(TS2)))
+    assert {r["sku"]: r["_id"] for r in t.read().collect()} == {10: 1, 20: 2, 40: 4}
 
 
 def test_parquet_table_delete_keys(spark, tmp_path):
@@ -472,7 +512,7 @@ def assert_record_invariant(spark, table, max_id=None):
     """The commit record answers rows, MAX(_id) and schema with no Spark
     job, and each answer equals what a scan of the live files gives.
     ``max_id``: the value the record must keep instead of the scanned one
-    (a bucketed delete keeps the pre-delete max so ids are never reused)."""
+    (a delete keeps the pre-delete max so ids are never reused)."""
     (rows, got_max, schema), jobs, _ = count_jobs(
         spark, lambda: (table.row_count(), table.max_id(), table.read().schema)
     )
@@ -510,16 +550,8 @@ def test_commit_record_invariant(spark, tmp_path):
     assert (t.row_count(), t.max_id()) == (5, 5)
 
     assert t.delete(spark.createDataFrame([(60,), (99,)], "sku int"), ["sku"]) == 1
-    assert_record_invariant(spark, t)
-    assert (t.row_count(), t.max_id()) == (4, 4)
-
-    t.backfill_updated_at(TS2)
-    assert_record_invariant(spark, t)
-
-    empty = make_table(spark, tmp_path, "empty")
-    empty.create_empty_like(base_df(spark))
-    assert_record_invariant(spark, empty)
-    assert (empty.row_count(), empty.max_id()) == (0, 0)
+    assert_record_invariant(spark, t, max_id=5)  # ids are never reused
+    assert (t.row_count(), t.max_id()) == (4, 5)
 
 
 def test_read_sees_append_from_another_object(spark, tmp_path):
