@@ -68,12 +68,11 @@ class BucketedParquetTable(ParquetTable):
         self,
         stage: DataFrame,
         *,
-        preserve_columns: tuple[str, ...] = (),
         job_ts: dt.datetime | None = None,
     ) -> None:
         """``ParquetTable.upsert`` on the table's keys: a 1-row upsert into
         a 100 TB table reads and rewrites one bucket, not the table."""
-        self._upsert(stage, self.keys, preserve_columns, job_ts)
+        self._upsert(stage, self.keys, job_ts)
 
     def delete(self, keys_df: DataFrame) -> int:
         """``ParquetTable.delete`` on the table's keys: purging a handful

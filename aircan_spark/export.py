@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from aircan_spark import ROW_NUMBER_COLUMN
 from aircan_spark.frames import one_partition
 
+_ISO_TIMESTAMP = "yyyy-MM-dd'T'HH:mm:ss"
 EXPORT_EXT = {
     "csv": "csv",
     "tsv": "csv",
@@ -51,11 +52,9 @@ def export_ordered(
     out_dir: str,
     fmt: str = "csv",
     *,
-    order_column: str = ROW_NUMBER_COLUMN,
     single_file: bool = False,
-    timestamp_format: str = "yyyy-MM-dd'T'HH:mm:ss",
 ) -> str:
-    """Write ``df`` ordered by ``order_column``; returns the output path.
+    """Write ``df`` ordered by `_id`; returns the output path.
 
     Serialization quirks preserved from the reference's DatastoreEncoder
     (dependencies_legacy/utils.py:170-177): timestamps exported in ISO
@@ -66,29 +65,28 @@ def export_ordered(
         raise ValueError(f"unsupported export format: {fmt}")
     ext = EXPORT_EXT[fmt]
 
-    if order_column not in df.columns:
+    if ROW_NUMBER_COLUMN not in df.columns:
         raise ValueError(
-            f"order column {order_column!r} not in frame columns {df.columns}; "
+            f"order column {ROW_NUMBER_COLUMN!r} not in frame columns {df.columns}; "
             f"an ordered export without its order column would silently "
-            f"produce arbitrary order — pass the right order_column"
+            f"produce arbitrary order"
         )
+    order = F.col(ROW_NUMBER_COLUMN).asc()
     if one_partition(df):  # sorted in its one task, no range shuffle
-        ordered = df.coalesce(1).sortWithinPartitions(F.col(order_column).asc())
+        ordered = df.coalesce(1).sortWithinPartitions(order)
     else:
-        ordered = df.orderBy(F.col(order_column).asc())
+        ordered = df.orderBy(order)
     shard_dir = os.path.join(out_dir, f"_shards_{ext}")
 
     if ext == "csv":
         writer = (
             ordered.write.mode("overwrite")
             .option("header", "true")
-            .option("timestampFormat", timestamp_format)
+            .option("timestampFormat", _ISO_TIMESTAMP)
         )
         writer.csv(shard_dir)
     elif ext == "ndjson":
-        ordered.write.mode("overwrite").option(
-            "timestampFormat", timestamp_format
-        ).json(shard_dir)
+        ordered.write.mode("overwrite").option("timestampFormat", _ISO_TIMESTAMP).json(shard_dir)
     else:  # parquet / orc — columnar, non-concatenable (reference K6)
         if single_file:
             # single-partition write, accepting the one-task cost the

@@ -24,12 +24,14 @@ Config keys (names follow the reference's DAG params where they exist):
                         refused, on the counts its write job observed and
                         the keys it wrote; an upsert is checked before its
                         merge
-    row_number_column   default '_id'
-    updated_at_column   default '_updated_at'
     export              optional {'path': dir, 'format': fmt,
                         'single_file': bool}
     day_first           DMY date parsing (legacy Postgres path behavior),
                         for the load as well as the validation gate
+
+The two engine-managed columns are not configurable: every table numbers
+its rows in ``_id`` and stamps its loads in ``_updated_at``
+(``aircan_spark.ROW_NUMBER_COLUMN`` / ``UPDATED_AT_COLUMN``).
 """
 
 from __future__ import annotations
@@ -72,8 +74,6 @@ def run(spark: SparkSession, config: dict[str, Any]) -> dict[str, Any]:
     """Execute the ingestion lifecycle; returns a result report."""
     path = config["resource_path"]
     method = config.get("method", "overwrite")
-    rn_col = config.get("row_number_column", ROW_NUMBER_COLUMN)
-    ts_col = config.get("updated_at_column", UPDATED_AT_COLUMN)
     job_ts = config.get("job_ts") or dt.datetime.now(dt.timezone.utc).replace(
         tzinfo=None
     )
@@ -127,7 +127,7 @@ def run(spark: SparkSession, config: dict[str, Any]) -> dict[str, Any]:
     # --- row numbering (reference 2c/2d: MAX+1 offset, stream inject) ------
     start = 1
     if method in ("append", "upsert") and table.exists():
-        start = table.max_id(rn_col) + 1
+        start = table.max_id() + 1
 
     # A parquet scan is numbered from its files' footers, and a
     # one-partition source (a gzip text file) from offsets {0: start}: no
@@ -140,10 +140,10 @@ def run(spark: SparkSession, config: dict[str, Any]) -> dict[str, Any]:
     check = None
     with scope():  # a count pass's persist, held until the write
         if fmt == "parquet":
-            numbered, rows = number_files(raw, rn_col, start)
+            numbered, rows = number_files(raw, start)
         else:
             numbered, rows = with_row_number(
-                raw, column=rn_col, start=start, cache=fmt != "orc", return_count=True
+                raw, start=start, cache=fmt != "orc", return_count=True
             )
         source = numbered
 
@@ -155,7 +155,7 @@ def run(spark: SparkSession, config: dict[str, Any]) -> dict[str, Any]:
                 nonlocal report
                 report = validate_frame(
                     numbered, descriptor, row_count, cell_errors=cell_errors,
-                    loaded=loaded, first_id=start, row_column=rn_col, day_first=day_first,
+                    loaded=loaded, first_id=start, day_first=day_first,
                 )
                 if not report["valid"]:
                     raise ValidationFailure(report)
@@ -188,7 +188,7 @@ def run(spark: SparkSession, config: dict[str, Any]) -> dict[str, Any]:
             # — not just use them for the decision. try_cast: a cell that
             # can't take the declared type becomes NULL rather than failing
             # the job mid-rewrite (validation is the abort gate, not this).
-            typed = typed.select(rn_col, *[
+            typed = typed.select(ROW_NUMBER_COLUMN, *[
                 F.col(f.name).try_cast(f.dataType).alias(f.name) for f in recreate_schema.fields
             ])
 
@@ -201,9 +201,9 @@ def run(spark: SparkSession, config: dict[str, Any]) -> dict[str, Any]:
             else:
                 table.upsert(typed, keys, job_ts=job_ts)
         elif method == "append":
-            table.append(typed.withColumn(ts_col, F.lit(job_ts)), check)
+            table.append(typed.withColumn(UPDATED_AT_COLUMN, F.lit(job_ts)), check)
         elif method == "overwrite":
-            table.overwrite(typed.withColumn(ts_col, F.lit(job_ts)), check)
+            table.overwrite(typed.withColumn(UPDATED_AT_COLUMN, F.lit(job_ts)), check)
         else:
             raise ValueError(f"unknown method: {method!r}")
 
@@ -215,7 +215,6 @@ def run(spark: SparkSession, config: dict[str, Any]) -> dict[str, Any]:
             table.read(),
             exp["path"],
             exp.get("format", config.get("resource_format") or "csv"),
-            order_column=rn_col,
             single_file=exp.get("single_file", False),
         )
 

@@ -509,14 +509,6 @@ _DRIVER_CHECKED_R01_04 = {
     "q14_schema_evolution", "q15_upsert_e2e", "q16_bucketed_upsert",
     "q17_salted_agg"
 }
-_R05_FIRST = [
-    # r4 codec queries — only substantial r4 work with no driver record
-    "ext_mm_resize_png", "ext_mm_resize_jpeg", "ext_mm_resize_gif",
-    "ext_audio_mulaw", "ext_audio_flac", "ext_mm_video_frames",
-    # new r5 streaming batch-parity queries (X14/X16/X39)
-    "ext_stream_running_totals", "ext_stream_dedup_keys",
-    "ext_stream_ingest_upsert",
-]
 # Keys CORRECTNESS_r05.json actually sampled (all 50 hash-green) — move
 # them behind the still-never-sampled backlog so round 6's sample again
 # lands 100% in the backlog (judge item #2).

@@ -131,11 +131,9 @@ def footer_rows(spark: SparkSession, files: list[str]) -> list[int]:
     return [sum(block.getRowCount() for block in f.getBlocks()) for f in footers]
 
 
-def number_files(
-    df: DataFrame, column: str = ROW_NUMBER_COLUMN, start: int = 1
-) -> tuple[DataFrame, int]:
-    """Number a parquet file scan in (file path, row) order; return
-    ``(numbered, rows)``.
+def number_files(df: DataFrame, start: int = 1) -> tuple[DataFrame, int]:
+    """Number a parquet file scan in (file path, row) order as its `_id`;
+    return ``(numbered, rows)``.
 
     ``df`` is a ``sources.read_parquet`` scan, optionally under column
     selections and renames. ``_id = base[file] + row_index``, with ``base``
@@ -166,6 +164,8 @@ def number_files(
         F.create_map(*entries)[scanned] if entries else F.lit(None).cast("long"),
         F.raise_error(F.concat(F.lit("row numbering has no base for "), scanned)),
     )
-    data_cols = [c for c in df.columns if c != column]
-    numbered = df.select((base + meta.getField("row_index")).alias(column), *data_cols)
+    data_cols = [c for c in df.columns if c != ROW_NUMBER_COLUMN]
+    numbered = df.select(
+        (base + meta.getField("row_index")).alias(ROW_NUMBER_COLUMN), *data_cols
+    )
     return numbered, acc - start

@@ -12,7 +12,9 @@ Reference behavior mirrored (not copied) from
 - unique-key extraction from ``constraints.unique`` (schema.py:89-109).
 - required -> nullability (schema.py:122-124); description carried into
   StructField metadata (schema.py:125-131).
-- engine-managed system columns prepended first (schema.py:135-145).
+- engine-managed system columns (reference: build_schema_fields,
+  schema.py:135-145) are not declared: ``rownum`` prepends `_id` and
+  every load adds `_updated_at`.
 
 Pure Python — no SparkSession needed, unit-testable in isolation.
 """
@@ -144,22 +146,12 @@ def unique_keys(descriptor: dict[str, Any]) -> list[str]:
 
 
 def descriptor_to_struct(
-    descriptor: dict[str, Any],
-    *,
-    include_system_columns: bool = False,
-    row_number_column: str = ROW_NUMBER_COLUMN,
-    updated_at_column: str = UPDATED_AT_COLUMN,
-    decimal_number: bool = False,
+    descriptor: dict[str, Any], *, decimal_number: bool = False
 ) -> T.StructType:
-    """Build a StructType from a frictionless descriptor.
-
-    System columns, when requested, are prepended first with the row-number
-    column leading (reference: build_schema_fields, schema.py:135-145) and
-    ``_updated_at`` appended as a nullable timestamp.
-    """
+    """Build a StructType of a frictionless descriptor's declared fields.
+    The system columns are not declared: the numbering prepends `_id` and
+    the load appends `_updated_at`."""
     fields: list[T.StructField] = []
-    if include_system_columns:
-        fields.append(T.StructField(row_number_column, T.LongType(), nullable=False))
     for f in descriptor.get("fields", []):
         constraints = f.get("constraints") or {}
         metadata: dict[str, Any] = {}
@@ -175,8 +167,6 @@ def descriptor_to_struct(
                 metadata=metadata or None,
             )
         )
-    if include_system_columns:
-        fields.append(T.StructField(updated_at_column, T.TimestampType(), nullable=True))
     return T.StructType(fields)
 
 
@@ -199,35 +189,6 @@ def struct_to_descriptor(schema: T.StructType) -> dict[str, Any]:
             entry["description"] = f.metadata["description"]
         fields.append(entry)
     return {"fields": fields}
-
-
-def compare_schemas(
-    old: T.StructType, new: T.StructType
-) -> dict[str, Any]:
-    """Schema-drift decision (reference: compare_schema,
-    dependencies_legacy/api_loader.py:70-150).
-
-    Returns a dict with:
-      - ``added``: columns present only in ``new``
-      - ``removed``: columns present only in ``old``
-      - ``type_changed``: columns whose type differs
-      - ``action``: 'append' (identical or additive), 'recreate' (columns
-        removed or types changed)
-    """
-    old_map = {f.name: f.dataType for f in old.fields}
-    new_map = {f.name: f.dataType for f in new.fields}
-    added = [c for c in new_map if c not in old_map]
-    removed = [c for c in old_map if c not in new_map and c not in (ROW_NUMBER_COLUMN, UPDATED_AT_COLUMN)]
-    type_changed = [
-        c for c, t in new_map.items() if c in old_map and old_map[c] != t
-    ]
-    action = "append" if not removed and not type_changed else "recreate"
-    return {
-        "added": added,
-        "removed": removed,
-        "type_changed": type_changed,
-        "action": action,
-    }
 
 
 class SchemaDriftError(ValueError):

@@ -27,7 +27,6 @@ from __future__ import annotations
 
 import datetime as dt
 from collections.abc import Iterator
-from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -35,7 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from aircan_spark import ROW_NUMBER_COLUMN
+from aircan_spark import UPDATED_AT_COLUMN
 from aircan_spark.frames import scope
 from aircan_spark.rownum import with_row_number
 from aircan_spark.sources import read_parquet
@@ -85,7 +84,7 @@ def stream_ingest(
             if keys:
                 table.upsert(numbered, keys, job_ts=ts)
             else:
-                table.append(numbered.withColumn("_updated_at", F.lit(ts)))
+                table.append(numbered.withColumn(UPDATED_AT_COLUMN, F.lit(ts)))
 
     writer = (
         stream.writeStream.foreachBatch(process_batch)

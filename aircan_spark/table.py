@@ -169,17 +169,11 @@ class ParquetTable:
         m = self.manifest()
         return int(m["rows"]) if m else 0
 
-    def max_id(self, column: str = ROW_NUMBER_COLUMN) -> int:
+    def max_id(self) -> int:
         """COALESCE(MAX(_id), 0) — next-row-number start (reference A1,
-        warehouse.py:13-31). ``_id`` is read from the manifest; other
-        columns take a column-pruned scan."""
+        warehouse.py:13-31), from the manifest, with no job."""
         m = self.manifest()
-        if m is None:
-            return 0
-        if column == ROW_NUMBER_COLUMN:
-            return int(m["max_id"])
-        row = self.read().agg(F.coalesce(F.max(column), F.lit(0)).alias("m")).collect()[0]
-        return int(row["m"])
+        return int(m["max_id"]) if m else 0
 
     def _commit(
         self,
@@ -204,9 +198,7 @@ class ParquetTable:
             try:
                 check(self._scan({"buckets": attempt, "schema": schema}))
             except BaseException:
-                m = self.manifest()
-                if m is None or data_dir not in _listed(m):
-                    shutil.rmtree(os.path.join(self.path, data_dir), ignore_errors=True)
+                self._discard(version)
                 raise
         prev = self.manifest()
         now = int(prev["version"]) if prev else 0
@@ -222,6 +214,14 @@ class ParquetTable:
         m = {"version": version, "rows": rows, "max_id": max_id, "schema": schema,
              "buckets": buckets, "history": history}
         self._publish(m, keep_versions=2)
+
+    def _discard(self, version: int) -> None:
+        """Delete the attempt dir ``data_v{version}`` of a write that is
+        not committed, unless a committed version lists it."""
+        data_dir = f"data_v{version}"
+        m = self.manifest()
+        if m is None or data_dir not in _listed(m):
+            shutil.rmtree(os.path.join(self.path, data_dir), ignore_errors=True)
 
     def _publish(self, m: dict, keep_versions: int) -> int:
         """Trim ``m``'s history to the newest ``keep_versions`` versions,
@@ -364,6 +364,8 @@ class ParquetTable:
         touched: list[str],
         target: DataFrame,
         df: DataFrame,
+        *,
+        drop_only: bool = False,
         **extra: Column,
     ) -> int:
         """Write ``df`` as the rows of the buckets ``touched`` of version
@@ -373,7 +375,10 @@ class ParquetTable:
         old row count is the write's observed ``kept`` aggregate when
         ``extra`` has one (a rewrite that writes every old row back), the
         manifest's rows when no untouched bucket holds any, and otherwise
-        counted. Returns the rows the rewrite took out."""
+        counted. When ``df`` only drops rows of ``target`` (a delete) and
+        the write kept them all, nothing changed: the attempt is discarded
+        and no version is committed. Returns the rows the rewrite took
+        out."""
         v = int(m["version"]) + 1
         schema, df = widen(StructType.fromJson(m["schema"]), df)
         written, stats = self._write(df, v, **extra)
@@ -383,6 +388,9 @@ class ParquetTable:
             before = int(m["rows"])
         else:
             before = target.count()
+        if drop_only and before == stats["rows"]:
+            self._discard(v)
+            return 0
         # a touched bucket the rewrite leaves empty lists no dir
         buckets = {**m["buckets"], **{b: [] for b in touched}}
         buckets.update({b: [d] for b, d in written.items()})
@@ -400,22 +408,15 @@ class ParquetTable:
         stage: DataFrame,
         keys: list[str],
         *,
-        preserve_columns: tuple[str, ...] = (),
         job_ts: dt.datetime | None = None,
     ) -> None:
         """MERGE the stage into this table on ``keys`` (reference J1 flow,
         warehouse.py:430-491): dedup + join-merge of the buckets the
         stage's keys touch, rewritten as a new version; a missing table is
         created from the stage (reference D2) as version 1."""
-        self._upsert(stage, keys, preserve_columns, job_ts)
+        self._upsert(stage, keys, job_ts)
 
-    def _upsert(
-        self,
-        stage: DataFrame,
-        keys: list[str],
-        preserve_columns: tuple[str, ...],
-        job_ts: dt.datetime | None,
-    ) -> None:
+    def _upsert(self, stage: DataFrame, keys: list[str], job_ts: dt.datetime | None) -> None:
         m = self.manifest()
         if m is None:  # merge into an empty target with the stage's columns
             m = {"version": 0, "rows": 0, "max_id": 0, "buckets": {},
@@ -435,21 +436,15 @@ class ParquetTable:
             old = F.col(ROW_NUMBER_COLUMN)
             extra["kept"] = F.count_if(old.isNull() | (old < start))
         with scope():  # merge's stage and insert numbering persists
-            merged = upsert_mod.merge(
-                target,
-                stage,
-                keys,
-                preserve_columns=preserve_columns,
-                job_ts=job_ts,
-                insert_start=start,
-            )
+            merged = upsert_mod.merge(target, stage, keys, job_ts=job_ts, insert_start=start)
             self._rewrite_buckets(m, touched, target, merged, **extra)
 
     def delete(self, keys_df: DataFrame, keys: list[str]) -> int:
         """Targeted key delete (GDPR): rewrite the buckets the key tuples
         of ``keys_df`` touch without the rows that match one (LEFT ANTI),
         committed as a new version — the previous version stays readable
-        until the history retires it. Returns the rows deleted."""
+        until the history retires it; a delete that matches no row commits
+        nothing. Returns the rows deleted."""
         m = self._require()
         keys_df = keys_df.select(*keys).distinct()
         touched = self._touched(m, keys_df)
@@ -457,7 +452,7 @@ class ParquetTable:
             return 0
         target = self._scan(m, touched)
         remaining = target.join(keys_df, on=keys, how="left_anti")
-        return self._rewrite_buckets(m, touched, target, remaining)
+        return self._rewrite_buckets(m, touched, target, remaining, drop_only=True)
 
     def compact(self, min_dirs: int = 2) -> list[int]:
         """Rewrite each bucket whose rows span >= ``min_dirs`` data dirs

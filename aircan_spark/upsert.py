@@ -23,7 +23,10 @@ MERGE does on unpartitioned parquet):
 3. NULL-safe change detection with ``eqNullSafe`` — exact analog of
    ``IS DISTINCT FROM`` (warehouse.py:236-239).
 4. matched rows keep target `_id`; updates touch `_updated_at` ONLY when a
-   data column actually changed (warehouse.py:272-276).
+   data column actually changed (warehouse.py:272-276). The two are the
+   engine's system columns, always named ``ROW_NUMBER_COLUMN`` /
+   ``UPDATED_AT_COLUMN``; every other column is data, taken from the
+   stage on a change.
 5. inserts get contiguous `_id` continuing at MAX(target._id)+1 via the
    partition-offset numbering (rownum.py) — never a global window.
 """
@@ -41,39 +44,28 @@ from aircan_spark import ROW_NUMBER_COLUMN, UPDATED_AT_COLUMN
 from aircan_spark.frames import share
 from aircan_spark.rownum import with_row_number
 
-_T_PRESENT = "__aircan_t_present"
 _S_PRESENT = "__aircan_s_present"
 
 
-def dedup_stage(
-    stage: DataFrame,
-    keys: list[str],
-    order_column: str | None = None,
-) -> DataFrame:
+def dedup_stage(stage: DataFrame, keys: list[str]) -> DataFrame:
     """Deterministic first-row-per-key dedup (reference A2,
     warehouse.py:256-270, made deterministic per SURVEY §7.4.2).
 
-    Rows are ranked within each key by ``order_column`` (the stage `_id`
-    when present — i.e. source-file order) and the first kept. Falls back
-    to an arbitrary-but-stable ``monotonically_increasing_id`` order.
+    Rows are ranked within each key by the stage `_id` when present (i.e.
+    source-file order) and the first kept. Falls back to an
+    arbitrary-but-stable ``monotonically_increasing_id`` order.
     """
-    if order_column is None:
-        order_column = (
-            ROW_NUMBER_COLUMN if ROW_NUMBER_COLUMN in stage.columns else None
-        )
-    if order_column is None:
-        stage = stage.withColumn("__aircan_ord", F.monotonically_increasing_id())
-        order_column = "__aircan_ord"
-        drop_ord = True
-    else:
-        drop_ord = False
-    w = Window.partitionBy(*keys).orderBy(F.col(order_column).asc())
+    order = ROW_NUMBER_COLUMN
+    if order not in stage.columns:
+        order = "__aircan_ord"
+        stage = stage.withColumn(order, F.monotonically_increasing_id())
+    w = Window.partitionBy(*keys).orderBy(F.col(order).asc())
     out = (
         stage.withColumn("__aircan_rn", F.row_number().over(w))
         .filter(F.col("__aircan_rn") == 1)
         .drop("__aircan_rn")
     )
-    return out.drop("__aircan_ord") if drop_ord else out
+    return out if order == ROW_NUMBER_COLUMN else out.drop(order)
 
 
 def changed_predicate(
@@ -95,9 +87,6 @@ def merge(
     stage: DataFrame,
     keys: list[str],
     *,
-    row_number_column: str = ROW_NUMBER_COLUMN,
-    updated_at_column: str = UPDATED_AT_COLUMN,
-    preserve_columns: tuple[str, ...] = (),
     job_ts: dt.datetime | None = None,
     insert_start: int,
 ) -> DataFrame:
@@ -114,12 +103,12 @@ def merge(
 
     Column policy (mirrors warehouse.py:222-245):
     - keys: coalesced from both sides.
-    - ``row_number_column`` + ``preserve_columns``: kept from target on
-      match; inserts get fresh contiguous numbers.
+    - `_id`: kept from target on match; inserts get fresh contiguous
+      numbers.
     - other stage columns: stage value when matched-and-changed or insert,
       else target value.
     - target-only columns (schema evolution): kept, NULL for inserts.
-    - ``updated_at_column``: job timestamp on insert and on changed update;
+    - `_updated_at`: job timestamp on insert and on changed update;
       untouched otherwise.
     """
     if not keys:
@@ -132,7 +121,7 @@ def merge(
 
     stage = share(dedup_stage(stage, keys), big=True)
 
-    system_cols = {row_number_column, updated_at_column, *preserve_columns}
+    system_cols = {ROW_NUMBER_COLUMN, UPDATED_AT_COLUMN}
     stage_data_cols = [c for c in stage.columns if c not in keys and c not in system_cols]
     target_only_cols = [
         c for c in target.columns
@@ -161,11 +150,11 @@ def merge(
 
     projections: list[Column] = []
     # Row-number column first (reference: first column of every table).
-    if row_number_column in target.columns:
-        existing_id = F.col(f"T.{row_number_column}").cast("long")
+    if ROW_NUMBER_COLUMN in target.columns:
+        existing_id = F.col(f"T.{ROW_NUMBER_COLUMN}").cast("long")
     else:
         existing_id = F.lit(None).cast("long")
-    projections.append(existing_id.alias(row_number_column))
+    projections.append(existing_id.alias(ROW_NUMBER_COLUMN))
     for k in keys:
         projections.append(F.col(f"T.{k}").alias(k))
     for c in stage_data_cols:
@@ -181,21 +170,18 @@ def merge(
             )
     for c in target_only_cols:
         projections.append(F.col(f"T.{c}").alias(c))
-    for c in preserve_columns:
-        if c in target.columns:
-            projections.append(F.col(f"T.{c}").alias(c))
-    if updated_at_column in target.columns:
-        old_ts = F.col(f"T.{updated_at_column}")
+    if UPDATED_AT_COLUMN in target.columns:
+        old_ts = F.col(f"T.{UPDATED_AT_COLUMN}")
     else:
         old_ts = F.lit(None).cast("timestamp")
     projections.append(
-        F.when(changed, F.lit(job_ts)).otherwise(old_ts).alias(updated_at_column)
+        F.when(changed, F.lit(job_ts)).otherwise(old_ts).alias(UPDATED_AT_COLUMN)
     )
     existing = joined.select(*projections)
 
     # Inserts: stage keys absent from the target. The probe side is the
     # target's KEY COLUMNS only (column-pruned scan).
-    inserts_src = stage.drop(_S_PRESENT, row_number_column, updated_at_column).alias("S")
+    inserts_src = stage.drop(_S_PRESENT, ROW_NUMBER_COLUMN, UPDATED_AT_COLUMN).alias("S")
     anti = inserts_src.join(target.select(*keys).alias("T"), cond, "left_anti")
     insert_cols: list[Column] = []
     for k in keys:
@@ -204,30 +190,16 @@ def merge(
         insert_cols.append(F.col(c))
     for c in target_only_cols:
         insert_cols.append(F.lit(None).cast(target_types[c]).alias(c))
-    for c in preserve_columns:
-        if c in target.columns:
-            if c in anti.columns:
-                # Reference MERGE includes ALL stage columns in the INSERT
-                # (warehouse.py merge_upsert_anyvalue_dedup): "preserve"
-                # applies to the UPDATE SET only — a brand-new row takes
-                # the stage's value. NULL only when the stage lacks it.
-                insert_cols.append(F.col(c).cast(target_types[c]).alias(c))
-            else:
-                insert_cols.append(F.lit(None).cast(target_types[c]).alias(c))
-    insert_cols.append(F.lit(job_ts).alias(updated_at_column))
+    insert_cols.append(F.lit(job_ts).alias(UPDATED_AT_COLUMN))
     inserts = anti.select(*insert_cols)
 
     # Number the inserts: MAX(existing _id) + 1.. in key order, via the
     # partition-offset numbering (rownum.py) — never a single-task global
     # window over the merged table.
-    if row_number_column not in target.columns:
+    if ROW_NUMBER_COLUMN not in target.columns:
         # Bootstrap: target has no numbering to preserve — number the whole
         # merged result contiguously in key order.
-        all_rows = existing.drop(row_number_column).unionByName(inserts)
-        return with_row_number(
-            all_rows, column=row_number_column, start=insert_start, order_by=keys
-        )
-    numbered_inserts = with_row_number(
-        inserts, column=row_number_column, start=insert_start, order_by=keys
-    )
+        all_rows = existing.drop(ROW_NUMBER_COLUMN).unionByName(inserts)
+        return with_row_number(all_rows, start=insert_start, order_by=keys)
+    numbered_inserts = with_row_number(inserts, start=insert_start, order_by=keys)
     return existing.unionByName(numbered_inserts)

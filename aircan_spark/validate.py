@@ -117,7 +117,6 @@ def validate(
     cell_errors: int | None = None,
     loaded: DataFrame | None = None,
     first_id: int = 1,
-    row_column: str = ROW_NUMBER_COLUMN,
     error_cap: int = ERROR_CAP,
     day_first: bool = False,
     row_start: int = 2,
@@ -125,7 +124,7 @@ def validate(
     """Validate a numbered raw frame against a descriptor.
 
     ``numbered`` is the raw frame after ``with_row_number`` or
-    ``number_files``: its ``row_column`` numbers the source rows from
+    ``number_files``: its `_id` numbers the source rows from
     ``first_id``, and ``row_count`` is its row count.
 
     ``cell_errors``: the frame's ``cell_error_count``, when the caller
@@ -168,7 +167,7 @@ def validate(
     if bad_cells and cell_errors != 0:
         # 1-based source row positions (frictionless row numbering), from
         # the load's own numbering.
-        row = F.col(row_column) - F.lit(first_id) + F.lit(row_start)
+        row = F.col(ROW_NUMBER_COLUMN) - F.lit(first_id) + F.lit(row_start)
         errs = numbered.select(
             row.alias("row"),
             F.explode(F.filter(F.array(*bad_cells), lambda x: x.isNotNull())).alias("e"),

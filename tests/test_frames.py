@@ -190,7 +190,9 @@ def test_no_test_only_seams_or_code_in_the_package():
         r"\b(AggTable|aggtable|stream_interval_join|event_stream_from_table"
         r"|stream_(sketch|hll|bottomk|moments|kmv|state)_maintenance"
         r"|write_jdbc|export_dump_to_path|JDBC_BATCH_SIZE"
-        r"|_run_maintenance|_staged_split_dir|_T_DELEGATING)\b"
+        r"|_run_maintenance|_staged_split_dir|_T_DELEGATING"
+        r"|compare_schemas|_R05_FIRST|_T_PRESENT|preserve_columns"
+        r"|include_system_columns|row_number_column|updated_at_column)\b"
     )
     patch_t = re.compile(r"""setattr\([^,]+,\s*["']_t["']|\._t\s*=[^=]""")
     seams, leftovers, patches = [], [], []

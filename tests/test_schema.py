@@ -5,7 +5,6 @@ from pyspark.sql import types as T
 
 from aircan_spark.schema import (
     SchemaError,
-    compare_schemas,
     descriptor_to_struct,
     frictionless_to_spark_type,
     sanitize_column_name,
@@ -91,14 +90,17 @@ def test_descriptor_struct_roundtrip():
             {"name": "last_seen", "type": "datetime"},
         ]
     }
-    st = descriptor_to_struct(desc, include_system_columns=True)
-    assert st.fields[0].name == "_id"
-    assert st.fields[0].dataType == T.LongType()
-    assert st.fields[-1].name == "_updated_at"
+    st = descriptor_to_struct(desc)
     assert st["name"].nullable is False
     assert st["sku"].metadata.get("unique") is True
 
-    back = struct_to_descriptor(st)
+    # a table's schema: the declared fields between the system columns
+    table_schema = T.StructType([
+        T.StructField("_id", T.LongType(), nullable=False),
+        *st.fields,
+        T.StructField("_updated_at", T.TimestampType()),
+    ])
+    back = struct_to_descriptor(table_schema)
     names = [f["name"] for f in back["fields"]]
     assert "_id" not in names and "_updated_at" not in names
     assert back["fields"][0] == {
@@ -106,30 +108,6 @@ def test_descriptor_struct_roundtrip():
         "type": "integer",
         "constraints": {"unique": True},
     }
-
-
-def test_compare_schemas_additive_is_append():
-    old = T.StructType([T.StructField("a", T.LongType())])
-    new = T.StructType(
-        [T.StructField("a", T.LongType()), T.StructField("b", T.StringType())]
-    )
-    res = compare_schemas(old, new)
-    assert res["action"] == "append"
-    assert res["added"] == ["b"]
-
-
-def test_compare_schemas_type_change_is_recreate():
-    old = T.StructType([T.StructField("a", T.LongType())])
-    new = T.StructType([T.StructField("a", T.StringType())])
-    assert compare_schemas(old, new)["action"] == "recreate"
-
-
-def test_compare_schemas_removed_is_recreate():
-    old = T.StructType([T.StructField("a", T.LongType()), T.StructField("b", T.LongType())])
-    new = T.StructType([T.StructField("a", T.LongType())])
-    res = compare_schemas(old, new)
-    assert res["action"] == "recreate"
-    assert res["removed"] == ["b"]
 
 
 def test_survey_inventory_matches_driver_contract():

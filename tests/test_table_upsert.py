@@ -9,6 +9,7 @@ Covers the reference's golden assertions (FIXTURES.md B9):
 """
 
 import datetime as dt
+import os
 
 import pytest
 from conftest import count_jobs
@@ -160,41 +161,6 @@ def test_upsert_requires_keys(spark, tmp_path):
         merge(t.read(), stage, ["no_such_key"], insert_start=4)
 
 
-def test_merge_preserve_columns_insert_takes_stage_value(spark):
-    """Reference MERGE includes all stage columns in the INSERT — preserve
-    applies only to the UPDATE SET (warehouse.py merge_upsert_anyvalue_dedup).
-    A NOT MATCHED row must take the stage's value for a preserved column;
-    NULL only when the stage lacks the column entirely."""
-    from aircan_spark.upsert import merge
-
-    target = spark.createDataFrame(
-        [(10, "a", "keep-me", 1)], "sku int, name string, note string, _id long"
-    )
-    # stage HAS the preserved column
-    stage = spark.createDataFrame(
-        [(10, "a2", "stage-note"), (20, "b", "new-note")],
-        "sku int, name string, note string",
-    )
-    out = {
-        r["sku"]: r
-        for r in merge(
-            target, stage, ["sku"], preserve_columns=("note",), insert_start=2
-        ).collect()
-    }
-    assert out[10]["note"] == "keep-me"  # matched: preserved from target
-    assert out[20]["note"] == "new-note"  # insert: stage value, not NULL
-    # stage LACKS the preserved column -> insert gets NULL
-    stage2 = spark.createDataFrame([(30, "c")], "sku int, name string")
-    out2 = {
-        r["sku"]: r
-        for r in merge(
-            target, stage2, ["sku"], preserve_columns=("note",), insert_start=2
-        ).collect()
-    }
-    assert out2[30]["note"] is None
-    assert out2[10]["note"] == "keep-me"
-
-
 KINDS = ["flat", "bucketed"]
 
 
@@ -290,6 +256,20 @@ def test_delete_never_frees_an_id(spark, tmp_path, kind):
     extra = spark.createDataFrame([(40, "delta", 4.0)], "sku long, name string, price double")
     t.append(with_row_number(extra, start=t.max_id() + 1).withColumn("_updated_at", F.lit(TS2)))
     assert {r["sku"]: r["_id"] for r in t.read().collect()} == {10: 1, 20: 2, 40: 4}
+
+
+@pytest.mark.parametrize("kind", KINDS)
+def test_delete_of_no_row_commits_nothing(spark, tmp_path, kind):
+    """A delete that matches no row, of an empty key set or of keys the
+    table does not hold, returns 0, commits no version and leaves no
+    attempt dir behind."""
+    t = make_kind(spark, tmp_path, kind)
+    t.overwrite(base_df(spark))
+    committed = t.manifest()
+    for keys in ([], [(99,)]):
+        assert t.delete(spark.createDataFrame(keys, "sku long"), *key_args(t)) == 0
+        assert t.manifest() == committed
+        assert sorted(os.listdir(t.path)) == ["_MANIFEST.json", "data_v1"]
 
 
 def test_parquet_table_delete_keys(spark, tmp_path):
